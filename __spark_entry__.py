@@ -2046,15 +2046,8 @@ def q_cell_pyramid(spark, sf_dir):
     key = F.col("doc_id").cast("long")
     lon, lat = S.lon_col(key), S.lat_col(key)
     fine = PYRAMID_LEVELS[-1]
-    n_f = 1 << fine
-    ix = F.floor(
-        (lon - F.lit(S.LON0)) / F.lit(S.LON1 - S.LON0) * F.lit(float(n_f))
-    )
-    iy = F.floor(
-        (lat - F.lit(S.LAT0)) / F.lit(S.LAT1 - S.LAT0) * F.lit(float(n_f))
-    )
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n_f - 1)).cast("long")
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n_f - 1)).cast("long")
+    ix = S.grid_ix_col(lon, fine)
+    iy = S.grid_iy_col(lat, fine)
     lvls = F.array(
         *[
             F.struct(

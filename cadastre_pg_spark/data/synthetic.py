@@ -58,15 +58,26 @@ def lat_col(key: Column) -> Column:
     return F.lit(LAT0) + F.lit(LAT1 - LAT0) * u_col(key, MULT_LAT)
 
 
+def _grid_axis_col(v: Column, lo: float, span: float, level: int) -> Column:
+    n = 1 << level
+    i = F.floor((v - F.lit(lo)) / F.lit(span) * F.lit(float(n)))
+    return F.least(F.greatest(i, F.lit(0)), F.lit(n - 1)).cast("long")
+
+
+def grid_ix_col(x: Column, level: int = C.DEFAULT_LEVEL) -> Column:
+    """Clamped x cell index — same op order as kernels.cells.grid_cell_xy
+    and grid_ix_sql below."""
+    return _grid_axis_col(x, LON0, LON1 - LON0, level)
+
+
+def grid_iy_col(y: Column, level: int = C.DEFAULT_LEVEL) -> Column:
+    return _grid_axis_col(y, LAT0, LAT1 - LAT0, level)
+
+
 def grid_cell_col(lon: Column, lat: Column, level: int = C.DEFAULT_LEVEL) -> Column:
     """JVM-side grid cell id — identical floor arithmetic to
     kernels.cells.grid_cell (and to grid_cell_sql below)."""
-    n = 1 << level
-    ix = F.floor((lon - F.lit(LON0)) / F.lit(LON1 - LON0) * F.lit(float(n)))
-    iy = F.floor((lat - F.lit(LAT0)) / F.lit(LAT1 - LAT0) * F.lit(float(n)))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1))
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1))
-    return (ix * F.lit(n) + iy).cast("long")
+    return grid_ix_col(lon, level) * F.lit(1 << level) + grid_iy_col(lat, level)
 
 
 def parcel_box_cols(key: Column):
@@ -172,19 +183,6 @@ def star_parcel_cols(key: Column, size_scale: float = 1.0):
         F.array(F.lit(0), n_ext, n_ext + n_ext),
     ).otherwise(F.array(F.lit(0), n_ext))
     return xs, ys, offsets
-
-
-def star_box_cols(key: Column, size_scale: float = 1.0):
-    """(cx, cy, hw, hh) — the star parcel is contained in this box
-    (|perimeter point| <= 1 per axis, radius factor <= 1)."""
-    cx, cy, _, _ = parcel_box_cols(key)
-    hw = (F.lit(STAR_SIZE0) + F.lit(STAR_SIZE_SPAN) * u_col(key, MULT_W)) * F.lit(
-        float(size_scale)
-    )
-    hh = (F.lit(STAR_SIZE0) + F.lit(STAR_SIZE_SPAN) * u_col(key, MULT_H)) * F.lit(
-        float(size_scale)
-    )
-    return cx, cy, hw, hh
 
 
 def star_vertices_sql(expr: str, size_scale: float = 1.0):

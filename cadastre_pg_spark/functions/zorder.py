@@ -66,11 +66,8 @@ def _part1by1_lut_col(v: Column, width: int) -> Column:
 def morton_col(lon: Column, lat: Column, level: int = C.DEFAULT_LEVEL) -> Column:
     """Z-order code of the grid cell — same (ix, iy) mapping as
     grid_cell_col, bits interleaved (linear-tree byte-LUT spread)."""
-    n = 1 << level
-    ix = F.floor((lon - F.lit(C.GRID_LON0)) / F.lit(C.GRID_LON1 - C.GRID_LON0) * F.lit(float(n)))
-    iy = F.floor((lat - F.lit(C.GRID_LAT0)) / F.lit(C.GRID_LAT1 - C.GRID_LAT0) * F.lit(float(n)))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1)).cast("long")
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1)).cast("long")
+    ix = S.grid_ix_col(lon, level)
+    iy = S.grid_iy_col(lat, level)
     return _part1by1_lut_col(ix, level).bitwiseOR(
         F.shiftleft(_part1by1_lut_col(iy, level), 1)
     ).cast("long")
@@ -123,19 +120,10 @@ def with_hilbert(
     the NumPy kernel (kernels/cells.hilbert_cell) and the DuckDB CTE
     chain (hilbert_sql_query) replay it bit-for-bit.
     """
-    n = 1 << level
-    ix = F.floor(
-        (F.col(lon) - F.lit(C.GRID_LON0))
-        / F.lit(C.GRID_LON1 - C.GRID_LON0) * F.lit(float(n))
-    )
-    iy = F.floor(
-        (F.col(lat) - F.lit(C.GRID_LAT0))
-        / F.lit(C.GRID_LAT1 - C.GRID_LAT0) * F.lit(float(n))
-    )
     df = df.withColumns(
         {
-            "_hx": F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1)).cast("long"),
-            "_hy": F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1)).cast("long"),
+            "_hx": S.grid_ix_col(F.col(lon), level),
+            "_hy": S.grid_iy_col(F.col(lat), level),
             "_hd": F.lit(0).cast("long"),
         }
     )

@@ -127,16 +127,3 @@ def points_in_polygons_rowwise(px, py, pidx, X1, Y1, X2, Y2, block_cells=8_000_0
         cross = cond & (bx < xint)
         out[s:e] = (cross.sum(axis=1) % 2).astype(bool)
     return out
-
-
-def segments_intersect_bbox(x1, y1, x2, y2, bx0, by0, bx1, by1):
-    """Conservative: does each segment's bbox overlap the query bbox?
-    (Used by polyfill full/partial classification — overlap is a
-    necessary condition for the segment to cross the cell, so cells
-    with no overlapping segment bboxes and all corners inside are
-    provably interior.)"""
-    sminx = np.minimum(x1, x2)
-    smaxx = np.maximum(x1, x2)
-    sminy = np.minimum(y1, y2)
-    smaxy = np.maximum(y1, y2)
-    return (sminx <= bx1) & (smaxx >= bx0) & (sminy <= by1) & (smaxy >= by0)

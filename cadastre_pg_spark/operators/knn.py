@@ -34,26 +34,16 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..data import synthetic as S
 from ..kernels import cells as C
 
 HARD_MAX_LEVEL = 22  # ix*n+iy stays < 2^45
 
 
 def _with_cell_xy(df, level, lon="lon", lat="lat"):
-    n = 1 << level
-    ix = F.floor(
-        (F.col(lon) - F.lit(C.GRID_LON0))
-        / F.lit(C.GRID_LON1 - C.GRID_LON0)
-        * F.lit(float(n))
+    return df.withColumn("ix", S.grid_ix_col(F.col(lon), level)).withColumn(
+        "iy", S.grid_iy_col(F.col(lat), level)
     )
-    iy = F.floor(
-        (F.col(lat) - F.lit(C.GRID_LAT0))
-        / F.lit(C.GRID_LAT1 - C.GRID_LAT0)
-        * F.lit(float(n))
-    )
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1))
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1))
-    return df.withColumn("ix", ix.cast("long")).withColumn("iy", iy.cast("long"))
 
 
 def _dist_sq():

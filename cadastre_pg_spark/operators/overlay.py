@@ -17,14 +17,8 @@ stage (one exchange, dedup-free).
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..data import synthetic as S
 from ..kernels import cells as C
-
-
-def _axis_idx(v, lo: float, span: float, n: int):
-    """floor((v - lo) / span * n) clamped to [0, n-1] — the grid_cell
-    floor arithmetic, one axis."""
-    i = F.floor((v - F.lit(lo)) / F.lit(span) * F.lit(float(n)))
-    return F.least(F.greatest(i, F.lit(0)), F.lit(n - 1))
 
 
 def rect_overlap_join(
@@ -57,10 +51,10 @@ def rect_overlap_join(
     n = 1 << level
 
     def side(tag):
-        ix0 = _axis_idx(F.col(x0), C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-        ix1 = _axis_idx(F.col(x1), C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-        iy0 = _axis_idx(F.col(y0), C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
-        iy1 = _axis_idx(F.col(y1), C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
+        ix0 = S.grid_ix_col(F.col(x0), level)
+        ix1 = S.grid_ix_col(F.col(x1), level)
+        iy0 = S.grid_iy_col(F.col(y0), level)
+        iy1 = S.grid_iy_col(F.col(y1), level)
         fan = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
         guard = F.when(
             fan > F.lit(max_cells_per_rect),
@@ -245,10 +239,10 @@ def areal_interpolate(
     n = 1 << level
     wx = (C.GRID_LON1 - C.GRID_LON0) / float(n)
     wy = (C.GRID_LAT1 - C.GRID_LAT0) / float(n)
-    ix0 = _axis_idx(F.col(x0), C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-    ix1 = _axis_idx(F.col(x1), C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-    iy0 = _axis_idx(F.col(y0), C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
-    iy1 = _axis_idx(F.col(y1), C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
+    ix0 = S.grid_ix_col(F.col(x0), level)
+    ix1 = S.grid_ix_col(F.col(x1), level)
+    iy0 = S.grid_iy_col(F.col(y0), level)
+    iy1 = S.grid_iy_col(F.col(y1), level)
     fan = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
     guard = F.when(
         fan > F.lit(max_cells_per_rect),
@@ -351,10 +345,10 @@ def segment_intersection_join(
         x1 = F.greatest(F.col(ax), F.col(bx))
         y0 = F.least(F.col(ay), F.col(by))
         y1 = F.greatest(F.col(ay), F.col(by))
-        ix0 = _axis_idx(x0, C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-        ix1 = _axis_idx(x1, C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-        iy0 = _axis_idx(y0, C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
-        iy1 = _axis_idx(y1, C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
+        ix0 = S.grid_ix_col(x0, level)
+        ix1 = S.grid_ix_col(x1, level)
+        iy0 = S.grid_iy_col(y0, level)
+        iy1 = S.grid_iy_col(y1, level)
         fan = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
         guard = F.when(
             fan > F.lit(max_cells_per_seg),
@@ -494,10 +488,10 @@ def snap_to_segments(
     x1 = F.greatest(F.col(ax), F.col(bx)) + r
     y0 = F.least(F.col(ay), F.col(by)) - r
     y1 = F.greatest(F.col(ay), F.col(by)) + r
-    ix0 = _axis_idx(x0, C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-    ix1 = _axis_idx(x1, C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-    iy0 = _axis_idx(y0, C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
-    iy1 = _axis_idx(y1, C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
+    ix0 = S.grid_ix_col(x0, level)
+    ix1 = S.grid_ix_col(x1, level)
+    iy0 = S.grid_iy_col(y0, level)
+    iy1 = S.grid_iy_col(y1, level)
     fan = (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
     guard = F.when(
         fan > F.lit(max_cells_per_seg),
@@ -529,8 +523,8 @@ def snap_to_segments(
             (F.col("cix") * F.lit(n) + F.col("ciy")).alias("cell"),
         )
     )
-    pix = _axis_idx(F.col(px), C.GRID_LON0, C.GRID_LON1 - C.GRID_LON0, n)
-    piy = _axis_idx(F.col(py), C.GRID_LAT0, C.GRID_LAT1 - C.GRID_LAT0, n)
+    pix = S.grid_ix_col(F.col(px), level)
+    piy = S.grid_iy_col(F.col(py), level)
     p = points.select(
         F.col(pt_id).alias("_pid"),
         F.col(px).cast("double").alias("_px"),

@@ -47,12 +47,6 @@ def as_of(history: DataFrame, at: Column) -> DataFrame:
     )
 
 
-def mark_all_ended(current: DataFrame, vintage: Column) -> DataFrame:
-    """V1 'open a vintage': close every active row at the vintage date
-    (temporal.rs:62-112) — a projection, no shuffle."""
-    return current.withColumn("valid_to", F.coalesce(F.col("valid_to"), vintage))
-
-
 def merge_snapshot(
     current: DataFrame,
     incoming: DataFrame,
@@ -137,10 +131,3 @@ def merge_snapshot(
     return unchanged.unionByName(updated_closed).unionByName(updated_new).unionByName(
         inserted
     ).unionByName(ended)
-
-
-def count_ended(history: DataFrame, vintage: Column) -> DataFrame:
-    """V4: rows still closed at the vintage (disappeared entities)."""
-    return history.filter(F.col("valid_to") == vintage).agg(
-        F.count(F.lit(1)).alias("n_ended")
-    )

@@ -42,10 +42,3 @@ def get_spark(
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:
-    """Parquet scans for the driver tables (TESTDATA.md)."""
-    return {
-        t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in (names or TABLES)
-    }

@@ -9,7 +9,6 @@ header/footer around the part files.
 """
 
 import json
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -193,29 +192,6 @@ def feature_collection_header(srid: int = 4326) -> str:
             },
         }
     )[:-1] + ', "features": ['
-
-
-def write_geojson_features(
-    df: DataFrame,
-    out_dir: str,
-    id_col: str = "parcel_id",
-    properties: list[str] | None = None,
-) -> str:
-    """Write newline-delimited GeoJSON features (one file per partition,
-    Spark text writer owns escaping/commit)."""
-    props = properties or []
-    feature = F.to_json(
-        F.struct(
-            F.lit("Feature").alias("type"),
-            F.col(id_col).cast("string").alias("id"),
-            F.from_json(
-                polygon_geojson_col(), "type string, coordinates array<array<array<double>>>"
-            ).alias("geometry"),
-            F.struct(*[F.col(p) for p in props]).alias("properties"),
-        )
-    )
-    df.select(feature.alias("value")).write.mode("overwrite").text(out_dir)
-    return out_dir
 
 
 def collect_feature_collection(

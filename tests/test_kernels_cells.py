@@ -182,3 +182,46 @@ def test_part1by1_lut_equals_orshift_all_widths(spark):
             .count()
         )
         assert bad == 0, f"width {width}: {bad} diffs"
+
+
+def test_grid_cell_col_matches_kernel_on_edges(spark):
+    """The JVM grid index (grid_ix_col/grid_iy_col, and grid_cell_col
+    built from them) equals kernels.cells on clamp edges and on exact
+    cell boundaries: x = lon0 + 7k/64 and y = lat0 + 5k/64 are exact
+    doubles whose scaled offsets are exact multiples of a cell width
+    at every level up to 14."""
+    import pyspark.sql.functions as F
+
+    from cadastre_pg_spark.data import synthetic as S
+
+    k = np.arange(-2, 131, dtype=np.float64)
+    lon = np.concatenate(
+        [
+            C.GRID_LON0 + 7.0 * k / 64.0,
+            [C.GRID_LON0, C.GRID_LON1, np.nextafter(C.GRID_LON0, -np.inf),
+             np.nextafter(C.GRID_LON1, -np.inf), -1e300, 1e300, -180.0, 180.0],
+            RNG.uniform(-6, 10, 200),
+        ]
+    )
+    lat = np.concatenate(
+        [
+            C.GRID_LAT0 + 5.0 * k / 64.0,
+            [C.GRID_LAT0, C.GRID_LAT1, np.nextafter(C.GRID_LAT0, -np.inf),
+             np.nextafter(C.GRID_LAT1, -np.inf), -1e300, 1e300, -90.0, 90.0],
+            RNG.uniform(40, 52, 200),
+        ]
+    )
+    df = spark.createDataFrame(
+        [(float(x), float(y)) for x, y in zip(lon, lat)], "lon double, lat double"
+    )
+    for level in (1, 7, 10, 14):
+        rows = df.select(
+            S.grid_ix_col(F.col("lon"), level).alias("ix"),
+            S.grid_iy_col(F.col("lat"), level).alias("iy"),
+            S.grid_cell_col(F.col("lon"), F.col("lat"), level).alias("cell"),
+        ).collect()
+        ix, iy = C.grid_cell_xy(lon, lat, level)
+        assert [r["ix"] for r in rows] == ix.tolist(), level
+        assert [r["iy"] for r in rows] == iy.tolist(), level
+        assert [r["cell"] for r in rows] == C.grid_cell(lon, lat, level).tolist(), level
+    assert df.select(S.grid_cell_col(F.col("lon"), F.col("lat"))).dtypes[0][1] == "bigint"

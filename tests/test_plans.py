@@ -713,3 +713,20 @@ def test_trip_segments_one_exchange(spark):
     s = explain_string(df, "simple")
     assert s.count("Exchange") == 1, s[:3000]
     assert not audit(df)["arrow_eval"]
+
+
+PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def test_tiling_is_pure_jvm(spark):
+    """raster_burn, tile_assign and tile_extract compute the mask in
+    closed form from the ring bbox: their executed plans must hold no
+    Python evaluation node (a polyfill would bring back the Arrow
+    round-trip of every fine cell)."""
+    for name in ("raster_burn", "tile_assign", "tile_extract"):
+        df = E.queries()[name](spark, SF_UNIT)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan and "Scan parquet" in plan, plan
+        for node in PYTHON_NODES:
+            assert node not in plan, f"{name}: {node}\n{plan}"
