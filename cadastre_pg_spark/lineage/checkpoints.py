@@ -3,9 +3,23 @@
 The engine's analog of the reference's `_archive_checksums` skip table
 (cadastre-pg/src/export/postgres.rs:98-168, probe cli.rs:321-356):
 a unit of work (partition) whose (stage, partition_id, content_hash)
-is already committed is pruned BEFORE any processing — the Spark form
-is an anti-join of the input's partition list against `_checkpoints`,
-mirroring the reference skipping whole archives before decompression.
+is already committed is pruned BEFORE any processing, mirroring the
+reference skipping whole archives before decompression.
+
+A stage runs in five steps, and evaluates its input plan at most twice:
+
+1. census — one small aggregate of the input (<= one row per
+   partition: its id and content hash) and the stage's committed rows
+   are collected to the driver;
+2. skip set — the driver keeps the partitions not committed under
+   their current hash (SQL anti-join semantics: a null hash never
+   counts as committed, a null partition value is never processed);
+3. write — the input, filtered to that literal id list, is processed
+   and written to per-partition directories;
+4. landed — rows per written partition are counted from the output's
+   partition column, bytes are summed from its files;
+5. append — one checkpoint row per processed partition, built from
+   those driver-side values, is appended to `_checkpoints`.
 
 North-rule extensions over the reference: per-partition row/byte
 metrics (the reference only counts globally, cli.rs:285-291) and
@@ -55,6 +69,28 @@ CHECKPOINT_SCHEMA = T.StructType(
     ]
 )
 
+METRICS_SCHEMA = T.StructType([CHECKPOINT_SCHEMA["partition_id"], CHECKPOINT_SCHEMA["rows"]])
+
+
+def _local_df(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """A local relation of driver-side tuples, built from an Arrow table:
+    collecting it runs no job, empty or not (createDataFrame(list)
+    parallelizes the rows through a Python worker instead)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of `path` through the session's Hadoop conf."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
 
 class CheckpointLog:
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -62,10 +98,13 @@ class CheckpointLog:
         self.dir = os.path.join(base_dir, "_checkpoints")
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.dir)
-        except Exception:
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        """The whole log; empty only when `_checkpoints` does not exist.
+        An unreadable log raises (here or at the first action) instead
+        of passing for "nothing committed" and reprocessing everything."""
+        fs, path = _hadoop_path(self.spark, self.dir)
+        if not fs.exists(path):
+            return _local_df(self.spark, [], CHECKPOINT_SCHEMA)
+        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.dir)
 
     def committed(self, stage: str) -> DataFrame:
         """(partition_id, content_hash) of the LATEST committed row per
@@ -111,18 +150,26 @@ def run_stage(
     """Execute `process(df) -> df` over only the NOT-yet-committed
     partitions of input_df, write results partitioned by partition_col
     (idempotent per-partition dirs, overwritten on replay), then commit
-    one checkpoint row per partition with row/byte metrics.
+    one checkpoint row per processed partition with the rows and bytes
+    that landed.
 
-    Returns (out_dir, metrics_df). Resume = call again with the same
-    stage/base_dir: committed partitions are anti-joined away before
-    any processing (the J5 archive-skip semantics)."""
+    census -> driver-side skip set -> write -> landed -> append: the
+    input plan runs once for the census and once for the write (not at
+    all for the write when every partition is committed); the skip set,
+    the metrics and the commit rows are driver-side literals.
+
+    Returns (out_dir, metrics_df), metrics_df a local (partition_id,
+    rows) frame of this call's commits: collecting it runs no job.
+    Resume = call again with the same stage/base_dir: committed
+    partitions are skipped before any processing (the J5 archive-skip
+    semantics), and a call with nothing to do appends nothing."""
     log = CheckpointLog(spark, base_dir)
     out_dir = os.path.join(base_dir, stage)
 
-    # content-derived partition hash (J5: the reference checksums the
-    # archive BYTES, cli.rs:1357-1374): order-independent sum of 32-bit
-    # row hashes over all columns — changed data => changed hash =>
-    # reprocess, identical data => skip
+    # census. Content-derived partition hash (J5: the reference
+    # checksums the archive BYTES, cli.rs:1357-1374): order-independent
+    # sum of 32-bit row hashes over all columns — changed data =>
+    # changed hash => reprocess, identical data => skip
     if content_hash_col is None:
         row_hash = F.pmod(
             F.xxhash64(F.struct(*[F.col(c) for c in input_df.columns])),
@@ -143,19 +190,22 @@ def run_stage(
                 content_hash_col.alias("content_hash"),
             )
             .groupBy("partition_id")
-            .agg(F.min("content_hash").alias("content_hash"))
+            .agg(F.min("content_hash").cast("string").alias("content_hash"))
         )
-    done = log.committed(stage)
-    todo = parts.join(done, ["partition_id", "content_hash"], "left_anti")
+    done = {r.partition_id: r.content_hash for r in log.committed(stage).collect()}
+    todo = {
+        r.partition_id: r.content_hash
+        for r in parts.collect()
+        if r.partition_id is not None
+        and (r.content_hash is None or done.get(r.partition_id) != r.content_hash)
+    }
+    if not todo:
+        return out_dir, _local_df(spark, [], METRICS_SCHEMA)
+    todo_ids = sorted(todo)
 
-    pending = input_df.join(
-        F.broadcast(todo.select(F.col("partition_id").alias(partition_col))),
-        partition_col,
-        "left_semi",
-    )
-    processed = process(pending).withColumn(
-        "_pid", F.col(partition_col).cast("int")
-    )
+    processed = process(
+        input_df.filter(F.col(partition_col).cast("int").isin(todo_ids))
+    ).withColumn("_pid", F.col(partition_col).cast("int"))
 
     # data files first (idempotent: per-partition dirs, dynamic overwrite).
     # Save/restore the session conf — leaking 'dynamic' would silently
@@ -171,35 +221,30 @@ def run_stage(
         else:
             spark.conf.set(conf_key, prev_mode)
 
-    # metrics from what landed, then the commit-point append (an empty
-    # stage may write no files at all — read with the known schema).
-    # Only the partition column is read: counting a parquet scan pruned
-    # to the directory-derived column is served from file footers, so
-    # this is a metadata pass, NOT a re-scan of the stage output.
-    try:
-        landed_raw = spark.read.schema(processed.schema).parquet(out_dir).select("_pid")
-    except Exception:
-        landed_raw = spark.createDataFrame([], processed.schema).select("_pid")
-    landed = landed_raw.join(
-        F.broadcast(todo.select(F.col("partition_id").alias("_pid"))),
-        "_pid",
-        "left_semi",
+    # landed: rows from the partition column alone (a count served from
+    # file footers, not a re-scan of the stage output), bytes from the
+    # files of each partition directory. A partition whose processing
+    # produced no rows has no directory: 0 rows, 0 bytes.
+    rows = dict(
+        spark.read.schema(processed.schema)
+        .parquet(out_dir)
+        .select("_pid")
+        .filter(F.col("_pid").isin(todo_ids))
+        .groupBy("_pid")
+        .count()
+        .collect()
     )
-    metrics = landed.groupBy(F.col("_pid").alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows")
+
+    def landed_bytes(k: int) -> int:
+        fs, path = _hadoop_path(spark, os.path.join(out_dir, f"_pid={k}"))
+        return fs.getContentSummary(path).getLength() if fs.exists(path) else 0
+
+    commits = [
+        (run_id, stage, k, todo[k], rows.get(k, 0), landed_bytes(k), "committed")
+        for k in todo_ids
+    ]
+    log.append(
+        _local_df(spark, commits, T.StructType(CHECKPOINT_SCHEMA.fields[:-1]))
+        .withColumn("committed_at", F.current_timestamp())
     )
-    commit_rows = (
-        todo.join(metrics, "partition_id", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.col("partition_id"),
-            F.col("content_hash"),
-            F.coalesce(F.col("rows"), F.lit(0)).alias("rows"),
-            (F.coalesce(F.col("rows"), F.lit(0)) * F.lit(64)).alias("bytes"),
-            F.lit("committed").alias("status"),
-            F.current_timestamp().alias("committed_at"),
-        )
-    )
-    log.append(commit_rows)
-    return out_dir, commit_rows.select("partition_id", "rows")
+    return out_dir, _local_df(spark, [(k, rows.get(k, 0)) for k in todo_ids], METRICS_SCHEMA)

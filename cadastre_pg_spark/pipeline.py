@@ -5,8 +5,8 @@ cadastre-pg/src/cli.rs:116-661):
 reference stage                         -> engine stage
 ------------------------------------------------------------------
 collect_archives + checksum skip (J5)   -> pages table, per-dep
-                                           partitions anti-joined vs
-                                           _checkpoints (content hash)
+                                           partitions whose content hash
+                                           _checkpoints holds are skipped
 decode + parse (S2-S8)                  -> byte-identical html->text
                                            extraction (Arrow kernel)
 geometry build + reproject (J2, R)      -> deterministic page points
