@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 
 from cadastre_pg_spark.operators.dedup import shingle_hash32, shingles
 
+from .held import hold
+
 MILLION = 1_000_000
 
 
@@ -244,7 +246,7 @@ def group_sample(
                     f"group_sample prune undershot for stratum {g!r}: "
                     f"{got.get(g, 0)} < {want}; raise oversample (= {oversample})"
                 )
-        ranked._cadastre_cached = [ranked]
+        hold(ranked, ranked)
     return ranked
 
 
@@ -798,7 +800,6 @@ def cluster_split(
     bounds = _ppm_bounds(splits)
     cc0 = dedup_clusters(docs, threshold=threshold, hash_fn=hash_fn)
     cc = cc0.localCheckpoint(eager=True)
-    cached = [cc] + getattr(cc0, "_cadastre_cached", [])
     bcast = cc.count() <= 5_000_000
     j = docs.select("doc_id").join(
         F.broadcast(cc) if bcast else cc, "doc_id", "left"
@@ -811,8 +812,7 @@ def cluster_split(
         u.alias("u"),
         _split_case(u, bounds).alias("split"),
     )
-    out._cadastre_cached = cached
-    return out
+    return hold(out, cc, cc0)
 
 
 def global_shuffle(
@@ -1483,5 +1483,4 @@ def source_kl_divergence(
             (kl_num.cast("double") / d.cast("double")) / F.lit(1e6)
         ).alias("kl_nats"),
     )
-    out._cadastre_cached = [stw]
-    return out
+    return hold(out, stw)

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .held import hold
+
 # deterministic MinHash parameters (seeded once, shared engine-wide).
 # The shingle hash is masked to 32 bits so the affine mix a*h+b stays
 # far inside int64 (Spark 4 runs ANSI mode: long overflow is an error).
@@ -297,8 +299,8 @@ def incremental_neardup(
       the batch pairs restricted to new-doc involvement — pytest-held.
 
     doc_ids must be globally unique across store and new snapshot.
-    Returns (doc_a, doc_b, jaccard) with `_skipped_buckets` metric and
-    `_new_store_rows` — the new docs' signature rows to APPEND to the
+    Returns (doc_a, doc_b, jaccard) with the `skipped(result)` metric
+    and `_new_store_rows` — the new docs' signature rows to APPEND to the
     store for the next increment.
     """
     import math as _math
@@ -361,10 +363,8 @@ def incremental_neardup(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    verified._skipped_buckets = skipped
     verified._new_store_rows = ss_new
-    verified._cadastre_cached = [ss_new]
-    return verified
+    return hold(verified, ss_new, skipped=skipped)
 
 
 def minhash_lsh_pairs(
@@ -389,7 +389,7 @@ def minhash_lsh_pairs(
     - degenerate-bucket cap: buckets with > max_bucket members
       (boilerplate/empty-doc mega-buckets that would go quadratic) are
       SKIPPED, and the skipped buckets are attached as a metric
-      DataFrame on the result (`result._skipped_buckets`: band, key, n)
+      DataFrame on the result (`skipped(result)`: band, key, n)
       — no silent caps;
     - verify rung 1 (JVM): signature-estimated Jaccard (matching
       minhash fraction) must reach threshold - est_margin before the
@@ -433,9 +433,7 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    verified._skipped_buckets = skipped
-    verified._cadastre_cached = [ss]
-    return verified
+    return hold(verified, ss, skipped=skipped)
 
 
 def ngram_jaccard_pairs(
@@ -459,7 +457,7 @@ def ngram_jaccard_pairs(
     - bands with > max_band members are SKIPPED (the within-band pair
       grid is O(band²) by the exact contract — a web-scale corpus puts
       millions of docs in one length band, which no salting can shrink)
-      and reported on the result as `_skipped_bands` (band, n) — no
+      and reported on the result as `skipped(result)` (band, n) — no
       silent caps;
     - prefilter='minhash' is the SCALE PATH past that cap: candidates
       come from the shared LSH band buckets (_lsh_candidates — a
@@ -467,7 +465,7 @@ def ngram_jaccard_pairs(
       within-band grid, then the SAME token-band contract and exact
       hashed-set Jaccard verify apply. Probabilistic recall (a pair at
       threshold j survives banding with 1-(1-j^4)^8), exact precision;
-      skipped LSH buckets reported as `_skipped_buckets`;
+      skipped LSH buckets reported as `skipped(result)`;
     - an EXACT size-ratio prefilter inside the join condition:
       jaccard <= min(|A|,|B|)/max(|A|,|B|), so pairs failing
       least >= threshold*greatest can never reach the threshold and are
@@ -562,9 +560,7 @@ def ngram_jaccard_pairs(
             6,
         ).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
-    out._skipped_bands = skipped
-    out._cadastre_cached = [sets]
-    return out
+    return hold(out, sets, skipped=skipped)
 
 
 def _ngram_jaccard_lsh(
@@ -626,9 +622,7 @@ def _ngram_jaccard_lsh(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    out._skipped_buckets = skipped
-    out._cadastre_cached = [ss]
-    return out
+    return hold(out, ss, skipped=skipped)
 
 
 def simhash(docs: DataFrame, bits: int = 32, hash_fn: str = "xxhash64") -> DataFrame:
@@ -702,7 +696,7 @@ def embedding_neardup_pairs(
     - buckets with > max_bucket members (zero vectors, cluster
       collapse) are SKIPPED — the within-bucket pair join is O(n²/2^p)
       only while buckets stay bounded — and reported on the result as
-      `_skipped_buckets` (bucket, n). No silent caps, no silent melt."""
+      `skipped(result)` (bucket, n). No silent caps, no silent melt."""
     from .similarity import _unit_and_bucket
 
     if n_planes is None:
@@ -748,9 +742,7 @@ def embedding_neardup_pairs(
     out = cand.select("vec_a", "ua", "vec_b", "ub").mapInPandas(
         verify, schema="vec_a long, vec_b long, cosine double"
     )
-    out._skipped_buckets = skipped
-    out._cadastre_cached = [sig]
-    return out
+    return hold(out, sig, skipped=skipped)
 
 
 def line_hash(col, hash_fn: str = "xxhash64"):
@@ -1021,7 +1013,7 @@ def fuzzy_pairs(
     equi-join on the block key -> per-pair banded DP. Skew guard:
     optional `max_block` drops blocks above the cap via a window
     count over the join's own partition key (one exchange) and
-    reports them as `_skipped_blocks` (blk, n) — the engine's
+    reports them as `skipped(result)` (blk, n) — the engine's
     no-silent-cap rule.
     """
     strs = (
@@ -1057,8 +1049,7 @@ def fuzzy_pairs(
         .select("s_a", "s_b", dist.alias("dist"))
         .where(F.col("dist") >= 0)  # thresholded DP returns -1 past max_dist
     )
-    out._skipped_blocks = skipped
-    return out
+    return hold(out, skipped=skipped)
 
 
 def _rarity_ordered(docs: DataFrame, doc_col: str, text_col: str):
@@ -1143,9 +1134,8 @@ def setsim_join(
 
     Skew guard: with `max_bucket` set, prefix tokens whose candidate
     bucket exceeds the cap are dropped from the equi-join and
-    reported on the result's `_skipped_buckets` attribute as
-    (ptok, n) — the engine's no-silent-cap rule (same pattern as
-    fuzzy_pairs._skipped_blocks). This trades recall for a bounded
+    reported as `skipped(result)` (ptok, n) — the engine's
+    no-silent-cap rule (same pattern as fuzzy_pairs). This trades recall for a bounded
     pair grid on a pathological corpus where every doc shares one
     rare token set (rarity ordering cannot bound that bucket): a
     pair meeting ONLY at a dropped token is lost, though at high
@@ -1248,9 +1238,7 @@ def setsim_join(
         uni.cast("long").alias("uni"),
         (F.col("inter").cast("double") / uni.cast("double")).alias("jaccard"),
     )
-    out._cadastre_cached = [ordered, census]  # release_cached(out) after action
-    out._skipped_buckets = skipped_buckets
-    return out
+    return hold(out, ordered, census, skipped=skipped_buckets)
 
 
 def containment_join(
@@ -1282,7 +1270,7 @@ def containment_join(
     threshold. Verify reuses the injectivity-gated BIGINT-array
     intersect; pair grid stays ids + ints (the setsim narrow-grid
     rule); `max_bucket` caps posting-token buckets with the standard
-    `_skipped_buckets` metric (default None == exact, the oracle
+    `skipped(result)` metric (default None == exact, the oracle
     form).
 
     Scale shape: the b side posting all tokens is the operator's
@@ -1349,9 +1337,7 @@ def containment_join(
             "containment"
         ),
     )
-    out._cadastre_cached = [ordered, census]  # release_cached(out) after action
-    out._skipped_buckets = skipped_buckets
-    return out
+    return hold(out, ordered, census, skipped=skipped_buckets)
 
 
 def minhash_calibration(
@@ -1376,8 +1362,8 @@ def minhash_calibration(
     in any order; the three final figures are single divisions behind
     a 6 dp round. Scale shape: minhash_lsh_pairs' shape minus the
     threshold filters — bucketed candidates with the measured cap +
-    `_skipped_buckets`, never all-pairs; one final one-row aggregate.
-    Call spatial_join.release_cached(result) after the action."""
+    `skipped(result)`, never all-pairs; one final one-row aggregate.
+    Call release_cached(result) after the action."""
     ss = minhash_store(docs, n_shingle, hash_fn).persist()
     cand, skipped = _lsh_candidates(ss, max_bucket)
     a_side = ss.select(
@@ -1423,9 +1409,7 @@ def minhash_calibration(
         ).alias("bias"),
         F.round(F.col("mx").cast("double") / F.lit(1e6), 6).alias("max_abs_err"),
     )
-    out._skipped_buckets = skipped
-    out._cadastre_cached = [ss]
-    return out
+    return hold(out, ss, skipped=skipped)
 
 
 def keep_best(
@@ -1475,8 +1459,7 @@ def keep_best(
             F.col("n_tokens").alias("survivor_tokens"),
         )
     )
-    out._cadastre_cached = getattr(cc, "_cadastre_cached", [])
-    return out
+    return hold(out, cc)
 
 
 def winnowing(
@@ -1562,7 +1545,7 @@ def winnow_pairs(
     `min_shared` distinct selected hashes — the MOSS match step.
     Pairs meet in fingerprint-hash buckets (never all-pairs); buckets
     over `max_bucket` docs (corpus-wide boilerplate stamps) are
-    dropped and reported on `_skipped_buckets` as (fph, n) — the
+    dropped and reported as `skipped(result)` (fph, n) — the
     house no-silent-cap rule. The window count runs over the join's
     own partition key (one exchange, no driver collect)."""
     fps = winnowing(docs, k, w, hash_fn, text_col).select(
@@ -1588,8 +1571,7 @@ def winnow_pairs(
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= F.lit(min_shared))
     )
-    out._skipped_buckets = skipped
-    return out
+    return hold(out, skipped=skipped)
 
 
 def sorted_neighborhood(
@@ -1768,7 +1750,7 @@ def lsh_threshold_sweep(
     match counts. Scale shape (100 TB): signatures persist once and
     every layout reads them (multi-pass playbook rule); per layout the
     candidate join is the capped-bucket shape of minhash_lsh_pairs
-    with the same `_skipped_buckets` metric (pick rows_per_band >= 2 —
+    with the same `skipped(result)` metric (pick rows_per_band >= 2 —
     single-row bands bucket on ONE minhash value and degenerate
     toward all-pairs); pairs carry only ids + two 32-long signature
     arrays, never text."""
@@ -1897,9 +1879,7 @@ def lsh_threshold_sweep(
             ).alias("mean_est"),
         )
     )
-    out._skipped_buckets = skipped
-    out._cadastre_cached = [ss]
-    return out
+    return hold(out, ss, skipped=skipped)
 
 
 def simhash_pairs(
@@ -1920,7 +1900,7 @@ def simhash_pairs(
     Scale shape (100 TB): the corpus collapses to 8-byte fingerprints
     first; banding explodes to radius+1 narrow (band, key, doc_id,
     simhash) rows; the self-join shuffles on (band, key) with the
-    house bucket cap + `_skipped_buckets` metric (a degenerate band —
+    house bucket cap + `skipped(result)` metric (a degenerate band —
     e.g. all-empty docs sharing fingerprint 0 — caps loudly instead
     of going quadratic); the hamming check is two longs through
     xor/bit_count codegen. Exactly SQL-replayable in md5 mode."""
@@ -1975,6 +1955,4 @@ def simhash_pairs(
         )
         .distinct()
     )
-    out._skipped_buckets = skipped
-    out._cadastre_cached = [sigs]
-    return out
+    return hold(out, sigs, skipped=skipped)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import connected_components
+from .held import hold
 
 
 def _neighbors8(cell, n: int):
@@ -119,8 +120,7 @@ def dbscan_grid(
             .alias("role"),
         )
     )
-    out._cadastre_cached = [core, clus] + getattr(cc, "_cadastre_cached", [])
-    return out
+    return hold(out, core, clus, cc)
 
 
 def smooth_cell_counts(
@@ -330,8 +330,7 @@ def morans_i(
             / (F.col("w_pairs").cast("double") * F.col("den_units").cast("double")),
         ).alias("morans_i"),
     )
-    out._cadastre_cached = [counts]
-    return out
+    return hold(out, counts)
 
 
 def _neighbors9(cell, n: int):
@@ -443,8 +442,7 @@ def local_gi(
         "w_sum",
         (F.when(F.lit(s_val) != 0.0, num / den)).alias("gi_z"),
     )
-    out._cadastre_cached = [counts]
-    return out
+    return hold(out, counts)
 
 
 def cell_entropy(

@@ -23,6 +23,8 @@ silently emitting a non-converged labeling.
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .held import hold
+
 
 def _shuffle_n(df: DataFrame) -> int:
     """The session's shuffle-partition count (the bench/production conf
@@ -121,8 +123,7 @@ def connected_components(
     prev_sum, n_nodes = first[0], first[1]
     if prev_sum is None:  # no edges at all
         out = lab.select("node", F.col("lab").alias("cluster"))
-        out._cadastre_cached = cached
-        return out
+        return hold(out, *cached)
     # measured strategy gate (house rule): the label table is one
     # (node, lab) long-pair per node — under ~5M nodes it broadcasts
     # (<~100 MB build), turning BOTH per-round joins map-side so the
@@ -202,8 +203,7 @@ def connected_components(
         out = _min_rounds(sym, lab, prev_sum, max_rounds).select(
             "node", F.col("lab").alias("cluster")
         )
-        out._cadastre_cached = cached
-        return out
+        return hold(out, *cached)
 
     # dense/large graph: one neighborhood-min round over the raw
     # edges, then contract and iterate on the (much smaller) label
@@ -222,8 +222,7 @@ def connected_components(
     s1 = l1.agg(F.sum("lab")).first()[0]
     if s1 == prev_sum:
         out = l1.select("node", F.col("lab").alias("cluster"))
-        out._cadastre_cached = cached
-        return out
+        return hold(out, *cached)
     m1 = l1.select(F.col("node").alias("m_node"), F.col("lab").alias("m_lab"))
     m2 = l1.select(F.col("node").alias("w_node"), F.col("lab").alias("w_lab"))
     e2 = (
@@ -257,8 +256,7 @@ def connected_components(
             F.coalesce(F.col("f_lab"), F.col("lab")).alias("cluster"),
         )
     )
-    out._cadastre_cached = cached
-    return out
+    return hold(out, *cached)
 
 
 def dedup_clusters(
@@ -274,10 +272,7 @@ def dedup_clusters(
     pairs = minhash_lsh_pairs(docs, threshold=threshold, hash_fn=hash_fn)
     cc = connected_components(pairs)
     out = cc.select(F.col("node").alias("doc_id"), "cluster")
-    out._cadastre_cached = getattr(cc, "_cadastre_cached", []) + getattr(
-        pairs, "_cadastre_cached", []
-    )
-    return out
+    return hold(out, cc, pairs)
 
 
 RANK_UNIT = 1e14  # 1 rank unit = 1e-14; max rank (=1) fits 2^53 exactly
@@ -375,8 +370,7 @@ def pagerank(
         cached.append(out)
         ranks = out.select("v", F.floor(F.col("rd") * F.lit(RANK_UNIT)).alias("u"))
     res = out.select(F.col("v").alias("node"), F.col("rd").alias("rank"))
-    res._cadastre_cached = cached
-    return res
+    return hold(res, *cached)
 
 
 def hits(
@@ -496,8 +490,7 @@ def hits(
     res = hub.join(_b(auth), F.col("v") == F.col("va")).select(
         F.col("v").alias("node"), "hub", "authority"
     )
-    res._cadastre_cached = cached
-    return res
+    return hold(res, *cached)
 
 
 def kcore(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
@@ -545,8 +538,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
         n_alive = alive.count()
         if n_alive == 0 or n_alive == n_prev:
             out = alive.select("node", "core_deg")
-            out._cadastre_cached = cached
-            return out
+            return hold(out, *cached)
         # node-sized alive set under ~5M rows broadcasts both semi
         # joins (measured gate, n_alive is already counted) — the edge
         # list is filtered map-side instead of re-shuffling per round
@@ -744,8 +736,7 @@ def bfs_hops(
         n_frontier = nxt.count()
         if n_frontier == 0:
             out = lab.select("node", F.col("hop").cast("int").alias("hop"))
-            out._cadastre_cached = cached
-            return out
+            return hold(out, *cached)
         if n_lab + n_frontier <= _B:
             # visited stays a lazy union of cached frames — no extra job
             lab = lab.unionByName(nxt)
@@ -785,7 +776,7 @@ def neighborhood_overlap(
     hub of degree d contributes O(d^2) wedges, so `max_center_deg`
     optionally EXCLUDES hub centers (their common-neighbor signal is
     noise at web scale — everyone co-cites the homepage) and reports
-    how many were dropped via the `_skipped_hubs` attribute, the
+    how many were dropped as `skipped(result)`, the
     engine's no-silent-caps rule.
     """
     und = (
@@ -840,8 +831,7 @@ def neighborhood_overlap(
             ).alias("jaccard"),
         )
     )
-    out._skipped_hubs = skipped
-    return out
+    return hold(out, skipped=skipped)
 
 
 def sssp(
@@ -941,8 +931,7 @@ def sssp(
         n_frontier = improved.count()
         if n_frontier == 0:
             out = lab.select("node", "dist")
-            out._cadastre_cached = cached
-            return out
+            return hold(out, *cached)
         lab = lab.join(
             _gate(improved.select("node"), n_frontier), "node", "left_anti"
         ).unionByName(improved)
@@ -1047,8 +1036,7 @@ def label_prop(
         )
         cached.append(lab)
     out = lab.select("node", F.col("lab").alias("label"))
-    out._cadastre_cached = cached
-    return out
+    return hold(out, *cached)
 
 
 def personalized_pagerank(
@@ -1144,5 +1132,4 @@ def personalized_pagerank(
             "v", F.floor(F.col("rd") * F.lit(RANK_UNIT)).alias("u")
         )
     res = out.select(F.col("v").alias("node"), F.col("rd").alias("rank"))
-    res._cadastre_cached = cached
-    return res
+    return hold(res, *cached)

@@ -24,6 +24,8 @@ Scale notes:
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .held import hold
+
 US = 1_000_000
 
 
@@ -95,8 +97,8 @@ def interval_overlap_join(
     the residual prunes, so a mega-bucket is genuinely quadratic.
     The first scale lever is bucket_seconds (shrink buckets to thin
     the grid); for adversarial density, `max_per_bucket` SKIPS buckets
-    whose side population exceeds it and reports them on the result as
-    `_skipped_buckets` (bucket, side, n) — the engine's no-silent-cap
+    whose side population exceeds it and reports them as
+    `skipped(result)` (bucket, side, n) — the engine's no-silent-cap
     rule, same treatment as the LSH band caps."""
     self_join = b is None
     if self_join:
@@ -150,9 +152,7 @@ def interval_overlap_join(
             overlap_us.alias("overlap_us"),
         )
     )
-    if skipped is not None:
-        out._skipped_buckets = skipped
-    return out
+    return hold(out, skipped=skipped)
 
 
 def interval_point_join(
@@ -174,7 +174,7 @@ def interval_point_join(
     The per-bucket candidate grid is |points| x |intervals| before the
     containment residual prunes, so a hot bucket (traffic spike hour)
     is quadratic. `max_per_bucket` SKIPS buckets whose side population
-    exceeds it and reports them on the result as `_skipped_buckets`
+    exceeds it and reports them as `skipped(result)`
     (bucket, side, n) — measured cap, never silent."""
     lo = _bucket(F.col(start), bucket_seconds)
     hi = _bucket(F.col(end), bucket_seconds)
@@ -199,9 +199,7 @@ def interval_point_join(
         .filter((F.col(start) <= F.col(ts)) & (F.col(ts) <= F.col(end)))
         .select(pt_id, iv_id, ts, start, end)
     )
-    if skipped is not None:
-        out._skipped_buckets = skipped
-    return out
+    return hold(out, skipped=skipped)
 
 
 def concurrency_profile(
@@ -282,5 +280,4 @@ def concurrency_profile(
             .alias("active"),
         )
     )
-    out._cadastre_cached = [census]
-    return out
+    return hold(out, census)

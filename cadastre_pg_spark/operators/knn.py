@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..data import synthetic as S
 from ..kernels import cells as C
+from .held import hold
 
 HARD_MAX_LEVEL = 22  # ix*n+iy stays < 2^45
 
@@ -284,7 +285,6 @@ def knn_grid(
     out = out_parts[0]
     for p in out_parts[1:]:
         out = out.unionByName(p)
-    # persisted intermediates attached for release after the terminal
-    # action (spatial_join.release_cached works here too)
-    out._cadastre_cached = cached
-    return out
+    # the result holds the persisted intermediates: release_cached(out)
+    # after the terminal action
+    return hold(out, *cached)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..data import synthetic as S
 from ..kernels import cells as C
+from .held import hold
 
 
 def rect_overlap_join(
@@ -43,8 +44,8 @@ def rect_overlap_join(
     pair join is a narrow-key equi-join on the cell id with the
     first-shared-cell residual, and hot cells (urban parcel clusters)
     ride AQE's skew split. For adversarial density, max_per_cell SKIPS
-    cells whose population exceeds it and reports them on the result
-    as `_skipped_cells` (cell, n) — the engine's no-silent-cap rule.
+    cells whose population exceeds it and reports them as
+    `skipped(result)` (cell, n) — the engine's no-silent-cap rule.
     The per-cell candidate grid is quadratic BEFORE the residual, so
     `level` (cell size) is the first lever, the cap the last resort.
     """
@@ -136,9 +137,7 @@ def rect_overlap_join(
         .filter(cond)
         .select("a_id", "b_id", (ow * oh).alias("area"))
     )
-    if skipped is not None:
-        out._skipped_cells = skipped
-    return out
+    return hold(out, skipped=skipped)
 
 
 def dissolve_rects(
@@ -197,10 +196,7 @@ def dissolve_rects(
         F.max("_x1").alias("x1"),
         F.max("_y1").alias("y1"),
     )
-    out._cadastre_cached = getattr(cc, "_cadastre_cached", []) + getattr(
-        pairs, "_cadastre_cached", []
-    )
-    return out
+    return hold(out, cc, pairs)
 
 
 def areal_interpolate(

@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .held import hold
+
 
 def _unit_and_bucket(df: DataFrame, n_planes: int) -> DataFrame:
     """(vec_id, embedding) -> (vec_id, u array<double>, bucket long),
@@ -228,8 +230,7 @@ def ivf_topk(
     out = scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
     )
-    out._cadastre_cached = [base]
-    return out
+    return hold(out, base)
 
 
 def ivf_recall_report(
@@ -266,8 +267,12 @@ def ivf_recall_report(
     base = embeddings.repartition(fit_partitions, "vec_id")
     approx = ivf_topk(
         base, queries, k=k, n_lists=n_lists, n_probe=n_probe, seed=seed
-    ).select("query_id", "neighbor_id")
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
+    )
+    hits = exact.join(
+        approx.select("query_id", "neighbor_id"),
+        ["query_id", "neighbor_id"],
+        "left_semi",
+    )
     ex = exact.agg(
         F.count(F.lit(1)).alias("n_exact"),
         F.countDistinct("query_id").alias("n_queries"),
@@ -285,8 +290,7 @@ def ivf_recall_report(
             F.col("n_hits").cast("double") / F.col("n_exact").cast("double"),
         ).alias("recall"),
     )
-    out._cadastre_cached = [exact]
-    return out
+    return hold(out, exact, approx)
 
 
 def ivf_topk_sampled(
@@ -782,10 +786,10 @@ def semdedup(
     rule — never ship array payloads through a pair-generating
     equi-join). A pathological quantizer layout can still concentrate
     one cluster, so `max_list` caps it: over-cap clusters are EXCLUDED
-    from the output and reported on `_skipped_lists` as (list_id, n)
+    from the output and reported as `skipped(result)` (list_id, n)
     rows — the engine's no-silent-cap rule. Centroid build is a
     bounded n_lists-row driver collect (the standard broadcast-dim
-    shape). Call spatial_join.release_cached(result) after the
+    shape). Call release_cached(result) after the
     consuming action.
     """
     sc = embeddings.sparkSession.sparkContext
@@ -888,9 +892,7 @@ def semdedup(
         "list_id",
         F.col("_dup").isNull().alias("kept"),
     )
-    out._cadastre_cached = [asn]
-    out._skipped_lists = skipped
-    return out
+    return hold(out, asn, skipped=skipped)
 
 
 # JL projection plane mixer: w[p][d] = ((p*JL_A + d*JL_B) % JL_M) - JL_M//2
@@ -1267,8 +1269,7 @@ def bq_topk(
         rr.withColumn("rank", F.row_number().over(w_fin).cast("long"))
         .filter(F.col("rank") <= k)
     )
-    out._cadastre_cached = [masks]
-    return out
+    return hold(out, masks)
 
 
 def mrl_overlap(

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import shingle_hash32
+from .held import hold
 
 
 def _bitlen_col(v: Column, maxbits: int) -> Column:
@@ -222,8 +223,7 @@ def hll_set_ops(
             ).alias("est_intersect"),
         )
     )
-    out._cadastre_cached = [regs]
-    return out
+    return hold(out, regs)
 
 
 def hll_distinct_sql(
@@ -508,8 +508,7 @@ def heavy_hitters(
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .filter(F.col("cnt") >= F.lit(int(min_count)))
     )
-    out._cadastre_cached = [toks]  # release_cached(out) after the action
-    return out
+    return hold(out, toks)
 
 
 def group_minhash_sim(

@@ -32,6 +32,7 @@ from ..kernels.pip import (
     points_in_polygon,
     points_in_polygons_rowwise,
 )
+from .held import hold, release_cached  # noqa: F401  (re-exported)
 
 PARCEL_FLAT_SCHEMA = (
     "parcel_id long, xs array<double>, ys array<double>, ring_offsets array<int>"
@@ -538,22 +539,11 @@ def cell_spatial_join(
     )
     partial_hits = _pip_refine(partial, parcels, strategy)
     out = full_hits.unionByName(partial_hits)
-    # memory hygiene: the persisted build-side inputs are attached so a
-    # long-lived session can release them once the join materializes
-    # (release_cached(out)) — persist() without unpersist() accumulates
-    # cache across repeated calls (bench loops, multi-stage pipelines).
-    out._cadastre_cached = [parcels, cover]
-    return out
-
-
-def release_cached(df: DataFrame) -> None:
-    """Unpersist the build-side DataFrames cell_spatial_join cached for
-    `df`. Call after the join's terminal action; safe to call twice."""
-    for cached in getattr(df, "_cadastre_cached", []):
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
+    # memory hygiene: the result holds the persisted build-side inputs
+    # so a long-lived session can release them once the join
+    # materializes (release_cached(out)) — persist() without unpersist()
+    # accumulates cache across repeated calls (bench loops, pipelines).
+    return hold(out, parcels, cover)
 
 
 def _with_hex_cell(points: DataFrame, res: int) -> DataFrame:

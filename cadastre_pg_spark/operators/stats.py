@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .held import hold
+
 DEC = "decimal(28,6)"
 
 
@@ -326,8 +328,7 @@ def skyline2d(
         .where(~dominated)
         .select("id", "x", "y")
     )
-    out._cadastre_cached = [tb]
-    return out
+    return hold(out, tb)
 
 
 def mutual_info(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
@@ -373,8 +374,7 @@ def mutual_info(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
             ).alias("mi_u"),
         )
     )
-    out._cadastre_cached = [nab]
-    return out
+    return hold(out, nab)
 
 
 def acf_lag(
@@ -479,9 +479,8 @@ def theil_sen(
     pairs in ONE join key) melts a task, so two guards exist:
 
     - `max_group`: groups above the cap are EXCLUDED from the pair
-      join and reported on the result's `_skipped_groups` attribute
-      as (grp, n) — the engine's no-silent-cap rule (same pattern as
-      fuzzy_pairs._skipped_blocks). The group-size census is a window
+      join and reported as `skipped(result)` (grp, n) — the
+      engine's no-silent-cap rule (same pattern as fuzzy_pairs). The group-size census is a window
       count over the join's own partition key: one exchange, no
       driver collect.
     - `sample_cap`: over-cap groups are deterministically subsampled
@@ -550,7 +549,7 @@ def theil_sen(
     if max_group is not None:
         # over-cap groups are absent from the pair side by design;
         # drop them from the output too (they are reported loudly on
-        # _skipped_groups, not returned as misleading NULL slopes)
+        # skipped(out), not returned as misleading NULL slopes)
         ns = ns.filter(F.col("n") <= max_group)
     out = ns.join(meds, "grp", "left").select(
         "grp",
@@ -558,8 +557,7 @@ def theil_sen(
         F.coalesce(F.col("n_pairs"), F.lit(0)).cast("long").alias("n_pairs"),
         "ts_slope",
     )
-    out._skipped_groups = skipped
-    return out
+    return hold(out, skipped=skipped)
 
 
 # first-significant-digit Benford probabilities, precomputed in Python
@@ -1152,8 +1150,7 @@ def classifier_eval(
             ),
         ).alias("auc"),
     )
-    out._cadastre_cached = [census]
-    return out
+    return hold(out, census)
 
 
 def calibration_ece(
@@ -1282,8 +1279,7 @@ def cohen_kappa(df: DataFrame, gold_col: str, pred_col: str) -> DataFrame:
             ),
         ).alias("kappa"),
     )
-    out._cadastre_cached = [cells]
-    return out
+    return hold(out, cells)
 
 
 def psi_drift(

@@ -11,6 +11,8 @@ from cadastre attributes to web-text quality signals.
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .held import hold
+
 # (lang, keyword) stopword table for the n-gram language heuristic.
 # Occurrence counting uses the replace-length trick so the identical
 # expression exists in ANSI SQL (no regexp dialect divergence).
@@ -482,8 +484,7 @@ def collocations(
             ).alias("pmi_u"),
         )
     )
-    out._cadastre_cached = [nab]
-    return out
+    return hold(out, nab)
 
 
 def skipgram_pmi(
@@ -545,8 +546,7 @@ def skipgram_pmi(
             ).alias("pmi_u"),
         )
     )
-    out._cadastre_cached = [nab]
-    return out
+    return hold(out, nab)
 
 
 def gopher_rules(
@@ -1188,8 +1188,8 @@ def inverted_index(
 
     The (term, doc) census feeds BOTH branches (rank and stats), so it
     is persisted once (the heavy_hitters house pattern) instead of
-    re-tokenizing the corpus per consumer; release via
-    `result._cadastre_cached` after the terminal action."""
+    re-tokenizing the corpus per consumer; call
+    `release_cached(result)` after the terminal action."""
     from pyspark.sql import Window
 
     tf = (
@@ -1232,8 +1232,7 @@ def inverted_index(
         "doc_id",
         "tf",
     )
-    out._cadastre_cached = [tf]
-    return out
+    return hold(out, tf)
 
 
 def linear_score(
@@ -1356,8 +1355,7 @@ def lang_confusion(docs: DataFrame) -> DataFrame:
             ).alias("f1"),
         )
     )
-    out._cadastre_cached = [cells]
-    return out
+    return hold(out, cells)
 
 
 def bpe_merges(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
@@ -1488,8 +1486,7 @@ def bpe_merges(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame
     out = merges[0]
     for mdf in merges[1:]:
         out = out.unionByName(mdf)
-    out._cadastre_cached = cached
-    return out
+    return hold(out, *cached)
 
 
 def heaps_law(
@@ -1923,8 +1920,7 @@ def heldout_perplexity(
             6,
         ).alias("surprisal_ho"),
     )
-    out._cadastre_cached = [ex]
-    return out
+    return hold(out, ex)
 
 
 def bleu_eval(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -2053,5 +2049,4 @@ def bleu_eval(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "p2_num",
         F.round(bleu, 6).alias("bleu2"),
     )
-    out._cadastre_cached = [base]
-    return out
+    return hold(out, base)

@@ -20,11 +20,10 @@ Per query per sf the artifact records one of:
   {"status": "sf_pinned"}   # oracle bakes sf0.01 constants (below)
   {"status": "skipped"}     # declared too heavy at this sf (named)
 
-SF-PINNED queries: their Spark side scales generated input with
-_sf_of(sf_dir) but the driver contract gives oracle_sql() no sf
-parameter, so those oracle strings bake the sf0.01 sizes (by design —
-the driver grades at sf0.01). They are compared ONLY at sf0.01 and
-reported, not silently absent, elsewhere.
+SF-PINNED queries (`__spark_entry__.SF_PINNED`): the driver contract
+gives oracle_sql() no sf parameter, so those oracle strings bake the
+sf0.01 sizes (by design — the driver grades at sf0.01). They are
+compared ONLY at sf0.01 and reported, not silently absent, elsewhere.
 """
 
 import argparse
@@ -36,33 +35,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-# oracle strings bake sf0.01 generated-input sizes (driver contract
-# takes no sf parameter); comparable at sf0.01 only. Derived from:
-# every q_* that calls _sf_of(sf_dir), plus ivf_recall whose oracle
-# pins the measured sf0.01 recall literal.
-SF_PINNED = {
-    "spatial_join_scale",
-    "host_stats",
-    "url_dedup",
-    "url_filter",
-    "label_prop",
-    "ppr",
-    "pagerank",
-    "hits",
-    "triangles",
-    "kcore",
-    "bfs_hops",
-    "sssp",
-    "link_predict",
-    "fuzzy_match",
-    "clustering_coef",
-    "phash",
-    "simplify",
-    "geom_measures",
-    "pages_pipeline",
-    "media_features",
-    "ivf_recall",
-}
+from __spark_entry__ import SF_PINNED  # noqa: E402
 
 # declared per-sf skips: named in the artifact, never silent
 SKIP_AT_SF = {

@@ -11,6 +11,11 @@ SF_UNIT = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def persisted_rdd_ids(spark) -> set:
+    """Ids of the RDDs the session holds in storage."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app="cadastre_pg_spark-tests", cores=8, shuffle_partitions=8)

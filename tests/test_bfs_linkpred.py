@@ -4,6 +4,7 @@ degenerate inputs."""
 from itertools import combinations
 
 from cadastre_pg_spark.operators.graph import bfs_hops, neighborhood_overlap
+from cadastre_pg_spark.operators.held import skipped
 
 
 def _run_bfs(spark, edge_list, seed_list):
@@ -63,7 +64,7 @@ def _run_lp(spark, edge_list, min_common=1, max_center_deg=None):
         edges, min_common=min_common, max_center_deg=max_center_deg
     )
     rows = {(r.u, r.w): (r.common, r.deg_u, r.deg_w, r.jaccard) for r in df.collect()}
-    return rows, df._skipped_hubs
+    return rows, skipped(df)
 
 
 def _brute_lp(edge_list, n, min_common=1):

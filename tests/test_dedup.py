@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cadastre_pg_spark.operators import dedup as D
+from cadastre_pg_spark.operators.held import release_cached, skipped
 from conftest import SF_UNIT
 
 
@@ -84,11 +85,11 @@ def test_minhash_mega_bucket_is_capped_and_reported(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = D.minhash_lsh_pairs(docs, threshold=0.5, max_bucket=64)
     pairs = {(r.doc_a, r.doc_b) for r in out.collect()}
-    skipped = out._skipped_buckets.collect()
+    sk = skipped(out).collect()
     assert (1000, 1001) in pairs
     assert not any(a < 300 and b < 300 for a, b in pairs), "mega-bucket leaked pairs"
-    assert len(skipped) >= D.BANDS  # every band bucket of the clones reported
-    assert all(r.n == 300 for r in skipped)
+    assert len(sk) >= D.BANDS  # every band bucket of the clones reported
+    assert all(r.n == 300 for r in sk)
 
 
 def test_simhash_modes_and_hamming_locality(spark):
@@ -124,10 +125,10 @@ def test_ngram_band_cap_skips_and_reports(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = D.ngram_jaccard_pairs(docs, threshold=0.5, max_band=64)
     pairs = {(r.doc_a, r.doc_b) for r in out.collect()}
-    skipped = out._skipped_bands.collect()
+    sk = skipped(out).collect()
     assert (1000, 1001) in pairs
     assert not any(a < 300 and b < 300 for a, b in pairs), "mega-band leaked pairs"
-    assert len(skipped) == 1 and skipped[0].n == 300
+    assert len(sk) == 1 and sk[0].n == 300
 
 
 def test_ngram_size_prefilter_is_exact(spark, near_dup_docs):
@@ -164,7 +165,7 @@ def test_ngram_lsh_prefilter_matches_exact_mode(spark, near_dup_docs):
     lsh = D.ngram_jaccard_pairs(near_dup_docs, threshold=0.5, prefilter="minhash")
     got = {(r.doc_a, r.doc_b): r.jaccard for r in lsh.collect()}
     assert got == exact
-    assert lsh._skipped_buckets.count() == 0
+    assert skipped(lsh).count() == 0
 
 
 def test_embedding_neardup_mega_bucket_capped(spark):
@@ -184,10 +185,10 @@ def test_embedding_neardup_mega_bucket_capped(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = D.embedding_neardup_pairs(emb, threshold=0.999, n_planes=4, max_bucket=64)
     pairs = {(r.vec_a, r.vec_b) for r in out.collect()}
-    skipped = out._skipped_buckets.collect()
+    sk = skipped(out).collect()
     assert (1000, 1001) in pairs
     assert not any(a < 500 and b < 500 for a, b in pairs), "mega-bucket leaked"
-    assert len(skipped) == 1 and skipped[0].n == 500
+    assert len(sk) == 1 and sk[0].n == 500
 
 
 def test_derive_n_planes_tracks_count():
@@ -413,10 +414,8 @@ def test_setsim_max_bucket_caps_degenerate_vocab_loudly(spark):
     assert out.count() == 0  # the only candidates lived in capped buckets
     # at t=0.9 and |s|=5 the prefix is ONE token; all-tied df=40 breaks
     # by token asc, so the single mega-bucket is "alpha" with 40 rows
-    skipped = {r.ptok: r.n for r in out._skipped_buckets.collect()}
-    assert skipped == {"alpha": 40}
-    from cadastre_pg_spark.operators.spatial_join import release_cached
-
+    sk = {r.ptok: r.n for r in skipped(out).collect()}
+    assert sk == {"alpha": 40}
     release_cached(out)
 
 
@@ -436,8 +435,6 @@ def test_setsim_max_bucket_above_occupancy_is_lossless(spark):
     capped = setsim_join(df, threshold_num=7, max_bucket=10_000)
     got_capped = {(r.a_id, r.b_id): (r.inter, r.uni) for r in capped.collect()}
     assert got_capped == {k: (v.inter, v.uni) for k, v in got.items()}
-    from cadastre_pg_spark.operators.spatial_join import release_cached
-
     release_cached(capped)
 
 
@@ -451,7 +448,6 @@ def test_setsim_duplicate_tokens_collapse(spark):
 
 def test_minhash_calibration_exact_dups_zero_error(spark):
     from cadastre_pg_spark.operators.dedup import minhash_calibration
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     # identical docs: signature estimate 32/32 and exact jaccard 1.0
     # agree exactly -> every error term is 0
@@ -466,7 +462,6 @@ def test_minhash_calibration_exact_dups_zero_error(spark):
 
 def test_minhash_calibration_estimator_is_roughly_unbiased(spark):
     from cadastre_pg_spark.operators.dedup import minhash_calibration
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     docs = spark.read.parquet(f"{SF_UNIT}/documents.parquet")
     out = minhash_calibration(docs)

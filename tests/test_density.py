@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cadastre_pg_spark.operators.density import dbscan_grid
+from cadastre_pg_spark.operators.held import release_cached
 
 LEVEL = 3  # 8x8 grid
 N = 1 << LEVEL
@@ -18,8 +19,7 @@ def _cells_df(spark, cells):
 def _run(spark, cells, min_pts=3):
     df = dbscan_grid(_cells_df(spark, cells), level=LEVEL, min_pts=min_pts)
     rows = {r.doc_id: (r.cluster, r.role) for r in df.collect()}
-    for c in getattr(df, "_cadastre_cached", []):
-        c.unpersist()
+    release_cached(df)
     return rows
 
 

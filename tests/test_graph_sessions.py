@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from cadastre_pg_spark.operators.graph import connected_components, dedup_clusters
+from cadastre_pg_spark.operators.held import release_cached
 from cadastre_pg_spark.operators.sessions import session_stats, sessionize
+from conftest import persisted_rdd_ids
 
 
 def _edges(spark, pairs):
@@ -47,21 +49,18 @@ def test_dedup_clusters_planted(spark):
 
 def test_dedup_clusters_cache_release(spark):
     """The clustering chain persists/checkpoints per round; after
-    release_cached no storage from this op may remain registered."""
-    from cadastre_pg_spark.operators.spatial_join import release_cached
-
+    release_cached no storage from this op may remain registered,
+    localCheckpoint RDDs included."""
     base = " ".join(f"w{k}" for k in range(30))
     docs = spark.createDataFrame(
         [(1, base), (2, base), (3, base)], "doc_id long, text string"
     )
+    before = persisted_rdd_ids(spark)
     out = dedup_clusters(docs, threshold=0.9)
     out.count()
-    assert len(getattr(out, "_cadastre_cached", [])) >= 2
+    assert len(persisted_rdd_ids(spark) - before) >= 2
     release_cached(out)
-    # only non-checkpoint CACHED tables must be gone; localCheckpoint
-    # RDD blocks are owned by the GC (unpersist is best-effort there)
-    for c in out._cadastre_cached:
-        assert c.storageLevel.useMemory is False or not c.is_cached
+    assert not persisted_rdd_ids(spark) - before
 
 
 def test_sessionize_gap_rule(spark):

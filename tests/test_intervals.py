@@ -5,6 +5,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from cadastre_pg_spark.operators.held import skipped
 from cadastre_pg_spark.operators.intervals import interval_point_join
 
 T0 = datetime(2024, 3, 1, 0, 0, 0)
@@ -135,7 +136,7 @@ def test_interval_overlap_mega_bucket_cap(spark):
     pairs = {(r.a_id, r.b_id) for r in out.collect()}
     # dense bucket skipped entirely; quiet bucket pairs survive
     assert pairs == {(100, 101), (101, 102), (100, 102)}
-    sk = {(r.side, r.n) for r in out._skipped_buckets.collect()}
+    sk = {(r.side, r.n) for r in skipped(out).collect()}
     assert sk == {("a", 50), ("b", 50)}
     # uncapped finds the dense pairs too
     full = interval_overlap_join(df, bucket_seconds=3600)
@@ -165,7 +166,7 @@ def test_interval_point_join_hot_hour_cap(spark):
     got = {(r.point_id, r.interval_id) for r in out.collect()}
     exp_quiet = _brute(quiet_iv, quiet_pt)
     assert got == exp_quiet and len(exp_quiet) > 5
-    sk = {(r.side, r.n) for r in out._skipped_buckets.collect()}
+    sk = {(r.side, r.n) for r in skipped(out).collect()}
     # interval side: 60 rows in the hot bucket; point side: 40
     assert sk == {("interval", 60), ("point", 40)}
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from cadastre_pg_spark.operators.dedup import fuzzy_pairs
 from cadastre_pg_spark.operators.density import morans_i
 from cadastre_pg_spark.operators.graph import kcore
+from cadastre_pg_spark.operators.held import skipped
 
 
 # ------------------------------------------------------------------ kcore
@@ -102,8 +103,8 @@ def test_fuzzy_mega_block_cap_and_metric(spark):
     got, out = _pairs(spark, strs, max_dist=2, max_block=10)
     # the 50-string block is skipped entirely, the small one survives
     assert all(a.startswith("bb") for a, _ in got)
-    skipped = out._skipped_blocks.collect()
-    assert len(skipped) == 1 and skipped[0].n == 50
+    sk = skipped(out).collect()
+    assert len(sk) == 1 and sk[0].n == 50
 
 
 # --------------------------------------------------------------- morans_i

@@ -5,6 +5,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from cadastre_pg_spark.operators.held import release_cached
 from cadastre_pg_spark.operators.multimodal import (
     AHASH_BITS,
     _fake_decode_wide,
@@ -22,8 +23,7 @@ def _mi_rows(spark, pairs):
     df = spark.createDataFrame(pairs, "a string, b int")
     out = mutual_info(df, "a", "b")
     rows = {(r.a, r.b): r for r in out.collect()}
-    for c in getattr(out, "_cadastre_cached", []):
-        c.unpersist()
+    release_cached(out)
     return rows
 
 

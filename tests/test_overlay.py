@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from cadastre_pg_spark.operators.held import skipped
 from cadastre_pg_spark.operators.overlay import rect_overlap_join
 
 
@@ -58,7 +59,7 @@ def test_mega_cell_cap_skips_and_reports(spark):
     rows = [(i, 1.0, 44.5, 1.001, 44.501) for i in range(40)]
     out = rect_overlap_join(_rects(spark, rows), level=6, max_per_cell=10)
     assert out.count() == 0
-    sk = out._skipped_cells.collect()
+    sk = skipped(out).collect()
     assert len(sk) >= 1 and all(r.n > 10 for r in sk)
 
 

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cadastre_pg_spark.operators.graph import pagerank
+from cadastre_pg_spark.operators.held import release_cached
 
 
 def _run(spark, edge_list, n, iters=5):
@@ -11,8 +12,7 @@ def _run(spark, edge_list, n, iters=5):
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     df = pagerank(edges, nodes, iters=iters, n_nodes=n)
     out = {r.node: r.rank for r in df.collect()}
-    for c in getattr(df, "_cadastre_cached", []):
-        c.unpersist()
+    release_cached(df)
     return out
 
 

@@ -5,6 +5,7 @@ whole-stage codegen on the hot path, AQE enabled (SURVEY.md §4)."""
 import pyspark.sql.functions as F
 
 import __spark_entry__ as E
+from cadastre_pg_spark.operators.held import release_cached
 from cadastre_pg_spark.plans.audit import audit, plan_has, scan_read_schema
 from conftest import SF_UNIT
 
@@ -356,7 +357,6 @@ def test_semdedup_pair_grid_is_narrow(spark):
     columns in flight; raw vectors attach AFTER pair generation by id
     join (the narrow-pair rule). Assert no exchange hash-partitions on
     an array payload column."""
-    from cadastre_pg_spark.operators.spatial_join import release_cached
     from cadastre_pg_spark.plans.audit import explain_string
 
     df = E.queries()["semdedup"](spark, SF_UNIT)
@@ -544,8 +544,7 @@ def test_inverted_index_shares_census_and_salts_the_rank(spark):
     assert "InMemoryTableScan" in s, s[:3000]
     assert "WindowGroupLimit" in s, s[:3000]
     assert s.count("Exchange") <= 12, s[:3000]
-    for c in df._cadastre_cached:
-        c.unpersist()
+    release_cached(df)
 
 
 def test_global_shuffle_single_exchange(spark):

@@ -5,6 +5,8 @@ import math
 import numpy as np
 import pytest
 
+from cadastre_pg_spark.operators.held import skipped
+
 # ------------------------------------------------------- readability ----
 
 
@@ -658,9 +660,9 @@ def test_lsh_threshold_sweep_bucket_cap_skips_loudly(spark):
     rows = out.collect()
     # cap 1 kills every multi-doc bucket -> no candidate pairs at all
     assert rows == []
-    skipped = out._skipped_buckets.collect()
-    assert len(skipped) > 0  # the dropped work is metered, not silent
-    assert all(r.n > 1 for r in skipped)
+    sk = skipped(out).collect()
+    assert len(sk) > 0  # the dropped work is metered, not silent
+    assert all(r.n > 1 for r in sk)
 
 
 # ---------------------------------------------------- pr_thresholds ----

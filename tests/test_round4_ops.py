@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from conftest import SF_CORRECT
 
 from cadastre_pg_spark.kernels import cells as C
+from cadastre_pg_spark.operators.held import release_cached, skipped
 
 
 # ------------------------------------------------------- morton_ranges ----
@@ -183,7 +184,6 @@ def test_containment_equals_brute_force(spark):
     force on a corpus with quotes-inside-pages, supersets, disjoint
     docs and exact twins."""
     from cadastre_pg_spark.operators.dedup import containment_join
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     rows = [
         (1, "alpha beta gamma delta epsilon"),
@@ -209,7 +209,6 @@ def test_containment_wide_vocab_equals_brute_force(spark):
     slices) with a twin and an everything-superset; engine pairs ==
     all-pairs brute force."""
     from cadastre_pg_spark.operators.dedup import containment_join
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     vocab = [f"w{i:02d}" for i in range(80)]
     rows = []
@@ -233,7 +232,6 @@ def test_containment_clone_groups_equals_brute_force(spark):
     superset — the shape where prefix pruning is weakest; brute-force
     oracle."""
     from cadastre_pg_spark.operators.dedup import containment_join
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     vocab = [f"v{i:02d}" for i in range(64)]  # exactly 64 -> bit 63 used
     rows = []
@@ -256,15 +254,14 @@ def test_containment_bucket_cap_reports_skips(spark):
     """With max_bucket set on a shared-token corpus, skipped posting
     buckets are reported, never silent."""
     from cadastre_pg_spark.operators.dedup import containment_join
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     rows = [(i, f"shared u{i}") for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = containment_join(docs, 8, 10, max_bucket=8)
     n = got.count()
-    skipped = {r.ptok for r in got._skipped_buckets.collect()}
+    sk = {r.ptok for r in skipped(got).collect()}
     release_cached(got)
-    assert "shared" in skipped
+    assert "shared" in sk
     assert n == 0  # every pair met only at the capped token
 
 
@@ -276,7 +273,6 @@ def test_containment_hot_token_cap_keeps_rare_token_pairs(spark):
     containment through the rare bucket — the cap only drops pairs
     whose ONLY meeting point is the capped bucket."""
     from cadastre_pg_spark.operators.dedup import containment_join
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     # docs 0/1: identical 5-token sets (containment 1.0 via rare toks);
     # docs 2..41: share only the hot token with everyone
@@ -286,9 +282,9 @@ def test_containment_hot_token_cap_keeps_rare_token_pairs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = containment_join(docs, 8, 10, max_bucket=16)
     pairs = {(r.a_id, r.b_id): r.containment for r in got.collect()}
-    skipped = {r.ptok for r in got._skipped_buckets.collect()}
+    sk = {r.ptok for r in skipped(got).collect()}
     release_cached(got)
-    assert "hot" in skipped  # 42 > 16: the hot posting bucket is capped
+    assert "hot" in sk  # 42 > 16: the hot posting bucket is capped
     # the identical pair survives through its rare tokens, exact result
     assert pairs == {(0, 1): 1.0, (1, 0): 1.0}
 
@@ -297,11 +293,10 @@ def test_registry_containment_cap_is_above_test_data(spark):
     """The registry call threads CONT_MAX_BUCKET; at sf0.001 the cap
     must skip nothing (the measured-cap contract: oracle unchanged)."""
     import __spark_entry__ as E
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     out = E.queries()["containment_pairs"](spark, "/root/testdata/sf0.001")
     n = out.count()
-    assert out._skipped_buckets.count() == 0
+    assert skipped(out).count() == 0
     assert n > 0
     release_cached(out)
 
@@ -432,4 +427,4 @@ def test_winnow_pairs_cap_reports_skips(spark):
     )
     out = winnow_pairs(docs, 4, 4, min_shared=1, max_bucket=4, hash_fn="md5")
     assert out.count() == 0
-    assert out._skipped_buckets.count() > 0
+    assert skipped(out).count() > 0

@@ -2,6 +2,7 @@
 
 import pyspark.sql.functions as F
 
+from cadastre_pg_spark.operators.held import release_cached, skipped
 from cadastre_pg_spark.operators.similarity import (
     ann_topk,
     ivf_topk,
@@ -212,7 +213,6 @@ def _semdedup_df(spark, rows):
 
 def test_semdedup_drops_copies_keeps_originals(spark):
     from cadastre_pg_spark.operators.similarity import semdedup
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     emb = spark.read.parquet(f"{SF_UNIT}/embeddings.parquet").limit(100)
     copies = emb.select(
@@ -233,7 +233,6 @@ def test_semdedup_drops_copies_keeps_originals(spark):
 
 def test_semdedup_threshold_above_all_keeps_everything(spark):
     from cadastre_pg_spark.operators.similarity import semdedup
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     emb = spark.read.parquet(f"{SF_UNIT}/embeddings.parquet").limit(60)
     out = semdedup(emb.select("vec_id", "embedding"), threshold=0.999)
@@ -243,7 +242,6 @@ def test_semdedup_threshold_above_all_keeps_everything(spark):
 
 def test_semdedup_max_list_caps_hot_cluster_loudly(spark):
     from cadastre_pg_spark.operators.similarity import semdedup
-    from cadastre_pg_spark.operators.spatial_join import release_cached
 
     # 28 identical vectors + 2 distant ones. The sampled quantizer
     # takes the 3 md5-first ids as centroids — for ids 0..29 that
@@ -266,6 +264,6 @@ def test_semdedup_max_list_caps_hot_cluster_loudly(spark):
     got = {r.vec_id: r for r in out.collect()}
     assert set(got) == {27, 6}
     assert all(r.kept for r in got.values())
-    skipped = {(r.list_id, r.n) for r in out._skipped_lists.collect()}
-    assert len(skipped) == 1 and next(iter(skipped))[1] == 28
+    sk = {(r.list_id, r.n) for r in skipped(out).collect()}
+    assert len(sk) == 1 and next(iter(sk))[1] == 28
     release_cached(out)

@@ -126,20 +126,22 @@ def test_merge_snapshot_matrix(spark):
 def test_release_cached_unpersists_build_side(spark):
     """cell_spatial_join persists parcels+cover; release_cached(result)
     must free them (long sessions otherwise accumulate cache)."""
+    from cadastre_pg_spark.operators.held import release_cached
     from cadastre_pg_spark.operators.spatial_join import (
         cell_spatial_join,
         parcels_from_parts,
         points_from_docs,
-        release_cached,
     )
-    from conftest import SF_UNIT
+    from conftest import SF_UNIT, persisted_rdd_ids
 
+    # a same-plan cache left by another test would absorb our persist()
+    spark.catalog.clearCache()
     docs = spark.read.parquet(f"{SF_UNIT}/documents.parquet")
     parts = spark.read.parquet(f"{SF_UNIT}/part.parquet")
+    before = persisted_rdd_ids(spark)
     out = cell_spatial_join(points_from_docs(docs), parcels_from_parts(parts))
     out.count()
-    cached = out._cadastre_cached
-    assert cached and all(df.storageLevel.useMemory for df in cached)
+    assert len(persisted_rdd_ids(spark) - before) == 2  # parcels + cover
     release_cached(out)
-    assert all(not df.storageLevel.useMemory for df in cached)
+    assert not persisted_rdd_ids(spark) - before
     release_cached(out)  # idempotent

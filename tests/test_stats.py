@@ -2,6 +2,7 @@
 
 import pytest
 
+from cadastre_pg_spark.operators.held import skipped
 from cadastre_pg_spark.operators.stats import group_corr, zscore_outliers
 
 
@@ -151,8 +152,8 @@ def test_theil_sen_max_group_skips_hot_group_loudly(spark):
     rows = {r.grp: r for r in out.collect()}
     assert set(rows) == {2}
     assert abs(rows[2].ts_slope - 100.0) < 1e-9  # 1.0/min in cents
-    skipped = {(r.grp, r.n) for r in out._skipped_groups.collect()}
-    assert skipped == {(1, 50)}
+    sk = {(r.grp, r.n) for r in skipped(out).collect()}
+    assert sk == {(1, 50)}
 
 
 def test_theil_sen_sample_cap_bounds_pairs_exact_below_cap(spark):

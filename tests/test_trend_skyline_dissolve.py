@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from cadastre_pg_spark.operators.held import release_cached
 from cadastre_pg_spark.operators.overlay import dissolve_rects
 from cadastre_pg_spark.operators.stats import linear_trend, skyline2d
 
@@ -80,8 +81,7 @@ def _run_skyline(spark, points, **kw):
     )
     out = skyline2d(df, **kw)
     rows = sorted((r.x, r.y) for r in out.collect())
-    for c in getattr(out, "_cadastre_cached", []):
-        c.unpersist()
+    release_cached(out)
     return rows
 
 
@@ -122,8 +122,7 @@ def _rects_df(spark, rects):
 def _run_dissolve(spark, rects, **kw):
     out = dissolve_rects(_rects_df(spark, rects), **kw)
     rows = {r.cluster: r for r in out.collect()}
-    for c in getattr(out, "_cadastre_cached", []):
-        c.unpersist()
+    release_cached(out)
     return rows
 
 
