@@ -508,7 +508,7 @@ def ngram_jaccard_pairs(
         .persist()
     )
     # band occupancy MEASURED driver-side (statistics-first, the same
-    # gate pattern as spatial_join.choose_strategy): the band-size
+    # gate pattern as spatial_join.gate_stats): the band-size
     # table is one row per length band — collecting it costs one tiny
     # TOKENIZE-ONLY job (no md5/distinct, no wait on the persist), and
     # pruning with a LITERAL isin keeps the anti-join (and its
@@ -667,7 +667,7 @@ def derive_n_planes(
 ) -> int:
     """Statistics-first plane count: enough sign bits that the EXPECTED
     bucket holds ~target_occupancy vectors (2^p buckets), clamped to
-    [lo, hi]. Same measured-input gate as spatial_join.choose_strategy:
+    [lo, hi]. Same measured-input gate as spatial_join.gate_stats:
     a fixed p=8 is 256 buckets forever — fine at 10^5 vectors,
     quadratic death at 10^9."""
     import math as _math

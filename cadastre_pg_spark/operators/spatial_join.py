@@ -9,14 +9,20 @@ any Python touching them.
 
 Scale design:
 - probe side (points): cell id computed JVM-side (pure arithmetic,
-  whole-stage codegen) — zero Python on the big side.
+  whole-stage codegen) — zero Python on the big side. The probe side
+  may be a stream: streaming/placement runs this same plan per
+  micro-batch against the static parcels.
 - build side (polygons): polyfill via mapInPandas (NumPy per batch).
-- join strategy chosen EXPLICITLY (north rule) from the measured build
-  size: broadcast when the cell cover fits under the threshold, else
-  shuffle hash join with AQE skew-split; optional deterministic
-  salting splits hot cells (dense urban parcels) across tasks.
-- PIP refinement is an applyInPandas over (parcel, salt) groups so a
-  giant parcel's candidates spread over `pip_salt` tasks.
+- every gate is chosen EXPLICITLY (north rule) from one measured
+  parcel aggregate: broadcast while the parcel count is at most
+  BROADCAST_PARCEL_LIMIT, else a shuffle hash join on cell with AQE
+  skew-split, where cells whose cover fan-out exceeds
+  HOT_CELL_THRESHOLD are salted across tasks; the multi-resolution
+  cover when a parcel's bbox spans more than COMPACT_CELLS_THRESHOLD
+  cells on average.
+- PIP refinement is a mapInPandas over the partial-cell candidates;
+  rings travel as a task broadcast (broadcast path) or are attached by
+  a parcel-id join (shuffle path).
 """
 
 import numpy as np
@@ -29,22 +35,19 @@ from ..kernels import cells as C
 from ..kernels.cover import grid_cover, grid_cover_compact, hex_cover
 from ..kernels.pip import (
     build_edge_matrix,
-    points_in_polygon,
     points_in_polygons_rowwise,
 )
-from .held import hold, release_cached  # noqa: F401  (re-exported)
+# release_cached is re-exported only for the frozen bench.py; new code
+# imports it from operators.held
+from .held import hold, release_cached  # noqa: F401
 
 PARCEL_FLAT_SCHEMA = (
     "parcel_id long, xs array<double>, ys array<double>, ring_offsets array<int>"
 )
 COVER_SCHEMA = (
-    "parcel_id long, cell long, is_full boolean, "
+    "parcel_id long, cell long, is_full boolean, lvl int, "
     "x0 double, x1 double, y0 double, y1 double"
 )
-
-# cover rows (~20 B/row -> ~160 MB ceiling); above this the probe-side
-# join shuffles on cell with AQE skew-split instead of broadcasting
-BROADCAST_CELL_LIMIT = 8_000_000
 
 
 def parcels_from_parts(parts: DataFrame, id_col: str = "p_partkey") -> DataFrame:
@@ -84,85 +87,42 @@ def points_from_docs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-COVER_COMPACT_SCHEMA = (
-    "parcel_id long, cell long, is_full boolean, lvl int, "
-    "x0 double, x1 double, y0 double, y1 double"
-)
-
-
-def polyfill_compact(
-    parcels: DataFrame, level: int = C.DEFAULT_LEVEL, d: int = 3
-) -> DataFrame:
-    """Multi-resolution polygon cover (H3 'compact' analog): interior
-    blocks collapse to coarse cells, boundary stays fine — shrinks the
-    build side for large polygons (dense-urban skew) without losing
-    exactness. Rows: (parcel_id, cell, is_full, lvl)."""
-    sc = parcels.sparkSession.sparkContext
-    parcels = parcels.repartition(sc.defaultParallelism)
-
-    def gen(batches):
-        for pdf in batches:
-            ids, cells_out, fulls, lvls = [], [], [], []
-            bx0, bx1, by0, by1 = [], [], [], []
-            for pid, xs, ys, offs in zip(
-                pdf["parcel_id"].values,
-                pdf["xs"].values,
-                pdf["ys"].values,
-                pdf["ring_offsets"].values,
-            ):
-                xa = np.asarray(xs, dtype=np.float64)
-                ya = np.asarray(ys, dtype=np.float64)
-                cc, ff, ll = grid_cover_compact(
-                    xa, ya, np.asarray(offs, dtype=np.int64), level, d
-                )
-                k = len(cc)
-                ids.append(np.full(k, pid, dtype=np.int64))
-                cells_out.append(cc)
-                fulls.append(ff)
-                lvls.append(ll)
-                bx0.append(np.full(k, xa.min()))
-                bx1.append(np.full(k, xa.max()))
-                by0.append(np.full(k, ya.min()))
-                by1.append(np.full(k, ya.max()))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "parcel_id": np.concatenate(ids),
-                        "cell": np.concatenate(cells_out),
-                        "is_full": np.concatenate(fulls),
-                        "lvl": np.concatenate(lvls).astype(np.int32),
-                        "x0": np.concatenate(bx0),
-                        "x1": np.concatenate(bx1),
-                        "y0": np.concatenate(by0),
-                        "y1": np.concatenate(by1),
-                    }
-                )
-
-    return parcels.select("parcel_id", "xs", "ys", "ring_offsets").mapInPandas(
-        gen, schema=COVER_COMPACT_SCHEMA
-    )
-
-
 def polyfill(
-    parcels: DataFrame, level: int = C.DEFAULT_LEVEL, scheme: str = "grid"
+    parcels: DataFrame, level: int = C.DEFAULT_LEVEL, scheme: str = "grid", d: int = 0
 ) -> DataFrame:
-    """Polygon -> cell cover DataFrame: (parcel_id, cell, is_full).
+    """Polygon -> cell cover DataFrame: (parcel_id, cell, is_full, lvl)
+    plus the parcel's bbox (x0, x1, y0, y1) on every row, so the bbox
+    prefilter rung is join-free on the shuffle path.
 
     mapInPandas: vectorized NumPy cover kernel per polygon, batched by
     Arrow. The per-polygon loop mirrors the reference's per-feature
-    repair loop (edigeo/src/lib.rs:133) — small-N geometry work."""
-    cover_fn = grid_cover if scheme == "grid" else hex_cover
-    res = level
+    repair loop (edigeo/src/lib.rs:133) — small-N geometry work.
+
+    d > 0 (grid only) builds the multi-resolution cover (H3 'compact'
+    analog): interior blocks collapse to cells d levels coarser, the
+    boundary stays fine — shrinks the build side for large polygons
+    without losing exactness. `lvl` is each row's level."""
+    if d and scheme != "grid":
+        raise ValueError("the compact cover (d > 0) is grid-only")
+
+    def kernel(xa, ya, offs):
+        if d:
+            return grid_cover_compact(xa, ya, offs, level, d)
+        cells, full = (grid_cover if scheme == "grid" else hex_cover)(
+            xa, ya, offs, level
+        )
+        return cells, full, np.full(len(cells), level)
 
     # the build side often arrives as one small file -> one task; the
     # per-polygon cover kernel is CPU-bound, so spread it first
     sc = parcels.sparkSession.sparkContext
     parcels = parcels.repartition(sc.defaultParallelism)
 
+    names = ("parcel_id", "cell", "is_full", "lvl", "x0", "x1", "y0", "y1")
+
     def gen(batches):
         for pdf in batches:
-            ids, cells_out, fulls = [], [], []
-            bx0, bx1, by0, by1 = [], [], [], []
+            rows = []
             for pid, xs, ys, offs in zip(
                 pdf["parcel_id"].values,
                 pdf["xs"].values,
@@ -171,41 +131,20 @@ def polyfill(
             ):
                 xa = np.asarray(xs, dtype=np.float64)
                 ya = np.asarray(ys, dtype=np.float64)
-                cc, ff = cover_fn(
-                    xa, ya, np.asarray(offs, dtype=np.int64), res
+                cells, full, lvl = kernel(xa, ya, np.asarray(offs, dtype=np.int64))
+                k = len(cells)
+                bbox = (xa.min(), xa.max(), ya.min(), ya.max())
+                rows.append(
+                    (np.full(k, pid, dtype=np.int64), cells, full, lvl.astype(np.int32))
+                    + tuple(np.full(k, b) for b in bbox)
                 )
-                k = len(cc)
-                ids.append(np.full(k, pid, dtype=np.int64))
-                cells_out.append(cc)
-                fulls.append(ff)
-                # per-parcel bbox carried AS COLUMNS on the cover rows so
-                # the bbox prefilter rung is join-free on the shuffle path
-                # (no broadcast that scales with parcel count)
-                bx0.append(np.full(k, xa.min()))
-                bx1.append(np.full(k, xa.max()))
-                by0.append(np.full(k, ya.min()))
-                by1.append(np.full(k, ya.max()))
-            if ids:
+            if rows:
                 yield pd.DataFrame(
-                    {
-                        "parcel_id": np.concatenate(ids),
-                        "cell": np.concatenate(cells_out),
-                        "is_full": np.concatenate(fulls),
-                        "x0": np.concatenate(bx0),
-                        "x1": np.concatenate(bx1),
-                        "y0": np.concatenate(by0),
-                        "y1": np.concatenate(by1),
-                    }
+                    {n: np.concatenate(col) for n, col in zip(names, zip(*rows))}
                 )
 
     cols = parcels.select("parcel_id", "xs", "ys", "ring_offsets")
     return cols.mapInPandas(gen, schema=COVER_SCHEMA)
-
-
-def choose_strategy(n_cover_rows: int, limit: int = BROADCAST_CELL_LIMIT) -> str:
-    """Explicit broadcast-vs-shuffle decision from measured build size
-    (north rule: the choice is explicit, keyed on statistics)."""
-    return "broadcast" if n_cover_rows <= limit else "shuffle"
 
 
 def hot_cells(cover: DataFrame, threshold: int, keys=("cell",)) -> DataFrame:
@@ -353,23 +292,26 @@ def _pip_refine(
 
 BROADCAST_PARCEL_LIMIT = 300_000  # rings dict ~<150 MB broadcast ceiling
 
-# compact-cover auto gate: measured round 1, the multi-resolution cover
+# compact-cover gate: measured round 1, the multi-resolution cover
 # loses on small-polygon mixes (~64 cells/parcel at sf0.1: +40% wall
 # from the doubled probe) and wins when interiors span many cells
 COMPACT_CELLS_THRESHOLD = 256.0
 COMPACT_D = 3
 
+# shuffle path: cells with more cover rows than this are salted
+HOT_CELL_THRESHOLD = 256
 
-def estimate_cells_per_parcel(parcels: DataFrame, level: int) -> float:
-    """Average cells a parcel's bbox spans at `level` — one tiny
-    aggregate over bbox extents (no polyfill needed)."""
+
+def gate_stats(parcels: DataFrame, level: int) -> tuple[int, float]:
+    """(parcel count, average cells a parcel's bbox spans at `level`) —
+    the one tiny aggregate every gate of cell_spatial_join reads (no
+    polyfill needed)."""
     wx, wy = C.grid_cell_size(level)
-    est = (
-        ((F.array_max("xs") - F.array_min("xs")) / F.lit(wx) + F.lit(1.0))
-        * ((F.array_max("ys") - F.array_min("ys")) / F.lit(wy) + F.lit(1.0))
+    est = ((F.array_max("xs") - F.array_min("xs")) / F.lit(wx) + F.lit(1.0)) * (
+        (F.array_max("ys") - F.array_min("ys")) / F.lit(wy) + F.lit(1.0)
     )
-    row = parcels.agg(F.avg(est)).first()
-    return float(row[0]) if row and row[0] is not None else 0.0
+    n, cells = parcels.agg(F.count(F.lit(1)), F.avg(est)).first()
+    return n, float(cells or 0.0)
 
 
 def cell_spatial_join(
@@ -378,10 +320,7 @@ def cell_spatial_join(
     level: int = C.DEFAULT_LEVEL,
     scheme: str = "grid",
     strategy: str = "auto",
-    cover: DataFrame | None = None,
     salt_hot: int = 8,
-    hot_threshold: int = 256,
-    compact_d: int | str = "auto",
 ) -> DataFrame:
     """points (point_id, lon, lat) x parcels (parcel_id, rings) ->
     (point_id, parcel_id) pairs where the point is strictly inside.
@@ -390,20 +329,25 @@ def cell_spatial_join(
     Each point maps to exactly one cell, so (point, parcel) pairs are
     unique without a distinct.
 
-    Strategy (explicit, from measured build size — north rule):
-    'broadcast' broadcasts the cell cover to the probe side and ships
-    ring arrays as a task broadcast; 'shuffle' hash-joins on cell with
-    AQE skew-split and attaches rings by a parcel-id join.
+    Strategy: 'broadcast' broadcasts the cell cover to the probe side
+    and ships ring arrays as a task broadcast; 'shuffle' hash-joins on
+    cell with AQE skew-split, salts cells with more than
+    HOT_CELL_THRESHOLD cover rows over `salt_hot` buckets (salt_hot <= 1
+    turns salting off) and attaches rings by a parcel-id join. 'auto'
+    (default) picks broadcast while the parcel count is at most
+    BROADCAST_PARCEL_LIMIT.
 
-    compact_d > 0 enables the multi-resolution cover (H3 'compact'
-    analog): interior blocks collapse d levels coarser and each point
-    probes both resolutions. Wins when polygons span many cells
-    (cover shrinks ~x4 for dense urban parcels); for small-polygon
-    mixes the doubled probe outweighs it (measured: 3.77M -> 2.11M
-    cover rows but +40% wall on the sf0.1 rect mix). 'auto' (default)
-    decides from MEASURED parcel statistics — one tiny aggregate of
-    bbox-derived cells/parcel against COMPACT_CELLS_THRESHOLD — the
-    same statistics-first rule as the broadcast gate."""
+    The grid scheme switches to the multi-resolution cover (H3
+    'compact' analog) when parcels span more than
+    COMPACT_CELLS_THRESHOLD cells on average: interior blocks collapse
+    COMPACT_D levels coarser and each point probes both resolutions.
+    It wins when polygons span many cells (cover shrinks ~x4 for dense
+    urban parcels); for small-polygon mixes the doubled probe
+    outweighs it (measured: 3.77M -> 2.11M cover rows but +40% wall on
+    the sf0.1 rect mix).
+
+    Both gates read one driver job, `gate_stats`, which also fills the
+    parcels' persist cache. `points` may be a streaming DataFrame."""
     for col, df, side in (
         ("point_id", points, "points"),
         ("lon", points, "points"),
@@ -416,129 +360,76 @@ def cell_spatial_join(
         if col not in df.columns:
             raise ValueError(f"{side} side is missing required column {col!r}")
     parcels = parcels.persist()
-    if (
-        strategy == "auto"
-        and compact_d == "auto"
-        and scheme == "grid"
-        and cover is None
-    ):
-        # both gates need one tiny parcel aggregate — fuse them into a
-        # single driver job (it also fills the persist cache)
-        wx, wy = C.grid_cell_size(level)
-        est = (
-            (F.array_max("xs") - F.array_min("xs")) / F.lit(wx) + F.lit(1.0)
-        ) * ((F.array_max("ys") - F.array_min("ys")) / F.lit(wy) + F.lit(1.0))
-        row = parcels.agg(F.count(F.lit(1)), F.avg(est)).first()
-        n_parcels = row[0]
-        cells_est = float(row[1]) if row[1] is not None else 0.0
-        strategy = (
-            "broadcast" if n_parcels <= BROADCAST_PARCEL_LIMIT else "shuffle"
-        )
-        compact_d = COMPACT_D if cells_est > COMPACT_CELLS_THRESHOLD else 0
+    n_parcels, cells_per_parcel = gate_stats(parcels, level)
     if strategy == "auto":
-        strategy = "broadcast" if parcels.count() <= BROADCAST_PARCEL_LIMIT else "shuffle"
-    if compact_d == "auto":
-        compact_d = (
-            COMPACT_D
-            if scheme == "grid"
-            and cover is None
-            and estimate_cells_per_parcel(parcels, level) > COMPACT_CELLS_THRESHOLD
-            else 0
-        )
+        strategy = "broadcast" if n_parcels <= BROADCAST_PARCEL_LIMIT else "shuffle"
+    compact = scheme == "grid" and cells_per_parcel > COMPACT_CELLS_THRESHOLD
+    d = COMPACT_D if compact else 0
+    # persist: the full-hit and partial branches of the union both
+    # consume the cover — without this the polyfill kernel (and its
+    # broadcast build) runs once per branch (seen in .explain)
+    cover = polyfill(parcels, level, scheme, d).persist()
 
-    compacted = scheme == "grid" and compact_d > 0 and cover is None
-    if cover is None:
-        # persist: the full-hit and partial branches of the union both
-        # consume the cover — without this the polyfill kernel (and its
-        # broadcast build) runs once per branch (seen in .explain)
-        if compacted:
-            cover = polyfill_compact(parcels, level=level, d=compact_d).persist()
-        else:
-            cover = polyfill(parcels, level=level, scheme=scheme).persist()
-
-    if compacted:
+    keys = ["cell"]
+    if d:
         # probe each point at BOTH resolutions (explode of 2 structs —
         # pure JVM); join key is (lvl, cell) so ids can't collide
-        coarse = level - compact_d
-        pts = points.withColumn(
-            "lc",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(level).cast("int").alias("lvl"),
-                        S.grid_cell_col(F.col("lon"), F.col("lat"), level).alias(
-                            "cell"
-                        ),
-                    ),
-                    F.struct(
-                        F.lit(coarse).cast("int").alias("lvl"),
-                        S.grid_cell_col(F.col("lon"), F.col("lat"), coarse).alias(
-                            "cell"
-                        ),
-                    ),
-                )
-            ),
-        ).select(*points.columns, "lc.lvl", "lc.cell")
+        lc = [
+            F.struct(
+                F.lit(lvl).cast("int").alias("lvl"),
+                S.grid_cell_col(F.col("lon"), F.col("lat"), lvl).alias("cell"),
+            )
+            for lvl in (level, level - d)
+        ]
+        pts = points.withColumn("lc", F.explode(F.array(*lc))).select(
+            *points.columns, "lc.lvl", "lc.cell"
+        )
         keys = ["lvl", "cell"]
     elif scheme == "grid":
         pts = points.withColumn(
             "cell", S.grid_cell_col(F.col("lon"), F.col("lat"), level)
         )
-        keys = ["cell"]
     else:
         pts = _with_hex_cell(points, level)
-        keys = ["cell"]
 
-    # refinement ladder rung 1 (JVM, codegen): bbox prefilter. The cover
-    # rows built by polyfill CARRY the per-parcel bbox as columns, so the
-    # rung is join-free — critical on the shuffle path, where a separate
-    # bbox broadcast would scale with parcel count (the exact regime the
-    # shuffle strategy exists for). Points in full cells trivially
-    # satisfy it (cell ⊂ polygon ⊂ bbox), so it only prunes partial-cell
-    # candidates — before any Python runs. A caller-provided cover
-    # without bbox columns falls back to a parcels-derived broadcast.
-    has_bbox = "x0" in cover.columns
-    bbox_filter = (
-        (F.col("lon") >= F.col("x0"))
-        & (F.col("lon") <= F.col("x1"))
-        & (F.col("lat") >= F.col("y0"))
-        & (F.col("lat") <= F.col("y1"))
-    )
+    # refinement ladder rung 1 (JVM, codegen): bbox prefilter. Points in
+    # full cells trivially satisfy it (cell ⊂ polygon ⊂ bbox), so it
+    # only prunes partial-cell candidates — before any Python runs.
     if strategy == "broadcast":
         # the broadcast cover stays narrow (bbox columns quadruple its
         # width); the bbox rung instead joins a per-PARCEL broadcast,
         # which is small by the same measured gate that chose broadcast
-        if has_bbox:
-            cover_bc = cover.drop("x0", "x1", "y0", "y1")
-            has_bbox = False
-        else:
-            cover_bc = cover
-        cand = pts.join(F.broadcast(cover_bc), keys)
-    elif salt_hot > 1:
-        # explicit skew handling: measured hot cells get salted
-        cand = salted_cell_join(
-            pts, cover, salt_hot, hot_cells(cover, hot_threshold, keys), keys
-        )
-    else:
-        cand = pts.join(cover, keys)
-
-    if has_bbox:
-        cand = cand.filter(bbox_filter)
-    else:
-        small_bbox = parcels.select(
+        parcel_bbox = parcels.select(
             "parcel_id",
             F.array_min("xs").alias("x0"),
             F.array_max("xs").alias("x1"),
             F.array_min("ys").alias("y0"),
             F.array_max("ys").alias("y1"),
         )
-        cand = cand.join(F.broadcast(small_bbox), "parcel_id").filter(bbox_filter)
+        cand = pts.join(
+            F.broadcast(cover.select(*keys, "parcel_id", "is_full")), keys
+        ).join(F.broadcast(parcel_bbox), "parcel_id")
+    else:
+        # the cover rows CARRY the bbox, so the rung is join-free here,
+        # where a bbox broadcast would scale with parcel count
+        build = cover.select(*keys, "parcel_id", "is_full", "x0", "x1", "y0", "y1")
+        if salt_hot > 1:
+            # explicit skew handling: measured hot cells get salted
+            hot = hot_cells(build, HOT_CELL_THRESHOLD, keys)
+            cand = salted_cell_join(pts, build, salt_hot, hot, keys)
+        else:
+            cand = pts.join(build, keys)
+    cand = cand.filter(
+        (F.col("lon") >= F.col("x0"))
+        & (F.col("lon") <= F.col("x1"))
+        & (F.col("lat") >= F.col("y0"))
+        & (F.col("lat") <= F.col("y1"))
+    )
     full_hits = cand.filter(F.col("is_full")).select("point_id", "parcel_id")
     partial = cand.filter(~F.col("is_full")).select(
         "point_id", "lon", "lat", "parcel_id"
     )
-    partial_hits = _pip_refine(partial, parcels, strategy)
-    out = full_hits.unionByName(partial_hits)
+    out = full_hits.unionByName(_pip_refine(partial, parcels, strategy))
     # memory hygiene: the result holds the persisted build-side inputs
     # so a long-lived session can release them once the join
     # materializes (release_cached(out)) — persist() without unpersist()

@@ -3,23 +3,21 @@ static parcel build side — the north-star workload with Structured
 Streaming semantics (geotagged pages arrive continuously; placement
 output is append-only).
 
-Stream-static inner equi-joins are natively supported, so the batch
-engine's plan carries over intact: the probe side computes its cell id
-JVM-side on the stream, the static cover (polyfill once, broadcast)
-joins per micro-batch, the bbox rung filters in codegen, and the PIP
-refinement mapInPandas runs on the joined stream. No state is needed —
-each point is placed exactly once on arrival (contrast streaming/dedup,
-which is stateful by nature).
+Stream-static inner equi-joins are natively supported, so the stream
+runs the batch plan itself: `cell_spatial_join` with the stream as its
+probe side. Its gates read the static parcels once at build time, the
+persisted cover fills on the first micro-batch and every later batch
+reuses it. No state is needed — each point is placed exactly once on
+arrival (contrast streaming/dedup, which is stateful by nature).
 
-Batch == stream equality is the test invariant: the same input file
-through placement_stream equals cell_spatial_join on the batch read.
+Batch == stream equality is the test invariant: the same input files
+through placement_stream equal cell_spatial_join on the batch read.
 """
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..data import synthetic as S
-from ..operators.spatial_join import _pip_refine, polyfill
+from ..operators.held import hold
+from ..operators.spatial_join import cell_spatial_join
 
 POINT_SCHEMA = "point_id long, lon double, lat double"
 
@@ -35,58 +33,30 @@ def placement_stream(
     checkpoint: str | None = None,
 ):
     """Point parquet stream at `path` x static `parcels` ->
-    (point_id, parcel_id) rows. Broadcast strategy (the static side was
-    gated by the same measured-size rule before it got here).
+    (point_id, parcel_id) rows, planned by cell_spatial_join (so the
+    same measured gates pick broadcast/shuffle and flat/compact cover).
     max_files_per_trigger caps each micro-batch (None = everything
     available in one batch).
 
     Sink: with out_path, an append parquet sink (DISTRIBUTED writes +
     checkpointed offsets — the scale shape; a memory sink would funnel
     every placed row through the driver); otherwise the memory sink
-    `query_name`, the small-result test convenience."""
-    parcels = parcels.persist()
-    cover = polyfill(parcels, level=level).drop("x0", "x1", "y0", "y1").persist()
-    cover.count()  # materialize ONCE, not per micro-batch
-    bbox = parcels.select(
-        "parcel_id",
-        F.array_min("xs").alias("x0"),
-        F.array_max("xs").alias("x1"),
-        F.array_min("ys").alias("y0"),
-        F.array_max("ys").alias("y1"),
-    )
+    `query_name`, the small-result test convenience.
 
+    The returned query holds the join's persisted build side:
+    `release_cached(query)` frees it after `query.stop()`."""
     reader = spark.readStream.format("parquet").schema(POINT_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pts = reader.load(path).withColumn(
-        "cell", S.grid_cell_col(F.col("lon"), F.col("lat"), level)
-    )
-    cand = (
-        pts.join(F.broadcast(cover), "cell")
-        .join(F.broadcast(bbox), "parcel_id")
-        .filter(
-            (F.col("lon") >= F.col("x0"))
-            & (F.col("lon") <= F.col("x1"))
-            & (F.col("lat") >= F.col("y0"))
-            & (F.col("lat") <= F.col("y1"))
-        )
-    )
-    full_hits = cand.filter(F.col("is_full")).select("point_id", "parcel_id")
-    partial = cand.filter(~F.col("is_full")).select(
-        "point_id", "lon", "lat", "parcel_id"
-    )
-    placed = full_hits.unionByName(_pip_refine(partial, parcels, "broadcast"))
+    placed = cell_spatial_join(reader.load(path), parcels, level=level)
+    writer = placed.writeStream.outputMode("append")
     if out_path:
-        return (
-            placed.writeStream.outputMode("append")
-            .format("parquet")
+        query = (
+            writer.format("parquet")
             .option("path", out_path)
             .option("checkpointLocation", checkpoint or out_path + "_ckpt")
             .start()
         )
-    return (
-        placed.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    else:
+        query = writer.format("memory").queryName(query_name).start()
+    return hold(query, placed)

@@ -41,7 +41,7 @@ def main():
         names = sorted(qs)
     out_dir = os.path.join(REPO, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
-    from cadastre_pg_spark.operators.spatial_join import release_cached
+    from cadastre_pg_spark.operators.held import release_cached
 
     for name in names:
         if name not in qs:

@@ -58,7 +58,7 @@ def main():
 
     spark.range(0, CPUS * 4, 1, CPUS).mapInPandas(_warm, schema="id long").count()
 
-    from cadastre_pg_spark.operators.spatial_join import release_cached
+    from cadastre_pg_spark.operators.held import release_cached
 
     qs = E.queries()
     st = spark.sparkContext.statusTracker()

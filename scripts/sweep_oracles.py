@@ -87,7 +87,7 @@ def main() -> int:
     qs = E.queries()
     oracles = E.oracle_sql()
     only = {s for s in args.only.split(",") if s}
-    from cadastre_pg_spark.operators.spatial_join import release_cached
+    from cadastre_pg_spark.operators.held import release_cached
 
     report = {
         "spark": spark.version,

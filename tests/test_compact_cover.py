@@ -7,8 +7,10 @@ import pyspark.sql.functions as F
 from cadastre_pg_spark.kernels.cover import grid_cover, grid_cover_compact
 from cadastre_pg_spark.kernels.pip import points_in_polygon
 from cadastre_pg_spark.kernels.rings import polygon_to_flat
+from cadastre_pg_spark.operators import spatial_join as SJ
 from cadastre_pg_spark.operators.spatial_join import (
     cell_spatial_join,
+    gate_stats,
     parcels_from_parts,
     points_from_docs,
 )
@@ -63,7 +65,7 @@ def test_compact_cover_join_exactness():
     np.testing.assert_array_equal(joined, truth)
 
 
-def test_compact_join_matches_flat(spark):
+def test_compact_join_matches_flat(spark, monkeypatch):
     docs = spark.read.parquet(f"{SF_UNIT}/documents.parquet")
     parts = spark.read.parquet(f"{SF_UNIT}/part.parquet")
     points = points_from_docs(docs)
@@ -72,34 +74,25 @@ def test_compact_join_matches_flat(spark):
         (r.point_id, r.parcel_id)
         for r in cell_spatial_join(points, parcels, level=10).collect()
     }
+    # a negative threshold sends every parcel mix to the compact cover
+    monkeypatch.setattr(SJ, "COMPACT_CELLS_THRESHOLD", -1)
     compact = {
         (r.point_id, r.parcel_id)
-        for r in cell_spatial_join(points, parcels, level=10, compact_d=3).collect()
+        for r in cell_spatial_join(points, parcels, level=10).collect()
     }
     assert flat == compact and len(flat) > 0
 
 
-def test_compact_auto_gate(spark):
+def test_compact_auto_gate(spark, monkeypatch):
     """The auto gate picks compact only for large-polygon regimes
     (measured statistics, not guesswork) — and both decisions produce
     the exact same join output."""
-    from pyspark.sql import functions as F
-
-    from cadastre_pg_spark.operators.spatial_join import (
-        COMPACT_CELLS_THRESHOLD,
-        cell_spatial_join,
-        estimate_cells_per_parcel,
-        parcels_from_parts,
-        points_from_docs,
-    )
-    from conftest import SF_UNIT
-
     docs = spark.read.parquet(f"{SF_UNIT}/documents.parquet")
     parts = spark.read.parquet(f"{SF_UNIT}/part.parquet")
     points = points_from_docs(docs)
     small = parcels_from_parts(parts)
     # the sf test mix is small-polygon: auto must stay flat
-    assert estimate_cells_per_parcel(small, 10) < COMPACT_CELLS_THRESHOLD
+    assert gate_stats(small, 10)[1] < SJ.COMPACT_CELLS_THRESHOLD
     # inflate the same parcels 8x: bbox spans >> threshold -> compact
     big = small.select(
         "parcel_id",
@@ -107,13 +100,15 @@ def test_compact_auto_gate(spark):
         F.transform("ys", lambda y: F.element_at("ys", 1) + (y - F.element_at("ys", 1)) * 8).alias("ys"),
         "ring_offsets",
     )
-    assert estimate_cells_per_parcel(big, 10) > COMPACT_CELLS_THRESHOLD
+    assert gate_stats(big, 10)[1] > SJ.COMPACT_CELLS_THRESHOLD
     auto_rows = {
         (r.point_id, r.parcel_id)
         for r in cell_spatial_join(points, big, level=10).collect()
     }
+    # an infinite threshold keeps every parcel mix on the flat cover
+    monkeypatch.setattr(SJ, "COMPACT_CELLS_THRESHOLD", float("inf"))
     flat_rows = {
         (r.point_id, r.parcel_id)
-        for r in cell_spatial_join(points, big, level=10, compact_d=0).collect()
+        for r in cell_spatial_join(points, big, level=10).collect()
     }
     assert auto_rows == flat_rows and len(auto_rows) > 0

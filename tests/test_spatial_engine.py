@@ -8,6 +8,8 @@ import pytest
 import __spark_entry__ as E
 from cadastre_pg_spark.data.parcels import generate_parcels, make_parcel
 from cadastre_pg_spark.kernels.pip import points_in_polygon
+from cadastre_pg_spark.operators import spatial_join as SJ
+from cadastre_pg_spark.operators.held import release_cached
 from cadastre_pg_spark.operators.spatial_join import (
     cell_spatial_join,
     parcels_from_parts,
@@ -26,11 +28,25 @@ def _random_points(n, seed=7):
     [
         ("broadcast", {}),
         ("shuffle", {}),
-        # hot_threshold=0 forces the explicit salting path on EVERY cell
-        ("shuffle", {"salt_hot": 4, "hot_threshold": 0}),
+        # HOT_CELL_THRESHOLD=0 forces the explicit salting path on EVERY cell
+        ("shuffle", {"salt_hot": 4, "HOT_CELL_THRESHOLD": 0}),
+        # auto: every side of the parcel-count and compact-cover gates
+        *(
+            ("auto", {"BROADCAST_PARCEL_LIMIT": limit, "COMPACT_CELLS_THRESHOLD": t})
+            for limit in (SJ.BROADCAST_PARCEL_LIMIT, 0)
+            for t in (float("inf"), -1)
+        ),
+        *(
+            ("auto", {"BROADCAST_PARCEL_LIMIT": 0, "COMPACT_CELLS_THRESHOLD": t,
+                      "HOT_CELL_THRESHOLD": 0})
+            for t in (float("inf"), -1)
+        ),
     ],
 )
-def test_general_polygon_join_vs_bruteforce(spark, strategy, kwargs):
+def test_general_polygon_join_vs_bruteforce(spark, monkeypatch, strategy, kwargs):
+    """Upper-case kwargs monkeypatch spatial_join's gate constants; the
+    rest go to cell_spatial_join. The plan the gates chose is recorded
+    and checked, so each case pins the branch it names."""
     n_parcels, n_points = 120, 4000
     lon, lat = _random_points(n_points)
     points = spark.createDataFrame(
@@ -40,11 +56,35 @@ def test_general_polygon_join_vs_bruteforce(spark, strategy, kwargs):
     parcels = generate_parcels(spark, n_parcels, partitions=4).select(
         F.xxhash64("parcel_id").alias("parcel_id"), "xs", "ys", "ring_offsets"
     )
-    got = {
-        (r.point_id, r.parcel_id)
-        for r in cell_spatial_join(
-            points, parcels, level=10, strategy=strategy, **kwargs
-        ).collect()
+    for name, value in kwargs.items():
+        if name.isupper():
+            monkeypatch.setattr(SJ, name, value)
+    chosen = {}
+    polyfill, refine = SJ.polyfill, SJ._pip_refine
+
+    def spy_polyfill(parcels, level, scheme, d):
+        chosen["d"] = d
+        return polyfill(parcels, level, scheme, d)
+
+    def spy_refine(cand, parcels, strategy):
+        chosen["strategy"] = strategy
+        return refine(cand, parcels, strategy)
+
+    monkeypatch.setattr(SJ, "polyfill", spy_polyfill)
+    monkeypatch.setattr(SJ, "_pip_refine", spy_refine)
+    out = cell_spatial_join(
+        points,
+        parcels,
+        level=10,
+        strategy=strategy,
+        **{k: v for k, v in kwargs.items() if not k.isupper()},
+    )
+    got = {(r.point_id, r.parcel_id) for r in out.collect()}
+    if strategy == "auto":
+        strategy = "shuffle" if SJ.BROADCAST_PARCEL_LIMIT == 0 else "broadcast"
+    assert chosen == {
+        "strategy": strategy,
+        "d": SJ.COMPACT_D if SJ.COMPACT_CELLS_THRESHOLD < 0 else 0,
     }
     # single-process oracle
     exp = set()
@@ -57,6 +97,7 @@ def test_general_polygon_join_vs_bruteforce(spark, strategy, kwargs):
         )
         for i in np.nonzero(inside)[0]:
             exp.add((int(i), r.parcel_id))
+    release_cached(out)
     assert got == exp
     assert len(exp) > 0
 
@@ -126,12 +167,6 @@ def test_merge_snapshot_matrix(spark):
 def test_release_cached_unpersists_build_side(spark):
     """cell_spatial_join persists parcels+cover; release_cached(result)
     must free them (long sessions otherwise accumulate cache)."""
-    from cadastre_pg_spark.operators.held import release_cached
-    from cadastre_pg_spark.operators.spatial_join import (
-        cell_spatial_join,
-        parcels_from_parts,
-        points_from_docs,
-    )
     from conftest import SF_UNIT, persisted_rdd_ids
 
     # a same-plan cache left by another test would absorb our persist()

@@ -218,16 +218,23 @@ def test_bloom_fn_timeout_branch():
     assert list(out[0].columns) == ["doc_id", "text_sha"]
 
 
-def test_streaming_placement_equals_batch(spark, tmp_path):
+def test_streaming_placement_equals_batch(spark, tmp_path, monkeypatch):
     """Stream-static spatial placement == the batch cell join on the
-    same points file (the north-star workload under Structured
-    Streaming semantics)."""
+    same points files (the north-star workload under Structured
+    Streaming semantics), over one micro-batch per file, on every
+    gate combination — and release_cached(query) frees the join's
+    persisted build side."""
+    import os
+
+    from cadastre_pg_spark.operators import spatial_join as SJ
+    from cadastre_pg_spark.operators.held import release_cached
     from cadastre_pg_spark.operators.spatial_join import (
         cell_spatial_join,
         parcels_from_parts,
         points_from_docs,
     )
     from cadastre_pg_spark.streaming.placement import placement_stream
+    from conftest import persisted_rdd_ids
 
     docs = spark.read.parquet(f"{SF_UNIT}/documents.parquet")
     parts = spark.read.parquet(f"{SF_UNIT}/part.parquet")
@@ -235,21 +242,47 @@ def test_streaming_placement_equals_batch(spark, tmp_path):
     parcels = parcels_from_parts(parts)
 
     src = tmp_path / "pts"
-    points.coalesce(1).write.parquet(str(src))
-    q = placement_stream(spark, str(src), parcels, level=10, query_name="pl_test")
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.point_id, r.parcel_id)
-            for r in spark.sql("SELECT * FROM pl_test").collect()
-        }
-    finally:
-        q.stop()
-    exp = {
-        (r.point_id, r.parcel_id)
-        for r in cell_spatial_join(points, parcels, level=10).collect()
+    points.repartitionByRange(3, "point_id").write.parquet(str(src))
+    n_files = sum(f.endswith(".parquet") for f in os.listdir(src))
+    assert n_files >= 3
+    gates = {
+        "broadcast_flat": {},
+        "shuffle": {"BROADCAST_PARCEL_LIMIT": 0},
+        "salted_shuffle": {"BROADCAST_PARCEL_LIMIT": 0, "HOT_CELL_THRESHOLD": 0},
+        "compact": {"COMPACT_CELLS_THRESHOLD": -1},
     }
-    assert got == exp and len(got) > 0
+    for name, constants in gates.items():
+        # a same-plan cache left by another run would absorb the persists
+        spark.catalog.clearCache()
+        before = persisted_rdd_ids(spark)
+        with monkeypatch.context() as m:
+            for const, value in constants.items():
+                m.setattr(SJ, const, value)
+            q = placement_stream(
+                spark,
+                str(src),
+                parcels,
+                level=10,
+                query_name=f"pl_{name}",
+                max_files_per_trigger=1,
+            )
+            try:
+                q.processAllAvailable()
+                batches = [p for p in q.recentProgress if p["numInputRows"]]
+                got = {
+                    (r.point_id, r.parcel_id)
+                    for r in spark.sql(f"SELECT * FROM pl_{name}").collect()
+                }
+            finally:
+                q.stop()
+            assert persisted_rdd_ids(spark) - before, name
+            release_cached(q)
+            assert not persisted_rdd_ids(spark) - before, name
+            batch = cell_spatial_join(points, parcels, level=10)
+            exp = {(r.point_id, r.parcel_id) for r in batch.collect()}
+            release_cached(batch)
+        assert len(batches) == n_files, name
+        assert got == exp and len(got) > 0, name
 
 
 def _write_time_slices(spark, tmp_path, n_slices=3):
