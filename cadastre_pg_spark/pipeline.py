@@ -17,7 +17,14 @@ COPY staging + merge (S10/J4)           -> idempotent partitioned
 ImportReport (A4)                       -> per-stage metrics rows
 
 Each stage commits per-partition lineage; re-running resumes from the
-last committed partition (north rule).
+last committed partition (north rule). The extract stage skips by a
+census of its input pages. The placement stage is derived: its census
+is hashed on the driver from the extract partitions committed in the
+log, the placement code version and the parcel set's parameters
+(`chained_census`), so a resume with unchanged pages skips it without
+evaluating dedup, the join or the parcel generator, and its build side
+is built only inside the stage's processing and released after it,
+whether the stage succeeds or raises.
 """
 
 import pyspark.sql.functions as F
@@ -26,8 +33,13 @@ from pyspark.sql import SparkSession
 from .data.pages import extract_text_udf, generate_pages
 from .data.parcels import generate_parcels
 from .data.synthetic import lat_col, lon_col
-from .lineage.checkpoints import CheckpointLog, run_stage
+from .lineage.checkpoints import CheckpointLog, chained_census, run_stage
 from .operators.spatial_join import cell_spatial_join, release_cached
+
+# bump when dedup or placement changes what it writes for the same
+# extract output: every placement partition is then reprocessed
+PLACEMENT_VERSION = "1"
+PARCEL_SCALE = 20.0  # size_scale of run_import's parcel set
 
 
 def run_import(
@@ -88,36 +100,51 @@ def run_import(
         .drop("_rn")
     )
 
-    # stage 3: spatial placement (J9) against the parcel build side
-    parcels = generate_parcels(spark, n_parcels, size_scale=20.0).select(
-        F.xxhash64("parcel_id").alias("parcel_id"), "xs", "ys", "ring_offsets"
-    )
+    # stage 3: spatial placement (J9) against the parcel build side.
     # join identity: full xxhash64 (collision-free in practice; no abs —
     # F.abs(Long.MIN_VALUE) would ANSI-overflow). The 22-bit capped key
     # is used only for the lon/lat derivation in stage 1.
     points = deduped.select(
         F.xxhash64("url").alias("point_id"), "url", "dep_part", "lon", "lat"
     )
-    joined = cell_spatial_join(
-        points.select("point_id", "lon", "lat"), parcels, level=level
-    )
-    placed = joined.join(points.select("point_id", "url", "dep_part"), "point_id")
+    built = []
 
     def do_place(df):
-        return df
+        # the build side (gate aggregate, ring broadcast, persisted
+        # cover) is built here, so a skipped stage never pays for it
+        parcels = generate_parcels(spark, n_parcels, size_scale=PARCEL_SCALE).select(
+            F.xxhash64("parcel_id").alias("parcel_id"), "xs", "ys", "ring_offsets"
+        )
+        joined = cell_spatial_join(df.select("point_id", "lon", "lat"), parcels, level=level)
+        built.append(joined)
+        return joined.join(df.select("point_id", "url", "dep_part"), "point_id")
 
-    out_place, m2 = run_stage(
-        spark,
-        placed,
-        stage="placement",
-        run_id=run_id,
-        partition_col="dep_part",
-        base_dir=base_dir,
-        process=do_place,
+    # chained census: the sha dedup is global, so every placement
+    # partition depends on every committed extract partition; the
+    # parcels are generate_parcels' deterministic output, identified
+    # by its parameters (an aggregate over them would run the generator)
+    census = chained_census(
+        "placement",
+        PLACEMENT_VERSION,
+        (level, n_parcels, PARCEL_SCALE),
+        [tuple(r) for r in CheckpointLog(spark, base_dir).committed("extract").collect()],
     )
+    try:
+        out_place, m2 = run_stage(
+            spark,
+            points,
+            stage="placement",
+            run_id=run_id,
+            partition_col="dep_part",
+            base_dir=base_dir,
+            process=do_place,
+            census=census,
+        )
+    finally:
+        for joined in built:
+            release_cached(joined)  # build-side caches die with the stage
     report["placement"] = sum(r.rows for r in m2.collect())
     report["out_dir"] = out_place
-    release_cached(joined)  # build-side caches die with the stage
     return report
 
 

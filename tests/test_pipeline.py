@@ -1,8 +1,11 @@
 """End-to-end import pipeline: full run, resume skip, metrics."""
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql import DataFrameWriter
 
 from cadastre_pg_spark.pipeline import import_metrics, run_import
+from conftest import persisted_rdd_ids
 
 
 def test_import_and_resume(spark, tmp_path):
@@ -72,3 +75,20 @@ def test_finalize_report_statuses(spark, tmp_path):
     # a base dir with nothing committed + errors -> Failed
     _, status = finalize_report(spark, str(tmp_path / "empty"), errs)
     assert status == "Failed"
+
+
+def test_failed_placement_write_releases_build_side(spark, tmp_path, monkeypatch):
+    """The placement stage persists its build side (parcels, cover);
+    a write that raises must not leave it behind."""
+    parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if path.endswith("placement"):
+            raise RuntimeError("placement write failed")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    before = persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="placement write failed"):
+        run_import(spark, str(tmp_path / "lake"), "r1", n_pages=300, n_parcels=40)
+    assert not persisted_rdd_ids(spark) - before
