@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import one_wave
+
 PAGE_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, dep string"
 )
@@ -84,13 +86,18 @@ def extract_text_udf(encoding: str = "8859-15"):
     return _extract
 
 
-def generate_pages(spark: SparkSession, n: int, partitions: int = 32) -> DataFrame:
+def generate_pages(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Distributed generator: spark.range -> mapInPandas building the
-    same rows make_page builds (test asserts byte equality)."""
+    same rows make_page builds (test asserts byte equality). The
+    generator is a Python stage, so by default it runs in one wave:
+    `one_wave(spark, n)` partitions, i.e. at most the session's cores
+    and never more than n."""
 
     def gen(batches):
         for pdf in batches:
             rows = [make_page(int(i)) for i in pdf["id"].values]
             yield pd.DataFrame(rows)
 
+    if partitions is None:
+        partitions = one_wave(spark, n)
     return spark.range(0, n, 1, partitions).mapInPandas(gen, schema=PAGE_SCHEMA)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..kernels.geomhash import geometry_hash
 from ..kernels.hull import convex_hull
 from ..kernels.rings import polygon_to_flat, reconstruct_rings
+from ..session import one_wave
 
 PARCEL_SCHEMA = (
     "parcel_id string, dep string, commune_id string, section_id string, "
@@ -99,14 +100,21 @@ def make_parcel(i: int, size_scale: float = 1.0) -> dict:
 
 
 def generate_parcels(
-    spark: SparkSession, n: int, partitions: int = 16, size_scale: float = 1.0
+    spark: SparkSession, n: int, partitions: int | None = None, size_scale: float = 1.0
 ) -> DataFrame:
+    """Distributed generator: spark.range -> mapInPandas building the
+    rows make_parcel builds. The generator is a Python stage, so by
+    default it runs in one wave: `one_wave(spark, n)` partitions, i.e.
+    at most the session's cores and never more than n."""
+
     def gen(batches):
         for pdf in batches:
             yield pd.DataFrame(
                 [make_parcel(int(i), size_scale) for i in pdf["id"].values]
             )
 
+    if partitions is None:
+        partitions = one_wave(spark, n)
     return spark.range(0, n, 1, partitions).mapInPandas(gen, schema=PARCEL_SCHEMA)
 
 

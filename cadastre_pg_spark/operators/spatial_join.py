@@ -114,7 +114,8 @@ def polyfill(
         return cells, full, np.full(len(cells), level)
 
     # the build side often arrives as one small file -> one task; the
-    # per-polygon cover kernel is CPU-bound, so spread it first
+    # per-polygon cover kernel is CPU-bound, so spread it first, over
+    # one wave (a Python task pays a fixed latency, see session.one_wave)
     sc = parcels.sparkSession.sparkContext
     parcels = parcels.repartition(sc.defaultParallelism)
 

@@ -25,6 +25,15 @@ log, the placement code version and the parcel set's parameters
 evaluating dedup, the join or the parcel generator, and its build side
 is built only inside the stage's processing and released after it,
 whether the stage succeeds or raises.
+
+Every Python stage on the import path runs in one wave
+(`session.one_wave`): at most the session's cores and never more tasks
+than input units, because a Python task pays a fixed latency (~0.35 s
+on a 4-core host) whatever its size. The generators size themselves
+from their row counts and polyfill spreads the parcels over the cores.
+The extraction keeps the input's partitioning, one task for a
+single-file pages scan: a hash exchange on `dep_part` spreading it over
+the cores measured slower end to end and raised peak memory.
 """
 
 import pyspark.sql.functions as F
@@ -35,6 +44,8 @@ from .data.parcels import generate_parcels
 from .data.synthetic import lat_col, lon_col
 from .lineage.checkpoints import CheckpointLog, chained_census, run_stage
 from .operators.spatial_join import cell_spatial_join, release_cached
+
+DEP_PARTS = 16  # dep_part = pmod(xxhash64(dep), DEP_PARTS): the commit unit
 
 # bump when dedup or placement changes what it writes for the same
 # extract output: every placement partition is then reprocessed
@@ -57,7 +68,7 @@ def run_import(
     report = {}
 
     pages = (pages_df if pages_df is not None else generate_pages(spark, n_pages)).withColumn(
-        "dep_part", F.pmod(F.xxhash64("dep"), F.lit(16)).cast("int")
+        "dep_part", F.pmod(F.xxhash64("dep"), F.lit(DEP_PARTS)).cast("int")
     )
     extract = extract_text_udf("8859-15")
 

@@ -39,6 +39,14 @@ def get_spark(
     return spark
 
 
+def one_wave(spark: SparkSession, units: int) -> int:
+    """Task count of a Python stage over `units` input units: one wave
+    on the session's cores, never more tasks than units, at least one.
+    A Python task costs ~0.35 s of fixed latency on a 4-core host
+    whatever its size, so extra waves cost more than they balance."""
+    return max(1, min(spark.sparkContext.defaultParallelism, units))
+
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()

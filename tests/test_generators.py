@@ -7,6 +7,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from cadastre_pg_spark.data.pages import generate_pages, make_page
 from cadastre_pg_spark.data.parcels import generate_parcels, make_parcel
@@ -88,3 +89,36 @@ def test_parcels_deterministic(spark):
     b = make_parcel(17)
     assert a["geometry_hash"] == b["geometry_hash"]
     assert a["xs"] == b["xs"]
+
+
+def _range_slices(df) -> int:
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() != "Range":
+        plan = plan.child()
+    return plan.numSlices().get()
+
+
+@pytest.mark.parametrize("n", [0, 1, 100])
+def test_generators_default_to_one_wave(spark, n):
+    """Both Python generators default to one wave of tasks: at most the
+    session's cores, never more than n rows, at least one. (An empty
+    range plans no partition at all, so n=0 checks the requested count.)"""
+    want = max(1, min(spark.sparkContext.defaultParallelism, n))
+    for df in (generate_parcels(spark, n), generate_pages(spark, n)):
+        assert _range_slices(df) == want
+        if n:
+            assert df.rdd.getNumPartitions() == want
+
+
+def test_generators_default_rows_equal_fixed_partitions(spark):
+    """The default partitioning changes no row (order-independent)."""
+
+    def rows(df, key):
+        return sorted((r.asDict() for r in df.collect()), key=lambda d: d[key])
+
+    assert rows(generate_parcels(spark, 100), "parcel_id") == rows(
+        generate_parcels(spark, 100, partitions=16), "parcel_id"
+    )
+    assert rows(generate_pages(spark, 100), "url") == rows(
+        generate_pages(spark, 100, partitions=16), "url"
+    )

@@ -1,10 +1,12 @@
 """End-to-end import pipeline: full run, resume skip, metrics."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import DataFrameWriter
 
-from cadastre_pg_spark.pipeline import import_metrics, run_import
+from cadastre_pg_spark.pipeline import DEP_PARTS, import_metrics, run_import
 from conftest import persisted_rdd_ids
 
 
@@ -92,3 +94,37 @@ def test_failed_placement_write_releases_build_side(spark, tmp_path, monkeypatch
     with pytest.raises(RuntimeError, match="placement write failed"):
         run_import(spark, str(tmp_path / "lake"), "r1", n_pages=300, n_parcels=40)
     assert not persisted_rdd_ids(spark) - before
+
+
+def _extract_files(base: str) -> dict:
+    root = os.path.join(base, "extract")
+    return {
+        d: [f for f in os.listdir(os.path.join(root, d)) if f.startswith("part-")]
+        for d in os.listdir(root)
+        if d.startswith("_pid=")
+    }
+
+
+def test_extract_writes_one_file_per_partition(spark, tmp_path):
+    """From a single-file pages scan (the benchmark's input shape), the
+    extraction runs as one writer: every extract/_pid=<k> directory
+    holds one data file, and a resume rewrites none of them."""
+    from cadastre_pg_spark.data.pages import generate_pages
+
+    pages = str(tmp_path / "pages.parquet")
+    generate_pages(spark, 600).coalesce(1).write.parquet(pages)
+    base = str(tmp_path / "lake")
+
+    def run(run_id):
+        return run_import(
+            spark, base, run_id=run_id, n_parcels=20, pages_df=spark.read.parquet(pages)
+        )
+
+    assert run("r1")["extract"] == 600
+    files = _extract_files(base)
+    assert len(files) == DEP_PARTS  # 600 pages reach every dep_part
+    assert all(len(f) == 1 for f in files.values()), files
+
+    r2 = run("r2")
+    assert r2["extract"] == 0 and r2["placement"] == 0
+    assert _extract_files(base) == files
