@@ -17,7 +17,7 @@ import numpy as np
 
 from . import cells as C
 from .mercator import wgs84_to_mercator
-from .pip import points_in_polygon
+from .pip import points_in_polygon, ring_edges
 
 
 def grid_cover(xs, ys, ring_offsets, level: int = C.DEFAULT_LEVEL):
@@ -63,38 +63,7 @@ def _classify_full(xs, ys, offs, cx0, cy0, cx1, cy1):
     inside = points_in_polygon(corner_x, corner_y, xs, ys, offs)
     all_corners_in = inside[:k] & inside[k : 2 * k] & inside[2 * k : 3 * k] & inside[3 * k :]
 
-    # any polygon edge bbox overlapping the cell bbox?
-    ex1, ey1, ex2, ey2 = [], [], [], []
-    for i in range(len(offs) - 1):
-        a, b = offs[i], offs[i + 1]
-        rx, ry = xs[a:b], ys[a:b]
-        if len(rx) > 1 and rx[0] == rx[-1] and ry[0] == ry[-1]:
-            rx, ry = rx[:-1], ry[:-1]
-        ex1.append(rx)
-        ey1.append(ry)
-        ex2.append(np.roll(rx, -1))
-        ey2.append(np.roll(ry, -1))
-    ex1 = np.concatenate(ex1)
-    ey1 = np.concatenate(ey1)
-    ex2 = np.concatenate(ex2)
-    ey2 = np.concatenate(ey2)
-    sminx = np.minimum(ex1, ex2)
-    smaxx = np.maximum(ex1, ex2)
-    sminy = np.minimum(ey1, ey2)
-    smaxy = np.maximum(ey1, ey2)
-    # (k, E) overlap matrix, blocked if large
-    overlap_any = np.zeros(k, dtype=bool)
-    step = max(1, 4_000_000 // max(len(ex1), 1))
-    for s in range(0, k, step):
-        e = min(k, s + step)
-        ov = (
-            (sminx[None, :] <= cx1[s:e, None])
-            & (smaxx[None, :] >= cx0[s:e, None])
-            & (sminy[None, :] <= cy1[s:e, None])
-            & (smaxy[None, :] >= cy0[s:e, None])
-        )
-        overlap_any[s:e] = ov.any(axis=1)
-    return all_corners_in & ~overlap_any
+    return all_corners_in & _no_edge_overlap(xs, ys, offs, cx0, cy0, cx1, cy1)
 
 
 def grid_cover_compact(
@@ -188,21 +157,10 @@ def hex_cover(xs, ys, ring_offsets, res: int):
 
 
 def _no_edge_overlap(xs, ys, offs, cx0, cy0, cx1, cy1):
+    """Per cell: no polygon edge's bbox overlaps the cell bbox (overlap
+    is necessary for an edge to cross the cell)."""
     k = len(cx0)
-    ex1, ey1, ex2, ey2 = [], [], [], []
-    for i in range(len(offs) - 1):
-        aa, bb = offs[i], offs[i + 1]
-        rx, ry = xs[aa:bb], ys[aa:bb]
-        if len(rx) > 1 and rx[0] == rx[-1] and ry[0] == ry[-1]:
-            rx, ry = rx[:-1], ry[:-1]
-        ex1.append(rx)
-        ey1.append(ry)
-        ex2.append(np.roll(rx, -1))
-        ey2.append(np.roll(ry, -1))
-    ex1 = np.concatenate(ex1)
-    ey1 = np.concatenate(ey1)
-    ex2 = np.concatenate(ex2)
-    ey2 = np.concatenate(ey2)
+    ex1, ey1, ex2, ey2 = ring_edges(xs, ys, offs)
     sminx = np.minimum(ex1, ex2)
     smaxx = np.maximum(ex1, ex2)
     sminy = np.minimum(ey1, ey2)

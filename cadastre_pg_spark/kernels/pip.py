@@ -23,7 +23,7 @@ def points_in_ring(px, py, rx, ry):
     py = np.asarray(py, dtype=np.float64)
     rx = np.asarray(rx, dtype=np.float64)
     ry = np.asarray(ry, dtype=np.float64)
-    if rx[0] == rx[-1] and ry[0] == ry[-1] and len(rx) > 1:
+    if len(rx) > 1 and rx[0] == rx[-1] and ry[0] == ry[-1]:
         rx, ry = rx[:-1], ry[:-1]
     x1, y1 = rx, ry
     x2, y2 = np.roll(rx, -1), np.roll(ry, -1)
@@ -59,46 +59,42 @@ def points_in_polygon(px, py, xs, ys, ring_offsets):
     return (parity % 2).astype(bool)
 
 
+def ring_edges(xs, ys, offs):
+    """Edges (x1, y1, x2, y2) of every ring of one flat polygon, ring
+    after ring. A repeated closing vertex is dropped and each ring's
+    last vertex wraps to its first; an empty ring has no edges."""
+    ex1, ey1, ex2, ey2 = [], [], [], []
+    for i in range(len(offs) - 1):
+        a, b = offs[i], offs[i + 1]
+        rx, ry = xs[a:b], ys[a:b]
+        if len(rx) > 1 and rx[0] == rx[-1] and ry[0] == ry[-1]:
+            rx, ry = rx[:-1], ry[:-1]
+        ex1.append(rx)
+        ey1.append(ry)
+        ex2.append(np.roll(rx, -1))
+        ey2.append(np.roll(ry, -1))
+    return tuple(np.concatenate(e) for e in (ex1, ey1, ex2, ey2))
+
+
 def build_edge_matrix(polys):
     """Pack many polygons into padded edge matrices for row-vectorized
     PIP. polys: iterable of (xs, ys, ring_offsets). Returns
     (X1, Y1, X2, Y2) float64 (P, Emax), NaN-padded — a NaN edge can
     never satisfy the crossing condition, so padding is inert."""
-    edges = []
-    for xs, ys, offs in polys:
-        xs = np.asarray(xs, dtype=np.float64)
-        ys = np.asarray(ys, dtype=np.float64)
-        offs = np.asarray(offs, dtype=np.int64)
-        ex1, ey1, ex2, ey2 = [], [], [], []
-        for i in range(len(offs) - 1):
-            a, b = offs[i], offs[i + 1]
-            rx, ry = xs[a:b], ys[a:b]
-            if len(rx) > 1 and rx[0] == rx[-1] and ry[0] == ry[-1]:
-                rx, ry = rx[:-1], ry[:-1]
-            ex1.append(rx)
-            ey1.append(ry)
-            ex2.append(np.roll(rx, -1))
-            ey2.append(np.roll(ry, -1))
-        edges.append(
-            (
-                np.concatenate(ex1),
-                np.concatenate(ey1),
-                np.concatenate(ex2),
-                np.concatenate(ey2),
-            )
+    edges = [
+        ring_edges(
+            np.asarray(xs, dtype=np.float64),
+            np.asarray(ys, dtype=np.float64),
+            np.asarray(offs, dtype=np.int64),
         )
+        for xs, ys, offs in polys
+    ]
     emax = max((len(e[0]) for e in edges), default=0)
-    p = len(edges)
-    X1 = np.full((p, emax), np.nan)
-    Y1 = np.full((p, emax), np.nan)
-    X2 = np.full((p, emax), np.nan)
-    Y2 = np.full((p, emax), np.nan)
-    for i, (a, b, c, d) in enumerate(edges):
-        X1[i, : len(a)] = a
-        Y1[i, : len(b)] = b
-        X2[i, : len(c)] = c
-        Y2[i, : len(d)] = d
-    return X1, Y1, X2, Y2
+    out = tuple(np.full((len(edges), emax), np.nan) for _ in range(4))
+    for i, poly in enumerate(edges):
+        for m, e in zip(out, poly):
+            m[i, : len(e)] = e
+    return out
 
 
 def points_in_polygons_rowwise(px, py, pidx, X1, Y1, X2, Y2, block_cells=8_000_000):

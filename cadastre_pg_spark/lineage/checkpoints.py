@@ -82,9 +82,6 @@ CHECKPOINT_SCHEMA = T.StructType(
     ]
 )
 
-COMMITTED_SCHEMA = T.StructType(
-    [CHECKPOINT_SCHEMA["partition_id"], CHECKPOINT_SCHEMA["content_hash"]]
-)
 METRICS_SCHEMA = T.StructType([CHECKPOINT_SCHEMA["partition_id"], CHECKPOINT_SCHEMA["rows"]])
 
 # the columns a log entry stores per row; committed_at is per entry
@@ -174,11 +171,11 @@ class CheckpointLog:
         when no entry has been published."""
         return _local_df(self.spark, self._rows(), CHECKPOINT_SCHEMA)
 
-    def committed(self, stage: str) -> DataFrame:
-        """(partition_id, content_hash) of the LATEST committed row per
-        partition, as a local frame. A partition re-committed with new
-        content supersedes its old rows — only the current hash counts
-        as done (matching the reference's ON CONFLICT DO UPDATE upsert,
+    def committed(self, stage: str) -> dict:
+        """{partition_id: content_hash} of the LATEST committed row per
+        partition. A partition re-committed with new content supersedes
+        its old rows — only the current hash counts as done (matching
+        the reference's ON CONFLICT DO UPDATE upsert,
         postgres.rs:98-168). Without this, a partition whose content
         *reverts* to any previously committed hash would be skipped
         while the output dir still holds the newer data."""
@@ -186,7 +183,7 @@ class CheckpointLog:
         for _, row_stage, pid, content_hash, _, _, status, _ in self._rows():
             if row_stage == stage and status == "committed":
                 latest[pid] = content_hash
-        return _local_df(self.spark, sorted(latest.items()), COMMITTED_SCHEMA)
+        return latest
 
     def append(self, commits: list) -> None:
         """Publish `commits` (tuples of the CHECKPOINT_SCHEMA columns
@@ -282,7 +279,7 @@ def run_stage(
 
     if census is None:
         census = _data_census(input_df, partition_col)
-    done = {r.partition_id: r.content_hash for r in log.committed(stage).collect()}
+    done = log.committed(stage)
     todo = {
         k: h
         for k, h in census.items()
@@ -301,19 +298,14 @@ def run_stage(
         .observe(landed, *[F.count(F.when(pid == k, 1)).alias(str(k)) for k in todo_ids])
     )
 
-    # data files first (idempotent: per-partition dirs, dynamic overwrite).
-    # Save/restore the session conf — leaking 'dynamic' would silently
-    # change the semantics of unrelated overwrite-partitioned writes.
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        processed.write.mode("overwrite").partitionBy("_pid").parquet(out_dir)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_mode)
+    # data files first (idempotent: per-partition dirs, dynamic overwrite
+    # as an option of this write, not the session conf other writers share)
+    (
+        processed.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_pid")
+        .parquet(out_dir)
+    )
     rows = {k: landed.get[str(k)] for k in todo_ids}
 
     def partition_dir(k: int):

@@ -49,6 +49,20 @@ BCAST_NODE_LIMIT = 5_000_000
 CC_CONTRACT_EDGE_LIMIT = 1_000_000
 
 
+def _broadcastable(n_rows: int) -> bool:
+    """The measured house gate: a node-sized table of `n_rows` long
+    pairs broadcasts (<~100 MB build) at or under BCAST_NODE_LIMIT,
+    read per call so tests can force the shuffle paths."""
+    return n_rows <= BCAST_NODE_LIMIT
+
+
+def _gate(d: DataFrame, n_rows: int) -> DataFrame:
+    """`d` with a broadcast hint when its `n_rows` pass the gate, so the
+    static edge table of an iterative op is never re-shuffled per round;
+    above it the join falls back to a shuffle plan unchanged."""
+    return F.broadcast(d) if _broadcastable(n_rows) else d
+
+
 def _adaptive_n(df: DataFrame, n_rows: int) -> int:
     """Partition count for the iterative ops' pinned repartitions:
     scale-adaptive (guide §2.2/§2.5 — sized from the data, capped at
@@ -124,15 +138,9 @@ def connected_components(
     if prev_sum is None:  # no edges at all
         out = lab.select("node", F.col("lab").alias("cluster"))
         return hold(out, *cached)
-    # measured strategy gate (house rule): the label table is one
-    # (node, lab) long-pair per node — under ~5M nodes it broadcasts
-    # (<~100 MB build), turning BOTH per-round joins map-side so the
-    # static edge table is never re-shuffled per round; above that the
-    # joins fall back to shuffle plans unchanged
-    bcast = n_nodes <= BCAST_NODE_LIMIT
-
-    def _b(d):
-        return F.broadcast(d) if bcast else d
+    # the label table is one (node, lab) long-pair per node: under the
+    # gate BOTH per-round joins run map-side
+    bcast = _broadcastable(n_nodes)
 
     def _min_rounds(sym_i, lab_i, prev_sum_i, rounds_left):
         """Min-label + pointer-jump rounds to the fixpoint; returns the
@@ -144,7 +152,7 @@ def connected_components(
             # extra aggregation arm (measured cheaper per round than a
             # separate node-keyed fold-in join — the union rides the
             # same node-sized partial-agg exchange)
-            nbr = sym_i.join(_b(lab_r), sym_i.src == lab_r.node).select(
+            nbr = sym_i.join(_gate(lab_r, n_nodes), sym_i.src == lab_r.node).select(
                 F.col("dst").alias("node"), "lab"
             )
             stepped = (
@@ -175,7 +183,7 @@ def connected_components(
             )
             new = (
                 stepped.join(
-                    _b(jump), F.col("lab") == F.col("m_node"), "left"
+                    _gate(jump, n_nodes), F.col("lab") == F.col("m_node"), "left"
                 )
                 .select(
                     "node",
@@ -208,7 +216,7 @@ def connected_components(
     # dense/large graph: one neighborhood-min round over the raw
     # edges, then contract and iterate on the (much smaller) label
     # graph — every subsequent round stops re-scanning raw edges
-    nbr1 = sym.join(_b(lab), sym.src == lab.node).select(
+    nbr1 = sym.join(_gate(lab, n_nodes), sym.src == lab.node).select(
         F.col("dst").alias("node"), "lab"
     )
     l1 = (
@@ -226,8 +234,8 @@ def connected_components(
     m1 = l1.select(F.col("node").alias("m_node"), F.col("lab").alias("m_lab"))
     m2 = l1.select(F.col("node").alias("w_node"), F.col("lab").alias("w_lab"))
     e2 = (
-        sym.join(_b(m1), sym.src == F.col("m_node"))
-        .join(_b(m2), sym.dst == F.col("w_node"))
+        sym.join(_gate(m1, n_nodes), sym.src == F.col("m_node"))
+        .join(_gate(m2, n_nodes), sym.dst == F.col("w_node"))
         .where(F.col("m_lab") != F.col("w_lab"))
         .select(F.col("m_lab").alias("src"), F.col("w_lab").alias("dst"))
         .distinct()
@@ -250,7 +258,7 @@ def connected_components(
         F.col("node").alias("f_node"), F.col("lab").alias("f_lab")
     )
     out = (
-        l1.join(_b(fmap), F.col("lab") == F.col("f_node"), "left")
+        l1.join(_gate(fmap, n_nodes), F.col("lab") == F.col("f_node"), "left")
         .select(
             "node",
             F.coalesce(F.col("f_lab"), F.col("lab")).alias("cluster"),
@@ -313,19 +321,16 @@ def pagerank(
         n_nodes = nodes.count()
     base = (1.0 - damping) / n_nodes  # python double, shared with the oracle
     u0 = int((1.0 / n_nodes) * RANK_UNIT)  # floor, exact python int
+    nv = nodes.select(F.col("node").cast("long").alias("v"))
+    return _rank_rounds(edges, nv, n_nodes, F.lit(u0), F.lit(base), iters, damping)
 
-    # measured gate (same rule as connected_components): a node-sized
-    # rank/contrib table under ~5M rows broadcasts, so the static edge
-    # table is never re-shuffled per round
-    bcast = n_nodes <= BCAST_NODE_LIMIT
 
-    def _b(d):
-        return F.broadcast(d) if bcast else d
-
-    e = edges.select(
-        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+def _rank_rounds(edges, nv, n_nodes, u0, teleport, iters, damping) -> DataFrame:
+    """The rank recurrence of pagerank and personalized_pagerank over
+    the node table `nv` (v, plus any columns `u0` and `teleport`
+    read): ranks start at the `u0` units and each round is
+    rank = teleport + damping * inbound, quantized as pagerank's
+    docstring states. Returns (node, rank)."""
     # round-6 plan rework (results bit-identical): partition the static
     # edge table ONCE — by dst in broadcast mode so the per-round
     # inbound SUM rides the partitioning (zero exchanges per round); by
@@ -335,24 +340,24 @@ def pagerank(
     # join. In-loop checkpoints are LAZY: lineage still truncates per
     # round, but the fixed-iteration chain executes without a blocking
     # driver job per round.
+    e = edges.select(
+        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
+    )
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     n = _adaptive_n(edges, n_nodes)
     ed = (
         e.join(deg, "src")
-        .repartition(n, "dst" if bcast else "src")
+        .repartition(n, "dst" if _broadcastable(n_nodes) else "src")
         .localCheckpoint(eager=True)
     )
-    nodes0 = (
-        nodes.select(F.col("node").cast("long").alias("v"))
-        .repartition(n, "v")
-        .localCheckpoint(eager=True)
-    )
-    ranks = nodes0.select("v", F.lit(u0).alias("u"))
+    nodes0 = nv.repartition(n, "v").localCheckpoint(eager=True)
+    ranks = nodes0.select("v", u0.alias("u"))
     cached = [ed, nodes0]
 
     out = None
     for _ in range(iters):
         contrib = (
-            ed.join(_b(ranks), ed.src == ranks.v)
+            ed.join(_gate(ranks, n_nodes), ed.src == ranks.v)
             .select(
                 "dst",
                 # units/out-degree, floored to integer units; F.floor on
@@ -363,10 +368,10 @@ def pagerank(
             .agg(F.sum("c").alias("s"))
         )
         stepped = nodes0.join(contrib, F.col("v") == F.col("dst"), "left")
-        rd = F.lit(base) + F.lit(damping) * (
+        rd = teleport + F.lit(damping) * (
             F.coalesce(F.col("s"), F.lit(0)).cast("double") / F.lit(RANK_UNIT)
         )
-        out = stepped.select("v", rd.alias("rd")).localCheckpoint(eager=False)
+        out = stepped.select(*nv.columns, rd.alias("rd")).localCheckpoint(eager=False)
         cached.append(out)
         ranks = out.select("v", F.floor(F.col("rd") * F.lit(RANK_UNIT)).alias("u"))
     res = out.select(F.col("v").alias("node"), F.col("rd").alias("rank"))
@@ -409,7 +414,7 @@ def hits(
     if n_nodes is None:
         n_nodes = nodes.count()
     unit = F.lit(float(RANK_UNIT))
-    bcast = n_nodes <= BCAST_NODE_LIMIT
+    bcast = _broadcastable(n_nodes)
     # round-6 plan rework (results bit-identical): in broadcast mode
     # the static edge table is kept in TWO partitioned copies — by dst
     # for the authority half-round and by src for the hub half-round —
@@ -440,15 +445,12 @@ def hits(
     h = nv.select("v", F.lit(u0).cast("long").alias("u"))
     cached = [e_by_dst, e_by_src, nv]
 
-    def _b(d):
-        return F.broadcast(d) if bcast else d
-
     def _half(scores, src_col, dst_col):
         """One half-round: inbound unit SUM onto dst_col, L1-normalize,
         re-floor to units. Returns the new node-sized (v, u) table."""
         e = e_by_dst if dst_col == "dst" else e_by_src
         s = (
-            e.join(_b(scores), F.col(src_col) == scores.v)
+            e.join(_gate(scores, n_nodes), F.col(src_col) == scores.v)
             .select(F.col(dst_col).alias("w"), "u")
             .groupBy("w")
             .agg(F.sum("u").alias("s"))
@@ -487,7 +489,7 @@ def hits(
         F.col("v").alias("va"),
         (F.col("u").cast("double") / unit).alias("authority"),
     )
-    res = hub.join(_b(auth), F.col("v") == F.col("va")).select(
+    res = hub.join(_gate(auth, n_nodes), F.col("v") == F.col("va")).select(
         F.col("v").alias("node"), "hub", "authority"
     )
     return hold(res, *cached)
@@ -539,16 +541,14 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
         if n_alive == 0 or n_alive == n_prev:
             out = alive.select("node", "core_deg")
             return hold(out, *cached)
-        # node-sized alive set under ~5M rows broadcasts both semi
-        # joins (measured gate, n_alive is already counted) — the edge
-        # list is filtered map-side instead of re-shuffling per round
-        def _ab(col):
-            side = alive.select(F.col("node").alias(col))
-            return F.broadcast(side) if n_alive <= BCAST_NODE_LIMIT else side
-
+        # the gated alive set (n_alive is already counted) filters the
+        # edge list map-side instead of re-shuffling it per round
+        a_side, b_side = (
+            _gate(alive.select(F.col("node").alias(c)), n_alive) for c in "ab"
+        )
         und = (
-            und.join(_ab("a"), "a", "left_semi")
-            .join(_ab("b"), "b", "left_semi")
+            und.join(a_side, "a", "left_semi")
+            .join(b_side, "b", "left_semi")
             .localCheckpoint(eager=True)
         )
         cached.append(und)
@@ -708,20 +708,13 @@ def bfs_hops(
     )
     cached = [e0, e, lab]
     frontier = lab
-    # measured gate (the connected_components rule): frontier and
-    # visited sets under ~5M rows broadcast, keeping the static edge
-    # table out of per-round exchanges; counts are already materialized
-    # by the convergence check
-    _B = BCAST_NODE_LIMIT
+    # the frontier and visited sets are gated; their counts are already
+    # materialized by the convergence check
     n_frontier = lab.count()
     n_lab = n_frontier
     for r in range(1, max_rounds + 1):
-        f_side = frontier.select(F.col("node").alias("src"))
-        if n_frontier <= _B:
-            f_side = F.broadcast(f_side)
-        anti_side = lab.select("node")
-        if n_lab <= _B:
-            anti_side = F.broadcast(anti_side)
+        f_side = _gate(frontier.select(F.col("node").alias("src")), n_frontier)
+        anti_side = _gate(lab.select("node"), n_lab)
         nxt = (
             e.join(f_side, "src")
             .select(F.col("dst").alias("node"))
@@ -737,7 +730,7 @@ def bfs_hops(
         if n_frontier == 0:
             out = lab.select("node", F.col("hop").cast("int").alias("hop"))
             return hold(out, *cached)
-        if n_lab + n_frontier <= _B:
+        if _broadcastable(n_lab + n_frontier):
             # visited stays a lazy union of cached frames — no extra job
             lab = lab.unionByName(nxt)
         else:
@@ -888,18 +881,12 @@ def sssp(
     )
     cached = [e0, e, lab]
     frontier = lab
-    # measured gate (the connected_components rule): node-sized
-    # frontier/label tables under ~5M rows broadcast so the static
-    # edge table never re-shuffles; frontier counts come free from the
-    # convergence check, the label count is tracked as an upper bound
-    _B = BCAST_NODE_LIMIT
+    # the frontier and label tables are gated; frontier counts come
+    # free from the convergence check, the label count is tracked as an
+    # upper bound
     n_frontier = lab.count()
     n_lab = n_frontier
     rounds_since_ckpt = 0
-
-    def _gate(d, n):
-        return F.broadcast(d) if n <= _B else d
-
     for _ in range(max_rounds):
         cand = (
             e.join(
@@ -936,7 +923,7 @@ def sssp(
             _gate(improved.select("node"), n_frontier), "node", "left_anti"
         ).unionByName(improved)
         rounds_since_ckpt += 1
-        if n_lab + n_frontier > _B or rounds_since_ckpt >= 8:
+        if not _broadcastable(n_lab + n_frontier) or rounds_since_ckpt >= 8:
             # consolidate: above the broadcast gate every union arm
             # would re-shuffle per round, and even below it the lazy
             # anti-join chain is re-evaluated per consumer — cap its
@@ -1010,13 +997,9 @@ def label_prop(
         .localCheckpoint(eager=True)
     )
     cached = [sym0, sym, lab]
-    bcast = lab.count() <= BCAST_NODE_LIMIT
-
-    def _b(d):
-        return F.broadcast(d) if bcast else d
-
+    n_lab = lab.count()
     for _ in range(iters):
-        votes = sym.join(_b(lab), sym.src == lab.node).select(
+        votes = sym.join(_gate(lab, n_lab), sym.src == lab.node).select(
             F.col("dst").alias("node"), "lab"
         )
         cnt = votes.groupBy("node", "lab").agg(F.count(F.lit(1)).alias("n"))
@@ -1071,65 +1054,21 @@ def personalized_pagerank(
     u0 = int((1.0 / n_seeds) * RANK_UNIT)
 
     n_nodes = nodes.count()
-    bcast = n_nodes <= BCAST_NODE_LIMIT
-    # same round-6 partitioned-once round shape as pagerank: edges by
-    # dst (broadcast mode) / src (shuffle mode), seeded node table by
-    # id, lazy in-loop checkpoints — see pagerank for the rationale
-    n = _adaptive_n(edges, n_nodes)
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    ed = (
-        e.join(deg, "src")
-        .repartition(n, "dst" if bcast else "src")
-        .localCheckpoint(eager=True)
-    )
     sd = seeds.select(
         F.col("node").cast("long").alias("v"), F.lit(True).alias("is_seed")
     )
-    nod = (
+    nv = (
         nodes.select(F.col("node").cast("long").alias("v"))
         .join(F.broadcast(sd), "v", "left")
         .select("v", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
-        .repartition(n, "v")
-        .localCheckpoint(eager=True)
     )
-    ranks = nod.select(
-        "v",
-        F.when(F.col("is_seed"), F.lit(u0)).otherwise(F.lit(0)).alias("u"),
+    seed = F.col("is_seed")
+    return _rank_rounds(
+        edges,
+        nv,
+        n_nodes,
+        F.when(seed, F.lit(u0)).otherwise(F.lit(0)),
+        F.when(seed, F.lit(base)).otherwise(F.lit(0.0)),
+        iters,
+        damping,
     )
-    cached = [ed, nod]
-
-    def _b(d):
-        return F.broadcast(d) if bcast else d
-
-    out = None
-    for _ in range(iters):
-        contrib = (
-            ed.join(_b(ranks), ed.src == ranks.v)
-            .select(
-                "dst",
-                F.floor(F.col("u").cast("double") / F.col("d")).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        stepped = nod.join(contrib, F.col("v") == F.col("dst"), "left")
-        rd = F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0.0)) + (
-            F.lit(damping)
-            * (
-                F.coalesce(F.col("s"), F.lit(0)).cast("double")
-                / F.lit(RANK_UNIT)
-            )
-        )
-        out = stepped.select("v", "is_seed", rd.alias("rd")).localCheckpoint(
-            eager=False
-        )
-        cached.append(out)
-        ranks = out.select(
-            "v", F.floor(F.col("rd") * F.lit(RANK_UNIT)).alias("u")
-        )
-    res = out.select(F.col("v").alias("node"), F.col("rd").alias("rank"))
-    return hold(res, *cached)

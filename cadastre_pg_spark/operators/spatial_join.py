@@ -200,95 +200,53 @@ def _pip_refine(
     stream into the PIP kernel is only 4 narrow columns — ~10x less
     transfer than join-duplicating the ring arrays per candidate row.
     Shuffle path (build side too big to broadcast): rings are attached
-    by a parcel-id shuffle join and read per batch. Either way the PIP
-    kernel runs vectorized per parcel group WITHIN each Arrow batch —
-    no groupBy shuffle, no per-group task overhead, and a hot parcel's
-    candidates stay spread across input partitions (natural salting)."""
+    by a parcel-id shuffle join and read per batch. Either way the
+    batch's rows find their parcel's row of the padded edge matrices
+    by a binary search over sorted parcel ids, and the PIP kernel runs
+    once per Arrow batch — no groupBy shuffle, no per-group task
+    overhead, and a hot parcel's candidates stay spread across input
+    partitions (natural salting)."""
+    rings = parcels.select("parcel_id", "xs", "ys", "ring_offsets")
+
+    def edge_table(pdf):
+        """(sorted parcel ids, edge matrices) of rings sorted by id."""
+        return pdf["parcel_id"].to_numpy(np.int64), build_edge_matrix(
+            zip(pdf["xs"].values, pdf["ys"].values, pdf["ring_offsets"].values)
+        )
+
     if strategy == "broadcast":
-        sc = cand.sparkSession.sparkContext
-        rpdf = parcels.select("parcel_id", "xs", "ys", "ring_offsets").toPandas()
-        pids = rpdf["parcel_id"].to_numpy(np.int64)
-        X1, Y1, X2, Y2 = build_edge_matrix(
-            zip(rpdf["xs"].values, rpdf["ys"].values, rpdf["ring_offsets"].values)
+        bc = cand.sparkSession.sparkContext.broadcast(
+            edge_table(rings.toPandas().sort_values("parcel_id"))
         )
-        # dense LUT when ids are compact (vectorized index translation)
-        max_pid = int(pids.max()) if len(pids) else 0
-        if max_pid < 4 * len(pids) + 1024:
-            lut = np.full(max_pid + 1, -1, dtype=np.int64)
-            lut[pids] = np.arange(len(pids), dtype=np.int64)
-            payload = (lut, None, X1, Y1, X2, Y2)
-        else:
-            payload = (None, {int(p): i for i, p in enumerate(pids)}, X1, Y1, X2, Y2)
-        bc = sc.broadcast(payload)
+        cand = cand.select("point_id", "lon", "lat", "parcel_id")
 
-        def refine(batches):
-            lut, idx_map, x1, y1, x2, y2 = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pid = pdf["parcel_id"].to_numpy(np.int64)
-                if lut is not None:
-                    pidx = lut[pid]
-                else:
-                    pidx = np.fromiter(
-                        (idx_map[int(p)] for p in pid), dtype=np.int64, count=len(pid)
-                    )
-                inside = points_in_polygons_rowwise(
-                    pdf["lon"].to_numpy(np.float64),
-                    pdf["lat"].to_numpy(np.float64),
-                    pidx,
-                    x1,
-                    y1,
-                    x2,
-                    y2,
-                )
-                out = pdf.loc[inside, ["point_id", "parcel_id"]]
-                if len(out):
-                    yield out
+        def batch_edges(pdf, pid):
+            return bc.value
 
-        return cand.select("point_id", "lon", "lat", "parcel_id").mapInPandas(
-            refine, schema="point_id long, parcel_id long"
-        )
+    else:
+        cand = cand.join(rings, "parcel_id")
 
-    with_rings = cand.join(
-        parcels.select("parcel_id", "xs", "ys", "ring_offsets"), "parcel_id"
-    )
+        def batch_edges(pdf, pid):
+            _, first = np.unique(pid, return_index=True)
+            return edge_table(pdf.iloc[first])
 
-    def refine_joined(batches):
-        # same row-vectorized kernel as the broadcast path: build the
-        # padded edge matrices from the batch's distinct parcels, then
-        # one NumPy pass over all rows
+    def refine(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
-            firsts = pdf.drop_duplicates("parcel_id")
-            pids = firsts["parcel_id"].to_numpy(np.int64)
-            X1, Y1, X2, Y2 = build_edge_matrix(
-                zip(
-                    firsts["xs"].values,
-                    firsts["ys"].values,
-                    firsts["ring_offsets"].values,
-                )
-            )
-            idx_map = {int(p): i for i, p in enumerate(pids)}
             pid = pdf["parcel_id"].to_numpy(np.int64)
-            pidx = np.fromiter(
-                (idx_map[int(p)] for p in pid), dtype=np.int64, count=len(pid)
-            )
+            ids, edges = batch_edges(pdf, pid)
             inside = points_in_polygons_rowwise(
                 pdf["lon"].to_numpy(np.float64),
                 pdf["lat"].to_numpy(np.float64),
-                pidx,
-                X1,
-                Y1,
-                X2,
-                Y2,
+                np.searchsorted(ids, pid),
+                *edges,
             )
             out = pdf.loc[inside, ["point_id", "parcel_id"]]
             if len(out):
                 yield out
 
-    return with_rings.mapInPandas(refine_joined, schema="point_id long, parcel_id long")
+    return cand.mapInPandas(refine, schema="point_id long, parcel_id long")
 
 
 BROADCAST_PARCEL_LIMIT = 300_000  # rings dict ~<150 MB broadcast ceiling

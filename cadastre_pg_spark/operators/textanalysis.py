@@ -446,45 +446,10 @@ def collocations(
     n_b are the left/right positional marginals over ALL bigrams, N
     the total bigram count.
 
-    Scale shape: bigrams come from one in-row arrays_zip (no
-    self-join, no window); ONE (a, b) hash aggregate with map-side
-    partials is the only full-data exchange; marginals and the total
-    are rollups of the (vocabulary-sized) census broadcast back onto
-    it — the mutual_info one-scan pattern on a composite key.
+    The skip-gram census at window 1: its scale shape is
+    skipgram_pmi's with one in-row arrays_zip.
     """
-    u = lambda c: F.round(F.log(c.cast("double")) * F.lit(1e6)).cast("long")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = docs.select(toks.alias("t")).where(F.size("t") >= 2)
-    bg = base.select(
-        F.explode(
-            F.arrays_zip(
-                F.slice(F.col("t"), 1, F.size("t") - 1).alias("a"),
-                F.slice(F.col("t"), 2, F.size("t") - 1).alias("b"),
-            )
-        ).alias("p")
-    ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-    nab = bg.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab")).persist()
-    na = nab.groupBy("a").agg(F.sum("n_ab").alias("n_a"))
-    nb = nab.groupBy("b").agg(F.sum("n_ab").alias("n_b"))
-    tot = nab.agg(u(F.sum("n_ab")).alias("ln_n_u"))
-    out = (
-        nab.where(F.col("n_ab") >= min_count)
-        .join(F.broadcast(na), "a")
-        .join(F.broadcast(nb), "b")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "a",
-            "b",
-            "n_ab",
-            "n_a",
-            "n_b",
-            (
-                u(F.col("n_ab")) + F.col("ln_n_u")
-                - u(F.col("n_a")) - u(F.col("n_b"))
-            ).alias("pmi_u"),
-        )
-    )
-    return hold(out, nab)
+    return skipgram_pmi(docs, window=1, min_count=min_count, text_col=text_col)
 
 
 def skipgram_pmi(

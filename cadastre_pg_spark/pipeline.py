@@ -138,7 +138,7 @@ def run_import(
         "placement",
         PLACEMENT_VERSION,
         (level, n_parcels, PARCEL_SCALE),
-        [tuple(r) for r in CheckpointLog(spark, base_dir).committed("extract").collect()],
+        CheckpointLog(spark, base_dir).committed("extract").items(),
     )
     try:
         out_place, m2 = run_stage(

@@ -23,11 +23,8 @@ refuses to infer.
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from cadastre_pg_spark.operators.corpus import global_shuffle
-
-from .shards import MANIFEST_DIR
+from .shards import _verify_routed, _write_routed
 
 DOC_SCHEMA = "doc_id long, pos long, text string"
 
@@ -45,38 +42,17 @@ def write_jsonl(
     manifest census write_shards emits (under `path/_manifest`, as
     parquet — the manifest is loader metadata, not interchange).
     Returns the manifest DataFrame."""
-    plan = global_shuffle(docs, n_shards=n_shards, salt=salt, hash_fn=hash_fn)
-    routed = docs.select("doc_id", "text").join(
-        plan.select("doc_id", "shard", "pos"), "doc_id"
-    )
-    (
-        routed.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "pos")
-        .select("shard", "doc_id", "pos", "text")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .option("compression", compression)
-        .json(path)
-    )
-    manifest = (
-        routed.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(
-                F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
-            )
-            .cast("long")
-            .alias("n_tokens"),
-            F.min("pos").cast("long").alias("first_pos"),
-            F.max("pos").cast("long").alias("last_pos"),
-            F.sum(F.col("pos") * F.pmod(F.col("doc_id"), F.lit(1 << 20)))
-            .cast("long")
-            .alias("pos_checksum"),
+
+    def save(ordered):
+        (
+            ordered.select("shard", "doc_id", "pos", "text")
+            .write.mode("overwrite")
+            .partitionBy("shard")
+            .option("compression", compression)
+            .json(path)
         )
-        .orderBy("shard")
-    )
-    manifest.write.mode("overwrite").parquet(os.path.join(path, MANIFEST_DIR))
-    return manifest
+
+    return _write_routed(docs.select("doc_id", "text"), path, n_shards, salt, hash_fn, save)
 
 
 def read_jsonl(
@@ -110,28 +86,4 @@ def verify_jsonl(
     flag. Truncated, duplicated, or reordered shards all surface as
     count/min/max/checksum drift (same rule as shards.verify_shards,
     so a loader can verify either format with one code path)."""
-    data = read_jsonl(spark, path, schema)
-    got = data.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("long").alias("g_docs"),
-        F.min("pos").cast("long").alias("g_first"),
-        F.max("pos").cast("long").alias("g_last"),
-        F.sum(F.col("pos") * F.pmod(F.col("doc_id"), F.lit(1 << 20)))
-        .cast("long")
-        .alias("g_checksum"),
-    )
-    stored = spark.read.parquet(os.path.join(path, MANIFEST_DIR))
-    return (
-        stored.join(got, "shard", "left")
-        .select(
-            "shard",
-            "n_docs",
-            "pos_checksum",
-            (
-                (F.col("g_docs") == F.col("n_docs"))
-                & (F.col("g_first") == F.col("first_pos"))
-                & (F.col("g_last") == F.col("last_pos"))
-                & (F.col("g_checksum") == F.col("pos_checksum"))
-            ).alias("intact"),
-        )
-        .orderBy("shard")
-    )
+    return _verify_routed(spark, read_jsonl(spark, path, schema), path)

@@ -41,15 +41,21 @@ def write_shards(
     parquet shard directories in deterministic training order, and a
     manifest under `path/_manifest`. Returns the manifest DataFrame:
     (shard, n_docs, n_tokens, first_pos, last_pos, pos_checksum)."""
+
+    def save(ordered):
+        ordered.write.mode("overwrite").partitionBy("shard").parquet(path)
+
+    return _write_routed(docs, path, n_shards, salt, hash_fn, save)
+
+
+def _write_routed(docs, path, n_shards, salt, hash_fn, save) -> DataFrame:
+    """The format-independent half of a sharded write: route `docs` by
+    global_shuffle, hand the rows in (shard, pos) order, one shard per
+    task, to `save(ordered)`, then write the per-shard manifest census
+    under `path/_manifest` and return it."""
     plan = global_shuffle(docs, n_shards=n_shards, salt=salt, hash_fn=hash_fn)
     routed = docs.join(plan.select("doc_id", "shard", "pos"), "doc_id")
-    (
-        routed.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
+    save(routed.repartition(n_shards, "shard").sortWithinPartitions("shard", "pos"))
     manifest = (
         routed.groupBy("shard")
         .agg(
@@ -61,14 +67,17 @@ def write_shards(
             .alias("n_tokens"),
             F.min("pos").cast("long").alias("first_pos"),
             F.max("pos").cast("long").alias("last_pos"),
-            F.sum(F.col("pos") * F.pmod(F.col("doc_id"), F.lit(1 << 20)))
-            .cast("long")
-            .alias("pos_checksum"),
+            _pos_checksum().alias("pos_checksum"),
         )
         .orderBy("shard")
     )
     manifest.write.mode("overwrite").parquet(os.path.join(path, MANIFEST_DIR))
     return manifest
+
+
+def _pos_checksum():
+    """The order-sensitive BIGINT position checksum of a shard."""
+    return F.sum(F.col("pos") * F.pmod(F.col("doc_id"), F.lit(1 << 20))).cast("long")
 
 
 def read_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
@@ -86,14 +95,18 @@ def verify_shards(spark: SparkSession, path: str) -> DataFrame:
     `intact` flag — the loader-side integrity check. Positions and
     doc ids come from the data files themselves, so truncation,
     duplication, or reorder all surface as checksum/count drift."""
-    data = spark.read.parquet(path)
+    return _verify_routed(spark, spark.read.parquet(path), path)
+
+
+def _verify_routed(spark: SparkSession, data: DataFrame, path: str) -> DataFrame:
+    """verify_shards over `data`, the rows read back from `path` in
+    any format: (shard, n_docs, pos_checksum, intact) per stored
+    manifest row."""
     got = data.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("g_docs"),
         F.min("pos").cast("long").alias("g_first"),
         F.max("pos").cast("long").alias("g_last"),
-        F.sum(F.col("pos") * F.pmod(F.col("doc_id"), F.lit(1 << 20)))
-        .cast("long")
-        .alias("g_checksum"),
+        _pos_checksum().alias("g_checksum"),
     )
     stored = spark.read.parquet(os.path.join(path, MANIFEST_DIR))
     return (

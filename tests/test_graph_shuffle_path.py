@@ -84,6 +84,36 @@ def test_hits_shuffle_path_equal(spark, force_shuffle):
     assert got == want and len(got) == 400
 
 
+def test_personalized_pagerank_shuffle_path_equal(spark, force_shuffle):
+    e = _edges(spark)
+    nodes = spark.range(400).select(F.col("id").alias("node"))
+    seeds = spark.range(5).select((F.col("id") * 37).alias("node"))
+    got = _rows(
+        G.personalized_pagerank(e, nodes, seeds, iters=3), ["node", "rank"]
+    )
+    orig = G.BCAST_NODE_LIMIT
+    G.BCAST_NODE_LIMIT = 5_000_000
+    try:
+        want = _rows(
+            G.personalized_pagerank(e, nodes, seeds, iters=3), ["node", "rank"]
+        )
+    finally:
+        G.BCAST_NODE_LIMIT = orig
+    assert got == want and len(got) == 400
+
+
+def test_kcore_shuffle_path_equal(spark, force_shuffle):
+    e = _edges(spark, deg=4)
+    got = _rows(G.kcore(e, 4), ["node", "core_deg"])
+    orig = G.BCAST_NODE_LIMIT
+    G.BCAST_NODE_LIMIT = 5_000_000
+    try:
+        want = _rows(G.kcore(e, 4), ["node", "core_deg"])
+    finally:
+        G.BCAST_NODE_LIMIT = orig
+    assert got == want and len(got) > 0
+
+
 def test_sssp_bfs_shuffle_path_equal(spark, force_shuffle):
     e = _edges(spark).withColumn(
         "w", F.lit(1) + F.pmod(F.col("src") * 13 + F.col("dst"), F.lit(9))

@@ -112,6 +112,33 @@ def test_pip_with_hole():
     assert res.tolist() == [False, True, False]  # center is in the hole
 
 
+def test_empty_ring_is_inert():
+    """A zero-length ring (offsets [0, 5, 5]) adds no edges: the
+    reference PIP, the grid cover and the rowwise kernel all answer as
+    for the exterior alone."""
+    from cadastre_pg_spark.kernels.cover import grid_cover
+    from cadastre_pg_spark.kernels.pip import (
+        build_edge_matrix,
+        points_in_polygons_rowwise,
+    )
+
+    xs = 2.0 + 0.01 * SQUARE[:, 0]
+    ys = 48.0 + 0.01 * SQUARE[:, 1]
+    px = np.array([2.005, 2.02, 1.99, 2.0001])
+    py = np.array([48.005, 48.005, 48.005, 48.0099])
+    want = points_in_polygon(px, py, xs, ys, [0, 5])
+    assert want.tolist() == [True, False, False, True]
+    assert points_in_polygon(px, py, xs, ys, [0, 5, 5]).tolist() == want.tolist()
+    cells, full = grid_cover(xs, ys, [0, 5, 5])
+    want_cells, want_full = grid_cover(xs, ys, [0, 5])
+    assert len(cells) > 0
+    assert cells.tolist() == want_cells.tolist()
+    assert full.tolist() == want_full.tolist()
+    edges = build_edge_matrix([(xs, ys, [0, 5, 5])])
+    got = points_in_polygons_rowwise(px, py, np.zeros(len(px), np.int64), *edges)
+    assert got.tolist() == want.tolist()
+
+
 def test_hash_rotation_invariance():
     """Same square under ring rotation hashes identically (diff.rs:159-200)."""
     base = SQUARE[:-1]

@@ -172,7 +172,7 @@ def test_input_evaluated_once_for_census_once_for_write(spark, base):
     log = CheckpointLog(spark, base)
 
     def chained():
-        upstream = [tuple(r) for r in log.committed("s").collect()]
+        upstream = log.committed("s").items()
         return chained_census("t", "1", (), upstream)
 
     kw["stage"] = "t"

@@ -4,6 +4,7 @@ polygons (concave, holes, stitched rings) and both cell schemes."""
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 import __spark_entry__ as E
 from cadastre_pg_spark.data.parcels import generate_parcels, make_parcel
@@ -100,6 +101,41 @@ def test_general_polygon_join_vs_bruteforce(spark, monkeypatch, strategy, kwargs
     release_cached(out)
     assert got == exp
     assert len(exp) > 0
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_join_with_negative_parcel_ids(spark, strategy):
+    """Parcel ids in a small range around zero: every candidate is
+    refined against its own parcel's rings (a negative id must not
+    alias a positive one's index)."""
+    n_parcels = 120
+    rank = F.row_number().over(Window.orderBy("parcel_id"))
+    parcels = generate_parcels(spark, n_parcels, partitions=4).select(
+        (rank - F.lit(n_parcels // 2)).cast("long").alias("parcel_id"),
+        "xs",
+        "ys",
+        "ring_offsets",
+    )
+    rows = parcels.collect()
+    # 40 points in each parcel's bbox: hits on both sides of zero
+    rng = np.random.default_rng(3)
+    lon = np.concatenate([rng.uniform(min(r.xs), max(r.xs), 40) for r in rows])
+    lat = np.concatenate([rng.uniform(min(r.ys), max(r.ys), 40) for r in rows])
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "point_id long, lon double, lat double",
+    )
+    out = cell_spatial_join(points, parcels, level=10, strategy=strategy)
+    got = {(r.point_id, r.parcel_id) for r in out.collect()}
+    release_cached(out)
+    exp = set()
+    for r in rows:
+        inside = points_in_polygon(
+            lon, lat, np.asarray(r.xs), np.asarray(r.ys), np.asarray(r.ring_offsets)
+        )
+        exp.update((int(i), r.parcel_id) for i in np.nonzero(inside)[0])
+    assert min(p for _, p in exp) < 0 < max(p for _, p in exp)
+    assert got == exp
 
 
 def test_hex_join_matches_grid_on_rectangles(spark):
