@@ -2146,27 +2146,19 @@ def q_pages_pipeline(spark, sf_dir):
 
     # the page index (last 8 url chars) is the point key: unique by
     # construction — a hashed key would collide by birthday math and
-    # fan out duplicate rows through the join
+    # fan out duplicate rows through the join. url and text_sha ride
+    # through the join, so the pages and the Arrow extraction kernel
+    # are evaluated once, with no join-back
     key = F.substring("url", -8, 8).cast("long")
-    # persist: the join probe and the url/text_sha join-back both
-    # consume points — without it the page generation AND the Arrow
-    # extraction kernel run twice (visible as a doubled python stage)
     points = pages.select(
         F.col("url"),
         F.sha2(extract_udf(F.col("html")), 256).alias("text_sha"),
         key.alias("point_id"),
         S.lon_col(key).alias("lon"),
         S.lat_col(key).alias("lat"),
-    ).persist()
-    joined = cell_spatial_join(
-        points.select("point_id", "lon", "lat"),
-        parcels,
-        level=LEVEL,
     )
-    out = joined.join(
-        points.select("point_id", "url", "text_sha"), "point_id"
-    ).select("url", "text_sha", "parcel_id")
-    return hold(out, joined, points)
+    joined = cell_spatial_join(points, parcels, level=LEVEL)
+    return hold(joined.select("url", "text_sha", "parcel_id"), joined)
 
 
 def q_hex_spatial_join(spark, sf_dir):

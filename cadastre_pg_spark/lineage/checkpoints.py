@@ -289,13 +289,15 @@ def run_stage(
         return out_dir, _local_df(spark, [], METRICS_SCHEMA)
     todo_ids = sorted(todo)
 
-    # rows per partition ride the write as observed metrics: no job
+    # rows per partition ride the write as observed metrics: no job.
+    # One SQL string, not a Column per partition: each Column built in
+    # Python costs Py4J round trips
     landed = Observation()
-    pid = F.col("_pid")
+    counts = ", ".join(f"count(CASE WHEN _pid = {k} THEN 1 END)" for k in todo_ids)
     processed = (
         process(input_df.filter(F.col(partition_col).cast("int").isin(todo_ids)))
         .withColumn("_pid", F.col(partition_col).cast("int"))
-        .observe(landed, *[F.count(F.when(pid == k, 1)).alias(str(k)) for k in todo_ids])
+        .observe(landed, F.expr(f"array({counts})").alias("rows"))
     )
 
     # data files first (idempotent: per-partition dirs, dynamic overwrite
@@ -306,7 +308,7 @@ def run_stage(
         .partitionBy("_pid")
         .parquet(out_dir)
     )
-    rows = {k: landed.get[str(k)] for k in todo_ids}
+    rows = dict(zip(todo_ids, landed.get["rows"]))
 
     def partition_dir(k: int):
         return _hadoop_path(spark, os.path.join(out_dir, f"_pid={k}"))

@@ -2,17 +2,22 @@
 
 Replaces the reference's PostGIS GIST + ST_Contains workload
 (cadastre-pg/src/export/postgres.rs:304-344 — SURVEY.md J9): the
-R-tree probe becomes an equi-join on cell id, with exact ray-casting
-point-in-polygon refinement (kernels/pip.py) only for points landing
-in *partial* cover cells; points in *full* cells are accepted without
-any Python touching them.
+R-tree probe becomes ONE equi-join on cell id against a cover whose
+rows carry cell-local edge lists (Raptor's build-side polygon/grid
+intersection; S2's S2ShapeIndex clipped edges), and the exact
+ray-casting test (kernels/pip.py) runs on them as one codegen'd JVM
+expression.
 
 Scale design:
 - probe side (points): cell id computed JVM-side (pure arithmetic,
-  whole-stage codegen) — zero Python on the big side. The probe side
-  may be a stream: streaming/placement runs this same plan per
-  micro-batch against the static parcels.
-- build side (polygons): polyfill via mapInPandas (NumPy per batch).
+  whole-stage codegen) and the containment test on the joined cover
+  row — zero Python on the big side. The probe side may be a stream:
+  streaming/placement runs this same plan per micro-batch against the
+  static parcels. Its other columns ride through the join.
+- build side (polygons): polyfill via mapInArrow (NumPy per batch):
+  per cover row a `base` crossing count and at most E_MAX local edges
+  (kernels/cover.cell_edge_lists); rows that can hold no point of the
+  parcel are dropped before the join.
 - every gate is chosen EXPLICITLY (north rule) from one measured
   parcel aggregate: broadcast while the parcel count is at most
   BROADCAST_PARCEL_LIMIT, else a shuffle hash join on cell with AQE
@@ -20,33 +25,44 @@ Scale design:
   HOT_CELL_THRESHOLD are salted across tasks; the multi-resolution
   cover when a parcel's bbox spans more than COMPACT_CELLS_THRESHOLD
   cells on average.
-- PIP refinement is a mapInPandas over the partial-cell candidates;
-  rings travel as a task broadcast (broadcast path) or are attached by
-  a parcel-id join (shuffle path).
 """
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..data import synthetic as S
 from ..kernels import cells as C
-from ..kernels.cover import grid_cover, grid_cover_compact, hex_cover
-from ..kernels.pip import (
-    build_edge_matrix,
-    points_in_polygons_rowwise,
+from ..kernels.cover import (
+    cell_edge_lists,
+    grid_cell_bands,
+    grid_cover,
+    grid_cover_compact,
+    hex_cell_bands,
+    hex_cover,
 )
+from ..kernels.pip import build_edge_matrix
 # release_cached is re-exported only for the frozen bench.py; new code
 # imports it from operators.held
 from .held import hold, release_cached  # noqa: F401
 
-PARCEL_FLAT_SCHEMA = (
-    "parcel_id long, xs array<double>, ys array<double>, ring_offsets array<int>"
-)
-COVER_SCHEMA = (
-    "parcel_id long, cell long, is_full boolean, lvl int, "
-    "x0 double, x1 double, y0 double, y1 double"
+# local edges a cover row carries at most: the probe unrolls this many
+# crossing tests; a cell with more splits (cell_edge_lists). Measured
+# at level 10 without splitting, cells hold at most 2 local edges for
+# the registry's rectangles (grid and hex) and 7 for its star polygons
+# and the import's parcels, where 4 covers 99.97 % of the cells.
+E_MAX = 4
+COVER_SCHEMA = "parcel_id long, cell long, lvl int, base int, g array<double>"
+_COVER_ARROW = pa.schema(
+    [
+        ("parcel_id", pa.int64()),
+        ("cell", pa.int64()),
+        ("lvl", pa.int32()),
+        ("base", pa.int32()),
+        ("g", pa.list_(pa.field("element", pa.float64()))),
+    ]
 )
 
 
@@ -90,13 +106,17 @@ def points_from_docs(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def polyfill(
     parcels: DataFrame, level: int = C.DEFAULT_LEVEL, scheme: str = "grid", d: int = 0
 ) -> DataFrame:
-    """Polygon -> cell cover DataFrame: (parcel_id, cell, is_full, lvl)
-    plus the parcel's bbox (x0, x1, y0, y1) on every row, so the bbox
-    prefilter rung is join-free on the shuffle path.
+    """Polygon -> cell cover DataFrame (COVER_SCHEMA): per cell of the
+    polygon's cover, (parcel_id, cell, lvl) and its local edge list —
+    `base`, the crossings every point of the cell counts, and `g`: null
+    when `base` alone decides the cell, else [x0, x1, y0, y1, ax0, ay0,
+    bx0, by0, ...], the bounds of the row's sub-rectangle and its at
+    most E_MAX local edges (kernels/cover.cell_edge_lists). A cell with
+    more than E_MAX local edges appears once per sub-rectangle.
 
-    mapInPandas: vectorized NumPy cover kernel per polygon, batched by
-    Arrow. The per-polygon loop mirrors the reference's per-feature
-    repair loop (edigeo/src/lib.rs:133) — small-N geometry work.
+    mapInArrow: the cover kernel runs per polygon over zero-copy views
+    of the ring arrays (the reference's per-feature loop,
+    edigeo/src/lib.rs:133), the edge lists once per Arrow batch.
 
     d > 0 (grid only) builds the multi-resolution cover (H3 'compact'
     analog): interior blocks collapse to cells d levels coarser, the
@@ -104,48 +124,54 @@ def polyfill(
     without losing exactness. `lvl` is each row's level."""
     if d and scheme != "grid":
         raise ValueError("the compact cover (d > 0) is grid-only")
+    e_max = E_MAX
 
-    def kernel(xa, ya, offs):
+    def cover(xa, ya, offs):
         if d:
-            return grid_cover_compact(xa, ya, offs, level, d)
-        cells, full = (grid_cover if scheme == "grid" else hex_cover)(
-            xa, ya, offs, level
-        )
-        return cells, full, np.full(len(cells), level)
+            cells, _, lvl = grid_cover_compact(xa, ya, offs, level, d)
+            return cells, lvl
+        cells, _ = (grid_cover if scheme == "grid" else hex_cover)(xa, ya, offs, level)
+        return cells, np.full(len(cells), level)
+
+    def flat(col):
+        """(values, offsets) of a list column, zero-copy."""
+        return col.values.to_numpy(zero_copy_only=False), col.offsets.to_numpy()
+
+    def gen(batches):
+        for b in batches:
+            (xv, xo), (yv, yo), (rv, ro) = (flat(b.column(c)) for c in ("xs", "ys", "ring_offsets"))
+            polys = [
+                (xv[xo[i] : xo[i + 1]], yv[yo[i] : yo[i + 1]], rv[ro[i] : ro[i + 1]].astype(np.int64))
+                for i in range(b.num_rows)
+            ]
+            if not polys:
+                continue
+            covers = [cover(*p) for p in polys]
+            cells, lvl = (np.concatenate(c) for c in zip(*covers))
+            owner = np.repeat(np.arange(len(polys)), [len(c[0]) for c in covers])
+            bands = grid_cell_bands(cells, lvl) if scheme == "grid" else hex_cell_bands(cells)
+            row, base, bounds, edges = cell_edge_lists(
+                build_edge_matrix(polys), owner, *bands, e_max
+            )
+            pid = b.column("parcel_id").to_numpy()
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(pid[owner[row]]),
+                    pa.array(cells[row]),
+                    pa.array(lvl[row].astype(np.int32)),
+                    pa.array(base.astype(np.int32)),
+                    _edge_list_array(bounds, edges),
+                ],
+                schema=_COVER_ARROW,
+            )
 
     # the build side often arrives as one small file -> one task; the
     # per-polygon cover kernel is CPU-bound, so spread it first, over
     # one wave (a Python task pays a fixed latency, see session.one_wave)
     sc = parcels.sparkSession.sparkContext
     parcels = parcels.repartition(sc.defaultParallelism)
-
-    names = ("parcel_id", "cell", "is_full", "lvl", "x0", "x1", "y0", "y1")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for pid, xs, ys, offs in zip(
-                pdf["parcel_id"].values,
-                pdf["xs"].values,
-                pdf["ys"].values,
-                pdf["ring_offsets"].values,
-            ):
-                xa = np.asarray(xs, dtype=np.float64)
-                ya = np.asarray(ys, dtype=np.float64)
-                cells, full, lvl = kernel(xa, ya, np.asarray(offs, dtype=np.int64))
-                k = len(cells)
-                bbox = (xa.min(), xa.max(), ya.min(), ya.max())
-                rows.append(
-                    (np.full(k, pid, dtype=np.int64), cells, full, lvl.astype(np.int32))
-                    + tuple(np.full(k, b) for b in bbox)
-                )
-            if rows:
-                yield pd.DataFrame(
-                    {n: np.concatenate(col) for n, col in zip(names, zip(*rows))}
-                )
-
     cols = parcels.select("parcel_id", "xs", "ys", "ring_offsets")
-    return cols.mapInPandas(gen, schema=COVER_SCHEMA)
+    return cols.mapInArrow(gen, schema=COVER_SCHEMA)
 
 
 def hot_cells(cover: DataFrame, threshold: int, keys=("cell",)) -> DataFrame:
@@ -190,66 +216,56 @@ def salted_cell_join(
     return p.join(c, [*keys, "salt"]).drop("salt")
 
 
-def _pip_refine(
-    cand: DataFrame, parcels: DataFrame, strategy: str = "broadcast"
-) -> DataFrame:
-    """Exact refinement of partial-cell candidates — SHUFFLE-FREE.
+def _edge_list_array(bounds, edges) -> pa.ListArray:
+    """polyfill's `g` column from cell_edge_lists' padded rows: null
+    for an unsplit row without local edges, else its bounds followed by
+    its local edges, endpoint after endpoint."""
+    n = np.sum(~np.isnan(edges[0]), axis=1)
+    need = (n > 0) | np.isfinite(np.stack(bounds)).any(axis=0)
+    m = np.column_stack([*bounds, np.stack(edges, axis=2).reshape(len(n), -1)])
+    length = np.where(need, 4 + 4 * n, 0)
+    offsets = np.concatenate([[0], np.cumsum(length)]).astype(np.int32)
+    values = m[np.arange(m.shape[1]) < length[:, None]]
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(values), type=_COVER_ARROW.field("g").type, mask=pa.array(~need)
+    )
 
-    Broadcast path: ring arrays travel as a SparkContext broadcast
-    variable (one deserialization per python worker), so the Arrow
-    stream into the PIP kernel is only 4 narrow columns — ~10x less
-    transfer than join-duplicating the ring arrays per candidate row.
-    Shuffle path (build side too big to broadcast): rings are attached
-    by a parcel-id shuffle join and read per batch. Either way the
-    batch's rows find their parcel's row of the padded edge matrices
-    by a binary search over sorted parcel ids, and the PIP kernel runs
-    once per Arrow batch — no groupBy shuffle, no per-group task
-    overhead, and a hot parcel's candidates stay spread across input
-    partitions (natural salting)."""
-    rings = parcels.select("parcel_id", "xs", "ys", "ring_offsets")
 
-    def edge_table(pdf):
-        """(sorted parcel ids, edge matrices) of rings sorted by id."""
-        return pdf["parcel_id"].to_numpy(np.int64), build_edge_matrix(
-            zip(pdf["xs"].values, pdf["ys"].values, pdf["ring_offsets"].values)
+def _contains() -> Column:
+    """The probe's test against its joined cover row: the point lies in
+    the row's sub-rectangle and `base` plus its crossings of the row's
+    local edges is odd. Each crossing is `kernels.pip.points_in_ring`'s
+    test in its op order; an edge past the end of `g` (or a null `g`)
+    reads null and counts 0. One codegen'd expression, unrolled over
+    E_MAX edges: no explode and no higher-order function. Built from
+    one SQL string: a Column built op by op costs a Py4J round trip per
+    op (~0.2 s for this one)."""
+    crosses = []
+    for k in range(4, 4 + 4 * E_MAX, 4):
+        ax, ay, bx, by = (f"get(g, {k + i})" for i in range(4))
+        crosses.append(
+            f"CAST(coalesce(({ay} > lat) != ({by} > lat) AND "
+            f"lon < {ax} + (lat - {ay}) / ({by} - {ay}) * ({bx} - {ax}), false) AS INT)"
         )
+    within = "get(g, 0) <= lon AND lon < get(g, 1) AND get(g, 2) <= lat AND lat < get(g, 3)"
+    return F.expr(f"(base + {' + '.join(crosses)}) % 2 = 1 AND coalesce({within}, true)")
 
+
+def _cell_join(pts: DataFrame, build: DataFrame, keys: list, strategy: str, salt_hot: int):
+    """The one equi-join of probe rows with cover rows on `keys`."""
     if strategy == "broadcast":
-        bc = cand.sparkSession.sparkContext.broadcast(
-            edge_table(rings.toPandas().sort_values("parcel_id"))
-        )
-        cand = cand.select("point_id", "lon", "lat", "parcel_id")
-
-        def batch_edges(pdf, pid):
-            return bc.value
-
-    else:
-        cand = cand.join(rings, "parcel_id")
-
-        def batch_edges(pdf, pid):
-            _, first = np.unique(pid, return_index=True)
-            return edge_table(pdf.iloc[first])
-
-    def refine(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pid = pdf["parcel_id"].to_numpy(np.int64)
-            ids, edges = batch_edges(pdf, pid)
-            inside = points_in_polygons_rowwise(
-                pdf["lon"].to_numpy(np.float64),
-                pdf["lat"].to_numpy(np.float64),
-                np.searchsorted(ids, pid),
-                *edges,
-            )
-            out = pdf.loc[inside, ["point_id", "parcel_id"]]
-            if len(out):
-                yield out
-
-    return cand.mapInPandas(refine, schema="point_id long, parcel_id long")
+        return pts.join(F.broadcast(build), keys)
+    if salt_hot > 1:
+        # explicit skew handling: measured hot cells get salted
+        hot = hot_cells(build, HOT_CELL_THRESHOLD, keys)
+        return salted_cell_join(pts, build, salt_hot, hot, keys)
+    return pts.join(build, keys)
 
 
-BROADCAST_PARCEL_LIMIT = 300_000  # rings dict ~<150 MB broadcast ceiling
+# the broadcast is the cover itself: measured 263.6 MiB for the 20,000
+# rectangles of sf0.1 at level 10 (3.77M rows, ~13.8 KB per parcel), so
+# 75,000 such parcels keep it near 1 GiB
+BROADCAST_PARCEL_LIMIT = 75_000
 
 # compact-cover gate: measured round 1, the multi-resolution cover
 # loses on small-polygon mixes (~64 cells/parcel at sf0.1: +40% wall
@@ -281,20 +297,22 @@ def cell_spatial_join(
     strategy: str = "auto",
     salt_hot: int = 8,
 ) -> DataFrame:
-    """points (point_id, lon, lat) x parcels (parcel_id, rings) ->
-    (point_id, parcel_id) pairs where the point is strictly inside.
+    """points (point_id, lon, lat, ...) x parcels (parcel_id, rings) ->
+    (point_id, ..., parcel_id) rows where the point is strictly inside:
+    the probe side's columns other than lon/lat ride through the join.
+    That equals joining (point_id, parcel_id) pairs back to the points
+    on point_id only while point_id is unique on the probe side.
 
     Exact: equals brute-force PIP (tests + DuckDB oracle assert this).
-    Each point maps to exactly one cell, so (point, parcel) pairs are
-    unique without a distinct.
+    Each point maps to exactly one cell (and sub-rectangle), so
+    (point, parcel) pairs are unique without a distinct.
 
-    Strategy: 'broadcast' broadcasts the cell cover to the probe side
-    and ships ring arrays as a task broadcast; 'shuffle' hash-joins on
-    cell with AQE skew-split, salts cells with more than
-    HOT_CELL_THRESHOLD cover rows over `salt_hot` buckets (salt_hot <= 1
-    turns salting off) and attaches rings by a parcel-id join. 'auto'
-    (default) picks broadcast while the parcel count is at most
-    BROADCAST_PARCEL_LIMIT.
+    Strategy: 'broadcast' broadcasts the cell cover to the probe side;
+    'shuffle' hash-joins on cell with AQE skew-split and salts cells
+    with more than HOT_CELL_THRESHOLD cover rows over `salt_hot`
+    buckets (salt_hot <= 1 turns salting off). 'auto' (default) picks
+    broadcast while the parcel count is at most BROADCAST_PARCEL_LIMIT.
+    Either way one join, then one containment expression (_contains).
 
     The grid scheme switches to the multi-resolution cover (H3
     'compact' analog) when parcels span more than
@@ -307,26 +325,24 @@ def cell_spatial_join(
 
     Both gates read one driver job, `gate_stats`, which also fills the
     parcels' persist cache. `points` may be a streaming DataFrame."""
-    for col, df, side in (
-        ("point_id", points, "points"),
-        ("lon", points, "points"),
-        ("lat", points, "points"),
-        ("parcel_id", parcels, "parcels"),
-        ("xs", parcels, "parcels"),
-        ("ys", parcels, "parcels"),
-        ("ring_offsets", parcels, "parcels"),
+    point_cols, parcel_cols = points.columns, parcels.columns
+    for col, cols, side in (
+        *((c, point_cols, "points") for c in ("point_id", "lon", "lat")),
+        *((c, parcel_cols, "parcels") for c in ("parcel_id", "xs", "ys", "ring_offsets")),
     ):
-        if col not in df.columns:
+        if col not in cols:
             raise ValueError(f"{side} side is missing required column {col!r}")
+    taken = set(point_cols) & {"parcel_id", "cell", "lvl", "base", "g", "salt"}
+    if taken:
+        raise ValueError(f"points side carries join column(s) {sorted(taken)}")
     parcels = parcels.persist()
     n_parcels, cells_per_parcel = gate_stats(parcels, level)
     if strategy == "auto":
         strategy = "broadcast" if n_parcels <= BROADCAST_PARCEL_LIMIT else "shuffle"
     compact = scheme == "grid" and cells_per_parcel > COMPACT_CELLS_THRESHOLD
     d = COMPACT_D if compact else 0
-    # persist: the full-hit and partial branches of the union both
-    # consume the cover — without this the polyfill kernel (and its
-    # broadcast build) runs once per branch (seen in .explain)
+    # persist: a streaming probe re-plans the join per micro-batch and
+    # the salted shuffle path reads the cover twice (hot cells + join)
     cover = polyfill(parcels, level, scheme, d).persist()
 
     keys = ["cell"]
@@ -341,7 +357,7 @@ def cell_spatial_join(
             for lvl in (level, level - d)
         ]
         pts = points.withColumn("lc", F.explode(F.array(*lc))).select(
-            *points.columns, "lc.lvl", "lc.cell"
+            *point_cols, "lc.lvl", "lc.cell"
         )
         keys = ["lvl", "cell"]
     elif scheme == "grid":
@@ -351,44 +367,12 @@ def cell_spatial_join(
     else:
         pts = _with_hex_cell(points, level)
 
-    # refinement ladder rung 1 (JVM, codegen): bbox prefilter. Points in
-    # full cells trivially satisfy it (cell ⊂ polygon ⊂ bbox), so it
-    # only prunes partial-cell candidates — before any Python runs.
-    if strategy == "broadcast":
-        # the broadcast cover stays narrow (bbox columns quadruple its
-        # width); the bbox rung instead joins a per-PARCEL broadcast,
-        # which is small by the same measured gate that chose broadcast
-        parcel_bbox = parcels.select(
-            "parcel_id",
-            F.array_min("xs").alias("x0"),
-            F.array_max("xs").alias("x1"),
-            F.array_min("ys").alias("y0"),
-            F.array_max("ys").alias("y1"),
-        )
-        cand = pts.join(
-            F.broadcast(cover.select(*keys, "parcel_id", "is_full")), keys
-        ).join(F.broadcast(parcel_bbox), "parcel_id")
-    else:
-        # the cover rows CARRY the bbox, so the rung is join-free here,
-        # where a bbox broadcast would scale with parcel count
-        build = cover.select(*keys, "parcel_id", "is_full", "x0", "x1", "y0", "y1")
-        if salt_hot > 1:
-            # explicit skew handling: measured hot cells get salted
-            hot = hot_cells(build, HOT_CELL_THRESHOLD, keys)
-            cand = salted_cell_join(pts, build, salt_hot, hot, keys)
-        else:
-            cand = pts.join(build, keys)
-    cand = cand.filter(
-        (F.col("lon") >= F.col("x0"))
-        & (F.col("lon") <= F.col("x1"))
-        & (F.col("lat") >= F.col("y0"))
-        & (F.col("lat") <= F.col("y1"))
+    # a row with an even base and no local edge holds no point of its parcel
+    build = cover.filter((F.col("base") % 2 == 1) | F.col("g").isNotNull()).select(
+        *keys, "parcel_id", "base", "g"
     )
-    full_hits = cand.filter(F.col("is_full")).select("point_id", "parcel_id")
-    partial = cand.filter(~F.col("is_full")).select(
-        "point_id", "lon", "lat", "parcel_id"
-    )
-    out = full_hits.unionByName(_pip_refine(partial, parcels, strategy))
+    out = _cell_join(pts, build, keys, strategy, salt_hot).filter(_contains())
+    out = out.select(*(c for c in point_cols if c not in ("lon", "lat")), "parcel_id")
     # memory hygiene: the result holds the persisted build-side inputs
     # so a long-lived session can release them once the join
     # materializes (release_cached(out)) — persist() without unpersist()

@@ -121,14 +121,16 @@ def run_import(
     built = []
 
     def do_place(df):
-        # the build side (gate aggregate, ring broadcast, persisted
-        # cover) is built here, so a skipped stage never pays for it
+        # the build side (gate aggregate, persisted cover) is built
+        # here, so a skipped stage never pays for it. url and dep_part
+        # ride through the join (point_id is unique after the dedup):
+        # the extract output is scanned once, with no join-back
         parcels = generate_parcels(spark, n_parcels, size_scale=PARCEL_SCALE).select(
             F.xxhash64("parcel_id").alias("parcel_id"), "xs", "ys", "ring_offsets"
         )
-        joined = cell_spatial_join(df.select("point_id", "lon", "lat"), parcels, level=level)
+        joined = cell_spatial_join(df, parcels, level=level)
         built.append(joined)
-        return joined.join(df.select("point_id", "url", "dep_part"), "point_id")
+        return joined.select("point_id", "parcel_id", "url", "dep_part")
 
     # chained census: the sha dedup is global, so every placement
     # partition depends on every committed extract partition; the

@@ -55,3 +55,54 @@ def scan_read_schema(df: DataFrame) -> list[str]:
     for m in re.findall(r"ReadSchema: struct<([^>]*)>", s):
         out.append(sorted(c.split(":")[0] for c in m.split(",") if c))
     return out
+
+
+PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def execution_ids(spark) -> set:
+    """Ids of the SQL executions the session has recorded so far."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    return {e.executionId() for e in _seq(store.executionsList())}
+
+
+def executed_census(spark, before: set, scan: str = "") -> dict:
+    """Node census of the executed plans of every SQL execution not in
+    `before` (an `execution_ids` snapshot): BroadcastExchange and Union
+    nodes, Python nodes on a broadcast's build side and elsewhere (the
+    probe side), and parquet scans whose location contains `scan`
+    (plan strings abbreviate a location past
+    spark.sql.maxMetadataStringLength chars). The plans come from the
+    SQL status store, so a write's plan counts too; a cached plan
+    counts under every scan that reads it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    out = dict.fromkeys(("broadcasts", "unions", "python_build", "python_probe", "scans"), 0)
+    for eid in execution_ids(spark) - before:
+        graph = store.planGraph(eid)
+        nodes = {n.id(): n for n in _seq(graph.allNodes())}
+        children = {}
+        for e in _seq(graph.edges()):
+            children.setdefault(e.toId(), []).append(e.fromId())
+        roots = set(nodes) - {c for cs in children.values() for c in cs}
+        todo = [(r, False) for r in roots]
+        while todo:
+            nid, build = todo.pop()
+            name = nodes[nid].name().strip()
+            build = build or name == "BroadcastExchange"
+            out["broadcasts"] += name == "BroadcastExchange"
+            out["unions"] += name == "Union"
+            if name in PYTHON_NODES:
+                out["python_build" if build else "python_probe"] += 1
+            if name == "Scan parquet" and scan and scan in nodes[nid].desc():
+                out["scans"] += 1
+            todo.extend((c, build) for c in children.get(nid, []))
+    return out
+
+
+def _seq(scala_seq) -> list:
+    it = scala_seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out

@@ -8,7 +8,11 @@ and the operator clusters of its stages (the RDD operation graph the
 status store keeps per stage), then the total number of Python tasks:
 tasks of stages that run a Python operator (MapInPandas, MapInArrow,
 ArrowEvalPython, BatchEvalPython) rather than read its output from a
-cache.
+cache. Last, the census of the warm placement stage's executed plans
+(plans.audit.executed_census): BroadcastExchange and Union nodes,
+Python nodes under a broadcast and elsewhere (e.g. the parcel
+generator feeding the gate aggregate), and scans of the extract
+output.
 
 Usage: python scripts/profile_import.py [seed]   (default 0;
        local[min(4, nproc)], like perfbench)
@@ -26,6 +30,7 @@ sys.path.insert(0, REPO)
 
 from cadastre_pg_spark import pipeline  # noqa: E402
 from cadastre_pg_spark.lineage.checkpoints import new_run_id  # noqa: E402
+from cadastre_pg_spark.plans.audit import executed_census, execution_ids  # noqa: E402
 from cadastre_pg_spark.session import get_spark  # noqa: E402
 from perfbench import trace as T  # noqa: E402
 from perfbench import workloads as W  # noqa: E402
@@ -140,9 +145,28 @@ def main() -> None:
             return time.perf_counter() - t
 
         cold = call(os.path.join(work, "cold"))
+        census = {}
+        run_stage = pipeline.run_stage
+
+        def placement_census(*args, **kwargs):
+            """run_stage, with the census of placement's executions."""
+            if kwargs["stage"] != "placement":
+                return run_stage(*args, **kwargs)
+            before = execution_ids(spark)
+            out = run_stage(*args, **kwargs)
+            extract = os.path.join(kwargs["base_dir"], "extract")
+            census.update(executed_census(spark, before, scan=extract))
+            return out
+
+        # full scan locations in the plan strings, for the extract match
+        spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+        pipeline.run_stage = placement_census
         spark.sparkContext.setJobGroup(GROUP, "warm run_import")
-        warm = call(os.path.join(work, "warm"))
-        spark.sparkContext.setJobGroup(None, None)
+        try:
+            warm = call(os.path.join(work, "warm"))
+        finally:
+            pipeline.run_stage = run_stage
+            spark.sparkContext.setJobGroup(None, None)
 
         rows = profile(spark, GROUP)
         print(
@@ -156,6 +180,11 @@ def main() -> None:
         print(
             f"jobs {len(rows)}, tasks {sum(r[2] for r in rows)}, "
             f"python tasks {sum(r[3] for r in rows)}"
+        )
+        print(
+            "placement plans: {broadcasts} BroadcastExchange, {unions} Union, "
+            "{python_build} Python nodes under a broadcast, {python_probe} "
+            "elsewhere, {scans} extract scans".format(**census)
         )
     finally:
         spark.stop()

@@ -176,3 +176,37 @@ def test_numparse_goldens():
     assert not validate_date("2024-13")
     assert not validate_date("24-01")
     assert not validate_date("2024/01")
+
+
+def test_cell_edge_lists_edges_through_one_point():
+    """A hole touching its exterior at a vertex puts 4 edges through one
+    point, 3 of them from below it: no split separates those 3, so at
+    e_max=2 cell_edge_lists raises instead of splitting forever, and at
+    e_max=3 (a split at the vertex's y leaves the 4th above) each row's
+    base + local crossings equal points_in_polygon around the point."""
+    from cadastre_pg_spark.kernels.cells import grid_cell
+    from cadastre_pg_spark.kernels.cover import cell_edge_lists, grid_cell_bands, grid_cover
+    from cadastre_pg_spark.kernels.pip import build_edge_matrix
+
+    v = (2.0, 45.0)
+    ext = np.array([[1.9, 44.9], [2.1, 44.95], [2.05, 45.1], v, [1.9, 44.9]])
+    hole = np.array([v, [1.96, 44.99], [1.98, 44.97], v])
+    xs, ys, offs = polygon_to_flat([(ext, [hole])])
+    cells, _ = grid_cover(xs, ys, offs, 10)
+    args = (build_edge_matrix([(xs, ys, offs)]), np.zeros(len(cells), np.int64), *grid_cell_bands(cells, 10))
+    with pytest.raises(ValueError, match="meet in one point"):
+        cell_edge_lists(*args, 2)
+    row, base, bounds, (ax, ay, bx, by) = cell_edge_lists(*args, 3)
+    rng = np.random.default_rng(2)
+    px, py = rng.uniform(1.99, 2.01, 2000), rng.uniform(44.99, 45.01, 2000)
+    pcell = grid_cell(px, py, 10)
+    got = np.zeros(len(px), dtype=bool)
+    for i in range(len(px)):
+        for j in np.nonzero(cells[row] == pcell[i])[0]:
+            x0, x1, y0, y1 = (b[j] for b in bounds)
+            if x0 <= px[i] < x1 and y0 <= py[i] < y1:
+                with np.errstate(invalid="ignore"):
+                    xint = ax[j] + (py[i] - ay[j]) / (by[j] - ay[j]) * (bx[j] - ax[j])
+                cross = ((ay[j] > py[i]) != (by[j] > py[i])) & (px[i] < xint)
+                got[i] = (base[j] + cross.sum()) % 2 == 1
+    np.testing.assert_array_equal(got, points_in_polygon(px, py, xs, ys, offs))

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import DataFrameWriter
 
 from cadastre_pg_spark.pipeline import DEP_PARTS, import_metrics, run_import
+from cadastre_pg_spark.plans.audit import executed_census, execution_ids
 from conftest import persisted_rdd_ids
 
 
@@ -40,6 +41,26 @@ def test_import_extraction_invariant(spark, tmp_path):
     assert len(rows) == 100
     for r in rows[:20]:
         assert hashlib.sha256(r.text.encode()).hexdigest() == r.text_sha
+
+
+def test_placement_scans_extract_output_once(spark, tmp_path):
+    """url and dep_part ride through the spatial join, so placement's
+    executed plan reads the extract output once: no join-back on
+    point_id (which read it, and re-ran the dedup window, again). The
+    join is one probe pass: one cover broadcast and no union."""
+    base = str(tmp_path / "lake")
+    # plan strings abbreviate a scan's location past this many chars
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    try:
+        before = execution_ids(spark)
+        r = run_import(spark, base, run_id="r1", n_pages=300, n_parcels=40)
+        census = executed_census(spark, before, scan=os.path.join(base, "extract"))
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    assert r["placement"] > 0
+    assert census["scans"] == 1, census
+    assert census["broadcasts"] == 1, census
+    assert census["unions"] == 0, census
 
 
 def test_derive_status_reference_matrix():

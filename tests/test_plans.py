@@ -6,7 +6,13 @@ import pyspark.sql.functions as F
 
 import __spark_entry__ as E
 from cadastre_pg_spark.operators.held import release_cached
-from cadastre_pg_spark.plans.audit import audit, plan_has, scan_read_schema
+from cadastre_pg_spark.plans.audit import (
+    audit,
+    executed_census,
+    execution_ids,
+    plan_has,
+    scan_read_schema,
+)
 from conftest import SF_UNIT
 
 
@@ -25,11 +31,20 @@ def test_filter_and_column_pushdown(spark):
 
 
 def test_flagship_join_is_broadcast_and_codegen(spark):
+    before = execution_ids(spark)
     df = E.queries()["flagship_cell_join"](spark, SF_UNIT)
     a = audit(df)
     assert a["broadcast_join"], "cell join should broadcast the cover at this scale"
     assert a["aqe"]
-    assert a["arrow_eval"]  # the PIP refinement stage
+    df.collect()
+    census = executed_census(spark, before)
+    release_cached(df)
+    # one probe pass: one cover broadcast, no union of branches, and
+    # the only Python node is polyfill, under the broadcast
+    assert census["broadcasts"] == 1, census
+    assert census["unions"] == 0, census
+    assert census["python_probe"] == 0, census
+    assert census["python_build"] == 1, census
     # codegen spans are hidden inside AdaptiveSparkPlan pre-execution;
     # disable AQE for the shape check only
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -60,9 +75,10 @@ def test_probe_side_has_no_pre_join_shuffle(spark):
 
 def test_shuffle_path_bbox_is_join_free(spark):
     """On the shuffle strategy (build side too big to broadcast) the
-    bbox prefilter must come from columns carried on the cover rows —
-    a bbox broadcast there would scale with parcel count, i.e. blow up
-    exactly when the shuffle path was chosen to avoid that."""
+    containment test reads only the cover rows' own edge lists — any
+    broadcast there (of rings or bboxes) would scale with parcel count,
+    i.e. blow up exactly when the shuffle path was chosen to avoid
+    that."""
     from cadastre_pg_spark.operators.spatial_join import (
         cell_spatial_join,
         parcels_from_parts,
@@ -81,7 +97,7 @@ def test_shuffle_path_bbox_is_join_free(spark):
             salt_hot=0,
         )
         a = audit(out)
-        assert not a["broadcast_join"], "shuffle path must not broadcast bbox"
+        assert not a["broadcast_join"], "shuffle path must not broadcast"
         assert a["shuffle_exchange"]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

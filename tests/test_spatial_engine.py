@@ -61,18 +61,18 @@ def test_general_polygon_join_vs_bruteforce(spark, monkeypatch, strategy, kwargs
         if name.isupper():
             monkeypatch.setattr(SJ, name, value)
     chosen = {}
-    polyfill, refine = SJ.polyfill, SJ._pip_refine
+    polyfill, cell_join = SJ.polyfill, SJ._cell_join
 
     def spy_polyfill(parcels, level, scheme, d):
         chosen["d"] = d
         return polyfill(parcels, level, scheme, d)
 
-    def spy_refine(cand, parcels, strategy):
+    def spy_cell_join(pts, build, keys, strategy, salt_hot):
         chosen["strategy"] = strategy
-        return refine(cand, parcels, strategy)
+        return cell_join(pts, build, keys, strategy, salt_hot)
 
     monkeypatch.setattr(SJ, "polyfill", spy_polyfill)
-    monkeypatch.setattr(SJ, "_pip_refine", spy_refine)
+    monkeypatch.setattr(SJ, "_cell_join", spy_cell_join)
     out = cell_spatial_join(
         points,
         parcels,
@@ -216,3 +216,132 @@ def test_release_cached_unpersists_build_side(spark):
     release_cached(out)
     assert not persisted_rdd_ids(spark) - before
     release_cached(out)  # idempotent
+
+
+def _edge_case_parcels():
+    """(parcel_id, xs, ys, ring_offsets) rows: a square with a hole
+    whose sides lie on level-10 grid lines, a concave star, a polygon
+    hanging over the grid domain's west border (its points clamp into
+    border cells) and a triangle with a vertex on a grid corner; ids
+    on both sides of zero."""
+    from cadastre_pg_spark.kernels import cells as C
+    from cadastre_pg_spark.kernels.rings import polygon_to_flat
+
+    wx, wy = C.grid_cell_size(10)
+    gx = C.GRID_LON0 + 300 * wx  # grid lines at level 10
+    gy = C.GRID_LAT0 + 400 * wy
+
+    def ring(pts):
+        a = np.asarray(pts, dtype=np.float64)
+        return np.vstack([a, a[:1]])
+
+    square = ring([(gx, gy), (gx + 8 * wx, gy), (gx + 8 * wx, gy + 8 * wy), (gx, gy + 8 * wy)])
+    hole = ring([(gx + 2 * wx, gy + 2 * wy), (gx + 5 * wx, gy + 2 * wy),
+                 (gx + 5 * wx, gy + 6 * wy), (gx + 2 * wx, gy + 6 * wy)])
+    ang = np.linspace(0, 2 * np.pi, 15, endpoint=False)
+    rad = np.where(np.arange(15) % 2 == 0, 0.09, 0.03)
+    star = ring(np.column_stack([3.0 + rad * np.cos(ang), 46.0 + rad * np.sin(ang)]))
+    border = ring([(-5.6, 44.0), (-4.7, 44.05), (-4.8, 44.4), (-5.3, 44.3)])
+    tri = ring([(gx + 20 * wx, gy), (gx + 31.5 * wx, gy + 3.3 * wy), (gx + 22.2 * wx, gy + 9 * wy)])
+    polys = [(-7, [(square, [hole])]), (0, [(star, [])]), (5, [(border, [])]), (-2, [(tri, [])])]
+    return [
+        (pid, *(a.tolist() for a in polygon_to_flat(rings)[:2]),
+         polygon_to_flat(rings)[2].astype(int).tolist())
+        for pid, rings in polys
+    ]
+
+
+def _edge_case_points(rows, e_max):
+    """Ring vertices, edge midpoints, points on the level-10 grid lines
+    and on every sub-rectangle side cell_edge_lists draws at `e_max`,
+    points outside the grid domain and random points around each
+    parcel's bbox."""
+    from cadastre_pg_spark.kernels import cells as C
+    from cadastre_pg_spark.kernels.cover import cell_edge_lists, grid_cell_bands, grid_cover
+    from cadastre_pg_spark.kernels.pip import build_edge_matrix
+
+    rng = np.random.default_rng(5)
+    wx, wy = C.grid_cell_size(10)
+    lon = [np.array([-7.0, -5.2, -5.0, 9.5, 3.0])]
+    lat = [np.array([44.2, 44.1, 44.2, 52.0, 40.0])]
+    for _, xs, ys, offs in rows:
+        xs, ys = np.asarray(xs), np.asarray(ys)
+        lon += [xs, (xs[:-1] + xs[1:]) / 2]
+        lat += [ys, (ys[:-1] + ys[1:]) / 2]
+        x0, x1, y0, y1 = xs.min() - 0.01, xs.max() + 0.01, ys.min() - 0.01, ys.max() + 0.01
+        lon.append(rng.uniform(x0, x1, 400))
+        lat.append(rng.uniform(y0, y1, 400))
+        for gxl in C.GRID_LON0 + wx * np.arange(np.floor((x0 - C.GRID_LON0) / wx), np.ceil((x1 - C.GRID_LON0) / wx)):
+            lon.append(np.full(20, gxl))
+            lat.append(rng.uniform(y0, y1, 20))
+        for gyl in C.GRID_LAT0 + wy * np.arange(np.floor((y0 - C.GRID_LAT0) / wy), np.ceil((y1 - C.GRID_LAT0) / wy)):
+            lon.append(rng.uniform(x0, x1, 20))
+            lat.append(np.full(20, gyl))
+        cells, _ = grid_cover(xs, ys, offs, 10)
+        poly = (xs, ys, np.asarray(offs))
+        _, _, (bx0, bx1, by0, by1), _ = cell_edge_lists(
+            build_edge_matrix([poly]), np.zeros(len(cells), np.int64), *grid_cell_bands(cells, 10), e_max
+        )
+        xcuts, ycuts = np.concatenate([bx0, bx1]), np.concatenate([by0, by1])
+        for v in np.unique(xcuts[np.isfinite(xcuts)]):
+            lon.append(np.full(5, v))
+            lat.append(rng.uniform(y0, y1, 5))
+        for v in np.unique(ycuts[np.isfinite(ycuts)]):
+            lon.append(rng.uniform(x0, x1, 5))
+            lat.append(np.full(5, v))
+    return np.concatenate(lon), np.concatenate(lat)
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("cover", ["grid", "compact", "hex"])
+@pytest.mark.parametrize("e_max", [None, 2, 16])
+def test_join_equals_kernel_pip_on_edge_cases(spark, monkeypatch, strategy, cover, e_max):
+    """Differential test against kernels.pip.points_in_polygon on the
+    points where an approximate test goes wrong: vertices, edges, cell
+    and sub-rectangle boundaries, holes and the clamped border cells.
+    E_MAX=2 splits the busiest cells into sub-rectangles and E_MAX=16
+    keeps every cell whole: both sides of the split."""
+    if e_max is not None:
+        monkeypatch.setattr(SJ, "E_MAX", e_max)
+    if cover == "compact":
+        monkeypatch.setattr(SJ, "COMPACT_CELLS_THRESHOLD", -1)
+    rows = _edge_case_parcels()
+    lon, lat = _edge_case_points(rows, SJ.E_MAX)
+    parcels = spark.createDataFrame(rows, "parcel_id long, xs array<double>, ys array<double>, ring_offsets array<int>")
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "point_id long, lon double, lat double",
+    )
+    scheme, level = ("hex", 9) if cover == "hex" else ("grid", 10)
+    cover_df = SJ.polyfill(parcels, level, scheme, SJ.COMPACT_D if cover == "compact" else 0)
+    bounds = [r.g[:4] for r in cover_df.filter(F.col("g").isNotNull()).select("g").collect()]
+    if e_max is not None:  # a sub-rectangle has a finite side
+        assert np.isfinite(bounds).any() == (e_max == 2)
+    out = cell_spatial_join(points, parcels, level=level, scheme=scheme, strategy=strategy)
+    got = {(r.point_id, r.parcel_id) for r in out.collect()}
+    release_cached(out)
+    exp = set()
+    for pid, xs, ys, offs in rows:
+        inside = points_in_polygon(lon, lat, np.asarray(xs), np.asarray(ys), np.asarray(offs))
+        exp.update((int(i), pid) for i in np.nonzero(inside)[0])
+    assert {p for _, p in exp} == {r[0] for r in rows}
+    assert got == exp
+
+
+def test_probe_columns_ride_through_the_join(spark):
+    """With point_id unique on the probe side, carrying the probe's
+    other columns through the join equals joining the pairs back on
+    point_id; a probe column named like a join column is refused."""
+    docs = spark.read.parquet(f"{SF_UNIT}/documents.parquet")
+    parcels = parcels_from_parts(spark.read.parquet(f"{SF_UNIT}/part.parquet"))
+    points = points_from_docs(docs).withColumn("tag", F.concat(F.lit("p"), F.col("point_id")))
+    carried = cell_spatial_join(points, parcels, level=10)
+    pairs = cell_spatial_join(points.select("point_id", "lon", "lat"), parcels, level=10)
+    assert carried.columns == ["point_id", "tag", "parcel_id"]
+    back = pairs.join(points.select("point_id", "tag"), "point_id")
+    got = sorted(carried.collect())
+    assert got == sorted(back.select(*carried.columns).collect()) and got
+    release_cached(carried)
+    release_cached(pairs)
+    with pytest.raises(ValueError, match="join column"):
+        cell_spatial_join(points.withColumn("cell", F.lit(1)), parcels)
