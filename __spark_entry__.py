@@ -3088,7 +3088,7 @@ def q_centroid_drift(spark, sf_dir):
     from pyspark.sql import functions as F
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = centroid_drift(emb, group_col="label")
+    out = centroid_drift(emb)
     return out.withColumn("label", F.col("label").cast("long"))
 
 

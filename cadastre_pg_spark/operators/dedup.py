@@ -684,10 +684,11 @@ def embedding_neardup_pairs(
     max_bucket: int = 4096,
 ) -> DataFrame:
     """Near-duplicate vectors by cosine >= threshold. Candidates from
-    deterministic random-hyperplane sign buckets; both the bucket
-    assignment and the exact verify run as NumPy matrix ops inside
-    mapInPandas (Catalyst's per-element higher-order folds are ~20x
-    slower for 64-dim arrays). Joins stay JVM-side.
+    deterministic random-hyperplane sign buckets; the bucket assignment
+    and the exact verify are similarity's shared Arrow passes
+    (`_unit_and_bucket`, `_pair_cosine` over the unit vectors;
+    Catalyst's per-element higher-order folds are ~20x slower for
+    64-dim arrays). Joins stay JVM-side.
 
     Scale guards (same treatment as minhash_lsh_pairs):
     - n_planes=None (default) derives the plane count from the MEASURED
@@ -697,12 +698,12 @@ def embedding_neardup_pairs(
       collapse) are SKIPPED — the within-bucket pair join is O(n²/2^p)
       only while buckets stay bounded — and reported on the result as
       `skipped(result)` (bucket, n). No silent caps, no silent melt."""
-    from .similarity import _unit_and_bucket
+    from .similarity import _pair_cosine, _unit_and_bucket
 
     if n_planes is None:
         n_planes = derive_n_planes(embeddings.count())
     # persist: both self-join sides consume the bucketed signatures —
-    # without it the normalize+bucket mapInPandas runs once per side
+    # without it the normalize+bucket pass runs once per side
     sig = _unit_and_bucket(embeddings, n_planes).persist()
     # bucket sizes via a window over the join's own shuffle key — the
     # rows move to (bucket) partitions once, sized, and join in place
@@ -722,25 +723,8 @@ def embedding_neardup_pairs(
     )
     cand = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
 
-    def verify(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ua = np.stack(pdf["ua"].values)
-            ub = np.stack(pdf["ub"].values)
-            cos = np.round(np.einsum("ij,ij->i", ua, ub), 6)
-            keep = cos >= threshold
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pdf["vec_a"].to_numpy(np.int64)[keep],
-                        "vec_b": pdf["vec_b"].to_numpy(np.int64)[keep],
-                        "cosine": cos[keep],
-                    }
-                )
-
-    out = cand.select("vec_a", "ua", "vec_b", "ub").mapInPandas(
-        verify, schema="vec_a long, vec_b long, cosine double"
+    out = _pair_cosine(cand, ("vec_a", "ua"), ("vec_b", "ub"), unit=True).filter(
+        F.col("cosine") >= F.lit(float(threshold))
     )
     return hold(out, sig, skipped=skipped)
 

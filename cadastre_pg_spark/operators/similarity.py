@@ -1,52 +1,218 @@
-"""Similarity search over embedding columns (training-data pipeline op).
+"""Vector search and compression over embedding columns.
 
-- topk_cosine: exact brute-force top-k for a query subset. The cosine
-  is computed with DECIMAL-cast partial products so the sum is
-  order-independent and the DuckDB oracle matches bit-for-bit (same
-  trick as the aggregate queries — see __spark_entry__).
-- ann_topk: the scale path — random-hyperplane LSH buckets (multi-
-  probe) + exact re-rank inside buckets, NumPy-vectorized via
-  mapInPandas. Approximate; recall tested in pytest.
+Each vector computation is written once, as NumPy over zero-copy
+Arrow views inside mapInArrow, and every op calls it:
+
+- `_mat`: a list column of a batch as an (n, d) view of its values
+  (pandas would box every element);
+- `_md5_sample`: the member vectors whose md5(vec_id) sorts first —
+  the deterministic centroid / codebook sample of ivf_topk_sampled,
+  semdedup, pq_encode and pq_topk (one bounded driver collect);
+- `_sq_dist` / `_assign`: squared L2 to a centroid set rounded to 6 dp
+  (per PQ subspace through a reshape), nearest centroid with ties to
+  the lowest id;
+- `_ivf_search`: probe the n_probe nearest lists, join their members
+  on list_id, rerank, top-k — for k-means (ivf_topk) and md5-sampled
+  (ivf_topk_sampled) centroids alike;
+- `_pair_cosine`: the rounded cosine of paired vectors (IVF and
+  hyperplane reranks, semdedup, dedup.embedding_neardup_pairs);
+- `_query_cosines`: a broadcast unit query matrix and one rounded
+  matmul per batch (topk_cosine, embedding_contamination);
+- `_top_k`: the per-partition row_number tail.
+
+Public ops: topk_cosine, ann_topk, ivf_topk, ivf_topk_sampled,
+ivf_recall_report, pq_encode, pq_topk, semdedup, label_centroids,
+quantize_int8, jl_project, centroid_drift, embedding_contamination,
+bq_sign_masks, bq_topk, mrl_overlap. Approximate ones are
+recall-tested in pytest; the rest have exact DuckDB oracles (rounded
+float64 on both sides, ties broken by id).
 """
 
+from itertools import combinations
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .held import hold
 
+# ann_topk: hyperplane count and multi-probe Hamming radius
+ANN_PLANES = 6
+ANN_PROBE_BITS = 2
+# ivf_recall_report: fixed partition count of the k-means fit input
+FIT_PARTITIONS = 8
+# label_centroids: scale of the DECIMAL(28, s) per-dimension sums
+CENTROID_DECIMAL_SCALE = 10
+# centroid_drift: integer units per embedding component
+DRIFT_UNIT = 1e7
 
-def _unit_and_bucket(df: DataFrame, n_planes: int) -> DataFrame:
-    """(vec_id, embedding) -> (vec_id, u array<double>, bucket long),
-    vectorized NumPy: one matrix multiply per Arrow batch. The plane
-    matrix is derived lazily from the first batch's vector width — no
-    driver-side head() job, and an empty input yields an empty result
-    instead of raising."""
+
+def _mat(batch: pa.RecordBatch, name: str) -> np.ndarray:
+    """A batch's list column as a zero-copy (n, d) view of its values.
+    Every row must carry d elements."""
+    lst = batch.column(name)
+    width = np.diff(lst.offsets.to_numpy())
+    if (width != width[:1]).any():
+        raise ValueError(f"{name}: vectors of unequal width")
+    d = int(width[0]) if len(width) else 0
+    return lst.flatten().to_numpy(zero_copy_only=False).reshape(len(lst), d)
+
+
+def _list(m: np.ndarray) -> pa.ListArray:
+    """(n, d) matrix -> Arrow list column, one row per matrix row."""
+    n, d = m.shape
+    offs = np.arange(0, (n + 1) * d, d, dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offs), pa.array(m.ravel()))
+
+
+def _ids(batch: pa.RecordBatch, name: str) -> np.ndarray:
+    return batch.column(name).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
+def _norms(m: np.ndarray) -> np.ndarray:
+    """Row L2 norms with zero rows mapped to 1 (a zero vector stays 0)."""
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0] = 1.0
+    return n
+
+
+def _arr(embeddings: DataFrame) -> DataFrame:
+    return embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("arr")
+    )
+
+
+def _empty(df: DataFrame, schema: str) -> DataFrame:
+    return df.sparkSession.createDataFrame([], schema)
+
+
+def _top_k(df: DataFrame, by: str, k: int, *order) -> DataFrame:
+    """The first k rows of every `by` partition in `order`, numbered
+    from 1 in a long `rank` column."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _md5_sample(embeddings: DataFrame, n: int) -> np.ndarray | None:
+    """The n member vectors whose md5(vec_id) sorts first (ties by
+    vec_id) as an (n, d) float64 matrix, in that order; None on an
+    empty input. Random member sampling is the standard k-means
+    initializer; skipping Lloyd refinement keeps the layout
+    bit-reproducible, so an SQL engine replays it exactly."""
+    rows = (
+        _arr(embeddings)
+        .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("_h", "vec_id")
+        .limit(n)
+        .select("arr")
+        .collect()
+    )
+    return np.array([r.arr for r in rows], dtype=np.float64) if rows else None
+
+
+def _sq_dist(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Squared L2 from every row of x to every centroid of c, rounded
+    to 6 dp: (n, k) for x (n, d) and c (k, d); (n, k, m) per subspace
+    for x (n, m, sd) and c (k, m, sd)."""
+    return np.round(((x[:, None] - c[None]) ** 2).sum(axis=-1), 6)
+
+
+def _assign(arr: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """(vec_id, arr array<double>) -> (vec_id, arr, list_id): the
+    nearest centroid by `_sq_dist`, ties to the lowest list_id (argmin
+    takes the first minimum)."""
+    bc = arr.sparkSession.sparkContext.broadcast(centroids)
 
     def gen(batches):
-        planes = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["embedding"].values).astype(np.float64)
-            if planes is None:
-                planes = _planes(n_planes, m.shape[1])
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0] = 1.0
-            u = m / norms[:, None]
-            signs = (u @ planes.T) > 0
-            bucket = signs @ (1 << np.arange(n_planes, dtype=np.int64))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "u": list(u),
-                    "bucket": bucket.astype(np.int64),
-                }
-            )
+        for b in batches:
+            if b.num_rows:
+                lid = np.argmin(_sq_dist(_mat(b, "arr"), bc.value), axis=1)
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "vec_id": _ids(b, "vec_id"),
+                        "arr": b.column("arr"),
+                        "list_id": lid.astype(np.int32),
+                    }
+                )
 
-    return df.select("vec_id", "embedding").mapInPandas(
-        gen, schema="vec_id long, u array<double>, bucket long"
+    return arr.mapInArrow(gen, "vec_id long, arr array<double>, list_id int")
+
+
+def _pair_cosine(
+    pairs: DataFrame, a: tuple, b: tuple, unit: bool = False
+) -> DataFrame:
+    """Pair rows (a_id, a_vec, b_id, b_vec), with a = (a_id, a_vec) and
+    b likewise, -> (a_id, b_id, cosine): round(a.b / (|a| |b|), 6), or
+    round(a.b, 6) for unit vectors. Keep the op order: the rounded
+    cosines replay bit-for-bit in the DuckDB oracles."""
+    (ai, av), (bi, bv) = a, b
+
+    def gen(batches):
+        for batch in batches:
+            if batch.num_rows:
+                x, y = _mat(batch, av), _mat(batch, bv)
+                dot = np.einsum("ij,ij->i", x, y)
+                if not unit:
+                    dot = dot / (_norms(x) * _norms(y))
+                yield pa.RecordBatch.from_pydict(
+                    {ai: _ids(batch, ai), bi: _ids(batch, bi), "cosine": np.round(dot, 6)}
+                )
+
+    return pairs.select(ai, av, bi, bv).mapInArrow(
+        gen, f"{ai} long, {bi} long, cosine double"
+    )
+
+
+def _query_cosines(
+    embeddings: DataFrame, queries: DataFrame, reduce, schema: str
+) -> DataFrame | None:
+    """Collect the (small) query side, unit-normalize it sorted by
+    vec_id and broadcast it; every embedding batch then does ONE
+    float64 matmul against it, rounded to 6 dp. reduce(ids, cos (rows,
+    nq), qids) -> the batch's output columns. None when `queries` is
+    empty. The |E| x |Q| pair space exists only inside the kernel."""
+    rows = sorted(queries.select("vec_id", "embedding").collect())
+    if not rows:
+        return None
+    qids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    Q = np.array([r.embedding for r in rows], dtype=np.float64)
+    bc = embeddings.sparkSession.sparkContext.broadcast(
+        (qids, (Q / _norms(Q)[:, None]).T)  # (dim, nq)
+    )
+
+    def gen(batches):
+        qid, Qt = bc.value
+        for b in batches:
+            if b.num_rows:
+                E = _mat(b, "embedding").astype(np.float64)
+                cos = np.round((E / _norms(E)[:, None]) @ Qt, 6)
+                yield pa.RecordBatch.from_pydict(reduce(_ids(b, "vec_id"), cos, qid))
+
+    return embeddings.select("vec_id", "embedding").mapInArrow(gen, schema)
+
+
+def _unit_and_bucket(df: DataFrame, n_planes: int) -> DataFrame:
+    """(vec_id, embedding) -> (vec_id, u array<double>, bucket long):
+    the unit vector and its sign pattern against `_planes`, one matrix
+    multiply per Arrow batch (no driver job; an empty input yields an
+    empty result)."""
+
+    def gen(batches):
+        for b in batches:
+            if b.num_rows:
+                m = _mat(b, "embedding").astype(np.float64)
+                u = m / _norms(m)[:, None]
+                signs = (u @ _planes(n_planes, m.shape[1]).T) > 0
+                bucket = signs @ (1 << np.arange(n_planes, dtype=np.int64))
+                yield pa.RecordBatch.from_pydict(
+                    {"vec_id": _ids(b, "vec_id"), "u": _list(u), "bucket": bucket}
+                )
+
+    return df.select("vec_id", "embedding").mapInArrow(
+        gen, "vec_id long, u array<double>, bucket long"
     )
 
 
@@ -57,14 +223,17 @@ def _planes(n_planes: int, dim: int) -> np.ndarray:
     return ((p * 1315423911 + d * 2654435761) % 1000003) / 1000003.0 - 0.5
 
 
+TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, rank long"
+
+
 def topk_cosine(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbors per query vector — the
-    BASELINE shape for distributed exact search: the (small) query
-    matrix is collected and broadcast, every embedding batch does ONE
-    matmul against it (no |Q| x |E| crossJoin row fan-out — the pair
-    space exists only inside the kernel), then a window keeps top-k.
+    BASELINE shape for distributed exact search: `_query_cosines`
+    broadcasts the query matrix and scores every embedding batch with
+    one matmul (no |Q| x |E| crossJoin row fan-out), then a window
+    keeps top-k.
 
     API CONTRACT: exact and O(|Q| x |E|) compute by definition — the
     query side must be broadcast-small. Route large-query workloads to
@@ -79,52 +248,69 @@ def topk_cosine(
 
     embeddings/queries: (vec_id, embedding array<float>). Self-matches
     excluded. Returns (query_id, neighbor_id, cosine, rank)."""
-    sc = embeddings.sparkSession.sparkContext
-    qpdf = queries.select("vec_id", "embedding").toPandas()
-    if len(qpdf) == 0:
-        return (
-            embeddings.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-                F.lit(0.0).alias("cosine"),
-                F.lit(0).cast("long").alias("rank"),
-            ).limit(0)
-        )
-    qids = qpdf["vec_id"].to_numpy(np.int64)
-    Q = np.stack(qpdf["embedding"].values).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    bc = sc.broadcast((qids, (Q / qn[:, None]).T))  # (dim, nq)
 
-    def gen(batches):
-        qid, Qt = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].values).astype(np.float64)
-            en = np.linalg.norm(E, axis=1)
-            en[en == 0] = 1.0
-            cos = np.round((E / en[:, None]) @ Qt, 6)  # (rows, nq)
-            nids = pdf["vec_id"].to_numpy(np.int64)
-            rows, nq = cos.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qid, rows),
-                    "neighbor_id": np.repeat(nids, nq),
-                    "cosine": cos.ravel(),
-                }
-            )
+    def pairs(ids, cos, qid):
+        rows, nq = cos.shape
+        return {
+            "query_id": np.tile(qid, rows),
+            "neighbor_id": np.repeat(ids, nq),
+            "cosine": cos.ravel(),
+        }
 
-    scored = (
-        embeddings.select("vec_id", "embedding")
-        .mapInPandas(gen, schema="query_id long, neighbor_id long, cosine double")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = _query_cosines(
+        embeddings, queries, pairs, "query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    if scored is None:
+        return _empty(embeddings, TOPK_SCHEMA)
+    scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
+    return _top_k(scored, "query_id", k, F.col("cosine").desc(), F.col("neighbor_id"))
+
+
+def _ivf_search(
+    queries: DataFrame,
+    lists: DataFrame,
+    centroids: np.ndarray,
+    k: int,
+    n_probe: int,
+) -> DataFrame:
+    """IVF search once the coarse quantizer is fixed. `lists` holds
+    (neighbor_id, nu array<double>, list_id int) over `centroids`.
+    Each query probes its n_probe nearest lists by `_sq_dist` (a
+    stable sort, so equal distances keep the lower list_id; n_probe
+    clamps to the list count), joins their members on list_id,
+    reranks by `_pair_cosine` and keeps the top k by (cosine desc,
+    neighbor_id). Returns (query_id, neighbor_id, cosine, rank)."""
+    n_probe = min(n_probe, len(centroids))
+    bc = queries.sparkSession.sparkContext.broadcast(centroids)
+
+    def probe(batches):
+        for b in batches:
+            if b.num_rows:
+                d = _sq_dist(_mat(b, "qu"), bc.value)
+                near = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
+                rep = np.repeat(np.arange(b.num_rows), n_probe)
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "query_id": _ids(b, "query_id")[rep],
+                        "qu": b.column("qu").take(rep),
+                        "list_id": near.ravel().astype(np.int32),
+                    }
+                )
+
+    probes = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qu"),
+    ).mapInArrow(probe, "query_id long, qu array<double>, list_id int")
+    cand = probes.join(lists, "list_id").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+    scored = _pair_cosine(cand, ("query_id", "qu"), ("neighbor_id", "nu"))
+    return _top_k(
+        scored.dropDuplicates(["query_id", "neighbor_id"]),
+        "query_id",
+        k,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
     )
 
 
@@ -136,23 +322,16 @@ def ivf_topk(
     n_probe: int = 4,
     seed: int = 42,
 ) -> DataFrame:
-    """IVF-style ANN: coarse k-means quantizer (pyspark.ml) partitions
-    the vectors into lists; each query probes its `n_probe` nearest
-    centroids and exact-reranks inside them (NumPy). The scale path
-    when hyperplane buckets are too coarse."""
+    """IVF-style ANN: a coarse k-means quantizer (pyspark.ml)
+    partitions the vectors into lists, then `_ivf_search` probes and
+    reranks. The scale path when hyperplane buckets are too coarse."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     # persist BEFORE the degenerate-input count: the gate's scan then
     # doubles as the cache fill for the KMeans fit and the list
     # assignment, which both re-read base immediately (round-5 advice)
-    base = (
-        embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("arr")
-        )
-        .withColumn("features", array_to_vector("arr"))
-        .persist()
-    )
+    base = _arr(embeddings).withColumn("features", array_to_vector("arr")).persist()
     # degenerate-input gate: MLlib KMeans.fit raises on an empty
     # dataset and requires 2 <= k <= n. A single vector has no
     # neighbor pairs (self-pairs are filtered), so < 2 vectors is
@@ -161,76 +340,16 @@ def ivf_topk(
     n_vecs = base.count()
     if n_vecs < 2:
         base.unpersist()
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank long"
-        )
+        return _empty(embeddings, TOPK_SCHEMA)
     km = KMeans(k=min(n_lists, n_vecs), seed=seed, featuresCol="features")
     model = km.fit(base)
     centroids = np.stack([np.asarray(c) for c in model.clusterCenters()])
-
     lists = model.transform(base).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("arr").alias("nu"),
         F.col("prediction").alias("list_id"),
     )
-
-    qdf = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qu"),
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.stack(pdf["qu"].values)
-            d = ((q[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-            near = np.argsort(d, axis=1)[:, :n_probe]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["query_id"].to_numpy(np.int64), n_probe),
-                    "qu": [q[i] for i in range(n) for _ in range(n_probe)],
-                    "list_id": near.ravel().astype(np.int32),
-                }
-            )
-
-    probes = qdf.mapInPandas(
-        probe, schema="query_id long, qu array<double>, list_id int"
-    )
-    cand = probes.join(lists, "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-
-    def rerank(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qu = np.stack(pdf["qu"].values)
-            nu = np.stack(pdf["nu"].values)
-            qn = np.linalg.norm(qu, axis=1)
-            nn = np.linalg.norm(nu, axis=1)
-            qn[qn == 0] = 1.0
-            nn[nn == 0] = 1.0
-            cos = np.einsum("ij,ij->i", qu, nu) / (qn * nn)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
-                    "cosine": np.round(cos, 6),
-                }
-            )
-
-    scored = cand.select("query_id", "qu", "neighbor_id", "nu").mapInPandas(
-        rerank, schema="query_id long, neighbor_id long, cosine double"
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    out = scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-    return hold(out, base)
+    return hold(_ivf_search(queries, lists, centroids, k, n_probe), base)
 
 
 def ivf_recall_report(
@@ -240,7 +359,6 @@ def ivf_recall_report(
     n_lists: int = 16,
     n_probe: int = 4,
     seed: int = 42,
-    fit_partitions: int = 8,
 ) -> DataFrame:
     """Recall@k of the seeded-K-MEANS IVF quality path (ivf_topk)
     against the exact brute-force top-k (topk_cosine), as ONE result
@@ -250,12 +368,12 @@ def ivf_recall_report(
     the RECALL VALUE they produce is still deterministic and can be
     pinned).
 
-    Determinism: the embedding side is hash-repartitioned to a FIXED
-    partition count before the k-means fit, so the kmeans|| init
-    samples and the per-partition aggregation layout do not depend on
-    the session's parallelism — the fitted centroids (and hence the
-    candidate lists, hits, and recall) are reproducible across
-    sessions on one Spark version.
+    Determinism: the embedding side is hash-repartitioned to
+    FIT_PARTITIONS partitions before the k-means fit, so the kmeans||
+    init samples and the per-partition aggregation layout do not
+    depend on the session's parallelism — the fitted centroids (and
+    hence the candidate lists, hits, and recall) are reproducible
+    across sessions on one Spark version.
 
     Scale shape: both sides are existing operators (broadcast-query
     matmul; list-bucketed probe join); the report is two counts joined
@@ -264,7 +382,7 @@ def ivf_recall_report(
         "query_id", "neighbor_id"
     )
     exact = exact.persist()
-    base = embeddings.repartition(fit_partitions, "vec_id")
+    base = embeddings.repartition(FIT_PARTITIONS, "vec_id")
     approx = ivf_topk(
         base, queries, k=k, n_lists=n_lists, n_probe=n_probe, seed=seed
     )
@@ -301,9 +419,10 @@ def ivf_topk_sampled(
     n_probe: int = 4,
 ) -> DataFrame:
     """IVF ANN with a deterministic SAMPLED coarse quantizer: the list
-    centroids are the n_lists member vectors whose md5(vec_id) sorts
-    first (list_id = position in that order). Random data sampling is
-    the standard k-means initializer — skipping the Lloyd refinement
+    centroids are `_md5_sample`'s n_lists member vectors (list_id =
+    position in md5 order), members go to their nearest centroid by
+    `_assign`, and `_ivf_search` probes and reranks — the search
+    ivf_topk runs after its k-means fit. Skipping the Lloyd refinement
     trades a little list balance for a BIT-REPRODUCIBLE layout an
     independent SQL engine can replay exactly, which gives this query
     an exact DuckDB oracle (the seeded-k-means ivf_topk keeps the
@@ -312,135 +431,34 @@ def ivf_topk_sampled(
     Parity contract (mirrors the engine-wide rounded-float64 policy):
     squared-L2 centroid distances and rerank cosines are rounded to 6
     decimals on both sides; all ties break by (list_id | neighbor_id)
-    ascending. Assignment and probes are NumPy matmuls in mapInPandas;
-    the candidate join stays JVM-side."""
-    sc = embeddings.sparkSession.sparkContext
-    cpdf = (
-        embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("c")
-        )
-        .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_h", "vec_id")
-        .limit(n_lists)
-        .toPandas()
+    ascending."""
+    centroids = _md5_sample(embeddings, n_lists)
+    if centroids is None:
+        return _empty(embeddings, TOPK_SCHEMA)
+    lists = _assign(_arr(embeddings), centroids).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("arr").alias("nu"), "list_id"
     )
-    if len(cpdf) == 0:
-        return embeddings.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.lit(0.0).alias("cosine"),
-            F.lit(0).cast("long").alias("rank"),
-        ).limit(0)
-    centroids = np.stack(cpdf["c"].values)
-    n_probe = min(n_probe, len(cpdf))
-    bc = sc.broadcast(centroids)
-
-    def dist_to_lists(m: np.ndarray) -> np.ndarray:
-        d = ((m[:, None, :] - bc.value[None, :, :]) ** 2).sum(axis=2)
-        return np.round(d, 6)
-
-    def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.stack(pdf["arr"].values)
-            # argmin returns the FIRST minimum -> ties break by list_id
-            lid = np.argmin(dist_to_lists(v), axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["vec_id"].to_numpy(np.int64),
-                    "nu": pdf["arr"].values,
-                    "list_id": lid.astype(np.int32),
-                }
-            )
-
-    lists = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("arr")
-    ).mapInPandas(assign, schema="neighbor_id long, nu array<double>, list_id int")
-
-    def probe(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.stack(pdf["qu"].values)
-            # stable sort -> equal distances keep ascending list_id
-            near = np.argsort(dist_to_lists(q), axis=1, kind="stable")[:, :n_probe]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(
-                        pdf["query_id"].to_numpy(np.int64), n_probe
-                    ),
-                    "qu": [q[i] for i in range(n) for _ in range(n_probe)],
-                    "list_id": near.ravel().astype(np.int32),
-                }
-            )
-
-    probes = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qu"),
-    ).mapInPandas(probe, schema="query_id long, qu array<double>, list_id int")
-    cand = probes.join(lists, "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-
-    def rerank(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qu = np.stack(pdf["qu"].values)
-            nu = np.stack(pdf["nu"].values)
-            qn = np.linalg.norm(qu, axis=1)
-            nn = np.linalg.norm(nu, axis=1)
-            qn[qn == 0] = 1.0
-            nn[nn == 0] = 1.0
-            cos = np.einsum("ij,ij->i", qu, nu) / (qn * nn)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
-                    "cosine": np.round(cos, 6),
-                }
-            )
-
-    scored = (
-        cand.select("query_id", "qu", "neighbor_id", "nu")
-        .mapInPandas(rerank, schema="query_id long, neighbor_id long, cosine double")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return _ivf_search(queries, lists, centroids, k, n_probe)
 
 
-def ann_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = 6,
-    probe_bits: int = 2,
-) -> DataFrame:
-    """Approximate top-k: hyperplane-bucketed candidates (multi-probe:
-    each query also probes buckets at Hamming distance <= probe_bits),
-    exact NumPy re-rank within candidates."""
-    from itertools import combinations
-
-    e = _unit_and_bucket(embeddings, n_planes).select(
+def ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Approximate top-k: candidates share an ANN_PLANES-bit hyperplane
+    bucket (multi-probe: each query also probes the buckets at Hamming
+    distance <= ANN_PROBE_BITS), then `_pair_cosine` reranks the
+    unit vectors exactly."""
+    e = _unit_and_bucket(embeddings, ANN_PLANES).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("u").alias("nu"),
         "bucket",
     )
-    qb = _unit_and_bucket(queries, n_planes).select(
+    qb = _unit_and_bucket(queries, ANN_PLANES).select(
         F.col("vec_id").alias("query_id"), F.col("u").alias("qu"), "bucket"
     )
-    # multi-probe: every mask with <= probe_bits bits set
+    # multi-probe: every mask with <= ANN_PROBE_BITS bits set
     probes = [
         sum(1 << b for b in bits)
-        for r in range(probe_bits + 1)
-        for bits in combinations(range(n_planes), r)
+        for r in range(ANN_PROBE_BITS + 1)
+        for bits in combinations(range(ANN_PLANES), r)
     ]
     qprobe = qb.select(
         "query_id",
@@ -452,40 +470,23 @@ def ann_topk(
     cand = qprobe.join(e, "bucket").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-
-    def rerank(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qu = np.stack(pdf["qu"].values)
-            nu = np.stack(pdf["nu"].values)
-            cos = np.einsum("ij,ij->i", qu, nu)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
-                    "cosine": np.round(cos, 6),
-                }
-            )
-
-    scored = cand.select("query_id", "qu", "neighbor_id", "nu").mapInPandas(
-        rerank, schema="query_id long, neighbor_id long, cosine double"
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+    scored = _pair_cosine(cand, ("query_id", "qu"), ("neighbor_id", "nu"), unit=True)
+    return _top_k(
+        scored.dropDuplicates(["query_id", "neighbor_id"]),
+        "query_id",
+        k,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
     )
 
 
-def label_centroids(embs: DataFrame, decimal_scale: int = 10) -> DataFrame:
+def label_centroids(embs: DataFrame) -> DataFrame:
     """Per-label centroid of an embedding column, exploded to one row
     per (label, dimension): (label, pos, n_vecs, centroid).
 
-    Per-dimension sums run through DECIMAL(28, decimal_scale) casts so
-    the aggregation is order-independent and engine-identical (the
-    AGGREGATE parity policy); centroid = round(sum/n as double, 6).
+    Per-dimension sums run through DECIMAL(28, CENTROID_DECIMAL_SCALE)
+    casts so the aggregation is order-independent and engine-identical
+    (the AGGREGATE parity policy); centroid = round(sum/n as double, 6).
 
     Scale shape: posexplode fans each vector to dim rows, but the
     groupBy (label, pos) does map-side partial aggregation, so the
@@ -493,11 +494,12 @@ def label_centroids(embs: DataFrame, decimal_scale: int = 10) -> DataFrame:
     rows — independent of the vector count.
     """
     e = embs.select("label", F.posexplode("embedding").alias("pos", "v"))
+    dec = f"decimal(28,{CENTROID_DECIMAL_SCALE})"
     return (
         e.groupBy("label", "pos")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
-            F.sum(F.col("v").cast(f"decimal(28,{decimal_scale})")).alias("s"),
+            F.sum(F.col("v").cast(dec)).alias("s"),
         )
         .select(
             "label",
@@ -508,8 +510,8 @@ def label_centroids(embs: DataFrame, decimal_scale: int = 10) -> DataFrame:
     )
 
 
-def quantize_int8(embs: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Scalar int8 quantization of an embedding column — the vector-
+def quantize_int8(embs: DataFrame) -> DataFrame:
+    """Scalar int8 quantization of the embedding column — the vector-
     compression step a 100-TB ANN index needs before it fits on disk
     (4x smaller than float32, 8x smaller than float64).
 
@@ -520,17 +522,16 @@ def quantize_int8(embs: DataFrame, vec_col: str = "embedding") -> DataFrame:
     driver compare can hash (code_sum, position-weighted code_ord_sum,
     max/min code) and the exact reconstruction error max_abs_err.
 
-    Scale shape: a single mapInPandas stage (einsum-free elementwise
-    NumPy — playbook rule: never Catalyst folds for vector math), no
-    shuffle, column-pruned scan (vec_id + embedding only). Dequantize
-    is codes * scale.
+    Scale shape: a single mapInArrow stage (elementwise NumPy over the
+    zero-copy view), no shuffle, column-pruned scan (vec_id +
+    embedding only). Dequantize is codes * scale.
     """
 
     def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            m = np.stack(pdf[vec_col].values).astype(np.float64)
+            m = _mat(b, "embedding").astype(np.float64)
             mx = np.abs(m).max(axis=1)
             scale = mx / 127.0
             safe = np.where(scale == 0.0, 1.0, scale)
@@ -538,13 +539,13 @@ def quantize_int8(embs: DataFrame, vec_col: str = "embedding") -> DataFrame:
             codes[scale == 0.0] = 0
             err = np.abs(m - codes * safe[:, None]).max(axis=1)
             err[scale == 0.0] = 0.0
-            d = m.shape[1]
-            yield pd.DataFrame(
+            n, d = m.shape
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
+                    "vec_id": _ids(b, "vec_id"),
                     "scale": scale,
-                    "n_dims": np.full(len(pdf), d, dtype=np.int32),
-                    "codes": list(codes.astype(np.int8)),
+                    "n_dims": np.full(n, d, dtype=np.int32),
+                    "codes": _list(codes.astype(np.int8)),
                     "code_sum": codes.sum(axis=1),
                     "code_ord_sum": codes @ np.arange(1, d + 1, dtype=np.int64),
                     "max_code": codes.max(axis=1).astype(np.int32),
@@ -553,13 +554,45 @@ def quantize_int8(embs: DataFrame, vec_col: str = "embedding") -> DataFrame:
                 }
             )
 
-    return embs.select("vec_id", vec_col).mapInPandas(
+    return embs.select("vec_id", "embedding").mapInArrow(
         gen,
         schema=(
             "vec_id long, scale double, n_dims int, codes array<tinyint>, "
             "code_sum long, code_ord_sum long, max_code int, min_code int, "
             "max_abs_err double"
         ),
+    )
+
+
+def _pq_codes(embeddings: DataFrame, cb: np.ndarray, m: int) -> DataFrame:
+    """(vec_id, codes array<int>, sq_err array<double>) under the
+    (k_codes, d) codebook cb sliced into m subvectors: per subspace
+    the nearest codebook slice by `_sq_dist` (ties to the lowest code
+    id) and its rounded squared error. One Arrow pass, no shuffle."""
+    nk, d = cb.shape
+    if d % m:
+        raise ValueError(f"dim {d} not divisible by m={m}")
+    sd = d // m
+    bc = embeddings.sparkSession.sparkContext.broadcast(cb.reshape(nk, m, sd))
+
+    def gen(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            n = b.num_rows
+            dists = _sq_dist(_mat(b, "arr").reshape(n, m, sd), bc.value)
+            codes = np.argmin(dists, axis=1)  # (n, m), first min -> lowest code
+            best = dists[np.arange(n)[:, None], codes, np.arange(m)[None, :]]
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "vec_id": _ids(b, "vec_id"),
+                    "codes": _list(codes.astype(np.int32)),
+                    "sq_err": _list(best),
+                }
+            )
+
+    return _arr(embeddings).mapInArrow(
+        gen, "vec_id long, codes array<int>, sq_err array<double>"
     )
 
 
@@ -571,71 +604,27 @@ def pq_encode(
     smaller than float32; pairs with ivf_topk_sampled the way IVF-PQ
     does in FAISS-style systems).
 
-    The per-subspace codebook is DETERMINISTICALLY SAMPLED: the
-    k_codes member vectors whose md5(vec_id) sorts first, sliced into
-    m subvectors (random member sampling is the standard k-means
-    initializer; skipping Lloyd refinement trades quantization error
+    The codebook is `_md5_sample`'s k_codes member vectors — the
+    sample ivf_topk_sampled takes its centroids from — sliced into m
+    subvectors (skipping Lloyd refinement trades quantization error
     for a bit-reproducible codebook an independent SQL engine replays
-    exactly — the same contract as ivf_topk_sampled's coarse
-    quantizer). Assignment: per subspace, nearest codebook slice by
-    squared L2 rounded to 6 dp, ties to the lowest code id.
+    exactly). Assignment (`_pq_codes`): per subspace, nearest codebook
+    slice by squared L2 rounded to 6 dp, ties to the lowest code id.
 
     Returns one row per (vec_id, subspace): (vec_id, subspace, code,
     sq_err) — sq_err is that subspace's rounded quantization error;
     Σ over subspaces = the vector's total squared error.
 
     Scale shape: codebook is k_codes*d doubles broadcast once; encode
-    is one mapInPandas matmul pass, no shuffle.
+    is one Arrow pass, no shuffle.
     """
-    sc = embeddings.sparkSession.sparkContext
-    cpdf = (
-        embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("c")
-        )
-        .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_h", "vec_id")
-        .limit(k_codes)
-        .toPandas()
-    )
-    schema = "vec_id long, subspace int, code int, sq_err double"
-    if len(cpdf) == 0:
-        return embeddings.select(
-            F.col("vec_id"),
-            F.lit(0).alias("subspace"),
-            F.lit(0).alias("code"),
-            F.lit(0.0).alias("sq_err"),
-        ).limit(0)
-    cb = np.stack(cpdf["c"].values)  # (k, d)
-    k, d = cb.shape
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sd = d // m
-    cb_sub = cb.reshape(k, m, sd)
-    bc = sc.broadcast(cb_sub)
-
-    def encode(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.stack(pdf["arr"].values).reshape(-1, 1, m, sd)
-            dists = np.round(((v - bc.value[None, :, :, :]) ** 2).sum(axis=3), 6)
-            codes = np.argmin(dists, axis=1)  # first min -> lowest code
-            n = codes.shape[0]
-            best = dists[np.arange(n)[:, None], codes, np.arange(m)[None, :]]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(np.int64), m),
-                    "subspace": np.tile(
-                        np.arange(m, dtype=np.int32), n
-                    ),
-                    "code": codes.astype(np.int32).ravel(),
-                    "sq_err": best.ravel(),
-                }
-            )
-
-    return embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("arr")
-    ).mapInPandas(encode, schema=schema)
+    cb = _md5_sample(embeddings, k_codes)
+    if cb is None:
+        return _empty(embeddings, "vec_id long, subspace int, code int, sq_err double")
+    per_vec = _pq_codes(embeddings, cb, m)
+    return per_vec.select(
+        "vec_id", F.posexplode(F.arrays_zip("codes", "sq_err")).alias("subspace", "z")
+    ).select("vec_id", "subspace", F.col("z.codes").alias("code"), "z.sq_err")
 
 
 def pq_topk(
@@ -657,104 +646,70 @@ def pq_topk(
     in the DuckDB oracle; approximation error vs exact cosine/L2 is a
     pytest recall gate, same split as ann/ivf).
 
-    Scale shape: codes are built by pq_encode's shuffle-free map pass;
-    each query's m*k_codes LUT is one small matmul; the scoring join
+    Scale shape: one codebook collect; codes come from pq_encode's
+    shuffle-free `_pq_codes` pass over that codebook; each query's
+    m*k_codes LUT is the same `_sq_dist` kernel; the scoring join
     ships (query_id, LUT) against (vec_id, codes) and never touches
     raw corpus vectors — the bandwidth win that makes PQ the 100-TB
     search layout. Top-k by ADC ascending, ties on neighbor_id.
 
     Returns (query_id, neighbor_id, adc, rank).
     """
-    sc = embeddings.sparkSession.sparkContext
-    cpdf = (
-        embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("c")
-        )
-        .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_h", "vec_id")
-        .limit(k_codes)
-        .toPandas()
-    )
-    out_schema = "query_id long, neighbor_id long, adc double, rank long"
-    if len(cpdf) == 0:
-        return embeddings.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.lit(0.0).alias("adc"),
-            F.lit(0).cast("long").alias("rank"),
-        ).limit(0)
-    cb = np.stack(cpdf["c"].values)
+    cb = _md5_sample(embeddings, k_codes)
+    if cb is None:
+        return _empty(embeddings, "query_id long, neighbor_id long, adc double, rank long")
     nk, d = cb.shape
     sd = d // m
-    bc = sc.broadcast(cb.reshape(nk, m, sd))
-
-    codes = (
-        pq_encode(embeddings, m=m, k_codes=k_codes)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("subspace", "code"))
-                ),
-                lambda s: s["code"],
-            ).alias("codes")
-        )
-        .withColumnRenamed("vec_id", "neighbor_id")
+    codes = _pq_codes(embeddings, cb, m).select(
+        F.col("vec_id").alias("neighbor_id"), "codes"
     )
+    bc = embeddings.sparkSession.sparkContext.broadcast(cb.reshape(nk, m, sd))
 
     def lut_gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.stack(pdf["qu"].values).reshape(-1, 1, m, sd)
-            lut = np.round(((q - bc.value[None]) ** 2).sum(axis=3), 6)
-            # (n, k_codes, m) -> flat row-major [code, subspace]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(np.int64),
-                    "lut": list(lut.reshape(len(pdf), -1)),
-                }
-            )
+        for b in batches:
+            if b.num_rows:
+                lut = _sq_dist(_mat(b, "qu").reshape(b.num_rows, m, sd), bc.value)
+                # (n, k_codes, m) -> flat row-major [code, subspace]
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "query_id": _ids(b, "query_id"),
+                        "lut": _list(lut.reshape(b.num_rows, -1)),
+                    }
+                )
 
     luts = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("qu"),
-    ).mapInPandas(lut_gen, schema="query_id long, lut array<double>")
+    ).mapInArrow(lut_gen, "query_id long, lut array<double>")
 
     cand = luts.crossJoin(codes).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
 
     def score(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            lut = np.stack(pdf["lut"].values).reshape(-1, nk, m)
-            cds = np.stack(pdf["codes"].values)
-            n = len(pdf)
+            n = b.num_rows
+            lut = _mat(b, "lut").reshape(n, nk, m)
+            vals = lut[np.arange(n)[:, None], _mat(b, "codes"), np.arange(m)[None, :]]
             # fixed j=0..m-1 summation order (oracle sums in the same
             # order via list comprehension)
-            vals = lut[np.arange(n)[:, None], cds, np.arange(m)[None, :]]
             adc = vals[:, 0]
             for j in range(1, m):
                 adc = adc + vals[:, j]
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "query_id": pdf["query_id"].to_numpy(np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
+                    "query_id": _ids(b, "query_id"),
+                    "neighbor_id": _ids(b, "neighbor_id"),
                     "adc": adc,
                 }
             )
 
-    scored = cand.select("query_id", "lut", "neighbor_id", "codes").mapInPandas(
-        score, schema="query_id long, neighbor_id long, adc double"
+    scored = cand.select("query_id", "lut", "neighbor_id", "codes").mapInArrow(
+        score, "query_id long, neighbor_id long, adc double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(scored, "query_id", k, F.col("adc"), F.col("neighbor_id"))
 
 
 def semdedup(
@@ -770,12 +725,11 @@ def semdedup(
     the deterministic stand-in for the paper's keep-one-exemplar rule).
     Returns one row per vector: (vec_id, list_id, kept boolean).
 
-    The quantizer is the engine's deterministic SAMPLED centroid set
-    (ivf_topk_sampled): the n_lists member vectors whose md5(vec_id)
-    sorts first, assignment by squared-L2 rounded to 6 decimals, ties
-    to the lowest list_id — bit-reproducible, so an independent SQL
-    engine replays the cluster layout and the keep/drop decisions
-    exactly. Cosines are rounded to 6 decimals on both sides (the
+    The quantizer is ivf_topk_sampled's: `_md5_sample` centroids and
+    `_assign` (squared L2 rounded to 6 decimals, ties to the lowest
+    list_id) — bit-reproducible, so an independent SQL engine replays
+    the cluster layout and the keep/drop decisions exactly. Cosines
+    (`_pair_cosine`) are rounded to 6 decimals on both sides (the
     engine-wide rounded-float64 parity policy).
 
     Scale shape (100 TB): the all-pairs step is confined WITHIN
@@ -792,48 +746,10 @@ def semdedup(
     shape). Call release_cached(result) after the
     consuming action.
     """
-    sc = embeddings.sparkSession.sparkContext
-    cpdf = (
-        embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("c")
-        )
-        .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_h", "vec_id")
-        .limit(n_lists)
-        .toPandas()
-    )
-    if len(cpdf) == 0:
-        return embeddings.select(
-            F.col("vec_id"),
-            F.lit(0).cast("int").alias("list_id"),
-            F.lit(True).alias("kept"),
-        ).limit(0)
-    bc = sc.broadcast(np.stack(cpdf["c"].values))
-
-    def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.stack(pdf["arr"].values)
-            d = np.round(
-                ((v[:, None, :] - bc.value[None, :, :]) ** 2).sum(axis=2), 6
-            )
-            # argmin returns the FIRST minimum -> ties break by list_id
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "list_id": np.argmin(d, axis=1).astype(np.int32),
-                    "arr": pdf["arr"].values,
-                }
-            )
-
-    asn = (
-        embeddings.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("arr")
-        )
-        .mapInPandas(assign, schema="vec_id long, list_id int, arr array<double>")
-        .persist()
-    )
+    centroids = _md5_sample(embeddings, n_lists)
+    if centroids is None:
+        return _empty(embeddings, "vec_id long, list_id int, kept boolean")
+    asn = _assign(_arr(embeddings), centroids).persist()
     members = asn.select("vec_id", "list_id")
     skipped = None
     if max_list is not None:
@@ -855,28 +771,8 @@ def semdedup(
         .join(units.select(F.col("vec_id").alias("b_id"),
                            F.col("arr").alias("vb")), "b_id")
     )
-
-    def cos(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            va = np.stack(pdf["va"].values)
-            vb = np.stack(pdf["vb"].values)
-            na = np.linalg.norm(va, axis=1)
-            nb = np.linalg.norm(vb, axis=1)
-            na[na == 0] = 1.0
-            nb[nb == 0] = 1.0
-            c = np.einsum("ij,ij->i", va, vb) / (na * nb)
-            yield pd.DataFrame(
-                {
-                    "b_id": pdf["b_id"].to_numpy(np.int64),
-                    "cosine": np.round(c, 6),
-                }
-            )
-
     dup_b = (
-        wide.select("b_id", "va", "vb")
-        .mapInPandas(cos, schema="b_id long, cosine double")
+        _pair_cosine(wide, ("a_id", "va"), ("b_id", "vb"))
         .filter(F.col("cosine") >= F.lit(float(threshold)))
         .select("b_id")
         .distinct()
@@ -902,9 +798,7 @@ def semdedup(
 JL_A, JL_B, JL_M = 48611, 71993, 2003
 
 
-def jl_project(
-    embs: DataFrame, n_planes: int = 16, vec_col: str = "embedding"
-) -> DataFrame:
+def jl_project(embs: DataFrame, n_planes: int = 16) -> DataFrame:
     """Johnson-Lindenstrauss random projection -> (vec_id, plane,
     proj): dimensionality reduction for the embedding column, composed
     with int8 quantization so the ENTIRE pipeline is integer-exact --
@@ -915,86 +809,66 @@ def jl_project(
     consumers (clustering, dedup banding, visualization) read 16
     longs instead of 64 floats.
 
-    Scale shape (100 TB): one mapInPandas (the quantize stage) + one
-    zero-copy mapInArrow integer matmul -- no shuffle anywhere, no
-    broadcast (the plane matrix is regenerated from the closed form
-    inside each worker for whatever width the batch carries). Output
-    explodes to (vec_id, plane) rows for the driver compare; at scale
-    keep the matrix form by reading proj back via groupBy(vec_id).
+    Scale shape (100 TB): two zero-copy mapInArrow passes (quantize,
+    then the integer matmul) -- no shuffle anywhere, no broadcast (the
+    plane matrix is regenerated from the closed form inside each
+    worker for whatever width the batch carries). Output explodes to
+    (vec_id, plane) rows for the driver compare; at scale keep the
+    matrix form by reading proj back via groupBy(vec_id).
     """
-    codes = quantize_int8(embs, vec_col).select("vec_id", "codes")
+    codes = quantize_int8(embs).select("vec_id", "codes")
 
     def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            lst = batch.column("codes")
-            if isinstance(lst, pa.ChunkedArray):
-                lst = lst.combine_chunks()
-            offs = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = lst.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            n = len(ids)
-            if n == 0:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            d = int(offs[1] - offs[0])
-            mat = vals.reshape(n, d)
+            mat = _mat(b, "codes").astype(np.int64)
+            n, d = mat.shape
             p = np.arange(n_planes, dtype=np.int64)[:, None]
             dd = np.arange(d, dtype=np.int64)[None, :]
             w = (p * JL_A + dd * JL_B) % JL_M - JL_M // 2
             proj = mat @ w.T  # (n, n_planes) exact int64
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(ids, n_planes), pa.int64()),
-                    pa.array(
-                        np.tile(np.arange(n_planes, dtype=np.int64), n),
-                        pa.int64(),
-                    ),
-                    pa.array(proj.reshape(-1), pa.int64()),
-                ],
-                names=["vec_id", "plane", "proj"],
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "vec_id": np.repeat(_ids(b, "vec_id"), n_planes),
+                    "plane": np.tile(np.arange(n_planes, dtype=np.int64), n),
+                    "proj": proj.reshape(-1),
+                }
             )
 
-    return codes.mapInArrow(
-        gen, schema="vec_id long, plane long, proj long"
-    )
+    return codes.mapInArrow(gen, schema="vec_id long, plane long, proj long")
 
 
-def centroid_drift(
-    embs: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-    unit: float = 1e7,
-) -> DataFrame:
-    """Per-group embedding centroid drift -> (group, n_vecs, dot_u,
-    norm_g_u, norm_all_u, cos_drift): cosine between each group's mean
+def centroid_drift(embs: DataFrame) -> DataFrame:
+    """Per-label embedding centroid drift -> (label, n_vecs, dot_u,
+    norm_g_u, norm_all_u, cos_drift): cosine between each label's mean
     vector and the global mean -- the domain-shift health check a
     multi-source corpus runs before mixing (a source whose centroid
     points away from the corpus is out-of-distribution; a cosine near
     1 means redundant coverage).
 
     Exactness: each component quantizes to integer units
-    floor(x * unit) BEFORE summation, so per-dim sums are exact
+    floor(x * DRIFT_UNIT) BEFORE summation, so per-dim sums are exact
     BIGINTs (order-independent); per-dim MEANS re-quantize as
     floor(sum / n) (floor-on-double, the portable quantizer); the
     closing cosine is three correctly-rounded double ops over exact
     integer dot/norm sums, behind a 6 dp round. Bounds: |mean unit|
-    <= unit * max|x| regardless of group size, so the dot/norm sums
-    never grow with data volume; the per-dim sum itself holds to
-    ~1.6e12 rows per group at unit=1e7 with |x|<=0.6.
+    <= DRIFT_UNIT * max|x| regardless of group size, so the dot/norm
+    sums never grow with data volume; the per-dim sum itself holds to
+    ~1.6e12 rows per label at DRIFT_UNIT=1e7 with |x|<=0.6.
 
-    Scale shape (100 TB): posexplode to narrow (group, dim, q) rows --
-    pure codegen -- one (group, dim) map-side-partial SUM (cardinality
-    n_groups * dims, tiny), the global centroid derived from the SAME
+    Scale shape (100 TB): posexplode to narrow (label, dim, q) rows --
+    pure codegen -- one (label, dim) map-side-partial SUM (cardinality
+    n_labels * dims, tiny), the global centroid derived from the SAME
     sums (no second scan), one broadcast-sized join on dim. No Python.
     """
     ex = embs.select(
-        F.col(group_col).alias("grp"),
-        F.posexplode(F.col(vec_col)).alias("d", "x"),
+        F.col("label").alias("grp"),
+        F.posexplode(F.col("embedding")).alias("d", "x"),
     ).select(
         "grp",
         "d",
-        F.floor(F.col("x").cast("double") * F.lit(float(unit)))
+        F.floor(F.col("x").cast("double") * F.lit(float(DRIFT_UNIT)))
         .cast("long")
         .alias("q"),
     )
@@ -1029,7 +903,7 @@ def centroid_drift(
         F.sum(F.col("mg") * F.col("mg")).cast("long").alias("norm_all_u"),
     )
     return agg.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("label"),
         "n_vecs",
         "dot_u",
         "norm_g_u",
@@ -1056,15 +930,14 @@ def embedding_contamination(
     (membership): it catches paraphrased or re-tokenized eval leakage
     that exact n-grams miss.
 
-    Scale shape (the topk_cosine contract): the eval matrix — a
-    benchmark suite, thousands of vectors — is collected, unit-
-    normalized, and BROADCAST; every train batch does ONE float64
-    matmul against it inside mapInPandas, then reduces to a single
-    row per train vector.  No |train| x |eval| row fan-out ever
-    exists outside the kernel, no shuffle at all: scan -> map ->
-    result.  At 100 TB the cost is one dense GEMM per batch, embar-
-    rassingly parallel.  Route eval sets too big to broadcast through
-    ann_topk buckets instead.
+    Scale shape (the topk_cosine contract): `_query_cosines`
+    broadcasts the unit eval matrix — a benchmark suite, thousands of
+    vectors — and every train batch does ONE float64 matmul against
+    it, then reduces to a single row per train vector.  No |train| x
+    |eval| row fan-out ever exists outside the kernel, no shuffle at
+    all: scan -> map -> result.  At 100 TB the cost is one dense GEMM
+    per batch, embarrassingly parallel.  Route eval sets too big to
+    broadcast through ann_topk buckets instead.
 
     Parity: cosines round to 6 decimals before the max/threshold
     (straddle odds ~1e-8 vs the oracle's DECIMAL-summed dots, see
@@ -1072,94 +945,50 @@ def embedding_contamination(
     sides.  Ties at the max break to the smallest eval id (eval ids
     are sorted ascending, argmax takes the first hit).
     """
-    sc = train.sparkSession.sparkContext
-    qpdf = evalset.select("vec_id", "embedding").toPandas()
-    out_schema = (
-        "vec_id long, max_cosine double, nearest_eval_id long"
-    )
-    if len(qpdf) == 0:
-        empty = train.select(
-            F.col("vec_id"),
-            F.lit(0.0).alias("max_cosine"),
-            F.lit(0).cast("long").alias("nearest_eval_id"),
-        ).limit(0)
-        return empty.withColumn("contaminated", F.lit(False))
-    qpdf = qpdf.sort_values("vec_id")
-    qids = qpdf["vec_id"].to_numpy(np.int64)
-    Q = np.stack(qpdf["embedding"].values).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = 1.0
-    bc = sc.broadcast((qids, (Q / qn[:, None]).T))  # (dim, nq)
 
-    def gen(batches):
-        qid, Qt = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].values).astype(np.float64)
-            en = np.linalg.norm(E, axis=1)
-            en[en == 0] = 1.0
-            cos = np.round((E / en[:, None]) @ Qt, 6)  # (rows, nq)
-            mx = cos.max(axis=1)
-            nearest = qid[(cos == mx[:, None]).argmax(axis=1)]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "max_cosine": mx,
-                    "nearest_eval_id": nearest,
-                }
-            )
+    def nearest(ids, cos, qid):
+        mx = cos.max(axis=1)
+        return {
+            "vec_id": ids,
+            "max_cosine": mx,
+            "nearest_eval_id": qid[(cos == mx[:, None]).argmax(axis=1)],
+        }
 
-    return (
-        train.select("vec_id", "embedding")
-        .mapInPandas(gen, schema=out_schema)
-        .withColumn(
-            "contaminated", F.col("max_cosine") >= F.lit(float(threshold))
-        )
+    schema = "vec_id long, max_cosine double, nearest_eval_id long"
+    scored = _query_cosines(train, evalset, nearest, schema)
+    if scored is None:
+        scored = _empty(train, schema)
+    return scored.withColumn(
+        "contaminated", F.col("max_cosine") >= F.lit(float(threshold))
     )
 
 
-def bq_sign_masks(embs: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def bq_sign_masks(embs: DataFrame) -> DataFrame:
     """Binary (sign) quantization of a 64-dim embedding column into two
     32-bit halves -> (vec_id, lo, hi): bit i of the packed code is set
     iff component i > 0.  Split halves keep every value < 2^32 so the
     BIGINT arithmetic is identical in Spark, NumPy and the DuckDB
     oracle (a single 64-bit word would need bit 63 = a negative long).
 
-    One zero-copy mapInArrow pass (ListArray values/offsets straight
-    into a (n, d) float view — the playbook fast path; pandas would box
-    every element), no shuffle: 32 bytes/vector in, 24 bytes out, the
-    compression stage RaBitQ-style binary ANN indexes store at scale.
+    One zero-copy mapInArrow pass, no shuffle: 32 bytes/vector in, 24
+    bytes out, the compression stage RaBitQ-style binary ANN indexes
+    store at scale.
     """
 
     def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            lst = batch.column(vec_col)
-            if isinstance(lst, pa.ChunkedArray):
-                lst = lst.combine_chunks()
-            offs = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = lst.values.to_numpy(zero_copy_only=False)
-            n = len(ids)
-            if n == 0:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            d = int(offs[1] - offs[0])
-            if d != 64:
-                raise ValueError(f"bq_sign_masks expects 64 dims, got {d}")
-            bits = (vals.reshape(n, d) > 0).astype(np.int64)
+            v = _mat(b, "embedding")
+            if v.shape[1] != 64:
+                raise ValueError(f"bq_sign_masks expects 64 dims, got {v.shape[1]}")
+            bits = (v > 0).astype(np.int64)
             w = 1 << np.arange(32, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids.astype(np.int64), pa.int64()),
-                    pa.array(bits[:, :32] @ w, pa.int64()),
-                    pa.array(bits[:, 32:] @ w, pa.int64()),
-                ],
-                names=["vec_id", "lo", "hi"],
+            yield pa.RecordBatch.from_pydict(
+                {"vec_id": _ids(b, "vec_id"), "lo": bits[:, :32] @ w, "hi": bits[:, 32:] @ w}
             )
 
-    return embs.select("vec_id", vec_col).mapInArrow(
+    return embs.select("vec_id", "embedding").mapInArrow(
         gen, schema="vec_id long, lo long, hi long"
     )
 
@@ -1216,12 +1045,7 @@ def bq_topk(
         .select("q_id", "vec_id", ham.alias("hamming"))
         .filter(F.col("hamming") <= radius)
     )
-    w_ham = Window.partitionBy("q_id").orderBy("hamming", "vec_id")
-    cands = (
-        pairs.withColumn("_rn", F.row_number().over(w_ham))
-        .filter(F.col("_rn") <= cand)
-        .drop("_rn")
-    )
+    cands = _top_k(pairs, "q_id", cand, "hamming", "vec_id").drop("rank")
     arrs = embs.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("_v")
     )
@@ -1235,41 +1059,22 @@ def bq_topk(
     )
 
     def rerank(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            cols = {}
-            for name in ("_qv", "_v"):
-                lst = batch.column(name)
-                if isinstance(lst, pa.ChunkedArray):
-                    lst = lst.combine_chunks()
-                cols[name] = (
-                    lst.values.to_numpy(zero_copy_only=False).reshape(n, -1)
+        for b in batches:
+            if b.num_rows:
+                diff = _mat(b, "_qv") - _mat(b, "_v")
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "q_id": b.column("q_id"),
+                        "vec_id": b.column("vec_id"),
+                        "hamming": b.column("hamming"),
+                        "dist6": np.round((diff * diff).sum(axis=1), 6),
+                    }
                 )
-            diff = cols["_qv"] - cols["_v"]
-            dist6 = np.round((diff * diff).sum(axis=1), 6)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("q_id"),
-                    batch.column("vec_id"),
-                    batch.column("hamming"),
-                    pa.array(dist6, pa.float64()),
-                ],
-                names=["q_id", "vec_id", "hamming", "dist6"],
-            )
 
     rr = wide.mapInArrow(
         rerank, schema="q_id long, vec_id long, hamming long, dist6 double"
     )
-    w_fin = Window.partitionBy("q_id").orderBy("dist6", "vec_id")
-    out = (
-        rr.withColumn("rank", F.row_number().over(w_fin).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-    return hold(out, masks)
+    return hold(_top_k(rr, "q_id", k, "dist6", "vec_id"), masks)
 
 
 def mrl_overlap(

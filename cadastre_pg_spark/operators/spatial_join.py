@@ -28,10 +28,10 @@ Scale design:
 """
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..data import synthetic as S
 from ..kernels import cells as C
@@ -381,12 +381,18 @@ def cell_spatial_join(
 
 
 def _with_hex_cell(points: DataFrame, res: int) -> DataFrame:
-    """Hex cell assignment needs the NumPy codec — vectorized pandas UDF."""
+    """points + `cell`, the hex cell at `res` (NumPy codec), appended by
+    one mapInArrow. The cell is then a column of the pass's output, so
+    the join's inferred isnotnull(cell) filter reads it instead of
+    evaluating a projected UDF a second time below the projection."""
 
-    @F.pandas_udf("long")
-    def hex_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(
-            C.hex_cell(lon.to_numpy(np.float64), lat.to_numpy(np.float64), res)
-        )
+    def gen(batches):
+        for b in batches:
+            lon, lat = (
+                b.column(c).to_numpy(zero_copy_only=False).astype(np.float64)
+                for c in ("lon", "lat")
+            )
+            yield b.append_column("cell", pa.array(C.hex_cell(lon, lat, res), pa.int64()))
 
-    return points.withColumn("cell", hex_cell_udf(F.col("lon"), F.col("lat")))
+    schema = T.StructType(points.schema.fields + [T.StructField("cell", T.LongType())])
+    return points.mapInArrow(gen, schema)

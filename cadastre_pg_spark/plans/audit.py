@@ -70,14 +70,15 @@ def executed_census(spark, before: set, scan: str = "") -> dict:
     """Node census of the executed plans of every SQL execution not in
     `before` (an `execution_ids` snapshot): BroadcastExchange and Union
     nodes, Python nodes on a broadcast's build side and elsewhere (the
-    probe side), and parquet scans whose location contains `scan`
-    (plan strings abbreviate a location past
-    spark.sql.maxMetadataStringLength chars). The plans come from the
+    probe side), all Python nodes by name (`python`), and parquet scans
+    whose location contains `scan` (plan strings abbreviate a location
+    past spark.sql.maxMetadataStringLength chars). The plans come from the
     SQL status store, so a write's plan counts too; a cached plan
     counts under every scan that reads it."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     store = spark._jsparkSession.sharedState().statusStore()
     out = dict.fromkeys(("broadcasts", "unions", "python_build", "python_probe", "scans"), 0)
+    out["python"] = {}
     for eid in execution_ids(spark) - before:
         graph = store.planGraph(eid)
         nodes = {n.id(): n for n in _seq(graph.allNodes())}
@@ -94,6 +95,7 @@ def executed_census(spark, before: set, scan: str = "") -> dict:
             out["unions"] += name == "Union"
             if name in PYTHON_NODES:
                 out["python_build" if build else "python_probe"] += 1
+                out["python"][name] = out["python"].get(name, 0) + 1
             if name == "Scan parquet" and scan and scan in nodes[nid].desc():
                 out["scans"] += 1
             todo.extend((c, build) for c in children.get(nid, []))

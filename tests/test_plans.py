@@ -3,10 +3,12 @@ was designed for — pushdown at the scan, broadcast on the small side,
 whole-stage codegen on the hot path, AQE enabled (SURVEY.md §4)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 import __spark_entry__ as E
 from cadastre_pg_spark.operators.held import release_cached
 from cadastre_pg_spark.plans.audit import (
+    PYTHON_NODES,
     audit,
     executed_census,
     execution_ids,
@@ -531,7 +533,7 @@ def test_spearman_ranks_in_one_exchange(spark):
 
 def test_embedding_contamination_no_shuffle_no_join(spark):
     """Broadcast eval matrix + one matmul per batch: the plan is scan
-    -> mapInPandas -> project, with no Exchange and no Join anywhere
+    -> mapInArrow -> project, with no Exchange and no Join anywhere
     (the |train| x |eval| pair space exists only inside the kernel)."""
     from cadastre_pg_spark.plans.audit import explain_string
 
@@ -730,9 +732,6 @@ def test_trip_segments_one_exchange(spark):
     assert not audit(df)["arrow_eval"]
 
 
-PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
-
-
 def test_tiling_is_pure_jvm(spark):
     """raster_burn, tile_assign and tile_extract compute the mask in
     closed form from the ring bbox: their executed plans must hold no
@@ -745,3 +744,48 @@ def test_tiling_is_pure_jvm(spark):
         assert "isFinalPlan=true" in plan and "Scan parquet" in plan, plan
         for node in PYTHON_NODES:
             assert node not in plan, f"{name}: {node}\n{plan}"
+
+
+# Python nodes of each vector-family query's executed plans at sf0.001
+# (a cached plan counts under every scan that reads it). Every one is
+# a shared Arrow core of operators/similarity.py.
+VECTOR_PYTHON_NODES = {
+    "topk_similarity": 1,
+    "ann_topk": 3,
+    "ivf_topk": 3,
+    "semdedup": 6,
+    "pq_encode": 1,
+    "pq_topk": 3,
+    "embedding_contamination": 1,
+    "mrl_overlap": 2,
+    "bq_topk": 3,
+    "embedding_neardup": 3,
+    "quantize_int8": 1,
+    "jl_project": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(VECTOR_PYTHON_NODES))
+def test_vector_family_python_nodes_are_arrow(spark, name):
+    """The vector family crosses the Python boundary only through
+    mapInArrow (zero-copy list views); a MapInPandas would box every
+    vector element, and a new node must be added here knowingly."""
+    before = execution_ids(spark)
+    df = E.queries()[name](spark, SF_UNIT)
+    df.collect()
+    census = executed_census(spark, before)
+    release_cached(df)
+    assert census["python"] == {"MapInArrow": VECTOR_PYTHON_NODES[name]}, census
+
+
+def test_hex_probe_evaluates_the_cell_once(spark):
+    """The hex cell is appended by one Arrow pass on the probe side, so
+    the join's inferred isnotnull(cell) filter reads the column rather
+    than running the codec again; polyfill is the one build-side node."""
+    before = execution_ids(spark)
+    df = E.queries()["hex_spatial_join"](spark, SF_UNIT)
+    df.collect()
+    census = executed_census(spark, before)
+    release_cached(df)
+    assert census["python_probe"] == 1, census
+    assert census["python_build"] == 1, census

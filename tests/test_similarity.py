@@ -1,6 +1,7 @@
 """ANN recall vs the exact brute-force top-k."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from cadastre_pg_spark.operators.held import release_cached, skipped
 from cadastre_pg_spark.operators.similarity import (
@@ -267,3 +268,144 @@ def test_semdedup_max_list_caps_hot_cluster_loudly(spark):
     sk = {(r.list_id, r.n) for r in skipped(out).collect()}
     assert len(sk) == 1 and next(iter(sk))[1] == 28
     release_cached(out)
+
+
+def _brute_topk(vecs, k):
+    """Single-process exact top-k: (query_id, neighbor_id, rank) and
+    the cosine rounded to 6 dp, ties by neighbor_id."""
+    import numpy as np
+
+    m = np.asarray(vecs, dtype=np.float64)
+    u = m / np.linalg.norm(m, axis=1)[:, None]
+    out = {}
+    for q in range(len(m)):
+        ranked = sorted(
+            ((-round(float(u[q] @ u[n]), 6), n) for n in range(len(m)) if n != q)
+        )
+        for rank, (c, n) in enumerate(ranked[:k], 1):
+            out[(q, n, rank)] = -c
+    return out
+
+
+@pytest.mark.parametrize("n", [2, 3])
+@pytest.mark.parametrize("op", [ivf_topk, ivf_topk_sampled])
+def test_ivf_probe_clamps_to_list_count(spark, op, n):
+    """Fewer lists than n_probe: every list is probed, so the IVF
+    search returns the brute-force top-k (the k-means path once raised
+    in its probe UDF here)."""
+    vecs = [[1.0, 0.0, 0.0, 0.0], [0.6, 0.8, 0.0, 0.0], [0.0, 0.0, 1.0, 0.5]][:n]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+    got = {
+        (r.query_id, r.neighbor_id, r.rank): r.cosine
+        for r in op(emb, emb, k=5, n_probe=4).collect()
+    }
+    want = _brute_topk(vecs, 5)
+    assert got.keys() == want.keys()
+    for key, c in want.items():
+        assert abs(got[key] - c) < 1e-6, (key, got[key], c)
+
+
+def test_pq_topk_build_collects_the_codebook_once(spark):
+    """pq_topk's codebook and its codes share ONE md5-sample collect:
+    building the DataFrame starts exactly one driver job."""
+    from cadastre_pg_spark.operators.similarity import pq_topk
+
+    emb = spark.read.parquet(f"{SF_UNIT}/embeddings.parquet")
+    qs = emb.filter(F.col("vec_id") % 100 == 0)
+    sc = spark.sparkContext
+    sc.setJobGroup("pq-topk-build", "build pq_topk")
+    try:
+        out = pq_topk(emb, qs, k=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup("pq-topk-build")) == 1
+    assert out.count() > 0
+
+
+def _md5_first(ids):
+    import hashlib
+
+    return sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+
+
+def test_semdedup_max_list_both_sides_of_the_cap(spark):
+    """Clusters of 8, 4 and 2 members, each holding exact copies. At
+    max_list = 8 nothing is skipped and the output equals the uncapped
+    one; at 7 exactly the hot cluster is reported and its rows are the
+    only ones missing."""
+    from cadastre_pg_spark.operators.similarity import semdedup
+
+    order = _md5_first(range(14))
+    # the 3 md5-first ids are the centroids: one per direction
+    groups = [[order[0], *order[3:10]], [order[1], *order[10:13]], [order[2], order[13]]]
+    rows = []
+    for g, ids in enumerate(groups):
+        for j, i in enumerate(ids):
+            v = [0.0, 0.0, 0.0, (j % 3) * 0.3]
+            v[g] = 1.0
+            rows.append((i, v))
+    emb = _semdedup_df(spark, rows)
+
+    def run(cap):
+        out = semdedup(emb, threshold=0.99, n_lists=3, max_list=cap)
+        got = {tuple(r) for r in out.collect()}
+        sk = set() if cap is None else {tuple(r) for r in skipped(out).collect()}
+        release_cached(out)
+        return got, sk
+
+    full, none = run(None)
+    assert none == set()
+    sizes = {}
+    for _, lid, _ in full:
+        sizes[lid] = sizes.get(lid, 0) + 1
+    assert sorted(sizes.values()) == [2, 4, 8]
+    assert any(not kept for _, _, kept in full)
+    for cap in (8, 7):
+        got, sk = run(cap)
+        dropped = {(lid, n) for lid, n in sizes.items() if n > cap}
+        assert sk == dropped
+        assert len(dropped) == (cap < 8)
+        lost = {lid for lid, _ in dropped}
+        assert got == {r for r in full if r[1] not in lost}
+
+
+def test_embedding_neardup_max_bucket_both_sides_of_the_cap(spark):
+    """Three groups of exact copies (6, 3 and 2 vectors) in distinct
+    hyperplane buckets. At max_bucket = 6 nothing is skipped and the
+    output equals the uncapped one; at 5 exactly the hot bucket is
+    reported and only its pairs are gone."""
+    import numpy as np
+
+    from cadastre_pg_spark.operators.dedup import embedding_neardup_pairs
+    from cadastre_pg_spark.operators.similarity import _unit_and_bucket
+
+    base = np.eye(8)[[0, 3, 6]] - 0.1
+    rows, vid = [], 0
+    for v, copies in zip(base, (6, 3, 2)):
+        for _ in range(copies):
+            rows.append((vid, [float(x) for x in v]))
+            vid += 1
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    bucket = {r.vec_id: r.bucket for r in _unit_and_bucket(emb, 4).collect()}
+    sizes = {}
+    for b in bucket.values():
+        sizes[b] = sizes.get(b, 0) + 1
+    assert sorted(sizes.values()) == [2, 3, 6]
+
+    def run(cap):
+        out = embedding_neardup_pairs(emb, threshold=0.999, n_planes=4, max_bucket=cap)
+        got = {tuple(r) for r in out.collect()}
+        sk = {tuple(r) for r in skipped(out).collect()}
+        release_cached(out)
+        return got, sk
+
+    full, _ = run(4096)
+    assert len(full) == 15 + 3 + 1
+    hot = max(sizes, key=sizes.get)
+    for cap in (6, 5):
+        got, sk = run(cap)
+        assert sk == ({(hot, 6)} if cap < 6 else set())
+        assert got == {p for p in full if cap >= 6 or bucket[p[0]] != hot}
