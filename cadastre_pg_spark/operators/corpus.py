@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cadastre_pg_spark.operators.dedup import shingle_hash32, shingles
+from cadastre_pg_spark.operators.dedup import shingle_hash32, shingle_hash_rows
 
 from .held import hold
 
@@ -265,50 +265,44 @@ def contamination(
     contamination = n_contaminated / n_shingles rounded to 6 dp
     (0.0 for docs too short to have any shingle).
 
-    Shape: per-doc distinct happens map-side inside the shingle array
-    (array_distinct before explode); the train set reduces to distinct
-    8-byte hashes; the single join key is the hash. The eval side is
-    the small one — Catalyst broadcasts it against the train stream.
+    Shape: the shingle rows are dedup.shingle_hash_rows' (codegen
+    concat/hash, not an interpreted transform() lambda), distinct per
+    doc; the train set reduces to distinct 8-byte hashes; the single
+    join key is the hash. The eval side is the small one — Catalyst
+    broadcasts it against the train stream.
     """
-    split = docs.select(
+    docs = docs.select(
         "doc_id",
-        F.array_distinct(
-            F.transform(
-                shingles(F.col("text"), n_shingle),
-                lambda s: shingle_hash32(s, hash_fn),
-            )
-        ).alias("sh"),
+        "text",
         (F.pmod(_hash32(F.col("doc_id"), "e:", hash_fn), F.lit(eval_mod)) == 0).alias(
             "is_eval"
         ),
     )
-    train_sh = (
-        split.filter(~F.col("is_eval"))
-        .select(F.explode("sh").alias("h"))
-        .distinct()
-    )
-    ev = split.filter(F.col("is_eval")).select("doc_id", "sh")
-    ev_sh = ev.select("doc_id", F.explode("sh").alias("h"))
-    hits = (
-        ev_sh.join(train_sh, "h")
+    sh = shingle_hash_rows(docs, n_shingle, hash_fn, carry=("is_eval",))
+    train_sh = sh.filter(~F.col("is_eval")).select("h").distinct()
+    ev_sh = sh.filter(F.col("is_eval")).select("doc_id", "h").distinct()
+    per = (
+        ev_sh.join(train_sh.withColumn("hit", F.lit(1)), "h", "left")
         .groupBy("doc_id")
-        .agg(F.count("*").alias("n_contaminated"))
+        .agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.count("hit").alias("n_contaminated"),
+        )
     )
+    n_sh = F.coalesce(F.col("n_shingles"), F.lit(0)).cast("long")
+    n_hit = F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("long")
     return (
-        ev.select("doc_id", F.size("sh").cast("long").alias("n_shingles"))
-        .join(hits, "doc_id", "left")
+        docs.filter(F.col("is_eval"))
+        .select("doc_id")
+        .join(per, "doc_id", "left")
         .select(
             "doc_id",
-            "n_shingles",
-            F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("long").alias(
-                "n_contaminated"
-            ),
-            F.when(F.col("n_shingles") > 0,
-                   F.round(
-                       F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("double")
-                       / F.col("n_shingles").cast("double"),
-                       6,
-                   ))
+            n_sh.alias("n_shingles"),
+            n_hit.alias("n_contaminated"),
+            F.when(
+                n_sh > 0,
+                F.round(n_hit.cast("double") / n_sh.cast("double"), 6),
+            )
             .otherwise(F.lit(0.0))
             .alias("contamination"),
         )

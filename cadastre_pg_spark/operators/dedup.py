@@ -9,11 +9,24 @@ Jaccard, embedding cosine).
 
 Everything below is built from JVM-side primitives (split / transform /
 aggregate / xxhash64 / explode / groupBy) — no Python in any hot path.
+
+Each near-dup computation is written once and every op calls it:
+- `shingle_hash_rows`: the word k-gram hash rows (minhash, n-gram
+  Jaccard, repeated windows, winnowing, and textanalysis.novelty_score,
+  corpus.contamination, sketches.group_minhash_sim);
+- `_cap_buckets`: the capped bucket split -> (ok, skipped report);
+- `_band_keys` / `_lsh_candidates`: LSH band keys of any (bands,
+  rows_per_band) layouts and the capped band-bucket self-join;
+- `_minhash_verify` over `_pair_sides`, `_match_count`,
+  `_hashed_jaccard` and `_ratio_ok`: the estimate prefilter and exact
+  hashed-set Jaccard;
+- `_sig_min_aggs` / `_sig_array_col`: the minhash signature aggregate;
+- `_spread`: the single-file spread before a shingle pass.
 """
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .held import hold
@@ -24,11 +37,14 @@ from .held import hold
 MINHASH_PRIME = 4294967311  # smallest prime > 2^32
 N_HASHES = 32
 BANDS = 8  # 4 rows per band
+N_SHINGLE = 3  # word n-gram length of the minhash and n-gram Jaccard ops
+EST_MARGIN = 0.25  # minhash verify: estimate must reach threshold - this
+NGRAM_BAND_WIDTH = 8  # ngram_jaccard_pairs' token-count band width
 _A = [2 * i + 1 for i in range(1, N_HASHES + 1)]  # odd multipliers
 _B = [(2654435761 * (i + 1)) % MINHASH_PRIME for i in range(N_HASHES)]
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by content: (keep_doc_id, n_copies).
     keep = min doc_id, matching the reference's 'first wins' skip
     (cli.rs:466-474).
@@ -39,7 +55,7 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     key would ship the full corpus through the exchange. Output is
     identical up to sha256 collisions (~2^-128)."""
     return (
-        docs.groupBy(F.sha2(F.col(text_col), 256).alias("_text_sha"))
+        docs.groupBy(F.sha2(F.col("text"), 256).alias("_text_sha"))
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
@@ -68,7 +84,7 @@ def norm_text(text_col) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(ascii_only), r"\s+", " "))
 
 
-def norm_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def norm_dedup(docs: DataFrame) -> DataFrame:
     """Normalization-invariant exact duplicate groups — the
     'fuzzy-exact' rule corpus pipelines run between byte-exact dedup
     and near-dup (catches case/punctuation/whitespace re-renders of
@@ -82,8 +98,8 @@ def norm_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     NORMALIZED text (64 hex chars, never the document), one hash
     aggregate with map-side partials. countDistinct on raw text is
     computed as a sha too, so the exchange stays narrow."""
-    nsha = F.sha2(norm_text(F.col(text_col)), 256)
-    rsha = F.sha2(F.col(text_col), 256)
+    nsha = F.sha2(norm_text(F.col("text")), 256)
+    rsha = F.sha2(F.col("text"), 256)
     return (
         docs.groupBy(nsha.alias("_nsha"))
         .agg(
@@ -125,29 +141,33 @@ def shingle_hash_rows(
     hash_fn: str,
     text_col: str = "text",
     carry: tuple = (),
+    pos: bool = False,
+    min_tokens: int = 0,
 ) -> DataFrame:
-    """(doc_id, *carry, h): one narrow row per word-n-gram OCCURRENCE,
-    hashed entirely in codegen — n-grams from arrays_zip over n shifted
-    slices + concat_ws + hash, never a transform() lambda (Catalyst
-    HOF lambdas are interpreted; hashing inside one measured 4.7 s
-    steady at sf0.1 vs 0.9 s for this shape). Docs with fewer than
-    n_shingle tokens contribute no rows. `carry` names doc-constant
-    columns to thread through (e.g. a length band)."""
+    """(doc_id, *carry, [pos,] h): one narrow row per word-n-gram
+    OCCURRENCE, hashed entirely in codegen — n-grams from arrays_zip
+    over n shifted slices + concat_ws + hash, never a transform()
+    lambda (Catalyst HOF lambdas are interpreted; hashing inside one
+    measured 4.7 s steady at sf0.1 vs 0.9 s for this shape).
+
+    Docs with fewer than max(n_shingle, min_tokens) tokens contribute
+    no rows. `pos` adds each n-gram's 0-based start position (long).
+    `carry` names doc-constant columns to thread through (e.g. a
+    length band)."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     base = docs.select("doc_id", *carry, toks.alias("t")).where(
-        F.size("t") >= F.lit(n_shingle)
+        F.size("t") >= F.lit(max(n_shingle, min_tokens))
     )
     k = F.size("t") - F.lit(n_shingle - 1)
     zipped = F.arrays_zip(
-        *[
-            F.slice(F.col("t"), i + 1, k).alias(f"w{i}")
-            for i in range(n_shingle)
-        ]
+        *[F.slice(F.col("t"), i + 1, k).alias(f"w{i}") for i in range(n_shingle)]
     )
     sg = F.concat_ws(" ", *[F.col(f"p.w{i}") for i in range(n_shingle)])
-    return base.select(
-        "doc_id", *carry, F.explode(zipped).alias("p")
-    ).select("doc_id", *carry, shingle_hash32(sg, hash_fn).alias("h"))
+    gen = F.posexplode(zipped).alias("pos", "p") if pos else F.explode(zipped).alias("p")
+    at = [F.col("pos").cast("long").alias("pos")] if pos else []
+    return base.select("doc_id", *carry, gen).select(
+        "doc_id", *carry, *at, shingle_hash32(sg, hash_fn).alias("h")
+    )
 
 
 def _sig_min_aggs():
@@ -172,13 +192,22 @@ def _sig_array_col():
     return F.array(*[F.col(f"_m{i}") for i in range(N_HASHES)])
 
 
-def minhash_signatures(
-    docs: DataFrame, n_shingle: int = 3, hash_fn: str = "xxhash64"
-) -> DataFrame:
+def _spread(docs: DataFrame) -> DataFrame:
+    """A small single-file scan arrives as ONE task; the shingle+hash
+    fan-out is CPU-bound map-side work, so spread it over the cores
+    first (playbook rule). At scale the input already has >=
+    parallelism partitions and this is a no-op."""
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < n:
+        return docs.repartition(n)
+    return docs
+
+
+def minhash_signatures(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """(doc_id, sig array<long>[N_HASHES]); docs with no shingles are
     dropped. One codegen hash aggregate over (doc_id, h) rows — see
     _sig_min_aggs for the measured plan choice."""
-    ex = shingle_hash_rows(docs, n_shingle, hash_fn)
+    ex = shingle_hash_rows(docs, N_SHINGLE, hash_fn)
     return (
         ex.groupBy("doc_id")
         .agg(*_sig_min_aggs())
@@ -186,83 +215,148 @@ def minhash_signatures(
     )
 
 
-def _band_keys(ss: DataFrame) -> DataFrame:
-    """(doc_id, band, key) — the BANDS LSH band keys per signature row,
-    exploded JVM-side. Shared by the batch, prefilter, and incremental
-    candidate generators."""
-    rows_per_band = N_HASHES // BANDS
+def _cap_buckets(df: DataFrame, keys, cap, report=None):
+    """Split `df` at a bucket cap -> (ok, skipped). A bucket is the rows
+    sharing `keys`: ok keeps the rows of buckets with <= cap rows, and
+    skipped lists every bucket over the cap once as (*report, n),
+    report defaulting to keys — no silent caps. The size is a window
+    count over the join's own partition key, so the rows move to their
+    bucket partition once, are sized and join in place (one exchange
+    instead of a groupBy + semi-join pair). cap None: (df, None)."""
+    if cap is None:
+        return df, None
+    sized = df.withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+    skipped = (
+        sized.filter(F.col("_n") > cap)
+        .select(*(report or keys), F.col("_n").alias("n"))
+        .distinct()
+    )
+    return sized.filter(F.col("_n") <= cap).drop("_n"), skipped
+
+
+def _band_keys(ss: DataFrame, layouts=((BANDS, N_HASHES // BANDS),)) -> DataFrame:
+    """(doc_id, bands, rows_per_band, band, key): the LSH band keys of
+    every (bands, rows_per_band) layout per signature row, exploded
+    JVM-side in one pass; key is the band's minhash values joined by
+    ','. Defaults to the BANDS x 4 layout."""
     return ss.select(
         "doc_id",
         F.explode(
             F.array(
                 *[
                     F.struct(
+                        F.lit(bands).alias("bands"),
+                        F.lit(rpb).alias("rows_per_band"),
                         F.lit(b).alias("band"),
                         F.concat_ws(
                             ",",
                             *[
-                                F.col("sig")[b * rows_per_band + r].cast("string")
-                                for r in range(rows_per_band)
+                                F.col("sig")[b * rpb + r].cast("string")
+                                for r in range(rpb)
                             ],
                         ).alias("key"),
                     )
-                    for b in range(BANDS)
+                    for bands, rpb in layouts
+                    for b in range(bands)
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.key")
+    ).select("doc_id", "bb.*")
 
 
-def _lsh_candidates(ss: DataFrame, max_bucket: int):
-    """LSH band-bucket candidate pairs from a signature table
-    ss(doc_id, sig[N_HASHES], ...): explode the BANDS band keys,
-    self-join on (band, key), cap degenerate buckets. Returns
-    (cand(doc_a, doc_b), skipped(band, key, n)). Shared by
-    minhash_lsh_pairs and ngram_jaccard_pairs(prefilter='minhash')."""
-    banded = _band_keys(ss)
+_LSH_KEYS = ("bands", "rows_per_band", "band", "key")
 
-    # bucket sizes via one window over the SAME (band, key) partitioning
-    # the self-join shuffles on — one exchange instead of a groupBy +
-    # semi-join pair (fewer AQE stages; identical cap semantics)
-    from pyspark.sql import Window
 
-    w_bucket = Window.partitionBy("band", "key")
-    sized = banded.withColumn("n", F.count(F.lit(1)).over(w_bucket))
-    skipped = (
-        sized.filter(F.col("n") > max_bucket).select("band", "key", "n").distinct()
-    )
-    banded_ok = sized.filter(F.col("n") <= max_bucket).drop("n")
-
-    left = banded_ok.alias("l")
-    right = banded_ok.alias("r")
+def _lsh_candidates(
+    banded: DataFrame,
+    max_bucket: int,
+    report=("band", "key"),
+    carry=(),
+    pair_filter=None,
+):
+    """The band-bucket self-join over _band_keys rows: distinct
+    (*carry, doc_a, doc_b), doc_a < doc_b, for docs sharing a (layout,
+    band, key) bucket, with buckets over max_bucket skipped and
+    reported as (*report, n). `pair_filter` is an extra predicate over
+    the join's l./r. sides. Returns (cand, skipped)."""
+    ok, skipped = _cap_buckets(banded, _LSH_KEYS, max_bucket, report)
+    left, right = ok.alias("l"), ok.alias("r")
+    cond = F.col("l.doc_id") < F.col("r.doc_id")
+    for k in _LSH_KEYS:
+        cond &= F.col(f"l.{k}") == F.col(f"r.{k}")
+    if pair_filter is not None:
+        cond &= pair_filter
     cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        left.join(right, cond)
+        .select(
+            *[F.col(f"l.{c}").alias(c) for c in carry],
+            F.col("l.doc_id").alias("doc_a"),
+            F.col("r.doc_id").alias("doc_b"),
         )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
         .distinct()
     )
     return cand, skipped
 
 
-def minhash_store(
-    docs: DataFrame, n_shingle: int = 3, hash_fn: str = "xxhash64"
-) -> DataFrame:
+def _pair_sides(cand: DataFrame, ss: DataFrame, cols) -> DataFrame:
+    """cand(doc_a, doc_b, ...) with ss's `cols` attached per side as
+    <col>_a / <col>_b by two id equi-joins — the pair generator never
+    carries the arrays (the narrow-pair-grid rule)."""
+    for s in ("a", "b"):
+        side = ss.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols],
+        )
+        cand = cand.join(side, f"doc_{s}")
+    return cand
+
+
+def _match_count(a, b):
+    """Positions where two signature arrays agree: the integer numerator
+    of the minhash Jaccard estimate (exact in both engines)."""
+    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda v: v))
+
+
+def _hashed_jaccard(a, b):
+    """Exact Jaccard of two distinct hashed-shingle sets (== string-set
+    Jaccard up to 2^-32 hash collisions): one closing double division."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
+        F.array_union(a, b)
+    ).cast("double")
+
+
+def _ratio_ok(sa, sb, threshold: float):
+    """The exact size-ratio prune: jaccard <= min/max(|A|,|B|), so a
+    pair with least < threshold * greatest never reaches the threshold.
+    The 1e-9 slack keeps a pair sitting exactly AT the threshold from a
+    float-order drop."""
+    return F.least(sa, sb).cast("double") >= F.greatest(sa, sb).cast(
+        "double"
+    ) * F.lit(float(threshold)) - F.lit(1e-9)
+
+
+def _minhash_verify(cand: DataFrame, ss: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidate pairs whose signature
+    estimate reaches threshold - EST_MARGIN and whose exact hashed-set
+    Jaccard reaches threshold (rounded to 6 dp); ss(doc_id, sig, sset).
+    The estimate cutoff is an integer, so engine and SQL oracle compare
+    identically."""
+    est_min = int(math.ceil((threshold - EST_MARGIN) * N_HASHES - 1e-9))
+    return (
+        _pair_sides(cand, ss, ("sig", "sset"))
+        .filter(_match_count("sig_a", "sig_b") >= F.lit(est_min))
+        .withColumn("jaccard", _hashed_jaccard("sset_a", "sset_b"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
+def minhash_store(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """(doc_id, sig[N_HASHES], sset) — the per-snapshot signature store.
     At scale this is WRITTEN (parquet, bucketed by doc_id) once per
     corpus snapshot and re-read by incremental_neardup for every new
     crawl, so signatures are computed exactly once per document ever."""
-    # a small single-file scan arrives as ONE task; the shingle+hash
-    # fan-out is CPU-bound map-side work, so spread it first. At scale
-    # the input already has >= parallelism partitions and this is a
-    # no-op.
-    sc = docs.sparkSession.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
-    ex = shingle_hash_rows(docs, n_shingle, hash_fn)
+    ex = shingle_hash_rows(_spread(docs), N_SHINGLE, hash_fn)
     return (
         ex.groupBy("doc_id")
         .agg(*_sig_min_aggs(), F.collect_set("h").alias("sset"))
@@ -273,11 +367,9 @@ def minhash_store(
 def incremental_neardup(
     new_docs: DataFrame,
     store: DataFrame,
-    n_shingle: int = 3,
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
     max_bucket: int = 4096,
-    est_margin: float = 0.25,
 ) -> DataFrame:
     """Near-dup pairs for a NEW snapshot against an existing signature
     store (minhash_store output) — new-vs-store and new-vs-new, never
@@ -293,19 +385,17 @@ def incremental_neardup(
       side never self-joins, and untouched buckets never shuffle);
     - bucket-size cap counts the touched buckets' FULL population
       (store + new), so cap semantics equal the batch operator's;
-    - pair join keeps pairs with >= 1 new doc; verify (signature-
-      estimate prefilter + exact hashed-set Jaccard) is identical to
-      minhash_lsh_pairs, so on (store + new) input the result equals
-      the batch pairs restricted to new-doc involvement — pytest-held.
+    - pair join keeps pairs with >= 1 new doc; verify is
+      minhash_lsh_pairs' (_minhash_verify), so on (store + new) input
+      the result equals the batch pairs restricted to new-doc
+      involvement — pytest-held.
 
     doc_ids must be globally unique across store and new snapshot.
     Returns (doc_a, doc_b, jaccard) with the `skipped(result)` metric
     and `_new_store_rows` — the new docs' signature rows to APPEND to the
     store for the next increment.
     """
-    import math as _math
-
-    ss_new = minhash_store(new_docs, n_shingle, hash_fn).persist()
+    ss_new = minhash_store(new_docs, hash_fn).persist()
     nb = _band_keys(ss_new).withColumn("is_new", F.lit(True))
     sb = _band_keys(store.select("doc_id", "sig"))
     touched = sb.join(
@@ -313,67 +403,22 @@ def incremental_neardup(
         ["band", "key"],
         "left_semi",
     ).withColumn("is_new", F.lit(False))
-    all_b = nb.unionByName(touched)
-
-    from pyspark.sql import Window
-
-    w_bucket = Window.partitionBy("band", "key")
-    sized = all_b.withColumn("n", F.count(F.lit(1)).over(w_bucket))
-    skipped = (
-        sized.filter(F.col("n") > max_bucket).select("band", "key", "n").distinct()
+    cand, skipped = _lsh_candidates(
+        nb.unionByName(touched),
+        max_bucket,
+        pair_filter=F.col("l.is_new") | F.col("r.is_new"),
     )
-    ok = sized.filter(F.col("n") <= max_bucket).drop("n")
-    left, right = ok.alias("l"), ok.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id"))
-            & (F.col("l.is_new") | F.col("r.is_new")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
     ss_all = ss_new.unionByName(store.select("doc_id", "sig", "sset"))
-    est_min = int(_math.ceil((threshold - est_margin) * N_HASHES - 1e-9))
-    a_side = ss_all.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("sset").alias("set_a"),
-    )
-    b_side = ss_all.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("sset").alias("set_b"),
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    verified = (
-        cand.join(a_side, "doc_a")
-        .join(b_side, "doc_b")
-        .filter(est >= F.lit(est_min))
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("set_a", "set_b")).cast("double")
-            / F.size(F.array_union("set_a", "set_b")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    verified = _minhash_verify(cand, ss_all, threshold)
     verified._new_store_rows = ss_new
     return hold(verified, ss_new, skipped=skipped)
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    n_shingle: int = 3,
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
     max_bucket: int = 4096,
-    est_margin: float = 0.25,
 ) -> DataFrame:
     """Candidate pairs via LSH banding, verified with exact Jaccard over
     the 32-bit-hashed distinct shingle sets: (doc_a, doc_b, jaccard)
@@ -383,8 +428,8 @@ def minhash_lsh_pairs(
     full shingle strings, the round-1 cost center.
 
     Scale shape:
-    - signatures + distinct hash sets in ONE pass over the text
-      (shared `sh` array), persisted for the 3 downstream consumers;
+    - signatures + distinct hash sets in ONE pass over the text,
+      persisted for the downstream consumers;
     - band-bucket equi-join (shuffle on (band, key)) — never all-pairs;
     - degenerate-bucket cap: buckets with > max_bucket members
       (boilerplate/empty-doc mega-buckets that would go quadratic) are
@@ -392,68 +437,32 @@ def minhash_lsh_pairs(
       DataFrame on the result (`skipped(result)`: band, key, n)
       — no silent caps;
     - verify rung 1 (JVM): signature-estimated Jaccard (matching
-      minhash fraction) must reach threshold - est_margin before the
+      minhash fraction) must reach threshold - EST_MARGIN before the
       exact set intersection runs. A band match already implies >= 4/32
       agreement; the margin keeps the drop probability for a pair at
       the threshold below ~1e-3 while pruning boilerplate-bucket junk
       at higher thresholds.
     """
-    ss = minhash_store(docs, n_shingle, hash_fn).persist()
-
-    cand, skipped = _lsh_candidates(ss, max_bucket)
-
-    # integer cutoff so engine and SQL oracle compare identically
-    import math as _math
-
-    est_min = int(_math.ceil((threshold - est_margin) * N_HASHES - 1e-9))
-    a_side = ss.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("sset").alias("set_a"),
-    )
-    b_side = ss.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("sset").alias("set_b"),
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    )
-    verified = (
-        cand.join(a_side, "doc_a")
-        .join(b_side, "doc_b")
-        .filter(est >= F.lit(est_min))
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("set_a", "set_b")).cast("double")
-            / F.size(F.array_union("set_a", "set_b")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return hold(verified, ss, skipped=skipped)
+    ss = minhash_store(docs, hash_fn).persist()
+    cand, skipped = _lsh_candidates(_band_keys(ss), max_bucket)
+    return hold(_minhash_verify(cand, ss, threshold), ss, skipped=skipped)
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    n_shingle: int = 3,
     threshold: float = 0.5,
-    band_width: int = 8,
     hash_fn: str = "xxhash64",
     max_band: int = 4096,
     prefilter: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs bucketed by token-count
-    band (width `band_width`) — the non-probabilistic sibling of
+    band (width NGRAM_BAND_WIDTH) — the non-probabilistic sibling of
     minhash_lsh_pairs, SQL-oracle-friendly. The band is the candidate-
     generation contract: pairs whose token counts fall in different
     bands are not candidates (documents at jaccard >= 0.5 rarely differ
-    by more than ~2x the band in length; widen band_width to trade
-    recall for join fan-out).
+    by more than ~2x the band in length).
 
-    Scale shape (mirrors minhash_lsh_pairs):
+    Scale shape:
     - bands with > max_band members are SKIPPED (the within-band pair
       grid is O(band²) by the exact contract — a web-scale corpus puts
       millions of docs in one length band, which no salting can shrink)
@@ -466,9 +475,8 @@ def ngram_jaccard_pairs(
       hashed-set Jaccard verify apply. Probabilistic recall (a pair at
       threshold j survives banding with 1-(1-j^4)^8), exact precision;
       skipped LSH buckets reported as `skipped(result)`;
-    - an EXACT size-ratio prefilter inside the join condition:
-      jaccard <= min(|A|,|B|)/max(|A|,|B|), so pairs failing
-      least >= threshold*greatest can never reach the threshold and are
+    - an EXACT size-ratio prefilter inside the join condition
+      (_ratio_ok), so pairs that can never reach the threshold are
       pruned before the set intersection runs (result-identical).
 
     Jaccard runs over 32-BIT-HASHED shingle sets (== string-set Jaccard
@@ -476,21 +484,19 @@ def ngram_jaccard_pairs(
     string intersections and the quadratic-within-band verify is the
     cost center (measured 55 s -> seconds at sf0.1)."""
     ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    band = ((ntok - F.pmod(ntok, F.lit(band_width))) / F.lit(band_width)).cast("long")
+    width = F.lit(NGRAM_BAND_WIDTH)
+    band = ((ntok - F.pmod(ntok, width)) / width).cast("long")
     if prefilter == "minhash":
-        return _ngram_jaccard_lsh(docs, band, n_shingle, threshold, hash_fn, max_band)
+        return _ngram_jaccard_lsh(docs, band, threshold, hash_fn, max_band)
     if prefilter is not None:
         raise ValueError(f"unknown prefilter {prefilter!r}")
     # one CPU-bound pass builds the hashed sets; PERSIST it — three
     # consumers (band sizes, both self-join sides) would otherwise each
     # recompute the shingle+hash+distinct pipeline, the dominant cost.
-    # Repartition the DOCS first (narrow rows), THEN hash: a single-file
-    # scan is one task, and computing the md5 shingles upstream of the
-    # exchange would serialize the whole pass into it (playbook rule:
-    # repartition single-file scans before CPU-bound stages).
-    sc = docs.sparkSession.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
+    # Spread the DOCS first (narrow rows), THEN hash: computing the
+    # shingles upstream of the exchange would serialize the whole pass
+    # into the scan's one task.
+    docs = _spread(docs)
     # codegen row frame + collect_set agg, not array_distinct over an
     # interpreted transform lambda (see shingle_hash_rows). Docs with
     # zero shingles drop here — they can never pass the size-ratio
@@ -498,7 +504,7 @@ def ngram_jaccard_pairs(
     sets = (
         shingle_hash_rows(
             docs.select("doc_id", band.alias("band"), "text"),
-            n_shingle,
+            N_SHINGLE,
             hash_fn,
             carry=("band",),
         )
@@ -542,23 +548,12 @@ def ngram_jaccard_pairs(
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.salt") == F.col("b.salt"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
-        # exact prune: jaccard <= min/max sizes; the 1e-9 slack keeps a
-        # pair sitting exactly AT the threshold from a float-order drop
-        & (
-            F.least(F.col("a.sz"), F.col("b.sz")).cast("double")
-            >= F.greatest(F.col("a.sz"), F.col("b.sz")).cast("double")
-            * F.lit(float(threshold))
-            - F.lit(1e-9)
-        ),
+        & _ratio_ok(F.col("a.sz"), F.col("b.sz"), threshold),
     )
     out = pairs.select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.round(
-            F.size(F.array_intersect("a.sset", "b.sset")).cast("double")
-            / F.size(F.array_union("a.sset", "b.sset")).cast("double"),
-            6,
-        ).alias("jaccard"),
+        F.round(_hashed_jaccard("a.sset", "b.sset"), 6).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
     return hold(out, sets, skipped=skipped)
 
@@ -566,7 +561,6 @@ def ngram_jaccard_pairs(
 def _ngram_jaccard_lsh(
     docs: DataFrame,
     band_col,
-    n_shingle: int,
     threshold: float,
     hash_fn: str,
     max_bucket: int,
@@ -577,48 +571,21 @@ def _ngram_jaccard_lsh(
     ss = (
         shingle_hash_rows(
             docs.select("doc_id", band_col.alias("band"), "text"),
-            n_shingle,
+            N_SHINGLE,
             hash_fn,
             carry=("band",),
         )
         .groupBy("doc_id", "band")
         .agg(*_sig_min_aggs(), F.collect_set("h").alias("sset"))
-        .select(
-            "doc_id", "band", "sset", _sig_array_col().alias("sig")
-        )
+        .select("doc_id", "band", "sset", _sig_array_col().alias("sig"))
         .persist()
     )
-    cand, skipped = _lsh_candidates(ss, max_bucket)
-    a = ss.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("band").alias("band_a"),
-        F.col("sset").alias("set_a"),
-        F.size("sset").alias("sz_a"),
-    )
-    b = ss.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band_b"),
-        F.col("sset").alias("set_b"),
-        F.size("sset").alias("sz_b"),
-    )
+    cand, skipped = _lsh_candidates(_band_keys(ss), max_bucket)
     out = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        _pair_sides(cand, ss, ("band", "sset"))
         .filter(F.col("band_a") == F.col("band_b"))
-        .filter(
-            F.least(F.col("sz_a"), F.col("sz_b")).cast("double")
-            >= F.greatest(F.col("sz_a"), F.col("sz_b")).cast("double")
-            * F.lit(float(threshold))
-            - F.lit(1e-9)
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("set_a", "set_b")).cast("double")
-                / F.size(F.array_union("set_a", "set_b")).cast("double"),
-                6,
-            ),
-        )
+        .filter(_ratio_ok(F.size("sset_a"), F.size("sset_b"), threshold))
+        .withColumn("jaccard", F.round(_hashed_jaccard("sset_a", "sset_b"), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -670,11 +637,9 @@ def derive_n_planes(
     [lo, hi]. Same measured-input gate as spatial_join.gate_stats:
     a fixed p=8 is 256 buckets forever — fine at 10^5 vectors,
     quadratic death at 10^9."""
-    import math as _math
-
     if n_vectors <= target_occupancy:
         return lo
-    return max(lo, min(hi, int(_math.ceil(_math.log2(n_vectors / target_occupancy)))))
+    return max(lo, min(hi, int(math.ceil(math.log2(n_vectors / target_occupancy)))))
 
 
 def embedding_neardup_pairs(
@@ -690,7 +655,7 @@ def embedding_neardup_pairs(
     Catalyst's per-element higher-order folds are ~20x slower for
     64-dim arrays). Joins stay JVM-side.
 
-    Scale guards (same treatment as minhash_lsh_pairs):
+    Scale guards:
     - n_planes=None (default) derives the plane count from the MEASURED
       vector count (one cheap count job) via derive_n_planes, so bucket
       occupancy tracks the corpus instead of freezing at 2^8 buckets;
@@ -705,16 +670,7 @@ def embedding_neardup_pairs(
     # persist: both self-join sides consume the bucketed signatures —
     # without it the normalize+bucket pass runs once per side
     sig = _unit_and_bucket(embeddings, n_planes).persist()
-    # bucket sizes via a window over the join's own shuffle key — the
-    # rows move to (bucket) partitions once, sized, and join in place
-    from pyspark.sql import Window
-
-    w_bucket = Window.partitionBy("bucket")
-    sized = sig.withColumn("n", F.count(F.lit(1)).over(w_bucket))
-    skipped = (
-        sized.filter(F.col("n") > max_bucket).select("bucket", "n").distinct()
-    )
-    ok = sized.filter(F.col("n") <= max_bucket).drop("n")
+    ok, skipped = _cap_buckets(sig, ("bucket",), max_bucket)
     a = ok.select(
         F.col("vec_id").alias("vec_a"), F.col("u").alias("ua"), "bucket"
     )
@@ -804,7 +760,6 @@ def line_dedup(
     segmenter: str = "newline",
     seg_tokens: int = 5,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
     group_col: str = None,
 ) -> DataFrame:
     """Cross-document line dedup (the C4/CCNet boilerplate rule): a
@@ -836,7 +791,7 @@ def line_dedup(
     sep = "\n" if segmenter == "newline" else " "
     gcols = [group_col] if group_col else []
     segs = segment_lines(
-        docs, segmenter, seg_tokens, text_col, carry_cols=tuple(gcols)
+        docs, segmenter, seg_tokens, carry_cols=tuple(gcols)
     ).withColumn("lh", line_hash(F.col("line"), hash_fn))
     dup = (
         segs.where(F.trim(F.col("line")) != "")
@@ -864,7 +819,6 @@ def repeated_windows(
     w: int = 8,
     min_count: int = 2,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
 ) -> DataFrame:
     """Cross-corpus repeated token-window census — the exact-substring
     dedup primitive (Lee et al., "Deduplicating Training Data Makes
@@ -883,25 +837,7 @@ def repeated_windows(
     the corpus, so AQE broadcasts it into the occurrence join when it
     fits, else the join shuffles on the same narrow key.
     """
-    # windows hashed in codegen (arrays_zip over w shifted slices), not
-    # a transform() lambda — HOF lambdas are interpreted; posexplode
-    # keeps the 0-based window start position identically
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    k = F.size("t") - F.lit(w - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("t"), i + 1, k).alias(f"w{i}") for i in range(w)]
-    )
-    sg = F.concat_ws(" ", *[F.col(f"p.w{i}") for i in range(w)])
-    wins = (
-        docs.select("doc_id", toks.alias("t"))
-        .where(F.size("t") >= F.lit(w))
-        .select("doc_id", F.posexplode(zipped).alias("pos", "p"))
-        .select(
-            "doc_id",
-            F.col("pos").cast("long").alias("pos"),
-            shingle_hash32(sg, hash_fn).alias("h"),
-        )
-    )
+    wins = shingle_hash_rows(docs, w, hash_fn, pos=True)
     census = (
         wins.groupBy("h")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -915,7 +851,6 @@ def dup_span_stats(
     w: int = 8,
     min_count: int = 2,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document exact-substring dedup report from repeated_windows:
     (doc_id, n_windows, n_dup, cut_tokens, dup_frac) where cut_tokens
@@ -934,10 +869,8 @@ def dup_span_stats(
     scan (cheap column arithmetic) rather than persisting exploded
     windows.
     """
-    from pyspark.sql import Window as W
-
-    dup = repeated_windows(docs, w, min_count, hash_fn, text_col)
-    lead = F.lead("pos").over(W.partitionBy("doc_id").orderBy("pos"))
+    dup = repeated_windows(docs, w, min_count, hash_fn)
+    lead = F.lead("pos").over(Window.partitionBy("doc_id").orderBy("pos"))
     cov = dup.select(
         "doc_id",
         F.coalesce(F.least(F.lit(w), lead - F.col("pos")), F.lit(w)).alias("c"),
@@ -946,7 +879,7 @@ def dup_span_stats(
         F.count(F.lit(1)).alias("n_dup"),
         F.sum("c").cast("long").alias("cut_tokens"),
     )
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     n_win = docs.select(
         "doc_id",
         F.greatest(F.size(toks) - F.lit(w - 1), F.lit(0))
@@ -1013,14 +946,7 @@ def fuzzy_pairs(
             F.floor(F.length("s") / F.lit(len_band)).cast("string"),
         ).alias("blk"),
     )
-    skipped = None
-    if max_block is not None:
-        from pyspark.sql import Window
-
-        w_blk = Window.partitionBy("blk")
-        sized = blocked.withColumn("n", F.count(F.lit(1)).over(w_blk))
-        skipped = sized.filter(F.col("n") > max_block).select("blk", "n").distinct()
-        blocked = sized.filter(F.col("n") <= max_block).drop("n")
+    blocked, skipped = _cap_buckets(blocked, ("blk",), max_block)
     a = blocked.select("blk", F.col("s").alias("s_a"))
     b = blocked.select("blk", F.col("s").alias("s_b"))
     dist = F.levenshtein("s_a", "s_b", max_dist)
@@ -1036,7 +962,7 @@ def fuzzy_pairs(
     return hold(out, skipped=skipped)
 
 
-def _rarity_ordered(docs: DataFrame, doc_col: str, text_col: str):
+def _rarity_ordered(docs: DataFrame):
     """Shared candidate-generation base of the prefix-filter family
     (setsim_join, containment_join): (census, ordered, hash_ok).
 
@@ -1050,9 +976,9 @@ def _rarity_ordered(docs: DataFrame, doc_col: str, text_col: str):
     when true, verify may intersect the BIGINT hash arrays (~6x
     cheaper than struct arrays) with output provably identical."""
     tok = docs.select(
-        F.col(doc_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
-            F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
+            F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
         ).alias("token"),
     )
     census = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df")).persist()
@@ -1085,8 +1011,6 @@ def setsim_join(
     docs: DataFrame,
     threshold_num: int = 9,
     threshold_den: int = 10,
-    doc_col: str = "doc_id",
-    text_col: str = "text",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Exact set-similarity self-join with LOSSLESS prefix filtering
@@ -1119,7 +1043,7 @@ def setsim_join(
     Skew guard: with `max_bucket` set, prefix tokens whose candidate
     bucket exceeds the cap are dropped from the equi-join and
     reported as `skipped(result)` (ptok, n) — the engine's
-    no-silent-cap rule (same pattern as fuzzy_pairs). This trades recall for a bounded
+    no-silent-cap rule (_cap_buckets). This trades recall for a bounded
     pair grid on a pathological corpus where every doc shares one
     rare token set (rarity ordering cannot bound that bucket): a
     pair meeting ONLY at a dropped token is lost, though at high
@@ -1142,7 +1066,7 @@ def setsim_join(
     collision the verify falls back to the struct arrays. Exact
     either way.
     """
-    census, ordered, hash_ok = _rarity_ordered(docs, doc_col, text_col)
+    census, ordered, hash_ok = _rarity_ordered(docs)
     num, den = F.lit(threshold_num), F.lit(threshold_den)
     plen = (F.col("s") - F.ceil(num * F.col("s") / den) + F.lit(1)).cast("int")
     # ordered feeds the prefix explode AND both verify-side array
@@ -1159,18 +1083,17 @@ def setsim_join(
         "s",
         F.posexplode(F.slice(F.col("toks"), F.lit(1), plen)).alias("pos", "p"),
     ).select("id", "s", "pos", F.col("p.token").alias("ptok"))
-    skipped_buckets = None
+    pref, skipped_buckets = _cap_buckets(pref, ("ptok",), max_bucket)
     if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w_tok = Window.partitionBy("ptok")
-        sized = pref.withColumn("bn", F.count(F.lit(1)).over(w_tok))
-        skipped_buckets = (
-            sized.filter(F.col("bn") > max_bucket)
-            .select("ptok", F.col("bn").alias("n"))
-            .distinct()
+        # positions count the KEPT prefix tokens only: a pair's rarer
+        # shared tokens may sit in a dropped bucket, and the positional
+        # bound below is lossless only when every shared token before
+        # the meeting one is counted out of the overlap ceiling
+        # (o <= min(sa - kept_pos, sb - kept_pos) still holds)
+        pref = pref.withColumn(
+            "pos",
+            F.row_number().over(Window.partitionBy("id").orderBy("pos")) - 1,
         )
-        pref = sized.filter(F.col("bn") <= max_bucket).drop("bn")
     a = pref.select(
         F.col("id").alias("a_id"), F.col("s").alias("sa"),
         F.col("pos").alias("pa"), "ptok",
@@ -1229,8 +1152,6 @@ def containment_join(
     docs: DataFrame,
     threshold_num: int = 8,
     threshold_den: int = 10,
-    doc_col: str = "doc_id",
-    text_col: str = "text",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Exact ASYMMETRIC set-containment self-join: all ordered pairs
@@ -1261,7 +1182,7 @@ def containment_join(
     honest cost — it is the inverted index a containment join needs;
     the a side's prefix keeps the candidate grid bounded by rarity.
     """
-    census, ordered, hash_ok = _rarity_ordered(docs, doc_col, text_col)
+    census, ordered, hash_ok = _rarity_ordered(docs)
     num, den = F.lit(threshold_num), F.lit(threshold_den)
     plen = (F.col("s") - F.ceil(num * F.col("s") / den) + F.lit(1)).cast("int")
     ordered = ordered.persist()
@@ -1326,7 +1247,6 @@ def containment_join(
 
 def minhash_calibration(
     docs: DataFrame,
-    n_shingle: int = 3,
     hash_fn: str = "xxhash64",
     max_bucket: int = 4096,
 ) -> DataFrame:
@@ -1344,38 +1264,19 @@ def minhash_calibration(
     identically-ordered double ops quantized to integer micro-units
     (round(e*1e6) -> BIGINT), so the aggregation is exact integer sums
     in any order; the three final figures are single divisions behind
-    a 6 dp round. Scale shape: minhash_lsh_pairs' shape minus the
-    threshold filters — bucketed candidates with the measured cap +
-    `skipped(result)`, never all-pairs; one final one-row aggregate.
+    a 6 dp round. Scale shape: the capped LSH candidates
+    (_lsh_candidates, `skipped(result)`: band, key, n) without the
+    verify's threshold filters, never all-pairs; one final one-row
+    aggregate.
     Call release_cached(result) after the action."""
-    ss = minhash_store(docs, n_shingle, hash_fn).persist()
-    cand, skipped = _lsh_candidates(ss, max_bucket)
-    a_side = ss.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("sset").alias("set_a"),
-    )
-    b_side = ss.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("sset").alias("set_b"),
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    )
-    jac = F.size(F.array_intersect("set_a", "set_b")).cast("double") / F.size(
-        F.array_union("set_a", "set_b")
-    ).cast("double")
+    ss = minhash_store(docs, hash_fn).persist()
+    cand, skipped = _lsh_candidates(_band_keys(ss), max_bucket)
+    est = _match_count("sig_a", "sig_b")
+    jac = _hashed_jaccard("sset_a", "sset_b")
     err_u = F.round(
         (est.cast("double") / F.lit(float(N_HASHES)) - jac) * F.lit(1e6)
     ).cast("long")
-    per = (
-        cand.join(a_side, "doc_a")
-        .join(b_side, "doc_b")
-        .select(err_u.alias("e"))
-    )
+    per = _pair_sides(cand, ss, ("sig", "sset")).select(err_u.alias("e"))
     out = per.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.sum(F.abs(F.col("e"))).alias("sa"),
@@ -1416,8 +1317,6 @@ def keep_best(
     exchange. The corpus-sized work is all inside minhash_lsh_pairs,
     which is bucket-capped (`max_bucket`) and metered.
     """
-    from pyspark.sql import Window
-
     from .graph import dedup_clusters
 
     cc = dedup_clusters(docs, threshold=threshold, hash_fn=hash_fn)
@@ -1451,7 +1350,6 @@ def winnowing(
     k: int = 4,
     w: int = 4,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
     MOSS algorithm): per doc the DISTINCT set of selected k-gram
@@ -1469,41 +1367,23 @@ def winnowing(
     the window min is plain integer MIN and the DuckDB twin replays it
     bit-for-bit — no struct-comparison semantics in play.
 
-    Scale shape (100 TB): k-grams build via arrays_zip over k shifted
-    slices + codegen concat/hash (the novelty_score rule — no
-    interpreted HOF lambda); the rolling min is a per-DOCUMENT window
+    Scale shape (100 TB): k-gram rows come from shingle_hash_rows
+    (codegen concat/hash, no interpreted HOF lambda); the rolling min is a per-DOCUMENT window
     (partitions bounded by doc length, never corpus-sized); the
     distinct is one narrow (doc_id, key) exchange."""
     assert w >= 1 and k >= 1
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = docs.select("doc_id", toks.alias("t")).where(
-        F.size("t") >= F.lit(k + w - 1)
-    )
-    kk = F.size("t") - F.lit(k - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("t"), i + 1, kk).alias(f"w{i}") for i in range(k)]
-    )
-    sg = F.concat_ws(" ", *[F.col(f"p.w{i}") for i in range(k)])
-    kg = base.select(
-        "doc_id", F.posexplode(zipped).alias("pos", "p")
-    ).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        shingle_hash32(sg, hash_fn).alias("h"),
-    )
+    kg = shingle_hash_rows(docs, k, hash_fn, pos=True, min_tokens=k + w - 1)
     keyed = kg.select(
         "doc_id",
         "pos",
         (F.shiftleft(F.col("h"), 20) + F.col("pos")).alias("key"),
     )
-    from pyspark.sql import Window as W
-
-    wspec = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
+    wspec = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
     sel = keyed.select(
         "doc_id",
         "pos",
         F.min("key").over(wspec).alias("mn"),
-        F.count(F.lit(1)).over(W.partitionBy("doc_id")).alias("m"),
+        F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("m"),
     ).where(F.col("pos") <= F.col("m") - F.lit(w))
     return (
         sel.select(
@@ -1522,7 +1402,6 @@ def winnow_pairs(
     min_shared: int = 2,
     max_bucket: int = 512,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
 ) -> DataFrame:
     """Candidate local-overlap pairs from shared winnowing
     fingerprints: (a_id, b_id, n_shared) for pairs sharing >=
@@ -1530,22 +1409,9 @@ def winnow_pairs(
     Pairs meet in fingerprint-hash buckets (never all-pairs); buckets
     over `max_bucket` docs (corpus-wide boilerplate stamps) are
     dropped and reported as `skipped(result)` (fph, n) — the
-    house no-silent-cap rule. The window count runs over the join's
-    own partition key (one exchange, no driver collect)."""
-    fps = winnowing(docs, k, w, hash_fn, text_col).select(
-        "doc_id", "fph"
-    ).distinct()
-    from pyspark.sql import Window as W
-
-    sized = fps.withColumn(
-        "bn", F.count(F.lit(1)).over(W.partitionBy("fph"))
-    )
-    skipped = (
-        sized.filter(F.col("bn") > max_bucket)
-        .select("fph", F.col("bn").alias("n"))
-        .distinct()
-    )
-    ok = sized.filter(F.col("bn") <= max_bucket).drop("bn")
+    house no-silent-cap rule (_cap_buckets)."""
+    fps = winnowing(docs, k, w, hash_fn).select("doc_id", "fph").distinct()
+    ok, skipped = _cap_buckets(fps, ("fph",), max_bucket)
     a = ok.select(F.col("doc_id").alias("a_id"), "fph")
     b = ok.select(F.col("doc_id").alias("b_id"), "fph")
     out = (
@@ -1562,7 +1428,6 @@ def sorted_neighborhood(
     docs: DataFrame,
     window: int = 3,
     prefix_len: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sorted-neighborhood method (SNM, Hernandez-Stolfo) ->
     (doc_a, doc_b, gap, jaccard): the classic entity-resolution
@@ -1589,15 +1454,13 @@ def sorted_neighborhood(
     block (every key sharing one prefix) degrades to one sorted
     partition of that block only; raise prefix_len to split it.
     """
-    from pyspark.sql import Window as W
-
     keyed = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        norm_text(F.col(text_col)).alias("k"),
+        norm_text(F.col("text")).alias("k"),
     ).select(
         "doc_id", "k", F.substring(F.col("k"), 1, prefix_len).alias("blk")
     )
-    w = W.partitionBy("blk").orderBy(F.col("k").asc(), F.col("doc_id").asc())
+    w = Window.partitionBy("blk").orderBy(F.col("k").asc(), F.col("doc_id").asc())
     lags = keyed.select(
         F.col("doc_id").alias("doc_b"),
         F.array(
@@ -1617,7 +1480,7 @@ def sorted_neighborhood(
     )
     toks = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+")).alias("t"),
+        F.array_distinct(F.split(F.trim(F.col("text")), r"\s+")).alias("t"),
     )
     ta = toks.select(
         F.col("doc_id").alias("doc_a"), F.col("t").alias("t_a")
@@ -1646,7 +1509,6 @@ def scrub_spans(
     w: int = 8,
     min_count: int = 2,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact-substring dedup APPLY (the cut step of Lee et al.):
     every token covered by ANY corpus-duplicated W-token window is
@@ -1665,7 +1527,7 @@ def scrub_spans(
     + array_join — all codegen, no interpreted HOF lambda. The DuckDB
     twin replays the identical cut with string_agg(... ORDER BY tpos).
     """
-    dup = repeated_windows(docs, w, min_count, hash_fn, text_col)
+    dup = repeated_windows(docs, w, min_count, hash_fn)
     cov = dup.select(
         "doc_id",
         F.explode(
@@ -1674,7 +1536,7 @@ def scrub_spans(
     ).distinct()
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias(
             "tpos", "tok"
         ),
     ).select(
@@ -1691,7 +1553,7 @@ def scrub_spans(
     )
     base = docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+        F.size(F.split(F.trim(F.col("text")), r"\s+"))
         .cast("long")
         .alias("n_tokens"),
     )
@@ -1711,7 +1573,6 @@ def scrub_spans(
 def lsh_threshold_sweep(
     docs: DataFrame,
     configs=((16, 2), (8, 4), (4, 8)),
-    n_shingle: int = 3,
     hash_fn: str = "xxhash64",
     max_bucket: int = 4096,
 ) -> DataFrame:
@@ -1732,14 +1593,12 @@ def lsh_threshold_sweep(
     and enters both engines as the same double literal (so pow's
     cross-engine 1-ulp wobble never matters); estimates are integer
     match counts. Scale shape (100 TB): signatures persist once and
-    every layout reads them (multi-pass playbook rule); per layout the
-    candidate join is the capped-bucket shape of minhash_lsh_pairs
-    with the same `skipped(result)` metric (pick rows_per_band >= 2 —
-    single-row bands bucket on ONE minhash value and degenerate
-    toward all-pairs); pairs carry only ids + two 32-long signature
-    arrays, never text."""
-    from pyspark.sql import Window
-
+    every layout reads them (multi-pass playbook rule); the candidates
+    are the capped band-bucket self-join (_lsh_candidates) over all
+    layouts at once, with `skipped(result)` (bands, band, key, n) (pick
+    rows_per_band >= 2 — single-row bands bucket on ONE minhash value
+    and degenerate toward all-pairs); pairs carry only ids + two
+    32-long signature arrays, never text."""
     for bands, rpb in configs:
         if bands * rpb > N_HASHES:
             raise ValueError(
@@ -1747,62 +1606,18 @@ def lsh_threshold_sweep(
                 f"but only {N_HASHES} available"
             )
 
-    ss = minhash_signatures(docs, n_shingle, hash_fn).persist()
-    # round-6 plan rework (results identical): ALL layouts explode out
-    # of ONE pass over the cached signatures, tagged (bands, rpb), so
+    ss = minhash_signatures(docs, hash_fn).persist()
+    # ALL layouts explode out of ONE pass over the cached signatures, so
     # the bucket-size window, the band-bucket self-join, and the pair
     # distinct each run ONCE over the tagged table instead of once per
-    # config — the sweep's plan is a single candidate pipeline, not
-    # len(configs) unioned copies (3x fewer exchanges/stages; the
-    # self-join's (bands, rpb, band, key) key keeps configs apart).
-    banded = ss.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bands).alias("bands"),
-                        F.lit(rpb).alias("rpb"),
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col("sig")[b * rpb + r].cast("string")
-                                for r in range(rpb)
-                            ],
-                        ).alias("key"),
-                    )
-                    for bands, rpb in configs
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.bands", "bb.rpb", "bb.band", "bb.key")
-    w_bucket = Window.partitionBy("bands", "rpb", "band", "key")
-    sized = banded.withColumn("n", F.count(F.lit(1)).over(w_bucket))
-    skipped = (
-        sized.filter(F.col("n") > max_bucket)
-        .select("bands", "band", "key", "n")
-        .distinct()
-    )
-    ok = sized.filter(F.col("n") <= max_bucket).drop("n")
-    left, right = ok.alias("l"), ok.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.bands") == F.col("r.bands"))
-            & (F.col("l.rpb") == F.col("r.rpb"))
-            & (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.bands").alias("bands"),
-            F.col("l.rpb").alias("rows_per_band"),
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .distinct()
+    # config — a single candidate pipeline, not len(configs) unioned
+    # copies (the (bands, rows_per_band, band, key) key keeps configs
+    # apart).
+    cand, skipped = _lsh_candidates(
+        _band_keys(ss, configs),
+        max_bucket,
+        report=("bands", "band", "key"),
+        carry=("bands", "rows_per_band"),
     )
     # per-config S-curve midpoints as literal CASE chains (computed in
     # driver Python exactly as before — same doubles enter both engines)
@@ -1829,15 +1644,9 @@ def lsh_threshold_sweep(
         "doc_a",
         "doc_b",
     )
-    a_side = ss.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    b_side = ss.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    ).cast("long")
-    per = (
-        pairs.join(a_side, "doc_a")
-        .join(b_side, "doc_b")
-        .select("bands", "rows_per_band", "threshold", "est_min_f", est.alias("est"))
+    est = _match_count("sig_a", "sig_b").cast("long")
+    per = _pair_sides(pairs, ss, ("sig",)).select(
+        "bands", "rows_per_band", "threshold", "est_min_f", est.alias("est")
     )
     out = (
         per.groupBy("bands", "rows_per_band", "threshold", "est_min_f")
@@ -1892,8 +1701,6 @@ def simhash_pairs(
     if bits % n_bands:
         raise ValueError(f"bits={bits} must split into {n_bands} bands")
     band_w = bits // n_bands
-    from pyspark.sql import Window
-
     sigs = simhash(docs, bits=bits, hash_fn=hash_fn).persist()
     banded = sigs.select(
         "doc_id",
@@ -1912,14 +1719,7 @@ def simhash_pairs(
             )
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.band", "bb.key")
-    w_bucket = Window.partitionBy("band", "key")
-    sized = banded.withColumn("n", F.count(F.lit(1)).over(w_bucket))
-    skipped = (
-        sized.filter(F.col("n") > max_bucket)
-        .select("band", "key", "n")
-        .distinct()
-    )
-    ok = sized.filter(F.col("n") <= max_bucket).drop("n")
+    ok, skipped = _cap_buckets(banded, ("band", "key"), max_bucket)
     left, right = ok.alias("l"), ok.alias("r")
     ham = F.bit_count(
         F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))

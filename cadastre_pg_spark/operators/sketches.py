@@ -538,31 +538,21 @@ def group_minhash_sim(
     over 32-bit hashes (xxhash64 for speed; 'md5' for the
     SQL-replayable oracle) — deterministic, so the DuckDB twin
     reproduces every signature bit-for-bit."""
-    from .dedup import MINHASH_PRIME, N_HASHES, _A, _B, shingle_hash_rows
+    from .dedup import (
+        N_HASHES,
+        _match_count,
+        _sig_array_col,
+        _sig_min_aggs,
+        shingle_hash_rows,
+    )
 
-    # codegen n-gram rows (arrays_zip + concat_ws + hash), never the
-    # interpreted transform(shingles()) lambda — same strings, same
-    # hashes, ~5x the throughput (the round-2 measured trap)
     ex = shingle_hash_rows(docs, n_shingle, hash_fn, carry=(group_col,)).select(
         F.col(group_col).alias("grp"), "h"
     )
-    sigs = ex.groupBy("grp").agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.col("h") * F.lit(_A[i]) + F.lit(_B[i]),
-                    F.lit(MINHASH_PRIME),
-                )
-            ).alias(f"m{i}")
-            for i in range(N_HASHES)
-        ]
-    )
-    sig_arr = F.array(*[F.col(f"m{i}") for i in range(N_HASHES)])
-    a = sigs.select(F.col("grp").alias("src_a"), sig_arr.alias("sa"))
-    b = sigs.select(F.col("grp").alias("src_b"), sig_arr.alias("sb"))
-    matches = F.size(
-        F.filter(F.zip_with("sa", "sb", lambda x, y: x == y), lambda v: v)
-    )
+    sigs = ex.groupBy("grp").agg(*_sig_min_aggs())
+    a = sigs.select(F.col("grp").alias("src_a"), _sig_array_col().alias("sa"))
+    b = sigs.select(F.col("grp").alias("src_b"), _sig_array_col().alias("sb"))
+    matches = _match_count("sa", "sb")
     return (
         a.crossJoin(F.broadcast(b))
         .where(F.col("src_a") < F.col("src_b"))

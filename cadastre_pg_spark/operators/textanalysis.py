@@ -738,31 +738,13 @@ def novelty_score(
     hash; one join back on h (Zipf-skewed boilerplate keys — AQE
     skew-join shape); one final doc_id aggregate. No Python.
 
-    Construction note: n-grams come from arrays_zip over n shifted
-    slices + explode + codegen concat/hash — NOT transform(shingles())
-    with the hash inside the lambda: Catalyst HOF lambdas are
-    INTERPRETED (playbook), and since this frame feeds two consumers
-    the interpreted pass ran twice (8.4 s steady at sf0.1 vs 1.6 s for
-    this shape, identical output). The per-(doc, h) dedup is one extra
-    narrow 16-byte-row exchange instead of in-row array_distinct —
-    the right trade once hashing is codegen."""
-    from cadastre_pg_spark.operators.dedup import shingle_hash32
+    Construction note: the n-gram rows are dedup.shingle_hash_rows'
+    (codegen concat/hash, never an interpreted transform() lambda);
+    the per-(doc, h) dedup is one extra narrow 16-byte-row exchange
+    instead of in-row array_distinct."""
+    from cadastre_pg_spark.operators.dedup import shingle_hash_rows
 
-    n = n_shingle
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    base = docs.select("doc_id", toks.alias("t")).where(F.size("t") >= n)
-    k = F.size("t") - F.lit(n - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("t"), i + 1, k).alias(f"w{i}") for i in range(n)]
-    )
-    sg = F.concat_ws(" ", *[F.col(f"p.w{i}") for i in range(n)])
-    ex = (
-        base.select("doc_id", F.explode(zipped).alias("p"))
-        .select("doc_id", shingle_hash32(sg, hash_fn).alias("h"))
-        .groupBy("doc_id", "h")
-        .agg(F.lit(1))
-        .select("doc_id", "h")
-    )
+    ex = shingle_hash_rows(docs, n_shingle, hash_fn).distinct()
     first = ex.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     per = (
         ex.join(first, "h")

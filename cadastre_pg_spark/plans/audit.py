@@ -17,6 +17,17 @@ def plan_has(df: DataFrame, needle: str, mode: str = "formatted") -> bool:
     return needle in explain_string(df, mode)
 
 
+# physical nodes that evaluate Python (pandas or Arrow UDFs, mapIn*,
+# applyInPandas)
+PYTHON_NODES = (
+    "MapInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+)
+
+
 def audit(df: DataFrame) -> dict:
     """Summary booleans the tests / BENCH notes assert on."""
     import re
@@ -35,7 +46,7 @@ def audit(df: DataFrame) -> dict:
         "pushed_filters": "PushedFilters: [" in s and not _only_empty_filters(s),
         "columnar_scan": "Scan parquet" in s,
         "aqe": "AdaptiveSparkPlan" in s,
-        "arrow_eval": ("MapInPandas" in s) or ("ArrowEvalPython" in s),
+        "arrow_eval": any(node in s for node in PYTHON_NODES),
     }
 
 
@@ -55,9 +66,6 @@ def scan_read_schema(df: DataFrame) -> list[str]:
     for m in re.findall(r"ReadSchema: struct<([^>]*)>", s):
         out.append(sorted(c.split(":")[0] for c in m.split(",") if c))
     return out
-
-
-PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
 
 
 def execution_ids(spark) -> set:

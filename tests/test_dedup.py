@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cadastre_pg_spark.operators import dedup as D
-from cadastre_pg_spark.operators.held import release_cached, skipped
+from cadastre_pg_spark.operators.held import hold, release_cached, skipped
 from conftest import SF_UNIT
 
 
@@ -474,3 +474,188 @@ def test_minhash_calibration_estimator_is_roughly_unbiased(spark):
     assert 0.0 <= r.mae < 0.1
     assert r.max_abs_err <= 0.5
     release_cached(out)
+
+
+# ---- every shared bucket cap, pinned on both sides ------------------------
+# Each case returns the op's result at a cap (None = uncapped), the test's
+# own bucket census {report key: member set} computed in Python, and the
+# output columns that name a pair. The hot bucket is the largest one.
+
+
+def _cap_corpus(spark):
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(30))) for i in range(24)]
+    # near-dup pairs: the last word changed
+    for i in range(6):
+        rows.append((100 + i, " ".join(rows[i][1].split(" ")[:-1] + ["tail"])))
+    # the hot cluster: four clones and one variant
+    hot = " ".join(rng.choice(vocab) for _ in range(30))
+    rows += [(200 + i, hot) for i in range(4)] + [(204, hot + " extra")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _band_census(sigs, layouts=((D.BANDS, D.N_HASHES // D.BANDS),), tag=False):
+    out = {}
+    for doc, sig in sigs:
+        for bands, rpb in layouts:
+            for b in range(bands):
+                key = ",".join(str(v) for v in sig[b * rpb : (b + 1) * rpb])
+                out.setdefault((bands, b, key) if tag else (b, key), set()).add(doc)
+    return out
+
+
+def _cap_minhash(spark, cap):
+    docs = _cap_corpus(spark)
+    kw = {} if cap is None else {"max_bucket": cap}
+    sigs = [(r.doc_id, r.sig) for r in D.minhash_signatures(docs).collect()]
+    return D.minhash_lsh_pairs(docs, threshold=0.5, **kw), _band_census(sigs)
+
+
+def _cap_incremental(spark, cap):
+    docs = _cap_corpus(spark)
+    new = docs.filter(F.col("doc_id") % 2 == 0)
+    store = D.minhash_store(docs.filter(F.col("doc_id") % 2 == 1)).persist()
+    kw = {} if cap is None else {"max_bucket": cap}
+    out = D.incremental_neardup(new, store, threshold=0.5, **kw)
+    sigs = [(r.doc_id, r.sig) for r in D.minhash_signatures(docs).collect()]
+    # the cap counts only buckets a new doc touches, store + new
+    census = {
+        k: m for k, m in _band_census(sigs).items() if any(d % 2 == 0 for d in m)
+    }
+    return hold(out, out, store), census
+
+
+def _cap_simhash(spark, cap):
+    docs = _cap_corpus(spark)
+    kw = {} if cap is None else {"max_bucket": cap}
+    census = {}
+    for r in D.simhash(docs).collect():
+        for b in range(4):
+            census.setdefault((b, (r.simhash >> (8 * b)) & 0xFF), set()).add(r.doc_id)
+    return D.simhash_pairs(docs, radius=3, **kw), census
+
+
+def _cap_winnow(spark, cap):
+    docs = _cap_corpus(spark)
+    kw = {} if cap is None else {"max_bucket": cap}
+    census = {}
+    for r in D.winnowing(docs, 4, 4).collect():
+        census.setdefault((r.fph,), set()).add(r.doc_id)
+    return D.winnow_pairs(docs, 4, 4, min_shared=1, **kw), census
+
+
+def _cap_setsim(spark, cap):
+    import math
+
+    docs = _cap_corpus(spark)
+    toks = {r.doc_id: set(r.text.split(" ")) for r in docs.collect()}
+    df = {}
+    for ts in toks.values():
+        for t in ts:
+            df[t] = df.get(t, 0) + 1
+    census = {}
+    for doc, ts in toks.items():
+        plen = len(ts) - math.ceil(8 * len(ts) / 10) + 1
+        for t in sorted(ts, key=lambda t: (df[t], t))[:plen]:
+            census.setdefault((t,), set()).add(doc)
+    out = D.setsim_join(docs, threshold_num=8, threshold_den=10, max_bucket=cap)
+    return out, census
+
+
+def _cap_fuzzy(spark, cap):
+    strs = ["abcde", "abcdf", "abcdx", "abxde", "abcd", "abzz",
+            "xyzzy", "xyzzz", "qrstuv", "qrstuw", "abcdefgh", "abcdefgi"]
+    df = spark.createDataFrame([(s,) for s in strs], "s string")
+    census = {}
+    for s in strs:
+        census.setdefault((f"{s[:2]}|{len(s) // 4}",), set()).add(s)
+    return D.fuzzy_pairs(df, "s", max_dist=2, max_block=cap), census
+
+
+CAP_CASES = {
+    "minhash_lsh_pairs": (_cap_minhash, ("doc_a", "doc_b")),
+    "incremental_neardup": (_cap_incremental, ("doc_a", "doc_b")),
+    "simhash_pairs": (_cap_simhash, ("doc_a", "doc_b")),
+    "winnow_pairs": (_cap_winnow, ("a_id", "b_id")),
+    "setsim_join": (_cap_setsim, ("a_id", "b_id")),
+    "fuzzy_pairs": (_cap_fuzzy, ("s_a", "s_b")),
+}
+
+
+def _run_cap(build, spark, cap):
+    out, census = build(spark, cap)
+    rows = sorted(out.collect())
+    sk = skipped(out)
+    report = {} if sk is None else {tuple(r[:-1]): r[-1] for r in sk.collect()}
+    release_cached(out)
+    return rows, report, census
+
+
+def _sweep_pairs(census):
+    """{bands: candidate pairs} of a tagged band census."""
+    out = {}
+    for (bands, _, _), m in census.items():
+        out.setdefault(bands, set()).update(itertools.combinations(sorted(m), 2))
+    return out
+
+
+@pytest.mark.parametrize("op", sorted(CAP_CASES) + ["lsh_threshold_sweep"])
+def test_bucket_cap_both_sides(spark, op):
+    """Cap at the hot bucket's size: nothing skipped, output == uncapped.
+    Cap one below: the skip report is exactly the buckets over the cap
+    (keys and n, by the test's own census); the output is a subset of
+    the uncapped one and every lost pair meets only in reported
+    buckets (the sweep reports counts, not pairs: its n_pairs per layout
+    must equal the pairs still meeting in a kept bucket)."""
+    if op == "lsh_threshold_sweep":
+        return _sweep_cap_both_sides(spark)
+    build, cols = CAP_CASES[op]
+    full, report, census = _run_cap(build, spark, None)
+    assert not report
+    hot = max(len(m) for m in census.values())
+    at, report_at, _ = _run_cap(build, spark, hot)
+    assert report_at == {} and at == full
+    below, report_below, _ = _run_cap(build, spark, hot - 1)
+    over = {k: len(m) for k, m in census.items() if len(m) > hot - 1}
+    assert report_below == over and over
+    pairs_full = {tuple(r[c] for c in cols) for r in full}
+    pairs_below = {tuple(r[c] for c in cols) for r in below}
+    assert set(below) <= set(full)
+    lost = pairs_full - pairs_below
+    assert lost, "the hot bucket must carry a pair"
+    for a, b in lost:
+        met = {k for k, m in census.items() if a in m and b in m}
+        assert met and met <= set(report_below), (a, b)
+
+
+def _sweep_cap_both_sides(spark):
+    docs = _cap_corpus(spark)
+    configs = ((16, 2), (8, 4), (4, 8))
+    sigs = [(r.doc_id, r.sig) for r in D.minhash_signatures(docs).collect()]
+    census = _band_census(sigs, configs, tag=True)
+
+    def run(cap):
+        kw = {} if cap is None else {"max_bucket": cap}
+        out = D.lsh_threshold_sweep(docs, configs=configs, **kw)
+        rows = sorted(out.collect())
+        report = {tuple(r[:-1]): r[-1] for r in skipped(out).collect()}
+        release_cached(out)
+        return rows, report
+
+    full, report = run(None)
+    assert not report
+    hot = max(len(m) for m in census.values())
+    at, report_at = run(hot)
+    assert report_at == {} and at == full
+    below, report_below = run(hot - 1)
+    over = {k: len(m) for k, m in census.items() if len(m) > hot - 1}
+    assert report_below == over and over
+    # n_pairs per layout == the pairs that still meet in a kept bucket
+    kept = _sweep_pairs({k: m for k, m in census.items() if k not in over})
+    assert {r.bands: r.n_pairs for r in below} == {
+        b: len(p) for b, p in kept.items() if p
+    }
+    assert sum(r.n_pairs for r in below) < sum(r.n_pairs for r in full)

@@ -746,6 +746,30 @@ def test_tiling_is_pure_jvm(spark):
             assert node not in plan, f"{name}: {node}\n{plan}"
 
 
+def _map_in_arrow(spark):
+    from cadastre_pg_spark.operators.similarity import bq_sign_masks
+
+    rows = [(i, [float(i - 32 + j) for j in range(64)]) for i in range(4)]
+    return bq_sign_masks(
+        spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    )
+
+
+def _apply_in_pandas(spark):
+    return spark.range(8).groupBy((F.col("id") % 2).alias("g")).applyInPandas(
+        lambda pdf: pdf.head(1), "g long"
+    )
+
+
+@pytest.mark.parametrize(
+    "build", [_map_in_arrow, _apply_in_pandas], ids=["MapInArrow", "applyInPandas"]
+)
+def test_audit_flags_every_python_node(spark, build):
+    """audit()'s arrow_eval flag reads PYTHON_NODES, so the plan-shape
+    asserts above catch an Arrow map or a grouped pandas apply too."""
+    assert audit(build(spark))["arrow_eval"]
+
+
 # Python nodes of each vector-family query's executed plans at sf0.001
 # (a cached plan counts under every scan that reads it). Every one is
 # a shared Arrow core of operators/similarity.py.
