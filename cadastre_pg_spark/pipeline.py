@@ -28,8 +28,10 @@ whether the stage succeeds or raises.
 
 Every Python stage on the import path runs in one wave
 (`session.one_wave`): at most the session's cores and never more tasks
-than input units, because a Python task pays a fixed latency (~0.35 s
-on a 4-core host) whatever its size. The generators size themselves
+than input units, because a Python task pays a fixed latency whatever
+its size: ~0.07-0.1 s per wave on a 4-core host under
+`worker_daemon`, ~0.3 s under Spark's stock daemon, whose workers
+re-read Spark's archives on every task. The generators size themselves
 from their row counts and polyfill spreads the parcels over the cores.
 The extraction keeps the input's partitioning, one task for a
 single-file pages scan: a hash exchange on `dep_part` spreading it over

@@ -6,9 +6,10 @@ cold, then once more into a fresh base_dir under a job group, and
 prints for every job of that warm call its wall time, the tasks it ran
 and the operator clusters of its stages (the RDD operation graph the
 status store keeps per stage), then the total number of Python tasks:
-tasks of stages that run a Python operator (MapInPandas, MapInArrow,
-ArrowEvalPython, BatchEvalPython) rather than read its output from a
-cache. Last, the census of the warm placement stage's executed plans
+tasks of stages that run a Python operator (plans.audit.PYTHON_NODES:
+MapInPandas, MapInArrow, ArrowEvalPython, BatchEvalPython,
+FlatMapGroupsInPandas) rather than read its output from a cache.
+Last, the census of the warm placement stage's executed plans
 (plans.audit.executed_census): BroadcastExchange and Union nodes,
 Python nodes under a broadcast and elsewhere (e.g. the parcel
 generator feeding the gate aggregate), and scans of the extract
@@ -30,7 +31,11 @@ sys.path.insert(0, REPO)
 
 from cadastre_pg_spark import pipeline  # noqa: E402
 from cadastre_pg_spark.lineage.checkpoints import new_run_id  # noqa: E402
-from cadastre_pg_spark.plans.audit import executed_census, execution_ids  # noqa: E402
+from cadastre_pg_spark.plans.audit import (  # noqa: E402
+    PYTHON_NODES,
+    executed_census,
+    execution_ids,
+)
 from cadastre_pg_spark.session import get_spark  # noqa: E402
 from perfbench import trace as T  # noqa: E402
 from perfbench import workloads as W  # noqa: E402
@@ -48,7 +53,7 @@ def stage_graph(store, sid: int) -> tuple:
     while todo:
         c, under_py = todo.pop(0)
         name = re.sub(r" \(\d+\)$", "", c.name())
-        under_py = under_py or name in T._PYTHON_NODES
+        under_py = under_py or name in PYTHON_NODES
         if not name.startswith("stage ") and name not in names:
             names.append(name)
         for n in T._seq(c.childNodes()):

@@ -3,9 +3,12 @@ text-extraction invariant (distributed engine == single-process oracle,
 BASELINE.json input_hint)."""
 
 import hashlib
+import os
+import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
@@ -14,6 +17,8 @@ from cadastre_pg_spark.data.parcels import generate_parcels, make_parcel
 from cadastre_pg_spark.kernels.geomhash import geometry_hash
 from cadastre_pg_spark.kernels.pip import points_in_polygon
 from cadastre_pg_spark.kernels.textextract import extract_text
+from cadastre_pg_spark.session import one_wave
+from cadastre_pg_spark.worker_daemon import archive_free
 
 
 def test_pages_byte_identity(spark):
@@ -122,3 +127,122 @@ def test_generators_default_rows_equal_fixed_partitions(spark):
     assert rows(generate_pages(spark, 100), "url") == rows(
         generate_pages(spark, 100, partitions=16), "url"
     )
+
+
+def test_python_workers_import_pyspark_from_directory(spark):
+    """A one-wave Python task imports pyspark from its installed
+    directory, and its worker holds no path entry or cached importer of
+    the archives under SPARK_HOME (pyspark.zip, the py4j zip, the
+    jars), which every task's importlib.invalidate_caches would re-read."""
+    home = os.path.realpath(os.environ["SPARK_HOME"]) + os.sep
+
+    def probe(it):
+        import pyspark
+
+        for _ in it:
+            pass
+        archived = sorted(
+            k
+            for k in {*sys.path, *sys.path_importer_cache}
+            if (".zip" in k or ".jar" in k) and os.path.realpath(k).startswith(home)
+        )
+        yield pa.RecordBatch.from_pydict(
+            {"file": [pyspark.__file__], "archived": [archived]}
+        )
+
+    n = 4
+    rows = (
+        spark.range(0, n, 1, one_wave(spark, n))
+        .mapInArrow(probe, "file string, archived array<string>")
+        .collect()
+    )
+    assert rows
+    for r in rows:
+        assert os.path.isfile(r.file), r.file
+        assert r.archived == [], r.archived
+
+
+def _fake_locate(found):
+    """locate() over fake path lists: `found[(name, entry)]` is the
+    (version, from a directory) of `name` at `entry`; the first entry
+    that holds it wins, as on sys.path."""
+
+    def locate(name, entries):
+        return next((found[name, e] for e in entries if (name, e) in found), None)
+
+    return locate
+
+
+HOME = "/spark"
+SPARK_PATH = [
+    "/work",
+    "/spark/python/lib/pyspark.zip",
+    "/spark/python/lib/py4j-src.zip",
+    "/spark/jars/spark-core.jar",
+    "/spark/python/extra",
+    "/deps/user.zip",
+    "/py/lib/python311.zip",
+    "/py/site-packages",
+]
+ZIPPED = {
+    ("pyspark", "/spark/python/lib/pyspark.zip"): ("4.1.2", False),
+    ("py4j", "/spark/python/lib/py4j-src.zip"): ("0.10.9.9", False),
+}
+
+
+def test_worker_daemon_drops_spark_archives():
+    """With the same pyspark and py4j installed in a directory, only the
+    archives under SPARK_HOME leave the path; a directory under it, a
+    zip on PYTHONPATH and the interpreter's own zip stay, in order."""
+    locate = _fake_locate(
+        {
+            **ZIPPED,
+            ("pyspark", "/py/site-packages"): ("4.1.2", True),
+            ("py4j", "/py/site-packages"): ("0.10.9.9", True),
+        }
+    )
+    assert archive_free(SPARK_PATH, HOME, locate) == [
+        "/work",
+        "/spark/python/extra",
+        "/deps/user.zip",
+        "/py/lib/python311.zip",
+        "/py/site-packages",
+    ]
+
+
+@pytest.mark.parametrize(
+    "site, home",
+    [
+        # pyspark is not importable from a directory once the zips go
+        ({("py4j", "/py/site-packages"): ("0.10.9.9", True)}, HOME),
+        # the only other pyspark is itself archived (a zip on PYTHONPATH)
+        (
+            {
+                ("pyspark", "/deps/user.zip"): ("4.1.2", False),
+                ("py4j", "/py/site-packages"): ("0.10.9.9", True),
+            },
+            HOME,
+        ),
+        # the installed pyspark is another version than pyspark.zip's
+        (
+            {
+                ("pyspark", "/py/site-packages"): ("4.0.0", True),
+                ("py4j", "/py/site-packages"): ("0.10.9.9", True),
+            },
+            HOME,
+        ),
+        # py4j is only in Spark's zip
+        ({("pyspark", "/py/site-packages"): ("4.1.2", True)}, HOME),
+        # no SPARK_HOME: nothing is known to be Spark's
+        (
+            {
+                ("pyspark", "/py/site-packages"): ("4.1.2", True),
+                ("py4j", "/py/site-packages"): ("0.10.9.9", True),
+            },
+            None,
+        ),
+    ],
+)
+def test_worker_daemon_falls_back_to_the_path_as_is(site, home):
+    locate = _fake_locate({**ZIPPED, **site})
+    assert archive_free(SPARK_PATH, home, locate) is SPARK_PATH

@@ -3,9 +3,11 @@ engine ships to a cluster as --py-files modules, scripts/
 submit_example.sh). Builds the zip exactly as the ship script does,
 then runs a real spark-submit from a scratch cwd where the repo
 checkout is NOT importable — the driver asserts the package resolved
-from the zip, and a mapInPandas stage proves EXECUTOR-side workers
-import the kernels from the shipped zip too (distributed cell ==
-kernel cell, the house invariant, through the ship path)."""
+from the zip and builds its session through session.get_spark, which
+keeps Spark's stock worker daemon there, and a mapInPandas stage
+proves EXECUTOR-side workers import the kernels from the shipped zip
+too (distributed cell == kernel cell, the house invariant, through the
+ship path)."""
 
 import os
 import subprocess
@@ -17,15 +19,20 @@ REPO = Path(__file__).resolve().parent.parent
 
 JOB = """\
 import pyspark.sql.functions as F
-from pyspark.sql import SparkSession
-
-spark = SparkSession.builder.getOrCreate()
 
 import cadastre_pg_spark
 from cadastre_pg_spark.data import synthetic as S
+from cadastre_pg_spark.session import get_spark
 
 # must come from the shipped zip, not a checkout on sys.path
 assert ".zip" in cadastre_pg_spark.__file__, cadastre_pg_spark.__file__
+
+spark = get_spark(app="pyfiles_smoke", cores=4)
+# a worker daemon cannot import the zipped package when it starts, so
+# the session keeps Spark's stock daemon
+conf = spark.sparkContext.getConf()
+daemon = conf.get("spark.python.daemon.module", "pyspark.daemon")
+assert daemon == "pyspark.daemon", daemon
 
 LEVEL = 5
 key = F.col("id").cast("long")
