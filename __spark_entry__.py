@@ -182,7 +182,9 @@ def q_doc_fingerprint(spark, sf_dir):
 
 
 def q_token_count(spark, sf_dir):
-    return TA.token_count(_docs(spark, sf_dir))
+    from cadastre_pg_spark.operators.corpus import doc_tokens
+
+    return doc_tokens(_docs(spark, sf_dir))
 
 
 def q_quality_score(spark, sf_dir):
@@ -3826,7 +3828,7 @@ def q_heldout_perplexity(spark, sf_dir):
     split (see operators/textanalysis.py:heldout_perplexity)."""
     from cadastre_pg_spark.operators.textanalysis import heldout_perplexity
 
-    return heldout_perplexity(_docs(spark, sf_dir), qmod=5, hash_fn="md5")
+    return heldout_perplexity(_docs(spark, sf_dir), hash_fn="md5")
 
 
 VOCAB_COVERAGE_KS = (100, 1000, 4000)

@@ -40,9 +40,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cadastre_pg_spark.operators.dedup import shingle_hash32, shingle_hash_rows
-
+from .dedup import (
+    n_words,
+    shingle_hash32,
+    shingle_hash_rows,
+    token_hashes,
+    words,
+    words_or_empty,
+)
 from .held import hold
+from .stats import entropy_census, ln_u
 
 MILLION = 1_000_000
 
@@ -53,15 +60,16 @@ def _hash32(col, salt: str, hash_fn: str) -> F.Column:
     return shingle_hash32(F.concat(F.lit(salt), col.cast("string")), hash_fn)
 
 
+def ppm_draw(col, salt: str, hash_fn: str) -> F.Column:
+    """The salted hash of `col` as a parts-per-million draw in
+    [0, 1e6): samplers and splitters compare it with integer ppm
+    thresholds, so no float boundary can differ between engines."""
+    return F.pmod(_hash32(col, salt, hash_fn), F.lit(MILLION))
+
+
 def doc_tokens(docs: DataFrame, keep: tuple = ()) -> DataFrame:
-    """(doc_id, *keep, n_tokens) — whitespace token count, JVM split
-    (same expression as textanalysis.token_count, kept inline so
-    packing is self-contained over any (doc_id, text) table)."""
-    return docs.select(
-        "doc_id",
-        *keep,
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
-    )
+    """(doc_id, *keep, n_tokens) — whitespace token count (`words`)."""
+    return docs.select("doc_id", *keep, n_words(F.col("text")).alias("n_tokens"))
 
 
 def pack_tokens(
@@ -113,7 +121,6 @@ def chunk_docs(
     chunk_size: int = 128,
     stride: int = 96,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
 ) -> DataFrame:
     """Sliding-window token chunking — the context-window splitter
     every pretraining / RAG pipeline runs between cleaning and packing:
@@ -137,7 +144,7 @@ def chunk_docs(
     """
     if chunk_size <= 0 or stride <= 0 or stride > chunk_size:
         raise ValueError("need 0 < stride <= chunk_size")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = words(F.col("text"))
     base = docs.select("doc_id", toks.alias("t"))
     n = F.size("t").cast("long")
     cs, st = F.lit(chunk_size), F.lit(stride)
@@ -182,7 +189,7 @@ def stratified_sample(
     Rates are quantized to parts-per-million so both engines compare
     integers (no float-threshold edge divergence).
     """
-    u = F.pmod(_hash32(F.col("doc_id"), salt, hash_fn), F.lit(MILLION))
+    u = ppm_draw(F.col("doc_id"), salt, hash_fn)
     thresh = F.lit(int(round(default_rate * MILLION)))
     for g, r in sorted(rates.items()):
         thresh = F.when(F.col(group_col) == g, F.lit(int(round(r * MILLION)))).otherwise(
@@ -368,14 +375,7 @@ def budget_mixture(
 
     Returns surviving (doc_id, group, n_tokens, u) rows.
     """
-    toks = docs.select(
-        "doc_id",
-        F.col(group_col).alias("grp"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
-    )
-    stats = toks.groupBy("grp").agg(
-        F.sum(F.col("n_tokens").cast("decimal(28,0)")).cast("double").alias("t_grp")
-    )
+    toks, stats = _group_tokens(docs, group_col)
     w = F.lit(0.0)
     for g, r in sorted(weights.items()):
         w = F.when(F.col("grp") == g, F.lit(float(r))).otherwise(w)
@@ -385,12 +385,36 @@ def budget_mixture(
         ),
         F.lit(MILLION).cast("long"),
     )
-    u = F.pmod(_hash32(F.col("doc_id"), salt, hash_fn), F.lit(MILLION))
+    return _keep_under(toks, stats, thr, salt, hash_fn).select(
+        "doc_id", F.col("grp").alias("stratum"), "n_tokens", "u"
+    )
+
+
+def _group_tokens(docs: DataFrame, group_col: str):
+    """The mixtures' token census: (doc_id, grp, n_tokens) per doc and
+    (grp, t_grp) per group, t_grp the group's token mass summed
+    exactly through DECIMAL."""
+    toks = docs.select(
+        "doc_id",
+        F.col(group_col).alias("grp"),
+        n_words(F.col("text")).alias("n_tokens"),
+    )
+    stats = toks.groupBy("grp").agg(
+        F.sum(F.col("n_tokens").cast("decimal(28,0)")).cast("double").alias("t_grp")
+    )
+    return toks, stats
+
+
+def _keep_under(
+    toks: DataFrame, rates: DataFrame, thr, salt: str, hash_fn: str
+) -> DataFrame:
+    """The mixtures' keep rule: broadcast each group's `rates` row onto
+    its docs and keep a doc iff its ppm draw u < thr (an integer
+    compare; u is kept as a column)."""
     return (
-        toks.join(F.broadcast(stats), "grp")
-        .withColumn("u", u)
-        .filter(F.col("u") < thr)
-        .select("doc_id", F.col("grp").alias("stratum"), "n_tokens", "u")
+        toks.join(F.broadcast(rates), "grp")
+        .withColumn("u", ppm_draw(F.col("doc_id"), salt, hash_fn))
+        .where(F.col("u") < thr)
     )
 
 
@@ -570,7 +594,7 @@ def dsir_logratio(
     add-one smoothing over the OBSERVED vocabulary V of 32-bit token-
     hash buckets — p(h) = (n(h)+1)/(N+V); ln is taken once per
     distinct bucket on the census and quantized to integer micro-nats
-    (round(ln(n+1)*1e6) -> BIGINT), so the per-document accumulation
+    (`stats.ln_u(n + 1)`), so the per-document accumulation
     is an exact order-independent integer sum replayed bitwise by the
     DuckDB twin; the constant per-token normalizer ln(N_t+V)-ln(N_s+V)
     is applied once at the end behind a 6 dp round.
@@ -582,24 +606,15 @@ def dsir_logratio(
     territory); one final doc_id aggregate. No Python, no collect,
     nothing quadratic.
     """
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    ex = docs.select(
-        "doc_id",
-        F.when(is_target, F.lit(1)).otherwise(F.lit(0)).alias("it"),
-        F.explode(toks).alias("tok"),
-    ).select("doc_id", "it", shingle_hash32(F.col("tok"), hash_fn).alias("h"))
+    ex = token_hashes(
+        docs, hash_fn, carry={"it": F.when(is_target, F.lit(1)).otherwise(F.lit(0))}
+    )
     census = ex.groupBy("h").agg(
         F.count(F.lit(1)).alias("n_s"), F.sum("it").alias("n_t")
     )
-
-    def _u(col):
-        return (
-            F.round(F.log((col + F.lit(1)).cast("double")) * F.lit(1e6))
-            .cast("long")
-        )
-
     cu = census.select(
-        "h", (_u(F.col("n_t")) - _u(F.col("n_s"))).alias("u")
+        "h",
+        (ln_u(F.col("n_t") + F.lit(1)) - ln_u(F.col("n_s") + F.lit(1))).alias("u"),
     )
     tot = census.agg(
         F.sum("n_s").alias("ns"),
@@ -607,16 +622,7 @@ def dsir_logratio(
         F.count(F.lit(1)).alias("v"),
     ).select(
         (
-            (
-                F.round(
-                    F.log((F.col("nt") + F.col("v")).cast("double"))
-                    * F.lit(1e6)
-                )
-                - F.round(
-                    F.log((F.col("ns") + F.col("v")).cast("double"))
-                    * F.lit(1e6)
-                )
-            ).cast("long")
+            ln_u(F.col("nt") + F.col("v")) - ln_u(F.col("ns") + F.col("v"))
         ).alias("shift_u")
     )
     per = (
@@ -722,7 +728,7 @@ def hash_split(
     key instead of doc_id, still no exchange, no census, no join."""
     bounds = _ppm_bounds(splits)
     key = F.col(group_col) if group_col else F.col("doc_id")
-    u = F.pmod(_hash32(key, salt, hash_fn), F.lit(MILLION))
+    u = ppm_draw(key, salt, hash_fn)
     return docs.select(
         "doc_id",
         *([key.alias("grp")] if group_col else []),
@@ -799,7 +805,7 @@ def cluster_split(
         F.broadcast(cc) if bcast else cc, "doc_id", "left"
     )
     rep = F.coalesce(F.col("cluster"), F.col("doc_id"))
-    u = F.pmod(_hash32(rep, salt, hash_fn), F.lit(MILLION))
+    u = ppm_draw(rep, salt, hash_fn)
     out = j.select(
         "doc_id",
         rep.alias("rep"),
@@ -855,10 +861,11 @@ def corpus_report(docs: DataFrame) -> DataFrame:
 
     Numeric rule: counts are exact; per-doc quality (already rounded
     to 6 dp) is quantized to integer micro-units and summed as BIGINT
-    (order-independent); entropy uses the micro-nat ln census per lang
-    (<= a handful of rows) with the exact integer combine
-    sum n_l * (u(N) - u(n_l)); every final figure is one double
-    division chain behind a 6 dp round — bitwise in DuckDB.
+    (order-independent); entropy comes from `stats.entropy_census`
+    over lang (<= a handful of rows) with the exact integer combine
+    N * ln_u(N) - sum n_l * ln_u(n_l) (= sum n_l * (ln_u(N) -
+    ln_u(n_l))); every final figure is one double division chain
+    behind a 6 dp round — bitwise in DuckDB.
 
     Scale shape (100 TB): two aggregates over one scan family — a
     global agg (count / distinct-hash / token sum / quality sum) and a
@@ -875,9 +882,7 @@ def corpus_report(docs: DataFrame) -> DataFrame:
         "doc_id",
         "lang",
         F.sha2(F.col("text"), 256).alias("h"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("long")
-        .alias("n_tokens"),
+        n_words(F.col("text")).alias("n_tokens"),
     )
     g = base.join(q, "doc_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -885,17 +890,8 @@ def corpus_report(docs: DataFrame) -> DataFrame:
         F.sum("n_tokens").alias("total_tokens"),
         F.sum("qu").alias("squ"),
     )
-
-    def _u(col):
-        return F.round(F.log(col.cast("double")) * F.lit(1e6)).cast("long")
-
-    langs = base.groupBy("lang").agg(F.count(F.lit(1)).alias("nl"))
-    ent = (
-        langs.crossJoin(g.select(F.col("n_docs").alias("nn")))
-        .select(
-            (F.col("nl") * (_u(F.col("nn")) - _u(F.col("nl")))).alias("eu")
-        )
-        .agg(F.sum("eu").cast("long").alias("seu"))
+    ent = entropy_census(base, [], "lang").select(
+        (F.col("n") * ln_u(F.col("n")) - F.col("s")).alias("seu")
     )
     return g.crossJoin(ent).select(
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -967,7 +963,6 @@ def snapshot_delta(
     old: DataFrame,
     new: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     attr_col: str = "source",
 ) -> DataFrame:
     """Crawl-to-crawl content diff: per (attr, status) counts of
@@ -987,12 +982,12 @@ def snapshot_delta(
     join is co-located and shuffle-free."""
     o = old.select(
         F.col(id_col).alias("id"),
-        F.sha2(F.col(text_col), 256).alias("osha"),
+        F.sha2(F.col("text"), 256).alias("osha"),
         F.col(attr_col).alias("oattr"),
     )
     n = new.select(
         F.col(id_col).alias("id"),
-        F.sha2(F.col(text_col), 256).alias("nsha"),
+        F.sha2(F.col("text"), 256).alias("nsha"),
         F.col(attr_col).alias("nattr"),
     )
     j = o.join(n, "id", "full_outer")
@@ -1016,7 +1011,6 @@ def blocklist_filter(
     docs: DataFrame,
     blocklist: list,
     max_frac_millis: int = 120,
-    text_col: str = "text",
 ) -> DataFrame:
     """C4-style badword filter -> (doc_id, n_tokens, n_flagged,
     n_distinct_flagged, keep): count whole-word occurrences of a
@@ -1041,9 +1035,9 @@ def blocklist_filter(
         if not w or not all(c.isalnum() or c == "_" for c in w):
             raise ValueError(f"blocklist words must be \\w-only: {w!r}")
     pat = r"\b(" + "|".join(sorted(blocklist)) + r")\b"
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    nt = F.size(toks).cast("long")
-    nf = F.regexp_count(F.col(text_col), F.lit(pat)).cast("long")
+    toks = words(F.col("text"))
+    nt = n_words(F.col("text"))
+    nf = F.regexp_count(F.col("text"), F.lit(pat)).cast("long")
     return docs.select(
         "doc_id",
         nt.alias("n_tokens"),
@@ -1123,7 +1117,7 @@ def bloom_contamination(
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     split = docs.withColumn(
-        "_t", F.split(F.trim(F.col("text")), r"\s+")
+        "_t", words(F.col("text"))
     ).select(
         "doc_id",
         sh_expr.alias("sh"),
@@ -1229,18 +1223,7 @@ def temperature_mixture(
     aggregate (map-side partials) broadcast back onto the scan, one
     integer-compare filter, no driver collect, no second corpus scan.
     """
-    toks = docs.select(
-        "doc_id",
-        F.col(group_col).alias("grp"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("long")
-        .alias("n_tokens"),
-    )
-    stats = toks.groupBy("grp").agg(
-        F.sum(F.col("n_tokens").cast("decimal(28,0)"))
-        .cast("double")
-        .alias("t_grp")
-    )
+    toks, stats = _group_tokens(docs, group_col)
     stats = stats.withColumn(
         "s_u", F.floor(F.sqrt(F.col("t_grp")) * F.lit(1e6)).cast("long")
     )
@@ -1259,12 +1242,8 @@ def temperature_mixture(
         stats.crossJoin(F.broadcast(total))
         .select("grp", thr.alias("thr"))
     )
-    u = F.pmod(_hash32(F.col("doc_id"), salt, hash_fn), F.lit(MILLION))
-    return (
-        toks.join(F.broadcast(rates), "grp")
-        .withColumn("u", u)
-        .where(F.col("u") < F.col("thr"))
-        .select("doc_id", "grp", "n_tokens", "u")
+    return _keep_under(toks, rates, F.col("thr"), salt, hash_fn).select(
+        "doc_id", "grp", "n_tokens", "u"
     )
 
 
@@ -1390,11 +1369,7 @@ def curriculum_order(
     )
 
 
-def source_kl_divergence(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_kl_divergence(docs: DataFrame) -> DataFrame:
     """Per-source KL divergence from the corpus unigram distribution —
     the data-mixing drift monitor: KL(P_s || P_corpus) over whitespace
     tokens with add-one smoothing of the source model over the corpus
@@ -1412,11 +1387,11 @@ def source_kl_divergence(
         A_s   = sum_present (c_s+1) * (ln_u(c_s+1) - ln_u c)
         L_s   = sum_present ln_u c;   L_all = sum_vocab ln_u c
 
-    ln_u is the engine-wide micro-nat quantizer round(ln(x)*1e6) on
-    exact integer counts (collocations/mutual_info precedent); every
-    sum above is exact BIGINT arithmetic, and the final
-    kl_nats = (CAST(kl_num)/CAST(D))/1e6 is two fixed-order
-    correctly-rounded divisions — bitwise portable, no rounding grid.
+    ln_u is the engine-wide micro-nat quantizer (`stats.ln_u`) on
+    exact integer counts; every sum above is exact BIGINT arithmetic,
+    and the final kl_nats = (CAST(kl_num)/CAST(D))/1e6 is two
+    fixed-order correctly-rounded divisions — bitwise portable, no
+    rounding grid.
 
     Scale shape: one (source, token) census exchange over the exploded
     corpus, ONE token-partition window pass attaching the corpus count
@@ -1428,13 +1403,8 @@ def source_kl_divergence(
     Output: (source, n_tokens, n_types, kl_num, kl_nats), kl_num the
     exact BIGINT numerator (micro-nats x D) for auditability.
     """
-    u = lambda c: F.round(F.log(c.cast("double")) * F.lit(1e6)).cast("long")
-    txt = F.trim(F.col(text_col))
-    toks = F.when(F.length(txt) > 0, F.split(txt, r"\s+")).otherwise(
-        F.array().cast("array<string>")
-    )
     st = (
-        docs.select(F.col(source_col).alias("source"), F.explode(toks).alias("token"))
+        docs.select("source", F.explode(words_or_empty(F.col("text"))).alias("token"))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("c_s"))
     )
@@ -1451,22 +1421,22 @@ def source_kl_divergence(
     scal = stw.where(F.col("_rn") == 1).agg(
         F.count(F.lit(1)).cast("long").alias("v"),
         F.sum("c").cast("long").alias("n_corpus"),
-        F.sum(u(F.col("c"))).cast("long").alias("l_all"),
+        F.sum(ln_u(F.col("c"))).cast("long").alias("l_all"),
     )
     per = stw.groupBy("source").agg(
         F.sum("c_s").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_types"),
-        F.sum((F.col("c_s") + 1) * (u(F.col("c_s") + 1) - u(F.col("c"))))
+        F.sum((F.col("c_s") + 1) * (ln_u(F.col("c_s") + 1) - ln_u(F.col("c"))))
         .cast("long")
         .alias("_a"),
-        F.sum(u(F.col("c"))).cast("long").alias("_l"),
+        F.sum(ln_u(F.col("c"))).cast("long").alias("_l"),
     )
     d = F.col("n_tokens") + F.col("v")
     kl_num = (
         F.col("_a")
         + F.col("_l")
         - F.col("l_all")
-        + d * (u(F.col("n_corpus")) - u(d))
+        + d * (ln_u(F.col("n_corpus")) - ln_u(d))
     )
     out = per.crossJoin(F.broadcast(scal)).select(
         "source",

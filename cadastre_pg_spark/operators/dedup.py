@@ -11,6 +11,10 @@ Everything below is built from JVM-side primitives (split / transform /
 aggregate / xxhash64 / explode / groupBy) — no Python in any hot path.
 
 Each near-dup computation is written once and every op calls it:
+- `words` / `n_words` / `words_or_empty`: the whitespace tokenizer
+  every text op splits with (its \\x0B hazard is in `words`);
+- `token_hashes`: the hashed-token stream (textanalysis.surprisal,
+  bigram_surprisal, heldout_perplexity and corpus.dsir_logratio);
 - `shingle_hash_rows`: the word k-gram hash rows (minhash, n-gram
   Jaccard, repeated windows, winnowing, and textanalysis.novelty_score,
   corpus.contamination, sketches.group_minhash_sim);
@@ -111,10 +115,37 @@ def norm_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
+def words(text) -> F.Column:
+    """The engine's whitespace tokenizer: split(trim(text), '\\s+'),
+    the twin of DuckDB's regexp_split_to_array(trim(text), '\\s+').
+    An empty or all-whitespace text gives [''] (one empty token), NULL
+    gives NULL.
+
+    Java's \\s matches \\x0B (vertical tab) and RE2's does not, so
+    every op built on this split replays bitwise in its DuckDB oracle
+    only while no document contains \\x0B;
+    tests/test_kernels_text.py asserts that of the generated corpus."""
+    return F.split(F.trim(text), r"\s+")
+
+
+def n_words(text) -> F.Column:
+    """BIGINT token count of `words` ('' counts 1)."""
+    return F.size(words(text)).cast("long")
+
+
+def words_or_empty(text) -> F.Column:
+    """`words` with an empty or all-whitespace text mapped to [] instead
+    of [''] — for ops whose oracle counts no token in a blank text."""
+    t = F.trim(text)
+    return F.when(F.length(t) > 0, F.split(t, r"\s+")).otherwise(
+        F.array().cast("array<string>")
+    )
+
+
 def shingles(text_col, n: int = 3):
     """Word n-gram shingle array, built JVM-side:
     tokens -> transform(sequence) -> concat_ws slices."""
-    tokens = F.split(F.trim(text_col), r"\s+")
+    tokens = words(text_col)
     k = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(0))
     idx = F.sequence(F.lit(0), k - F.lit(1))
     return F.when(
@@ -139,7 +170,6 @@ def shingle_hash_rows(
     docs: DataFrame,
     n_shingle: int,
     hash_fn: str,
-    text_col: str = "text",
     carry: tuple = (),
     pos: bool = False,
     min_tokens: int = 0,
@@ -154,7 +184,7 @@ def shingle_hash_rows(
     no rows. `pos` adds each n-gram's 0-based start position (long).
     `carry` names doc-constant columns to thread through (e.g. a
     length band)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = words(F.col("text"))
     base = docs.select("doc_id", *carry, toks.alias("t")).where(
         F.size("t") >= F.lit(max(n_shingle, min_tokens))
     )
@@ -167,6 +197,27 @@ def shingle_hash_rows(
     at = [F.col("pos").cast("long").alias("pos")] if pos else []
     return base.select("doc_id", *carry, gen).select(
         "doc_id", *carry, *at, shingle_hash32(sg, hash_fn).alias("h")
+    )
+
+
+def token_hashes(
+    docs: DataFrame, hash_fn: str, pos: bool = False, carry: dict | None = None
+) -> DataFrame:
+    """(doc_id, *carry, [pos,] h): one row per whitespace token
+    (`words`) of `text`, h its shingle_hash32 — the hashed-token stream
+    the unigram and bigram models count. `carry` maps names to
+    doc-level Columns threaded through; `pos` adds each token's 0-based
+    position (int)."""
+    carry = carry or {}
+    toks = words(F.col("text"))
+    gen = F.posexplode(toks).alias("pos", "tok") if pos else F.explode(toks).alias("tok")
+    return docs.select(
+        "doc_id", *[c.alias(n) for n, c in carry.items()], gen
+    ).select(
+        "doc_id",
+        *carry,
+        *(["pos"] if pos else []),
+        shingle_hash32(F.col("tok"), hash_fn).alias("h"),
     )
 
 
@@ -483,7 +534,7 @@ def ngram_jaccard_pairs(
     up to 2^-32 collisions): int intersections are ~10x cheaper than
     string intersections and the quadratic-within-band verify is the
     cost center (measured 55 s -> seconds at sf0.1)."""
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    ntok = F.size(words(F.col("text")))
     width = F.lit(NGRAM_BAND_WIDTH)
     band = ((ntok - F.pmod(ntok, width)) / width).cast("long")
     if prefilter == "minhash":
@@ -600,7 +651,7 @@ def simhash(docs: DataFrame, bits: int = 32, hash_fn: str = "xxhash64") -> DataF
     if hash_fn == "md5" and bits > 32:
         raise ValueError("md5 hash mode carries 32 bits")
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
+        "doc_id", F.explode(words(F.col("text"))).alias("tok")
     ).withColumn(
         "h",
         F.xxhash64("tok") if hash_fn == "xxhash64" else shingle_hash32(F.col("tok"), "md5"),
@@ -702,7 +753,6 @@ def segment_lines(
     docs: DataFrame,
     segmenter: str = "newline",
     seg_tokens: int = 5,
-    text_col: str = "text",
     carry_cols: tuple = (),
 ) -> DataFrame:
     """(doc_id, *carry_cols, pos, line): split each document into
@@ -721,11 +771,11 @@ def segment_lines(
         return docs.select(
             "doc_id",
             *carry_cols,
-            F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+            F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
         )
     if segmenter != "tokens":
         raise ValueError(f"unknown segmenter {segmenter!r}")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = words(F.col("text"))
     n = F.greatest(
         F.ceil(F.size(F.col("_t")) / F.lit(float(seg_tokens))).cast("int"),
         F.lit(1),
@@ -879,7 +929,7 @@ def dup_span_stats(
         F.count(F.lit(1)).alias("n_dup"),
         F.sum("c").cast("long").alias("cut_tokens"),
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words(F.col("text"))
     n_win = docs.select(
         "doc_id",
         F.greatest(F.size(toks) - F.lit(w - 1), F.lit(0))
@@ -978,7 +1028,7 @@ def _rarity_ordered(docs: DataFrame):
     tok = docs.select(
         F.col("doc_id").alias("id"),
         F.explode(
-            F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
+            F.array_distinct(words(F.col("text")))
         ).alias("token"),
     )
     census = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df")).persist()
@@ -1322,9 +1372,7 @@ def keep_best(
     cc = dedup_clusters(docs, threshold=threshold, hash_fn=hash_fn)
     toks = docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias(
-            "n_tokens"
-        ),
+        n_words(F.col("text")).alias("n_tokens"),
     )
     j = cc.join(toks, "doc_id")
     w_cl = Window.partitionBy("cluster")
@@ -1480,7 +1528,7 @@ def sorted_neighborhood(
     )
     toks = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.array_distinct(F.split(F.trim(F.col("text")), r"\s+")).alias("t"),
+        F.array_distinct(words(F.col("text"))).alias("t"),
     )
     ta = toks.select(
         F.col("doc_id").alias("doc_a"), F.col("t").alias("t_a")
@@ -1536,9 +1584,7 @@ def scrub_spans(
     ).distinct()
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias(
-            "tpos", "tok"
-        ),
+        F.posexplode(words(F.col("text"))).alias("tpos", "tok"),
     ).select(
         "doc_id", F.col("tpos").cast("long").alias("tpos"), "tok"
     )
@@ -1553,9 +1599,7 @@ def scrub_spans(
     )
     base = docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("long")
-        .alias("n_tokens"),
+        n_words(F.col("text")).alias("n_tokens"),
     )
     return base.join(agg, "doc_id", "left").select(
         "doc_id",

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .graph import connected_components
 from .held import hold
+from .stats import entropy_census, ln_u
 
 
 def _neighbors8(cell, n: int):
@@ -457,31 +458,20 @@ def cell_entropy(
     ent_u) where entropy in nats = ent_u / (n * 1e6) and
     ent_u = n * ln_u(n) - sum_t n_t * ln_u(n_t) over category counts.
 
-    Exactness: the mutual_info micro-nat quantizer (round(ln(x)*1e6)
-    BIGINT once per count) turns the entropy into exact integer
-    products and sums — order-independent, bitwise in the SQL twin.
+    Exactness: `stats.entropy_census` over (cell, category) — the
+    micro-nat quantizer `stats.ln_u` once per count — turns the
+    entropy into exact integer products and sums: order-independent,
+    bitwise in the SQL twin.
 
-    Scale shape: one (cell, category) hash aggregate with map-side
-    partials, then a rollup to cells — both exchanges on narrow keys;
-    no window, no join.
+    Scale shape: the census's two narrow-key exchanges; no window, no
+    join.
     """
-    u = lambda c: F.round(F.log(c.cast("double")) * F.lit(1e6)).cast("long")
-    census = (
-        points.select(F.col(cell_col).alias("cell"), F.col(cat_col).alias("cat"))
-        .groupBy("cell", "cat")
-        .agg(F.count(F.lit(1)).alias("n_t"))
+    census = points.select(
+        F.col(cell_col).alias("cell"), F.col(cat_col).alias("cat")
     )
-    return (
-        census.groupBy("cell")
-        .agg(
-            F.sum("n_t").alias("n"),
-            F.count(F.lit(1)).alias("n_cats"),
-            F.sum(F.col("n_t") * u(F.col("n_t"))).alias("sum_t"),
-        )
-        .select(
-            "cell",
-            F.col("n").cast("long").alias("n"),
-            F.col("n_cats").cast("long").alias("n_cats"),
-            (F.col("n") * u(F.col("n")) - F.col("sum_t")).alias("ent_u"),
-        )
+    return entropy_census(census, ["cell"], "cat").select(
+        "cell",
+        "n",
+        F.col("n_distinct").alias("n_cats"),
+        (F.col("n") * ln_u(F.col("n")) - F.col("s")).alias("ent_u"),
     )

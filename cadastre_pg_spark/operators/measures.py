@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .stats import entropy_census, ln_u
+
+
 def _zero4() -> Column:
     # built lazily — F.lit at module import would require a live session
     return F.struct(
@@ -504,38 +507,23 @@ def location_entropy(
     routine movement, high = exploratory), pairing with
     radius_of_gyration (spatial extent) and trip_segments (dynamics).
 
-    Exactness: the engine-wide micro-nat quantizer (cell_entropy /
-    mutual_info precedent): ent_u = n*ln_u(n) - sum_c n_c*ln_u(n_c)
-    is exact BIGINT arithmetic; ent_nats = (ent_u / n) / 1e6 is two
-    fixed-order correctly-rounded divisions (n >= 1 by construction).
+    Exactness: `stats.entropy_census` over (key, cell): ent_u =
+    n*ln_u(n) - sum_c n_c*ln_u(n_c) is exact BIGINT arithmetic;
+    ent_nats = (ent_u / n) / 1e6 is two fixed-order correctly-rounded
+    divisions (n >= 1 by construction).
 
-    Scale shape: one (key, cell) hash aggregate with map-side
-    partials, then the key rollup — two narrow-key exchanges, no
-    window, no join. Output (key, n_points, n_cells, ent_u, ent_nats).
+    Scale shape: the census's two narrow-key exchanges, no window, no
+    join. Output (key, n_points, n_cells, ent_u, ent_nats).
     """
-    u = lambda c: F.round(F.log(c.cast("double")) * F.lit(1e6)).cast("long")
-    census = (
-        pts.select(F.col(key_col), F.col(cell_col).alias("cell"))
-        .groupBy(key_col, "cell")
-        .agg(F.count(F.lit(1)).alias("n_c"))
-    )
-    per = census.groupBy(key_col).agg(
-        F.sum("n_c").cast("long").alias("n_points"),
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.sum(F.col("n_c") * u(F.col("n_c"))).cast("long").alias("_s"),
-    )
-    ent_u = (F.col("n_points") * u(F.col("n_points")) - F.col("_s")).cast(
-        "long"
-    )
-    return per.select(
+    n = F.col("n")
+    ent_u = (n * ln_u(n) - F.col("s")).cast("long")
+    census = pts.select(F.col(key_col), F.col(cell_col).alias("cell"))
+    return entropy_census(census, [key_col], "cell").select(
         key_col,
-        "n_points",
-        "n_cells",
+        n.alias("n_points"),
+        F.col("n_distinct").alias("n_cells"),
         ent_u.alias("ent_u"),
-        (
-            (ent_u.cast("double") / F.col("n_points").cast("double"))
-            / F.lit(1e6)
-        ).alias("ent_nats"),
+        ((ent_u.cast("double") / n.cast("double")) / F.lit(1e6)).alias("ent_nats"),
     )
 
 

@@ -331,35 +331,34 @@ def skyline2d(
     return hold(out, tb)
 
 
-def mutual_info(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    """Mutual information census between two discrete columns (the
-    dependence screen between, e.g., event type and hour-of-day).
-    Output one row per observed (a, b) cell: (a, b, n_ab, n_a, n_b,
-    mi_u) where mi_u = n_ab * (ln_u(n_ab) + ln_u(N) - ln_u(n_a)
-    - ln_u(n_b)) in integer MICRO-NATS; MI in nats =
-    sum(mi_u) / (N * 1e6).
+def ln_u(col) -> F.Column:
+    """The engine's micro-nat quantizer: round(ln(x) * 1e6) as BIGINT.
 
-    Numeric rule (the surprisal micro-nat pattern): ln is taken once
-    per distinct count and quantized to round(ln(x)*1e6) BIGINT, so
-    every product/sum is exact integer arithmetic — order-independent,
-    replayed exactly by the SQL twin.
+    Every information measure (surprisal, PMI, entropy, KL, PSI, DSIR)
+    takes ln once per distinct integer count through this and adds the
+    results as exact BIGINTs — order-independent, so each DuckDB
+    oracle replays it with CAST(round(ln(x) * 1e6) AS BIGINT)."""
+    return F.round(F.log(col.cast("double")) * F.lit(1e6)).cast("long")
 
-    Scale shape: ONE scan — the (a, b) contingency aggregate; the a-
-    and b-marginals and the total are rollups of that (tiny) census,
-    broadcast back onto it. No second pass over the data.
-    """
-    u = lambda c: F.round(F.log(c.cast("double")) * F.lit(1e6)).cast("long")
-    nab = (
-        df.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .persist()
-    )
+
+def pmi_census(pairs: DataFrame, min_count: int | None = None) -> DataFrame:
+    """(a, b, n_ab, n_a, n_b, pmi_u) over the (a, b) rows of `pairs`,
+    one row per pair (seen at least `min_count` times when given):
+    n_a / n_b are the a- and b-marginals over ALL pairs, N their
+    total, and pmi_u = ln_u(n_ab) + ln_u(N) - ln_u(n_a) - ln_u(n_b) in
+    integer micro-nats.
+
+    Scale shape: ONE scan — the (a, b) contingency aggregate, persisted
+    and held by the result (free it with `release_cached`); the
+    marginals and the total are rollups of that census, broadcast back
+    onto it. No second pass over the data."""
+    nab = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab")).persist()
     na = nab.groupBy("a").agg(F.sum("n_ab").alias("n_a"))
     nb = nab.groupBy("b").agg(F.sum("n_ab").alias("n_b"))
-    tot = nab.agg(u(F.sum("n_ab")).alias("ln_n_u"))
+    tot = nab.agg(ln_u(F.sum("n_ab")).alias("ln_n_u"))
+    kept = nab if min_count is None else nab.where(F.col("n_ab") >= min_count)
     out = (
-        nab.join(F.broadcast(na), "a")
+        kept.join(F.broadcast(na), "a")
         .join(F.broadcast(nb), "b")
         .crossJoin(F.broadcast(tot))
         .select(
@@ -369,12 +368,46 @@ def mutual_info(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
             "n_a",
             "n_b",
             (
-                F.col("n_ab")
-                * (u(F.col("n_ab")) + F.col("ln_n_u") - u(F.col("n_a")) - u(F.col("n_b")))
-            ).alias("mi_u"),
+                ln_u(F.col("n_ab")) + F.col("ln_n_u")
+                - ln_u(F.col("n_a")) - ln_u(F.col("n_b"))
+            ).alias("pmi_u"),
         )
     )
     return hold(out, nab)
+
+
+def entropy_census(df: DataFrame, keys: list, cat: str) -> DataFrame:
+    """Per-key census of the categorical column `cat`: (*keys, n,
+    n_distinct, s) with n the rows, n_distinct the distinct categories
+    and s = sum_c n_c * ln_u(n_c) over the category counts — exact
+    BIGINT sums. The entropy in nats is (n * ln_u(n) - s) / n / 1e6;
+    each op closes it in the division order its oracle replays.
+
+    Scale shape: one (*keys, cat) hash aggregate with map-side
+    partials, then the key rollup — two narrow-key exchanges, no
+    window, no join."""
+    census = df.groupBy(*keys, cat).agg(F.count(F.lit(1)).alias("n_c"))
+    return census.groupBy(*keys).agg(
+        F.sum("n_c").cast("long").alias("n"),
+        F.count(F.lit(1)).cast("long").alias("n_distinct"),
+        F.sum(F.col("n_c") * ln_u(F.col("n_c"))).cast("long").alias("s"),
+    )
+
+
+def mutual_info(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Mutual information census between two discrete columns (the
+    dependence screen between, e.g., event type and hour-of-day).
+    Output one row per observed (a, b) cell: (a, b, n_ab, n_a, n_b,
+    mi_u) where mi_u = n_ab * pmi_u (`pmi_census`) in integer
+    MICRO-NATS; MI in nats = sum(mi_u) / (N * 1e6). Every product and
+    sum is exact integer arithmetic — order-independent, replayed
+    exactly by the SQL twin."""
+    pmi = pmi_census(df.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")))
+    out = pmi.select(
+        "a", "b", "n_ab", "n_a", "n_b",
+        (F.col("n_ab") * F.col("pmi_u")).alias("mi_u"),
+    )
+    return hold(out, pmi)
 
 
 def acf_lag(
@@ -829,7 +862,7 @@ def poisson_bootstrap(
     codegen; the replicate arrays are built per GROUP row, so sorting
     cost is n_groups * B log B, nothing at data scale.
     """
-    from cadastre_pg_spark.operators.corpus import _hash32
+    from cadastre_pg_spark.operators.corpus import ppm_draw
 
     if not (0 <= 2 * k_trim < n_reps):
         raise ValueError("need 0 <= 2*k_trim < n_reps")
@@ -841,9 +874,7 @@ def poisson_bootstrap(
         F.sum(q).cast("long").alias("sq"),
     ]
     for b in range(n_reps):
-        u = F.pmod(
-            _hash32(F.col(id_col), f"b{b}:", hash_fn), F.lit(1_000_000)
-        )
+        u = ppm_draw(F.col(id_col), f"b{b}:", hash_fn)
         w = (
             F.when(u < F.lit(BOOT_PPM[0]), F.lit(0))
             .when(u < F.lit(BOOT_PPM[1]), F.lit(1))
@@ -1282,13 +1313,11 @@ def cohen_kappa(df: DataFrame, gold_col: str, pred_col: str) -> DataFrame:
     return hold(out, cells)
 
 
-def psi_drift(
-    df: DataFrame,
-    value_col: str,
-    split_col: str,
-    cuts,
-    unit: int = 10**9,
-) -> DataFrame:
+# psi_drift's per-bin term quantum: floor(term * PSI_UNIT) -> BIGINT
+PSI_UNIT = 10**9
+
+
+def psi_drift(df: DataFrame, value_col: str, split_col: str, cuts) -> DataFrame:
     """Population Stability Index between the split_col=True baseline
     and the False comparison population — the BINNED drift metric that
     pairs with ks_two_sample's continuous statistic (PSI is what a
@@ -1300,10 +1329,10 @@ def psi_drift(
     PSI = Sum_b (p_a - p_b) * ln(p_a / p_b) with add-one smoothing
     p = (n + 1) / (N + n_bins), so empty bins are defined and every
     count is a positive integer. Numeric rule: the log-ratio is exact
-    integer micro-nats (u(na+1) + u(NB+B) - u(NA+B) - u(nb+1), the
-    surprisal quantizer — ln only ever sees integers), each bin's term
-    is one identical-order double product quantized by the portable
-    floor(term * unit), and the cross-bin sum is an exact BIGINT.
+    integer micro-nats (ln_u(na+1) + ln_u(NB+B) - ln_u(NA+B) -
+    ln_u(nb+1) — ln only ever sees integers), each bin's term is one
+    identical-order double product quantized by the portable
+    floor(term * PSI_UNIT), and the cross-bin sum is an exact BIGINT.
 
     Scale shape (100 TB): the corpus collapses onto n_bins keys in one
     map-side-partial groupBy; the literal bin table, the one-row
@@ -1339,20 +1368,16 @@ def psi_drift(
         F.sum("n_a").cast("long").alias("ta"),
         F.sum("n_b").cast("long").alias("tb"),
     )
-
-    def _u(col):
-        return F.round(F.log(col.cast("double")) * F.lit(1e6)).cast("long")
-
     wb = full.crossJoin(F.broadcast(tot))
     da = (F.col("ta") + F.lit(n_bins)).cast("long")
     db = (F.col("tb") + F.lit(n_bins)).cast("long")
     pa = (F.col("n_a") + F.lit(1)).cast("double") / da.cast("double")
     pb = (F.col("n_b") + F.lit(1)).cast("double") / db.cast("double")
     lnr_u = (
-        _u(F.col("n_a") + F.lit(1))
-        + _u(db)
-        - _u(da)
-        - _u(F.col("n_b") + F.lit(1))
+        ln_u(F.col("n_a") + F.lit(1))
+        + ln_u(db)
+        - ln_u(da)
+        - ln_u(F.col("n_b") + F.lit(1))
     )
     term = (pa - pb) * (lnr_u.cast("double") / F.lit(1e6))
     binned = wb.select(
@@ -1361,7 +1386,7 @@ def psi_drift(
         "n_b",
         F.round(pa, 6).alias("p_a"),
         F.round(pb, 6).alias("p_b"),
-        F.floor(term * F.lit(float(unit))).cast("long").alias("term_u"),
+        F.floor(term * F.lit(float(PSI_UNIT))).cast("long").alias("term_u"),
     )
     psi = binned.agg(F.sum("term_u").cast("long").alias("su"))
     return binned.crossJoin(F.broadcast(psi)).select(
@@ -1370,7 +1395,7 @@ def psi_drift(
         "n_b",
         "p_a",
         "p_b",
-        F.round(F.col("su").cast("double") / F.lit(float(unit)), 6).alias(
+        F.round(F.col("su").cast("double") / F.lit(float(PSI_UNIT)), 6).alias(
             "psi"
         ),
     )

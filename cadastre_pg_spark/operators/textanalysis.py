@@ -8,10 +8,20 @@ scalar derivations (P-group, cadastre-pg/src/cli.rs:842-910,984-1021)
 from cadastre attributes to web-text quality signals.
 """
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import (
+    n_words,
+    segment_lines,
+    shingle_hash_rows,
+    shingles,
+    token_hashes,
+    words,
+    words_or_empty,
+)
 from .held import hold
+from .stats import entropy_census, ln_u, pmi_census
 
 # (lang, keyword) stopword table for the n-gram language heuristic.
 # Occurrence counting uses the replace-length trick so the identical
@@ -39,14 +49,6 @@ def occurrences_sql(expr: str, kw: str) -> str:
     )
 
 
-def token_count(docs: DataFrame) -> DataFrame:
-    """Whitespace token count per doc (JVM split)."""
-    return docs.select(
-        "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
-    )
-
-
 def quality_score(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword quality signals + composite score.
 
@@ -55,7 +57,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     text = F.col("text")
     padded = F.concat(F.lit(" "), text, F.lit(" "))
     n_chars = F.length(text).cast("long")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+")).cast("long")
+    n_tokens = n_words(text)
     n_punct = (
         F.length(text) - F.length(F.regexp_replace(text, "[.!?,;:]", ""))
     ).cast("long")
@@ -153,8 +155,6 @@ def repetition_scores(docs: DataFrame, max_n: int = 3) -> DataFrame:
     array_distinct), one scan, no shuffle; exact DuckDB twin in
     __spark_entry__.
     """
-    from cadastre_pg_spark.operators.dedup import shingles
-
     cols = []
     for n in range(1, max_n + 1):
         sg = shingles(F.col("text"), n)
@@ -217,7 +217,7 @@ def bm25_score(
     """
     text = F.col("text")
     padded = F.concat(F.lit(" "), text, F.lit(" "))
-    dl = F.size(F.split(F.trim(text), r"\s+")).cast("long")
+    dl = n_words(text)
     tf_cols = [
         occurrences(padded, f" {t} ").alias(f"tf_{i}") for i, t in enumerate(terms)
     ]
@@ -322,14 +322,14 @@ EMAIL_RE = r"[a-z0-9._]+@[a-z0-9.-]+\.[a-z]{2,}"
 PHONE_RE = r"\+[0-9]{7,15}"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """PII scrub — the redaction pass a web-corpus pipeline runs before
     training-data release (reference analog: the P4/P8 cleanup family;
     masking instead of numeric cast). Map-only JVM regex: counts each
     PII class, then masks in a fixed order (emails first so a phone
     inside a local-part can't double-mask). Returns doc_id + counts +
     the redacted text for downstream stages."""
-    t = F.col(text_col)
+    t = F.col("text")
     red = F.regexp_replace(
         F.regexp_replace(t, EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
     )
@@ -351,8 +351,8 @@ def surprisal(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     semantics (both engines hash identically).
 
     Numeric rule: ln is taken ONCE PER DISTINCT BUCKET on the census
-    and quantized to integer micro-nats (round(ln(n)*1e6) -> BIGINT),
-    so the per-document accumulation is an exact integer sum —
+    and quantized to integer micro-nats (`stats.ln_u`), so the
+    per-document accumulation is an exact integer sum —
     order-independent, replayed exactly by the DuckDB twin; the final
     (lnN - su/T)/1e6 is three correctly-rounded double ops behind a
     6 dp round (the hll_distinct ln-behind-round policy).
@@ -364,24 +364,10 @@ def surprisal(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     handles — the build side is one row per bucket, the probe side
     splits. One final doc_id aggregate. No Python, no collect.
     """
-    from cadastre_pg_spark.operators.dedup import shingle_hash32
-
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    ex = docs.select(
-        "doc_id", F.explode(toks).alias("tok")
-    ).select("doc_id", shingle_hash32(F.col("tok"), hash_fn).alias("h"))
+    ex = token_hashes(docs, hash_fn)
     census = ex.groupBy("h").agg(F.count(F.lit(1)).alias("n"))
-    cu = census.select(
-        "h",
-        F.round(F.log(F.col("n").cast("double")) * F.lit(1e6))
-        .cast("long")
-        .alias("u"),
-    )
-    tot = census.agg(
-        F.round(F.log(F.sum("n").cast("double")) * F.lit(1e6))
-        .cast("long")
-        .alias("ln_n_u")
-    )
+    cu = census.select("h", ln_u(F.col("n")).alias("u"))
+    tot = census.agg(ln_u(F.sum("n")).alias("ln_n_u"))
     per = (
         ex.join(cu, "h")
         .groupBy("doc_id")
@@ -431,52 +417,38 @@ def bpe_token_count(docs: DataFrame) -> DataFrame:
     )
 
 
-def collocations(
-    docs: DataFrame,
-    min_count: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def collocations(docs: DataFrame, min_count: int = 2) -> DataFrame:
     """Adjacent-token collocation census with pointwise mutual
     information — the phrase/named-entity discovery signal for corpus
     curation ("new york" vs chance co-occurrence). One row per bigram
     with n_ab >= min_count: (a, b, n_ab, n_a, n_b, pmi_u) where
     pmi_u = ln_u(n_ab) + ln_u(N) - ln_u(n_a) - ln_u(n_b) in integer
-    MICRO-NATS (the mutual_info/surprisal quantizer: round(ln(x)*1e6)
-    BIGINT once per distinct count, then exact integer adds); n_a /
-    n_b are the left/right positional marginals over ALL bigrams, N
-    the total bigram count.
+    MICRO-NATS (`stats.ln_u` once per distinct count, then exact
+    integer adds); n_a / n_b are the left/right positional marginals
+    over ALL bigrams, N the total bigram count.
 
     The skip-gram census at window 1: its scale shape is
     skipgram_pmi's with one in-row arrays_zip.
     """
-    return skipgram_pmi(docs, window=1, min_count=min_count, text_col=text_col)
+    return skipgram_pmi(docs, window=1, min_count=min_count)
 
 
-def skipgram_pmi(
-    docs: DataFrame,
-    window: int = 3,
-    min_count: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def skipgram_pmi(docs: DataFrame, window: int = 3, min_count: int = 2) -> DataFrame:
     """Directional skip-gram co-occurrence census with PMI — the
     word2vec/GloVe context statistic generalizing collocations from
     adjacent bigrams to all ordered pairs (a, b) where b follows a
     within `window` positions (distances pooled, the standard context
     window). Output one row per pair with n_ab >= min_count:
-    (a, b, n_ab, n_a, n_b, pmi_u), pmi_u in integer micro-nats via the
-    collocations quantizer; n_a / n_b are left/right positional
-    marginals over ALL skip-gram pairs, N their total.
+    (a, b, n_ab, n_a, n_b, pmi_u) from `stats.pmi_census` (the census
+    mutual_info reads); n_a / n_b are left/right positional marginals
+    over ALL skip-gram pairs, N their total.
 
     Scale shape: pairs come from `window` in-row arrays_zip slices
     flattened and exploded in one projection (no self-join on
-    position, no window function); ONE (a, b) hash aggregate with
-    map-side partials is the only full-data exchange; marginals are
-    rollups of the vocabulary-sized census broadcast back onto it —
-    identical topology to collocations, fan-out x window.
+    position, no window function); the (a, b) census is the only
+    full-data exchange — fan-out x window over collocations.
     """
-    u = lambda c: F.round(F.log(c.cast("double")) * F.lit(1e6)).cast("long")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = docs.select(toks.alias("t")).where(F.size("t") >= 2)
+    base = docs.select(words(F.col("text")).alias("t")).where(F.size("t") >= 2)
     nsz = F.size("t")
     per_d = [
         F.arrays_zip(
@@ -490,28 +462,7 @@ def skipgram_pmi(
     sg = base.select(
         F.explode(F.flatten(F.array(*per_d))).alias("p")
     ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-    nab = sg.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab")).persist()
-    na = nab.groupBy("a").agg(F.sum("n_ab").alias("n_a"))
-    nb = nab.groupBy("b").agg(F.sum("n_ab").alias("n_b"))
-    tot = nab.agg(u(F.sum("n_ab")).alias("ln_n_u"))
-    out = (
-        nab.where(F.col("n_ab") >= min_count)
-        .join(F.broadcast(na), "a")
-        .join(F.broadcast(nb), "b")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "a",
-            "b",
-            "n_ab",
-            "n_a",
-            "n_b",
-            (
-                u(F.col("n_ab")) + F.col("ln_n_u")
-                - u(F.col("n_a")) - u(F.col("n_b"))
-            ).alias("pmi_u"),
-        )
-    )
-    return hold(out, nab)
+    return pmi_census(sg, min_count)
 
 
 def gopher_rules(
@@ -546,7 +497,7 @@ def gopher_rules(
     column expressions over (doc_id, text); no shuffle, no Python, no
     explode (line censuses use regexp_count, not split+explode)."""
     text = F.col("text")
-    n_words = F.size(F.split(F.trim(text), r"\s+")).cast("long")
+    nw = n_words(text)
     nonspace = F.length(F.regexp_replace(text, r"\s", "")).cast("long")
     alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("long")
     n_hash = (
@@ -571,13 +522,13 @@ def gopher_rules(
             6,
         )
 
-    mwl = ratio(nonspace, n_words)
-    sym = ratio(n_hash + n_ellip, n_words)
+    mwl = ratio(nonspace, nw)
+    sym = ratio(n_hash + n_ellip, nw)
     bul = ratio(n_bullet, n_lines)
     ell = ratio(n_ellip_line, n_lines)
     alf = ratio(alpha, nonspace)
     r_words = (
-        (n_words >= min_words) & (n_words <= max_words)
+        (nw >= min_words) & (nw <= max_words)
     ).cast("int")
     r_mwl = (
         (mwl >= F.lit(float(min_mwl))) & (mwl <= F.lit(float(max_mwl)))
@@ -591,7 +542,7 @@ def gopher_rules(
     ).cast("int")
     return docs.select(
         "doc_id",
-        n_words.alias("n_words"),
+        nw.alias("n_words"),
         mwl.alias("mean_word_len"),
         sym.alias("symbol_ratio"),
         bul.alias("bullet_ratio"),
@@ -653,6 +604,18 @@ def script_ratios(docs: DataFrame) -> DataFrame:
     )
 
 
+def _bigrams(ex: DataFrame) -> DataFrame:
+    """(doc_id, hp, h): every token hash of a (doc_id, pos, h) stream
+    after the first of its document, with its predecessor's hash hp —
+    one doc_id window exchange over narrow int rows."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return (
+        ex.withColumn("hp", F.lag("h").over(w))
+        .filter(F.col("hp").isNotNull())
+        .select("doc_id", "hp", "h")
+    )
+
+
 def bigram_surprisal(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """Per-document mean CONDITIONAL bigram surprisal -> (doc_id,
     n_bigrams, surprisal2): mean over adjacent token pairs of
@@ -664,8 +627,8 @@ def bigram_surprisal(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     n(prev,tok) >= 1 and no smoothing/backoff is needed.
 
     Numeric rule (the surprisal policy): ln is quantized to integer
-    micro-nats once per distinct census entry (round(ln(n)*1e6) ->
-    BIGINT) for BOTH censuses, so each pair contributes the exact
+    micro-nats (`stats.ln_u`) once per distinct census entry for BOTH
+    censuses, so each pair contributes the exact
     integer u(prev) - u(prev,tok) and the per-document accumulation is
     an order-independent BIGINT sum; the final mean is one division
     behind a 6 dp round, replayed exactly by the DuckDB twin.
@@ -675,28 +638,11 @@ def bigram_surprisal(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     censuses are map-side-partial counts on 8/16-byte keys; the two
     scoring joins are Zipf-skewed probe-vs-small-build (AQE skew
     territory); one final doc_id aggregate. No Python, no collect."""
-    from pyspark.sql import Window
-
-    from cadastre_pg_spark.operators.dedup import shingle_hash32
-
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    ex = docs.select(
-        "doc_id", F.posexplode(toks).alias("pos", "tok")
-    ).select("doc_id", "pos", shingle_hash32(F.col("tok"), hash_fn).alias("h"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    pairs = (
-        ex.withColumn("hp", F.lag("h").over(w))
-        .filter(F.col("hp").isNotNull())
-        .select("doc_id", "hp", "h")
-    )
+    pairs = _bigrams(token_hashes(docs, hash_fn, pos=True))
     big = pairs.groupBy("hp", "h").agg(F.count(F.lit(1)).alias("nb"))
     uni = pairs.groupBy("hp").agg(F.count(F.lit(1)).alias("nu"))
-
-    def _u(col):
-        return F.round(F.log(col.cast("double")) * F.lit(1e6)).cast("long")
-
-    bu = big.select("hp", "h", _u(F.col("nb")).alias("ub"))
-    uu = uni.select("hp", _u(F.col("nu")).alias("uu"))
+    bu = big.select("hp", "h", ln_u(F.col("nb")).alias("ub"))
+    uu = uni.select("hp", ln_u(F.col("nu")).alias("uu"))
     per = (
         pairs.join(bu, ["hp", "h"])
         .join(uu, "hp")
@@ -742,8 +688,6 @@ def novelty_score(
     (codegen concat/hash, never an interpreted transform() lambda);
     the per-(doc, h) dedup is one extra narrow 16-byte-row exchange
     instead of in-row array_distinct."""
-    from cadastre_pg_spark.operators.dedup import shingle_hash_rows
-
     ex = shingle_hash_rows(docs, n_shingle, hash_fn).distinct()
     first = ex.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     per = (
@@ -766,7 +710,7 @@ def novelty_score(
     )
 
 
-def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k TF-IDF terms per document — the classic keyword /
     representative-term extraction step (feature selection for corpus
     clustering, index-term picking). Output one row per kept term:
@@ -775,9 +719,9 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame
 
     Numeric rule: idf is taken ONCE PER DISTINCT TOKEN on the census
     and quantized to integer micro-nats (round(ln(N/df)*1e6) BIGINT —
-    the collocations/surprisal quantizer), so score_u = tf * idf_u is
-    EXACT integer arithmetic and the per-doc ranking has no float
-    ties — the DuckDB twin replays it bit-for-bit.
+    `stats.ln_u`'s rounding over a ratio, not a count), so score_u =
+    tf * idf_u is EXACT integer arithmetic and the per-doc ranking has
+    no float ties — the DuckDB twin replays it bit-for-bit.
 
     Scale shape (100 TB): two hash aggregates with map-side partials
     — (doc, token) term counts, then the vocabulary-sized token
@@ -786,11 +730,9 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame
     broadcasts when it fits); the final top-k is a per-doc window over
     each document's own DISTINCT terms (bounded by doc length, never
     corpus-sized partitions)."""
-    from pyspark.sql import Window as W
-
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
+        F.explode(words(F.col("text"))).alias("token"),
     )
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("nd"))
@@ -809,7 +751,7 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame
             .alias("idf_u"),
         )
     )
-    w = W.partitionBy("doc_id").orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score_u").desc(), F.col("token").asc()
     )
     return (
@@ -830,7 +772,7 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame
     )
 
 
-def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Per-document character-level Shannon entropy in nats ->
     (doc_id, n_chars_counted, n_distinct_chars, entropy): the
     compression-proxy quality signal (gibberish and key-mash pages
@@ -838,18 +780,16 @@ def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     corpus filters like CCNet/Gopher pair with token-level rules.
 
     entropy = ln(n) - (1/n) * sum_c count_c * ln(count_c), computed
-    under the surprisal/mutual_info micro-nat rule: ln is taken once
-    per (doc, char) census row and quantized round(ln(c)*1e6) ->
-    BIGINT, so the accumulation is an exact order-independent integer
-    sum; the closing (lnN_u - su/n)/1e6 is three correctly-rounded
-    double ops behind a 6 dp round (engine-parity policy, see
-    CLAUDE.md oracle notes).
+    from `stats.entropy_census` over (doc_id, ch): ln is quantized to
+    micro-nats (`stats.ln_u`) once per (doc, char) count, so the
+    accumulation is an exact order-independent integer sum; the
+    closing (ln_u(n) - s/n)/1e6 is three correctly-rounded double ops
+    behind a 6 dp round (the engine-parity policy).
 
     Scale shape (100 TB): text explodes to narrow (doc_id, ch) rows
-    via sequence+substring (pure codegen, no Python); the census is a
-    map-side-partial count on (doc_id, ch) whose cardinality is
-    bounded by n_docs * |alphabet|; one final doc_id aggregate. Text
-    itself never becomes a shuffle key.
+    via sequence+substring (pure codegen, no Python); the census
+    counts (doc_id, ch), a cardinality bounded by n_docs * |alphabet|.
+    Text itself never becomes a shuffle key.
     """
     # explode the index sequence FIRST, substring on exploded rows:
     # a transform(sequence, substr) array build would be an
@@ -859,36 +799,22 @@ def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # inferred), so an empty text must be gated to an empty array --
     # DuckDB's generate_series(1, 0) is empty, and the defined
     # semantics are "no census row for an empty document".
-    n_ch = F.length(F.col(text_col))
+    n_ch = F.length(F.col("text"))
     idx = F.when(n_ch >= 1, F.sequence(F.lit(1), n_ch)).otherwise(
         F.array().cast("array<int>")
     )
     chars = docs.select(
         "doc_id",
-        F.col(text_col).alias("_t"),
+        F.col("text").alias("_t"),
         F.explode(idx).alias("i"),
     ).select("doc_id", F.col("_t").substr(F.col("i"), F.lit(1)).alias("ch"))
-    census = chars.groupBy("doc_id", "ch").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    u = F.round(F.log(F.col("c").cast("double")) * F.lit(1e6)).cast("long")
-    per = census.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_chars_counted"),
-        F.count(F.lit(1)).cast("long").alias("n_distinct_chars"),
-        F.sum(F.col("c") * u).cast("long").alias("su"),
-    )
-    return per.select(
+    n = F.col("n")
+    return entropy_census(chars, ["doc_id"], "ch").select(
         "doc_id",
-        "n_chars_counted",
-        "n_distinct_chars",
+        n.alias("n_chars_counted"),
+        F.col("n_distinct").alias("n_distinct_chars"),
         F.round(
-            (
-                F.round(
-                    F.log(F.col("n_chars_counted").cast("double")) * F.lit(1e6)
-                )
-                - F.col("su").cast("double") / F.col("n_chars_counted").cast("double")
-            )
-            / F.lit(1e6),
+            (ln_u(n) - F.col("s").cast("double") / n.cast("double")) / F.lit(1e6),
             6,
         ).alias("entropy"),
     )
@@ -973,9 +899,7 @@ def lang_pred_sql(expr: str) -> str:
   END"""
 
 
-def lang_mix(
-    docs: DataFrame, seg_tokens: int = 16, text_col: str = "text"
-) -> DataFrame:
+def lang_mix(docs: DataFrame, seg_tokens: int = 16) -> DataFrame:
     """Chunk-level language consistency -> (doc_id, n_chunks,
     n_langs, major_lang, major_frac): run the keyword lang-id per
     non-overlapping seg_tokens-token chunk and summarize per document
@@ -997,9 +921,7 @@ def lang_mix(
     doc_id aggregate picking the winner via max(struct(n, rev_lang))
     -- no window, no Python.
     """
-    from cadastre_pg_spark.operators.dedup import segment_lines
-
-    segs = segment_lines(docs, "tokens", seg_tokens, text_col)
+    segs = segment_lines(docs, "tokens", seg_tokens)
     pred = segs.select(
         "doc_id", lang_pred_col(F.col("line")).alias("lg")
     )
@@ -1043,8 +965,6 @@ def retrieval_eval(
     (and mrr 0.0) when no relevant doc makes the cut -- a defined,
     portable miss value.
     """
-    from pyspark.sql import Window as W
-
     scored = bm25_score(docs, terms)
     padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     is_rel = None
@@ -1062,7 +982,7 @@ def retrieval_eval(
         .withColumn(
             "rnk",
             F.row_number().over(
-                W.partitionBy().orderBy(
+                Window.partitionBy().orderBy(
                     F.col("bm25").desc(), F.col("doc_id").asc()
                 )
             ),
@@ -1104,7 +1024,6 @@ def inverted_index(
     k: int = 5,
     min_df: int = 2,
     n_salts: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Capped postings-list construction — the index-build op that
     turns a crawl corpus into the (term -> top documents) table a
@@ -1137,14 +1056,10 @@ def inverted_index(
     is persisted once (the heavy_hitters house pattern) instead of
     re-tokenizing the corpus per consumer; call
     `release_cached(result)` after the terminal action."""
-    from pyspark.sql import Window
-
     tf = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.split(F.trim(F.col(text_col)), r"\s+")
-            ).alias("term"),
+            F.explode(words(F.col("text"))).alias("term"),
         )
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
@@ -1188,7 +1103,6 @@ def linear_score(
     n_buckets: int = 1 << 16,
     bias_u: int = 0,
     hash_fn: str = "xxhash64",
-    text_col: str = "text",
 ) -> DataFrame:
     """Apply a pretrained fastText-style LINEAR text classifier at
     corpus scale — the "quality classifier" stage of a web pipeline
@@ -1212,11 +1126,9 @@ def linear_score(
     the per-doc sum partial-aggregates map-side so the one exchange
     carries per-doc partials. Exact BIGINT sums — order-independent,
     replayed verbatim by the DuckDB twin."""
-    from .dedup import shingle_hash_rows
-
     feats = (
-        shingle_hash_rows(docs, 1, hash_fn, text_col=text_col)
-        .unionByName(shingle_hash_rows(docs, 2, hash_fn, text_col=text_col))
+        shingle_hash_rows(docs, 1, hash_fn)
+        .unionByName(shingle_hash_rows(docs, 2, hash_fn))
         .select(
             "doc_id",
             F.pmod(F.col("h"), F.lit(n_buckets)).alias("bucket"),
@@ -1305,7 +1217,7 @@ def lang_confusion(docs: DataFrame) -> DataFrame:
     return hold(out, cells)
 
 
-def bpe_merges(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
+def bpe_merges(docs: DataFrame, k: int = 3) -> DataFrame:
     """Learn the first `k` BPE merges from the corpus — tokenizer
     TRAINING as a distributed operator (bpe_token_count only APPLIES a
     fixed segmenter; this derives the merge table a tokenizer build
@@ -1333,15 +1245,11 @@ def bpe_merges(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame
     round-trip in the plan), and word-partitioned windows (bounded by
     word length) for the merge application. localCheckpoint truncates
     per-round lineage like every iterative operator here."""
-    from pyspark.sql import Window
-
     if k < 1:
         raise ValueError("bpe_merges: k must be >= 1")
     wc = (
         docs.select(
-            F.explode(
-                F.split(F.trim(F.col(text_col)), r"\s+")
-            ).alias("word")
+            F.explode(words(F.col("text"))).alias("word")
         )
         # empty-word gate: split('') yields [''], and Spark's
         # sequence(1, 0) is the DESCENDING [1, 0] — an empty/
@@ -1436,9 +1344,7 @@ def bpe_merges(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame
     return hold(out, *cached)
 
 
-def heaps_law(
-    docs: DataFrame, n_buckets: int = 20, text_col: str = "text"
-) -> DataFrame:
+def heaps_law(docs: DataFrame, n_buckets: int = 20) -> DataFrame:
     """Vocabulary growth curve + Heaps' law exponent — the
     tokenizer-planning diagnostic (how fast does the vocabulary grow
     as the corpus grows; beta far from ~0.5 flags boilerplate or ID
@@ -1463,7 +1369,7 @@ def heaps_law(
     concurrency_profile pattern), and the fit aggregates <= n_buckets
     points. No window ever touches corpus-sized data."""
     spark = docs.sparkSession
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = words(F.col("text"))
     mx = docs.agg(F.max("doc_id").alias("mx"))
     bucket = F.floor(
         (F.col("doc_id") * F.lit(n_buckets)).cast("double")
@@ -1538,7 +1444,7 @@ def heaps_law(
     )
 
 
-def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def readability(docs: DataFrame) -> DataFrame:
     """Flesch reading-ease + Flesch-Kincaid grade per document.
 
     Classic readability features for data-quality classifiers (the
@@ -1557,24 +1463,22 @@ def readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
     family (cadastre-pg/src/cli.rs:842-910) with the standard text-
     quality derivations a web corpus needs.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     one = F.lit(1).cast("long")
-    n_words = F.greatest(
-        one, F.size(F.split(F.trim(text), r"\s+")).cast("long")
-    )
+    nw = F.greatest(one, n_words(text))
     n_sent = F.greatest(
         one, F.regexp_count(text, F.lit(r"[.!?]+")).cast("long")
     )
     n_syll = F.greatest(
         one, F.regexp_count(F.lower(text), F.lit("[aeiouy]+")).cast("long")
     )
-    wps = n_words.cast("double") / n_sent.cast("double")
-    spw = n_syll.cast("double") / n_words.cast("double")
+    wps = nw.cast("double") / n_sent.cast("double")
+    spw = n_syll.cast("double") / nw.cast("double")
     flesch = F.lit(206.835) - F.lit(1.015) * wps - F.lit(84.6) * spw
     fk = F.lit(0.39) * wps + F.lit(11.8) * spw - F.lit(15.59)
     return docs.select(
         "doc_id",
-        n_words.alias("n_words"),
+        nw.alias("n_words"),
         n_sent.alias("n_sentences"),
         n_syll.alias("n_syllables"),
         F.round(flesch, 6).alias("flesch"),
@@ -1631,11 +1535,7 @@ BPE_APPLY_MERGES = (
 )
 
 
-def bpe_apply(
-    docs: DataFrame,
-    merges=BPE_APPLY_MERGES,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_apply(docs: DataFrame, merges=BPE_APPLY_MERGES) -> DataFrame:
     """Apply a TRAINED BPE merge list to the corpus — the tokenizer-
     APPLY stage that pairs with bpe_merges' tokenizer-TRAIN stage (a
     pipeline trains merges once, then encodes 100 TB with them).
@@ -1657,22 +1557,22 @@ def bpe_apply(
     family (cadastre-pg/src/cli.rs:842-910) with the tokenizer-apply
     derivation a MULTI-PASS trained pipeline needs."""
     spaced = F.regexp_replace(
-        F.regexp_replace(F.trim(F.col(text_col)), r"\s+", "#"),
+        F.regexp_replace(F.trim(F.col("text")), r"\s+", "#"),
         "(.)",
         "$1 ",
     )
     s = F.trim(spaced)
     for a, b in merges:
         s = F.replace(s, F.lit(f"{a} {b}"), F.lit(a + b))
-    n_words = F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("long")
+    nw = n_words(F.col("text"))
     n_chars = F.length(
-        F.regexp_replace(F.trim(F.col(text_col)), r"\s+", "")
+        F.regexp_replace(F.trim(F.col("text")), r"\s+", "")
     ).cast("long")
     n_units = F.size(F.split(s, " ")).cast("long")
-    n_symbols = n_units - n_words + F.lit(1).cast("long")
+    n_symbols = n_units - nw + F.lit(1).cast("long")
     return docs.select(
         "doc_id",
-        n_words.alias("n_words"),
+        nw.alias("n_words"),
         n_chars.alias("n_chars"),
         n_symbols.alias("n_symbols"),
         F.when(
@@ -1709,9 +1609,7 @@ FROM {table}
 """
 
 
-def vocab_coverage(
-    docs: DataFrame, ks=(100, 1000, 4000), text_col: str = "text"
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, ks=(100, 1000, 4000)) -> DataFrame:
     """Vocabulary coverage curve — the tokenizer/vocab-sizing figure:
     for each k, the share of TOKEN OCCURRENCES covered by the k most
     frequent types (ties at the frequency boundary break by token
@@ -1724,11 +1622,9 @@ def vocab_coverage(
     playbook rule), and the per-k sums run over those <= max(k) rows
     joined to a literal k table. Integer counts; coverage is one
     rounded division."""
-    from pyspark.sql import Window
-
     max_k = max(ks)
     tok = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+        F.explode(words(F.col("text"))).alias("tok")
     )
     census = tok.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
     total = census.agg(F.sum("n").cast("long").alias("total"))
@@ -1791,13 +1687,16 @@ def vocab_coverage_sql(table: str = "documents", ks=(100, 1000, 4000)) -> str:
     """
 
 
-def heldout_perplexity(
-    docs: DataFrame, qmod: int = 5, hash_fn: str = "xxhash64"
-) -> DataFrame:
+# heldout_perplexity's split: docs with doc_id % HELDOUT_MOD == 0 are
+# held out
+HELDOUT_MOD = 5
+
+
+def heldout_perplexity(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """HELD-OUT bigram LM surprisal — the cross-split sibling of
     bigram_surprisal (which scores the corpus under its own census):
-    an add-one-smoothed bigram model is trained on the doc_id % qmod
-    != 0 split and scores the held-out % qmod == 0 docs, so unseen
+    an add-one-smoothed bigram model is trained on the doc_id %
+    HELDOUT_MOD != 0 split and scores the held-out docs, so unseen
     contexts and unseen continuations are actually exercised (the
     shape of a perplexity-based quality filter scored by a model that
     never saw the doc). One row per held-out doc with >= 1 bigram:
@@ -1805,8 +1704,8 @@ def heldout_perplexity(
     p = (n(prev,tok) + 1) / (n(prev) + V), V = train vocab + 1.
 
     Numeric rule (the surprisal policy): ln is quantized to integer
-    micro-nats per distinct integer argument (round(ln(m)*1e6) ->
-    BIGINT), every per-bigram term is the exact integer
+    micro-nats (`stats.ln_u`) per distinct integer argument, every
+    per-bigram term is the exact integer
     u(n(prev)+V) - u(n(prev,tok)+1), sums are order-independent
     BIGINTs, the final mean one rounded division. Scale shape
     (100 TB): the (doc_id, pos, h) token table persists ONCE and
@@ -1814,37 +1713,17 @@ def heldout_perplexity(
     (multi-pass playbook rule); the two scoring joins are Zipf-skewed
     probe-vs-small-build left joins; V broadcasts as a one-row cross
     join. No Python anywhere."""
-    from pyspark.sql import Window
-
-    from cadastre_pg_spark.operators.dedup import shingle_hash32
-
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    ex = (
-        docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
-        .select(
-            "doc_id", "pos", shingle_hash32(F.col("tok"), hash_fn).alias("h")
-        )
-        .persist()
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    pairs = (
-        ex.withColumn("hp", F.lag("h").over(w))
-        .filter(F.col("hp").isNotNull())
-        .select("doc_id", "hp", "h")
-    )
-    is_val = F.pmod(F.col("doc_id"), F.lit(qmod)) == 0
+    ex = token_hashes(docs, hash_fn, pos=True).persist()
+    pairs = _bigrams(ex)
+    is_val = F.pmod(F.col("doc_id"), F.lit(HELDOUT_MOD)) == 0
     tr = pairs.filter(~is_val)
     va = pairs.filter(is_val)
-    vocab = ex.filter(F.pmod(F.col("doc_id"), F.lit(qmod)) != 0).agg(
+    vocab = ex.filter(F.pmod(F.col("doc_id"), F.lit(HELDOUT_MOD)) != 0).agg(
         (F.countDistinct("h") + F.lit(1)).cast("long").alias("V")
     )
     nb = tr.groupBy("hp", "h").agg(F.count(F.lit(1)).cast("long").alias("nb"))
     nu = tr.groupBy("hp").agg(F.count(F.lit(1)).cast("long").alias("nu"))
-
-    def _u(col):
-        return F.round(F.log(col.cast("double")) * F.lit(1e6)).cast("long")
-
-    term = _u(F.coalesce(F.col("nu"), F.lit(0)) + F.col("V")) - _u(
+    term = ln_u(F.coalesce(F.col("nu"), F.lit(0)) + F.col("V")) - ln_u(
         F.coalesce(F.col("nb"), F.lit(0)) + F.lit(1)
     )
     per = (
@@ -1870,7 +1749,7 @@ def heldout_perplexity(
     return hold(out, ex)
 
 
-def bleu_eval(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bleu_eval(docs: DataFrame) -> DataFrame:
     """Doc-level BLEU-2 of an aggressive normalization (lowercase +
     punctuation-strip + whitespace-collapse) against the original
     tokenization — the generation-eval primitive (clipped modified
@@ -1897,15 +1776,11 @@ def bleu_eval(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (collocations topology), never a window or self-join. All
     codegen: no higher-order lambdas, no Python.
     """
-    ref_txt = F.trim(F.col(text_col))
-    hyp_txt = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9\s]", " ")
-    )
-    tok = lambda t: F.when(F.length(t) > 0, F.split(t, r"\s+")).otherwise(
-        F.array().cast("array<string>")
-    )
+    hyp_txt = F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", " ")
     base = docs.select(
-        "doc_id", tok(ref_txt).alias("tr"), tok(hyp_txt).alias("th")
+        "doc_id",
+        words_or_empty(F.col("text")).alias("tr"),
+        words_or_empty(hyp_txt).alias("th"),
     ).persist()
 
     def _uni(col: str, side: str) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cadastre_pg_spark.operators.corpus import global_shuffle
+from cadastre_pg_spark.operators.dedup import n_words
 
 MANIFEST_DIR = "_manifest"
 
@@ -60,11 +61,7 @@ def _write_routed(docs, path, n_shards, salt, hash_fn, save) -> DataFrame:
         routed.groupBy("shard")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(
-                F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
-            )
-            .cast("long")
-            .alias("n_tokens"),
+            F.sum(n_words(F.col("text"))).cast("long").alias("n_tokens"),
             F.min("pos").cast("long").alias("first_pos"),
             F.max("pos").cast("long").alias("last_pos"),
             _pos_checksum().alias("pos_checksum"),

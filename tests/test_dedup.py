@@ -514,6 +514,14 @@ def _cap_minhash(spark, cap):
     return D.minhash_lsh_pairs(docs, threshold=0.5, **kw), _band_census(sigs)
 
 
+def _cap_ngram_lsh(spark, cap):
+    docs = _cap_corpus(spark)
+    kw = {} if cap is None else {"max_band": cap}
+    sigs = [(r.doc_id, r.sig) for r in D.minhash_signatures(docs).collect()]
+    out = D.ngram_jaccard_pairs(docs, prefilter="minhash", **kw)
+    return out, _band_census(sigs)
+
+
 def _cap_incremental(spark, cap):
     docs = _cap_corpus(spark)
     new = docs.filter(F.col("doc_id") % 2 == 0)
@@ -578,6 +586,7 @@ def _cap_fuzzy(spark, cap):
 CAP_CASES = {
     "minhash_lsh_pairs": (_cap_minhash, ("doc_a", "doc_b")),
     "incremental_neardup": (_cap_incremental, ("doc_a", "doc_b")),
+    "ngram_jaccard_pairs_minhash": (_cap_ngram_lsh, ("doc_a", "doc_b")),
     "simhash_pairs": (_cap_simhash, ("doc_a", "doc_b")),
     "winnow_pairs": (_cap_winnow, ("a_id", "b_id")),
     "setsim_join": (_cap_setsim, ("a_id", "b_id")),

@@ -3,6 +3,9 @@
 
 import hashlib
 
+import pytest
+from conftest import SF_CORRECT, SF_UNIT
+
 from cadastre_pg_spark.kernels.textextract import (
     DEFAULT_ENCODING,
     extract_text,
@@ -394,3 +397,47 @@ def test_text_zoo_robustness_batch4_ops(spark):
     snm = sorted_neighborhood(df, window=2, prefix_len=2).collect()
     for r in snm:
         assert 0.0 <= r.jaccard <= 1.0
+
+
+# ---- the one whitespace tokenizer (dedup.words / words_or_empty) ----------
+# Spark's trim strips spaces only, so a tab or newline at either end
+# survives it and the \s+ split leaves an empty token at that end.
+
+TOKENIZER_GOLDEN = [
+    # text, words, n_words, words_or_empty
+    ("", [""], 1, []),
+    ("   ", [""], 1, []),
+    ("a", ["a"], 1, ["a"]),
+    (" a\t b\n", ["a", "b", ""], 3, ["a", "b", ""]),
+    (None, None, None, []),
+]
+
+
+@pytest.mark.parametrize("text,toks,n,guarded", TOKENIZER_GOLDEN)
+def test_tokenizer_golden(spark, text, toks, n, guarded):
+    from pyspark.sql import functions as F
+
+    from cadastre_pg_spark.operators.dedup import n_words, words, words_or_empty
+
+    t = F.col("text")
+    r = (
+        spark.createDataFrame([(text,)], "text string")
+        .select(
+            words(t).alias("w"), n_words(t).alias("n"), words_or_empty(t).alias("g")
+        )
+        .first()
+    )
+    assert (r.w, r.n, r.g) == (toks, n, guarded)
+
+
+@pytest.mark.parametrize("sf", [SF_UNIT, SF_CORRECT])
+def test_documents_have_no_vertical_tab(sf):
+    """Data precondition of every \\s+ split's DuckDB oracle: Java's \\s
+    matches \\x0B and RE2's does not, so no generated document may
+    contain one (see dedup.words)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    text = pq.read_table(f"{sf}/documents.parquet", columns=["text"])["text"]
+    assert len(text) > 0
+    assert not pc.any(pc.match_substring(text, "\x0b")).as_py()

@@ -494,7 +494,7 @@ def test_heldout_perplexity_matches_python_reference(spark):
     )
     out = {
         r.doc_id: r
-        for r in heldout_perplexity(docs, qmod=5).collect()
+        for r in heldout_perplexity(docs).collect()
     }
     # python reference: add-one bigram LM on train docs
     train = [t.split() for d, t in texts.items() if d % 5 != 0]
@@ -531,7 +531,7 @@ def test_heldout_perplexity_unseen_scores_higher(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: r.surprisal_ho
-        for r in heldout_perplexity(docs, qmod=5).collect()
+        for r in heldout_perplexity(docs).collect()
     }
     assert out[5] > out[0]
 
@@ -647,7 +647,7 @@ def test_heldout_perplexity_empty_train_split(spark):
     docs = spark.createDataFrame(
         [(0, "a b c"), (5, "d e f")], "doc_id long, text string"
     )
-    out = heldout_perplexity(docs, qmod=5).collect()
+    out = heldout_perplexity(docs).collect()
     assert {r.doc_id for r in out} == {0, 5}
     assert all(r.surprisal_ho == 0.0 for r in out)
 
